@@ -274,8 +274,8 @@ object StreamBench {
     corpus.unpersist()
 
     // 12) the LIVE ingest loop: appendBatch into a TableLog table while
-    //     a readTail stream consumes the appends and probes the dedup
-    //     signature index (streaming.Dedup.indexVerdicts) — end-to-end
+    //     a readTailVersions stream consumes the appends and probes the
+    //     dedup signature index (streaming.Dedup.indexVerdicts) — end-to-end
     //     commit → tail-pickup → verdict rate, the "corpus grows,
     //     indexes follow" serving path at ingest cadence
     val liveRoot = Files.createTempDirectory("graft_sb_live")
@@ -287,7 +287,8 @@ object StreamBench {
     val liveSchema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id LONG, text STRING, seq LONG")
     val liveQ = graft.streaming.Dedup.indexVerdicts(
-        graft.functions.TableLog.readTail(spark, liveDir, liveSchema)
+        graft.functions.TableLog.readTailVersions(spark, liveDir,
+            schema = Some(liveSchema))
           .as[(Long, String, Long)], liveIndex)
       .writeStream.format("noop").outputMode("append").start()
     val liveDocs = docs.drop(100)

@@ -114,6 +114,10 @@ object Materialize {
     require(df.schema(probeIdx).dataType ==
         org.apache.spark.sql.types.LongType,
       s"cutWithProbe: last column must be LONG, got ${df.schema(probeIdx).dataType}")
+    // the fused fold reads the probe with getLong, which turns a null
+    // into 0 — a silently wrong checksum, so refuse a nullable probe
+    require(!df.schema(probeIdx).nullable,
+      s"cutWithProbe: probe column ${df.columns(probeIdx)} must be non-nullable")
     val keep = df.columns.dropRight(1).map(org.apache.spark.sql.functions.col)
     mode(df.sparkSession) match {
       case "reliable" =>

@@ -331,15 +331,15 @@ object TableLog {
   private def headHintPath(dir: String) = new Path(logDir(dir), HeadHintName)
 
   /** Best-effort, advisory-only: failures are swallowed (the next
-    * commit re-writes it; resolution falls back to the listing). A
-    * concurrent overwrite torn mid-read parses as garbage → listing. */
-  private def writeHeadHint(fs: FileSystem, dir: String, version: Long): Unit =
-    try {
-      val out = fs.create(headHintPath(dir), true)
-      try out.write(version.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
+    * commit re-writes it; resolution falls back to the listing).
+    * Published temp-then-rename ([[atomicWriteSmall]]), never overwritten
+    * in place: an in-place rewrite truncates the checksum sidecar, and a
+    * racing [[latestVersion]] that opens the truncated sidecar logs a
+    * checksum warning. */
+  private[functions] def writeHeadHint(fs: FileSystem, dir: String,
+                                       version: Long): Unit =
+    try atomicWriteSmall(fs, headHintPath(dir), version.toString)
+    catch { case scala.util.control.NonFatal(_) => () }
 
   /** How far behind the true head a hint may be before resolution gives
     * up probing forward and lists the directory instead (the probes
@@ -353,8 +353,7 @@ object TableLog {
   private def hintedLatestVersion(fs: FileSystem, dir: String): Option[Long] = {
     val log = logDir(dir)
     // ANY read failure — not just absence — falls back to the listing:
-    // the hint is overwritten in place, so a concurrently-torn or
-    // checksum-failing read is an expected state, never an error
+    // the hint is advisory, so an unreadable one is never an error
     val hinted =
       try tryReadFully(fs, headHintPath(dir)).flatMap(_.trim.toLongOption)
       catch { case scala.util.control.NonFatal(_) => None }
@@ -405,9 +404,11 @@ object TableLog {
   /** The newest committed version NUMBER — hint + forward probes (or
     * one log-dir listing on hint miss), zero manifest or segment reads.
     * The per-trigger availability probe of the [[readTailVersions]]
-    * source ([[graft.sources.TableLogTailSource]] `getOffset` fires
+    * source ([[graft.sources.TableLogTailSource]] `latestOffset` fires
     * every trigger; resolving the head there would re-touch O(segments)
-    * per trigger for a number the file NAME already carries). */
+    * per trigger for a number the file NAME already carries). Safe
+    * against concurrent commits: the hint is replaced by rename, so a
+    * racing read sees the old or the new hint, never a torn one. */
   private[graft] def latestVersion(spark: SparkSession, dir: String): Option[Long] = {
     val (fs, _) = fsFor(spark, dir)
     if (!fs.exists(logDir(dir))) return None
@@ -893,7 +894,7 @@ object TableLog {
 
   /** The oldest still-readable point of the table: (version, commit
     * mtime) of the oldest retained manifest. Operators size [[vacuum]]
-    * grace windows and [[readTail]]/[[appendsSince]] consumer lag
+    * grace windows and [[readTailVersions]]/[[appendsSince]] consumer lag
     * against THIS — a consumer whose checkpoint falls behind
     * `retention(dir)` must fall back to a full snapshot read rather
     * than discover FileNotFound mid-query. None for a table with no
@@ -1086,11 +1087,11 @@ object TableLog {
       statCols(prev), schema)
     val added = metas.iterator.map(_.rows).sum
     fs.mkdirs(table)
-    // `a<v>-` marks APPENDED data, `c<v>-` compaction rewrites: the
-    // prefix is what lets [[readTail]]'s glob-filtered file stream see
-    // each row exactly once — appends match, rewrites never do. (After
-    // a lost CAS the committed version may exceed the `v` baked into
-    // the name; the prefix is a tail-visibility tag, not a version.)
+    // `a<v>-` marks APPENDED data, `c<v>-` compaction rewrites (on-disk
+    // format): [[appendedEntries]] keys an upsert's new rows on the `a`
+    // prefix so survivor rewrites never re-emit. (After a lost CAS the
+    // committed version may exceed the `v` baked into the name; the
+    // prefix is a tail-visibility tag, not a version.)
     val entries = staged.toVector.zip(metas).map { case (f, meta) =>
       val name = s"a$v-${f.getPath.getName}"
       val dst = new Path(table, name)
@@ -1117,9 +1118,9 @@ object TableLog {
     * next version on, [[appendBatch]]'s guard holds batches to the NEW
     * schema (a straggler batch with the old shape fails loudly rather
     * than silently committing a table whose newest column is
-    * sometimes-missing). A live [[readTail]] stream keeps its
-    * start-time schema; restart it with the new one to see added
-    * columns. Returns the committed manifest. */
+    * sometimes-missing). A live [[readTailVersions]] stream fails
+    * loudly at its first window past the evolve; restart it to re-pin
+    * the new schema. Returns the committed manifest. */
   def evolve(spark: SparkSession, dir: String,
              newSchema: org.apache.spark.sql.types.StructType): Manifest = {
     val (fs, _) = fsFor(spark, dir)
@@ -2073,7 +2074,7 @@ object TableLog {
     *    first vacuum after the last referencing manifest is pruned
     *    ([[retention]] reports the horizon). Run `KeepManifests`
     *    trivial commits + vacuum to force it for compliance deadlines;
-    *  - change consumers ([[readTail]]/[[appendsSince]]) do NOT see
+    *  - append consumers ([[readTailVersions]]/[[appendsSince]]) do NOT see
     *    deletions (the rewritten files carry the `c<v>-` rewrite
     *    prefix and `appendsSince` skips delete versions): downstream
     *    indexes keep serving removed ids until told — see
@@ -2449,8 +2450,8 @@ object TableLog {
     val entries = stagedD.zip(metasD).iterator
       .map { case (f, meta) =>
         newRows += meta.rows
-        // `c` prefix: a rewrite of surviving rows, silent to readTail's
-        // append glob exactly like a compaction rewrite
+        // `c` prefix: a rewrite of surviving rows, silent to the append
+        // tail ([[appendedEntries]]) exactly like a compaction rewrite
         val name = s"c$v-${f.getPath.getName}"
         val dst = new Path(table, name)
         if (!fs.rename(f.getPath, dst))
@@ -2517,8 +2518,8 @@ object TableLog {
   }
 
   /** Write-temp-then-rename of one small file — the shared atomic
-    * update primitive for sidecar state (the tail's admission floor and
-    * resolved-since files): a crash can only lose the update, never
+    * update primitive for sidecar state (the tail's resolved-since file,
+    * the log's head hint): a crash can only lose the update, never
     * leave a torn file. NOT suitable for state whose ABSENCE breaks a
     * guarantee (filesystems whose rename refuses to overwrite take the
     * delete-then-rename fallback, which has a brief no-file window —
@@ -2799,47 +2800,10 @@ object TableLog {
     deleted
   }
 
-  /** Tail the table as a stream: a Structured Streaming DataFrame over
-    * the directory restricted (by glob) to `a<v>-` APPEND files, so
-    * every committed append row arrives exactly once in steady state and
-    * compaction rewrites / adopted history never re-emit. Schema comes
-    * from the current snapshot. Two documented caveats, both standard
-    * CDC retention trades:
-    *  - a crash between landing a batch's files and its manifest commit
-    *    replays the batch under a NEW version; the orphaned first copy
-    *    is vacuumed, but a tailer that read it before the vacuum has
-    *    seen those rows twice — at-least-once across writer crashes,
-    *    exactly-once otherwise (use [[appendsSince]] when the consumer
-    *    needs manifest-transactional reads);
-    *  - a tailer lagging beyond the vacuum grace can lose appends whose
-    *    files a post-compaction vacuum reclaimed: size `vacuumGraceMs`
-    *    to the maximum consumer lag, exactly like changelog retention —
-    *    [[retention]] reports the oldest still-readable (version,
-    *    commit time) so lag can be measured against it instead of
-    *    discovered as a FileNotFound.
-    *
-    * The tail starts at APPENDS: adopted pre-log history (renamed under
-    * `c0-` by [[adopt]]) never re-emits here — bootstrap a full replica
-    * with [[appendsSince]]`(-1)` (which does include the adopt snapshot)
-    * or a snapshot [[read]], then tail. The no-arg overload uses the
-    * manifest's RECORDED schema (same pinning as every other reader —
-    * after an [[evolve]] a restarted tailer must surface the added
-    * columns, which inference from the oldest file would silently
-    * drop), falling back to one file's footer only on a pre-schema v1
-    * table; to start the tailer BEFORE the table's first commit — the
-    * normal consumer-first deployment order — pass the schema
-    * explicitly. */
-  def readTail(spark: SparkSession, dir: String): DataFrame = {
-    val m = latest(spark, dir).getOrElse(throw new IllegalStateException(
-      s"$dir has no committed manifest — pass the schema explicitly to tail " +
-        "a table that has not been written yet"))
-    readTail(spark, dir, schemaOf(spark, dir, m))
-  }
-
   /** `m`'s recorded schema, or (pre-schema v1 manifests) one inferred
-    * from a single live file's footer — the shared fallback of
-    * [[readTail]] and the `format("tablelog")` batch provider, so the
-    * two can never drift on the inference rule. */
+    * from a single live file's footer — the one inference rule every
+    * batch face (the `format("tablelog")` provider, the catalog, the v2
+    * table) shares, so they can never drift on it. */
   private[graft] def schemaOf(spark: SparkSession, dir: String,
       m: Manifest): org.apache.spark.sql.types.StructType =
     m.schema.getOrElse {
@@ -2848,29 +2812,16 @@ object TableLog {
       spark.read.parquet(s"${dir.stripSuffix("/")}/${first.name}").schema
     }
 
-  /** [[readTail]] with an explicit schema — works before the table's
-    * first commit (the table directory is created empty if missing, so
-    * the consumer really can start before the writer). */
-  def readTail(spark: SparkSession, dir: String,
-               schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val (fs, table) = fsFor(spark, dir)
-    fs.mkdirs(table)
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "a*-*.parquet")
-      .parquet(dir.stripSuffix("/"))
-  }
-
   /** Manifest-transactional streaming tail: a Structured Streaming
     * DataFrame whose OFFSETS are table versions — each micro-batch is
     * exactly the appends of the versions committed since the last
     * batch, planned as a file-source relation over a
     * [[ManifestFileIndex]] restricted to that delta
     * ([[graft.sources.TableLogTailSource]]). Going through the manifest
-    * buys two things [[readTail]]'s glob-filtered file stream cannot
-    * give:
+    * buys two things a glob-filtered file stream over the directory
+    * cannot give:
     *  - EXACTLY-ONCE across writer crashes: an orphaned file of a
-    *    failed commit is in no manifest, so it is never served (the
-    *    glob tail's documented at-least-once caveat disappears);
+    *    failed commit is in no manifest, so it is never served;
     *  - stats pruning per micro-batch: every filter the consumer puts
     *    on the stream pushes into each batch's scan as ordinary
     *    dataFilters, and files whose recorded min/max cannot match are
@@ -2880,8 +2831,8 @@ object TableLog {
     *
     * `since` picks the start: the head version at source creation by
     * default (live appends only — bootstrap a replica with
-    * [[appendsSince]] or [[read]] first, the same guidance as
-    * [[readTail]]), an explicit version within retention, or `-1` to
+    * [[appendsSince]] or [[read]] first), an explicit version within
+    * retention, or `-1` to
     * tail from the beginning (requires version 0 retained —
     * [[KeepManifests]]). A start that has left retention — or a version
     * vacuumed away mid-stream while the consumer lags — fails LOUDLY
@@ -2889,7 +2840,9 @@ object TableLog {
     * losing appends. Schema is pinned at source creation (the contract
     * every reader has; restart the stream to surface an [[evolve]]d
     * column). Requires a schema-recording table (any table written by
-    * the current appendBatch). */
+    * the current appendBatch) — or an explicit `schema`, which starts
+    * the tail before the table's first commit (the consumer-first
+    * deployment order). */
   def readTailVersions(spark: SparkSession, dir: String,
                        since: Option[Long] = None,
                        schema: Option[org.apache.spark.sql.types.StructType] =
@@ -3258,8 +3211,8 @@ object TableLog {
         // an upsert's added files are its NEW rows (`a`-prefixed) plus
         // survivor rewrites (`c`-prefixed — old rows the delete side
         // did not touch): appends-only consumers get the new rows and
-        // must never be re-fed the survivors. The prefix is the same
-        // tail-visibility tag the glob tail keys on.
+        // must never be re-fed the survivors. The prefix is the
+        // tail-visibility tag every appended file carries.
         appendedIn(fs, dir, m, heads.get(v - 1)).filter(_.name.startsWith("a"))
       else appendedIn(fs, dir, m, heads.get(v - 1))
     }.toVector
@@ -3566,9 +3519,9 @@ object TableLog {
       val (fs, table) = fsFor(spark, dir)
       // adopted files are renamed under `c0-` (never a legal append
       // prefix: appends start at version 1, compactions at the version
-      // after some manifest exists) so [[readTail]]'s a*-glob can never
-      // match pre-existing history — not even a legacy file that
-      // happened to be named like an append. Idempotent: an already
+      // after some manifest exists) so nothing keying on the `a` prefix
+      // can mistake pre-existing history for an append — not even a
+      // legacy file that happened to be named like an append. Idempotent: an already
       // c0-prefixed file (a crashed earlier adopt got to it) is kept
       // as-is, and the commit only happens once everything is renamed.
       val entries: Vector[Entry] =

@@ -32,9 +32,11 @@ import graft.functions.TableLog
   *  - stream read: `spark.readStream.format("tablelog")` is the
   *    version-offset tail ([[TableLogTailProvider]] — exactly-once,
   *    per-batch stats pruning, `since` / `maxVersionsPerTrigger`
-  *    options). With `.option("readChangeFeed", "true")` the same
-  *    offsets deliver the row-level change feed (`_change_type` ∈
-  *    {append, delete} + `_commit_version` —
+  *    options; the engine's offsets WAL is the read position, and the
+  *    cap is admission control counted from it). With
+  *    `.option("readChangeFeed", "true")` the same offsets deliver the
+  *    row-level change feed (`_change_type` ∈ {append, delete} +
+  *    `_commit_version` —
   *    [[graft.functions.TableLog.readTailChanges]]), the standing-
   *    mirror shape; drift opt-out is rejected for it.
   *  - stream write: `df.writeStream.format("tablelog")` commits each
@@ -97,7 +99,7 @@ final class TableLogProvider extends RelationProvider
       }
     }
     // pre-schema v1 manifests fall back to single-file footer inference
-    // (shared with readTail); those files carry no recorded stats, so
+    // (TableLog.schemaOf); those files carry no recorded stats, so
     // pruning is conservative (every file kept) either way
     TableLog.hadoopRelation(spark, dir, m, TableLog.schemaOf(spark, dir, m))
   }

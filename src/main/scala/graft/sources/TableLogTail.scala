@@ -5,6 +5,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession, graftbridge}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.connector.read.streaming.{Offset => V2Offset,
+  ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Source}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -36,25 +38,28 @@ final case class TableVersionOffset(v: Long) extends V1Offset {
   * stage codegen), and only the v1 interface lets a source hand the
   * engine a PLAN (`getBatch`) instead of row-shipping partitions.
   *
+  * Admission control is `SupportsAdmissionControl`, as in Spark's own
+  * `FileStreamSource`: the engine's offsets WAL is the one record of the
+  * read position, so the source keeps none of its own ([[latestOffset]]).
+  *
   * Delivery: exactly-once. The batch is derived purely from committed
   * manifests, so a writer crash can never leak an orphaned file into a
-  * batch (unlike the glob tail), and a version is emitted in exactly
-  * one batch — offsets are checkpointed by the engine and the manifest
-  * diff for a replayed `(start, end]` is deterministic while retention
-  * holds. A consumer lagging past [[graft.functions.TableLog.vacuum]]'s
-  * manifest retention fails loudly ("left retention") instead of
-  * silently skipping appends — size the vacuum grace to the maximum
-  * consumer lag, exactly like changelog retention. */
+  * batch, and a version is emitted in exactly one batch — offsets are
+  * checkpointed by the engine and the manifest diff for a replayed
+  * `(start, end]` is deterministic while retention holds. A consumer
+  * lagging past [[graft.functions.TableLog.vacuum]]'s manifest
+  * retention fails loudly ("left retention") instead of silently
+  * skipping appends — size the vacuum grace to the maximum consumer
+  * lag, exactly like changelog retention. */
 final class TableLogTailSource(spark: SparkSession, dir: String,
-                               metadataPath: String, pinned: StructType,
-                               pinnedAt: Long, since: Long,
+                               pinned: StructType, pinnedAt: Long, since: Long,
                                maxVersionsPerTrigger: Option[Int],
                                consumerId: String,
                                failOnSchemaDrift: Boolean,
                                pinnedExplicitly: Boolean,
                                changeFeed: Boolean = false,
                                updateKey: Option[String] = None)
-    extends Source {
+    extends Source with SupportsAdmissionControl {
 
   /** In change-feed mode the emitted rows carry the two tag columns on
     * top of the pinned table schema ([[graft.functions.TableLog
@@ -65,96 +70,35 @@ final class TableLogTailSource(spark: SparkSession, dir: String,
 
   override def schema: StructType = emitted
 
-  /** Admission-control floor: the highest version already offered or
-    * observed, persisted under the source's own checkpoint metadata
-    * path. The persistence is what keeps capped offers MONOTONE across
-    * restarts: a v1 source is not told the recovered WAL offset before
-    * its first post-restart `getOffset`, so a floor re-seeded from a
-    * `since` BELOW the checkpoint would offer an offset behind the
-    * committed one — the engine would run (and log) that rewound batch
-    * as empty, and a later batch starting from it would re-emit
-    * versions the pre-restart stream already delivered. The floor file
-    * is written BEFORE the offer is returned (so it is ≥ every offset
-    * the engine ever logs); a floor that over-states after a crashed
-    * trigger only widens the next window, never skips — `getBatch`
-    * always reads from the engine-supplied start. Unparseable/absent
-    * floor (first start, torn write) falls back to `since`. */
-  /** None = floor UNKNOWN: a restart found no readable floor file (a
-    * torn write, or the cap newly enabled over a previously-uncapped
-    * checkpoint). The one safe move is a single UNCAPPED offer — the
-    * head can never sit below the committed offset — after which the
-    * persisted floor re-anchors and capping resumes. A fresh query
-    * (its checkpoint has no offsets WAL yet) seeds at `since` instead,
-    * so the cap applies from the very first backlog batch, where it
-    * matters most. */
-  @volatile private var offeredFloor: Option[Long] = {
-    val (fs, p) = floorFile
-    val persisted =
-      try {
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          try Some(new String(
-            in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-          finally in.close()
-        }
-      } catch { case _: Exception => None }
-    persisted match {
-      case Some(v) => Some(math.max(since, v))
-      case None if maxVersionsPerTrigger.isEmpty => Some(since) // floor unused
-      case None =>
-        // metadataPath is `<checkpoint>/sources/<i>`; the engine's offset
-        // WAL at `<checkpoint>/offsets` is non-empty iff some batch was
-        // ever logged — i.e. this is a restart, not a first start
-        val offsets = new Path(
-          new Path(metadataPath.stripSuffix("/")).getParent.getParent, "offsets")
-        val restarted =
-          try fs.exists(offsets) && fs.listStatus(offsets).nonEmpty
-          catch { case _: Exception => true } // unsure ⇒ the safe (uncapped) path
-        if (restarted) None else Some(since)
-    }
+  /** The uncapped head the last [[latestOffset]] saw, for
+    * [[reportLatestOffset]]: progress then shows how far the capped
+    * window (`endOffset`) trails the table (`latestOffset`). */
+  @volatile private var seenHead: Option[Long] = None
+
+  /** `start` is the engine's recovered offset (null before a fresh
+    * checkpoint's first batch — the window then opens at `since`), so a
+    * capped offer `start + cap` never rewinds below a committed offset,
+    * across restarts and cap changes alike. A head at or below `since`
+    * is NO data (the contract is "versions AFTER since"). The cap applies
+    * whatever `ReadLimit` the engine passes (Trigger.Once passes
+    * allAvailable). The v2 [[TableLogV2TailStream]] delegates here. */
+  override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset = {
+    // version-number peek: no manifest or segment reads — the
+    // availability probe must stay O(1) in table size
+    seenHead = TableLog.latestVersion(spark, dir).filter(_ > since)
+    seenHead.map { head =>
+      val from = Option(start).fold(since)(_.json.toLong)
+      TableVersionOffset(maxVersionsPerTrigger.fold(head)(n =>
+        math.min(head, from + n)))
+    }.orNull
   }
 
-  private def floorFile = {
-    val p = new Path(metadataPath.stripSuffix("/"), "offered-floor")
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** Atomic small-file update ([[TableLog.atomicWriteSmall]]) — a crash
-    * can only lose the update, never leave a torn file; a briefly
-    * MISSING floor costs a restart one uncapped batch, the documented
-    * safe fallback (see [[offeredFloor]]). */
-  private def persistFloor(v: Long): Unit = {
-    val (fs, p) = floorFile
-    TableLog.atomicWriteSmall(fs, p, v.toString)
-  }
+  override def reportLatestOffset(): V2Offset =
+    seenHead.map(TableVersionOffset(_)).orNull
 
   override def getOffset: Option[V1Offset] =
-    // version-number peek: one log listing per trigger, no manifest or
-    // segment reads — the availability probe must stay O(1) in table size.
-    // A head at or below `since` is NO data (the contract is "versions
-    // AFTER since") — offering it would commit an offset ≤ since and
-    // make later batches start below since, delivering the versions the
-    // caller asked to skip
-    TableLog.latestVersion(spark, dir).filter(_ > since).map { head =>
-      val capped = (offeredFloor, maxVersionsPerTrigger) match {
-        case (Some(f), Some(n)) => math.min(head, f + n)
-        case _ => head // uncapped, or unknown floor: re-anchor at the head
-      }
-      if (!offeredFloor.exists(_ >= capped)) {
-        // persist BEFORE offering, capped or NOT: the floor on disk must
-        // never lag an offset the engine could have logged. An uncapped
-        // run that skipped the write would leave a stale floor from an
-        // earlier capped era, and re-enabling the cap after a restart
-        // would seed from it — offering (and, once the engine logs the
-        // rewound offset, re-emitting) versions the stream already
-        // delivered. One small-file write per ADVANCING trigger, nothing
-        // on idle ones.
-        persistFloor(capped)
-        offeredFloor = Some(capped)
-      }
-      TableVersionOffset(capped)
-    }
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   /** The start version the engine uses when no offset is checkpointed
     * yet — the v2 `MicroBatchStream.initialOffset` ([[TableLogV2]]
@@ -189,20 +133,11 @@ final class TableLogTailSource(spark: SparkSession, dir: String,
     }
   }
 
-  /** The window admission shared by BOTH streaming faces (this v1
+  /** The schema-drift guard shared by BOTH streaming faces (this v1
     * source's [[getBatch]] and the v2 [[TableLogV2]] micro-batch
-    * stream): refresh the offered floor to cover an engine-replayed
-    * offset, then run the schema-drift guard — ONE implementation, so
-    * the two faces can never drift on either rule. */
+    * stream) — ONE implementation, so the two faces can never drift on
+    * the rule. */
   private[sources] def admitWindow(fromV: Long, toV: Long): Unit = {
-    if (!offeredFloor.exists(_ >= toV)) {
-      // a replayed engine-logged offset above the in-memory floor means
-      // the floor file is stale or lost (legacy uncapped checkpoint,
-      // torn write) — refresh it so a later capped restart re-anchors
-      // at an offset the engine has actually logged, never below it
-      persistFloor(toV)
-      offeredFloor = Some(toV)
-    }
     if (failOnSchemaDrift && toV > fromV && toV > pinnedAt) {
       // schema-drift guard: every batch is planned with the schema
       // pinned at source creation, so an evolve/dropColumn committed
@@ -315,8 +250,8 @@ final class TableLogTailSource(spark: SparkSession, dir: String,
     catch { case scala.util.control.NonFatal(_) => () }
 
   // no lease release on stop: a stopped stream usually RESUMES from its
-  // checkpoint and still needs its floor — expiry (or an explicit
-  // releaseLease on decommission) retires it
+  // checkpoint and still needs its retained manifests — expiry (or an
+  // explicit releaseLease on decommission) retires it
   override def stop(): Unit = ()
 }
 
@@ -333,10 +268,12 @@ final class TableLogTailSource(spark: SparkSession, dir: String,
   * `maxVersionsPerTrigger` (bound each micro-batch to at most this many
   * source versions — without it, a consumer starting deep in the
   * backlog plans the ENTIRE history as one batch, the
-  * maxFilesPerTrigger concern at version granularity). An explicit
+  * maxFilesPerTrigger concern at version granularity; the window is
+  * counted from the engine's checkpointed offset, so the option may be
+  * added, changed or dropped across restarts). An explicit
   * `.schema(...)` starts the tailer before the table's first commit
-  * (the consumer-first deployment order readTail supports); otherwise
-  * the schema is the table's recorded one. */
+  * (the consumer-first deployment order); otherwise the schema is the
+  * table's recorded one. */
 final class TableLogTailProvider extends StreamSourceProvider {
 
   private def dirOf(parameters: Map[String, String]): String =
@@ -483,7 +420,7 @@ final class TableLogTailProvider extends StreamSourceProvider {
     val failOnDrift =
       parameters.get("failOnSchemaDrift").forall(_.toBoolean)
     val changeFeed = changeFeedOf(parameters) // re-validates the opt-out
-    new TableLogTailSource(spark, dir, metadataPath, pinned, pinnedAt, since,
+    new TableLogTailSource(spark, dir, pinned, pinnedAt, since,
       maxV, consumerId, failOnDrift, pinnedExplicitly = schema.isDefined,
       changeFeed = changeFeed, updateKey = updateKeyOf(parameters))
   }

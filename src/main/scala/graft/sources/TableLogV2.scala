@@ -19,7 +19,7 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition,
   PartitionReaderFactory, Scan, ScanBuilder, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream,
-  Offset => V2Offset}
+  Offset => V2Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter,
   DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write,
   WriteBuilder, WriterCommitMessage}
@@ -54,8 +54,8 @@ import graft.functions.{ManifestFileIndex, TableLog}
   *    the version-offset tail as a native `MicroBatchStream` — offsets
   *    ARE table versions, each window plans a `ParquetScan` over
   *    exactly that window's append-contributed files, and the CONTROL
-  *    PLANE (since resolution, the offered-floor admission cap, the
-  *    schema-drift guard, retention leases) is the v1
+  *    PLANE (since resolution, the `maxVersionsPerTrigger` admission
+  *    cap, the schema-drift guard, retention leases) is the v1
   *    [[TableLogTailSource]] itself, delegated to — one implementation
   *    of every tail rule, two engine faces. `since` /
   *    `maxVersionsPerTrigger` / `consumerId` / `failOnSchemaDrift`
@@ -281,13 +281,15 @@ private[sources] final class TableLogV2Scan(spark: SparkSession,
 }
 
 /** The version-offset tail as a native v2 [[MicroBatchStream]]. The
-  * control plane — `since` resolution + persistence, the offered-floor
-  * admission cap behind `maxVersionsPerTrigger`, the schema-drift
-  * guard, lease renewal on commit — IS a delegated
-  * [[TableLogTailSource]] (the engine hands `toMicroBatchStream` the
-  * same per-source metadata path a v1 source gets, so floors, resolved
-  * `since` and lease identities are checkpoint-compatible across the
-  * two faces). Only the DATA PLANE differs: each committed window
+  * control plane — `since` resolution + persistence, the
+  * `maxVersionsPerTrigger` admission cap, the schema-drift guard, lease
+  * renewal on commit — IS a delegated [[TableLogTailSource]] (the
+  * engine hands `toMicroBatchStream` the same per-source metadata path
+  * a v1 source gets, so the resolved `since` and lease identities are
+  * checkpoint-compatible across the two faces). Admission control goes
+  * through the SAME `latestOffset(start, limit)`: the engine passes the
+  * checkpointed start (or [[initialOffset]] = `since`) and the cap is
+  * counted from it. Only the DATA PLANE differs: each committed window
   * `(start, end]` plans a native `ParquetScan` over exactly that
   * window's append-contributed files, re-applying the column pruning
   * and pushed filters the engine negotiated at stream build — so
@@ -296,7 +298,7 @@ private[sources] final class TableLogV2Scan(spark: SparkSession,
 private[sources] final class TableLogV2TailStream(spark: SparkSession,
     dir: String, tableSchema: StructType, options: CaseInsensitiveStringMap,
     dataFilters: Seq[Expression], required: StructType, metadataPath: String)
-    extends MicroBatchStream {
+    extends MicroBatchStream with SupportsAdmissionControl {
 
   require(!Option(options.get("readChangeFeed")).exists(_.trim.toBoolean),
     "the tablelogv2 stream is the append tail only — the change feed's " +
@@ -312,9 +314,12 @@ private[sources] final class TableLogV2TailStream(spark: SparkSession,
 
   override def initialOffset(): V2Offset =
     TableVersionOffset(source.sinceVersion)
+  override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset =
+    source.latestOffset(start, limit)
+  override def reportLatestOffset(): V2Offset = source.reportLatestOffset()
   override def latestOffset(): V2Offset =
-    source.getOffset.map(o => TableVersionOffset(o.json.toLong))
-      .getOrElse(TableVersionOffset(source.sinceVersion))
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) should be called instead of this method")
   override def deserializeOffset(json: String): V2Offset =
     TableVersionOffset(json.trim.toLong)
 

@@ -135,6 +135,15 @@ class MaterializeSpec extends SparkSuite {
     }
   }
 
+  test("cutWithProbe rejects a nullable probe column") {
+    // a null probe would fold in as 0 — a silently wrong checksum
+    val df = (1L to 10L).toDF("v").select($"v",
+      org.apache.spark.sql.functions.when($"v" > 5L, $"v").as("__p"))
+    assert(df.schema("__p").nullable, "fixture vacuity: probe is non-nullable")
+    val e = intercept[IllegalArgumentException](Materialize.cutWithProbe(df))
+    assert(e.getMessage.contains("non-nullable"), e.getMessage)
+  }
+
   test("CC rounds still converge under the disk policy, cleaning up rounds") {
     withConf(Materialize.ConfKey, "disk") {
       val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (5L, 5L)).toDF("a", "b")

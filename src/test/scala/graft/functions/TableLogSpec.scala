@@ -82,6 +82,57 @@ class TableLogSpec extends SparkSuite {
     assert(readHint() == "7")
   }
 
+  test("racing head-hint writes never log a torn checksum read") {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import scala.jdk.CollectionConverters._
+    val dir = freshTable()
+    (0 until 3).foreach(b => TableLog.appendBatch(batchDf(b, 10), dir, "w", b.toLong))
+    val hfs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-fsinput-capture", null, null,
+      true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.contains("FSInputChecker"))
+          events.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    cfg.getRootLogger.addAppender(appender, org.apache.logging.log4j.Level.WARN, null)
+    ctx.updateLoggers()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // the writer republishes the hint as fast as it can (every commit
+    // writes it; here only the write races, so the window is hit often)
+    val writer = new Thread(() => {
+      var i = 0
+      while (!done.get()) { TableLog.writeHeadHint(hfs, dir, i % 3); i += 1 }
+    })
+    writer.start()
+    try {
+      val deadline = System.nanoTime() + 3000000000L
+      var reads = 0
+      while (System.nanoTime() < deadline) {
+        assert(TableLog.latestVersion(spark, dir).contains(2L))
+        reads += 1
+      }
+      done.set(true)
+      writer.join()
+      assert(reads > 100, s"fixture vacuity: only $reads reads raced the writer")
+      val torn = events.asScala.toSeq
+      assert(torn.isEmpty,
+        s"${torn.size} checksum warnings, first: ${torn.headOption}")
+    } finally {
+      done.set(true)
+      writer.join()
+      cfg.getRootLogger.removeAppender("graft-fsinput-capture")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
   test("replay dedup: same runKey+batchId is a no-op; a FRESH runKey with colliding batchIds appends") {
     val dir = freshTable()
     assert(TableLog.appendBatch(batchDf(0), dir, "gen-1", 0L))
@@ -280,44 +331,6 @@ class TableLogSpec extends SparkSuite {
     assert(got == TableLog.latest(spark, dir).get.bytes)
     assert(got < rawListing,
       "manifest-served bytes should exclude superseded in-grace files")
-  }
-
-  test("readTail streams appends; compaction + vacuum mid-stream never re-emit rows") {
-    val dir = freshTable()
-    TableLog.appendBatch(batchDf(0), dir, "r", 0L)
-    TableLog.appendBatch(batchDf(1), dir, "r", 1L)
-    val q = TableLog.readTail(spark, dir)
-      .writeStream.format("memory").queryName("tlog_tail")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("tlog_tail").count() == 200L)
-      // a full rewrite lands c<v>- files — invisible to the tail
-      TableLog.compact(spark, dir, targetBytes = 1L << 20)
-      TableLog.vacuum(spark, dir, graceMs = 600000L)
-      q.processAllAvailable()
-      assert(spark.table("tlog_tail").count() == 200L,
-        "compaction rewrites re-emitted through the tail")
-      TableLog.appendBatch(batchDf(2), dir, "r", 2L)
-      q.processAllAvailable()
-      val got = spark.table("tlog_tail").select("id").as[Long].collect().sorted.toSeq
-      assert(got == (0 to 2).flatMap(b => b * 1000L until b * 1000L + 100L),
-        s"tail diverged: ${got.length} rows")
-      // now push the consumed a<v>- files out of retention AND grace so
-      // vacuum really reclaims them — the live tailer must not re-emit,
-      // error, or lose anything over the deletion
-      (0 until TableLog.KeepManifests + 2).foreach { i =>
-        TableLog.appendBatch(batchDf(10 + i, n = 1), dir, "r", 10L + i)
-      }
-      TableLog.vacuum(spark, dir, graceMs = 0L)
-      val a01 = new java.io.File(dir).listFiles()
-        .filter(f => f.getName.startsWith("a0-") || f.getName.startsWith("a1-"))
-      assert(a01.isEmpty, s"early append files not reclaimed: ${a01.map(_.getName).toSeq}")
-      q.processAllAvailable()
-      val total = spark.table("tlog_tail").count()
-      assert(total == 300L + TableLog.KeepManifests + 2,
-        s"tail diverged across file reclamation: $total")
-    } finally q.stop()
   }
 
   test("appendsSince: exact deltas, nothing from compaction versions, loud retention edge") {

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** The version-offset streaming tail ([[TableLog.readTailVersions]] /
   * [[TableLog.readTailWhere]]): manifest-transactional micro-batches,
   * per-batch stats pruning through the [[ManifestFileIndex]], loud
-  * retention edges, and checkpointed exactly-once restarts — the
-  * guarantees the glob-filtered [[TableLog.readTail]] cannot give. */
+  * retention edges, and checkpointed exactly-once restarts — with the
+  * read position owned by the engine's offsets WAL, capped or not. */
 class TableLogTailSpec extends SparkSuite {
   import spark.implicits._
 
@@ -16,6 +16,16 @@ class TableLogTailSpec extends SparkSuite {
 
   private def ckpt(): String =
     java.nio.file.Files.createTempDirectory("graft_vtail_ck").toString
+
+  /** Delete every entry of a checkpoint log dir whose base name fails
+    * `keep` — with its `.crc` sidecar, or the local FS flags the later
+    * re-write as tampering. Reconstructs a crash between the engine's
+    * offsets-log write and its commit-log write. */
+  private def scrub(dir: java.io.File, keep: String => Boolean): Unit =
+    Option(dir.listFiles()).getOrElse(Array.empty).foreach { f =>
+      val base = f.getName.stripPrefix(".").stripSuffix(".crc")
+      if (!keep(base)) f.delete()
+    }
 
   /** One single-file batch with `ts` spanning [b*100, b*100+99]. */
   private def batch(b: Int) = Seq.tabulate(100)(i => (b * 100L + i, s"v$b-$i"))
@@ -196,11 +206,6 @@ class TableLogTailSpec extends SparkSuite {
     // the logged versions) would make the replay silently EMPTY; the
     // persisted resolution must re-deliver the identical rows. (.crc
     // sidecars go too, or the local FS flags the re-write as tampering.)
-    def scrub(dir: java.io.File, keep: String => Boolean): Unit =
-      Option(dir.listFiles()).getOrElse(Array.empty).foreach { f =>
-        val base = f.getName.stripPrefix(".").stripSuffix(".crc")
-        if (!keep(base)) f.delete()
-      }
     scrub(new java.io.File(s"$ck/commits"), _ => false)
     scrub(new java.io.File(s"$ck/offsets"), _ == "0")
     counts.synchronized(counts.clear())
@@ -241,10 +246,11 @@ class TableLogTailSpec extends SparkSuite {
     val out = ckpt() + "/out"
     (0 until 8).foreach(b => TableLog.appendBatch(batch(b), dir, "r", b.toLong))
     // since = -1 with a cap: after the first run commits version 7, a
-    // restart re-seeds a NAIVE floor back at -1 — its capped offers
-    // would sit behind the checkpoint and a later window starting from
-    // one of them would re-deliver versions 3..7 (the rewind this spec
-    // pins out); the persisted floor keeps offers at >= 7
+    // restart that counted its window from `since` would offer offsets
+    // behind the checkpoint and a later window starting from one of
+    // them would re-deliver versions 3..7 (the rewind this spec pins
+    // out); counting from the engine's recovered start keeps offers at
+    // >= 7
     def start() = TableLog.readTailVersions(spark, dir, since = Some(-1L),
         maxVersionsPerTrigger = Some(3))
       .writeStream.format("parquet").option("path", out)
@@ -261,20 +267,6 @@ class TableLogTailSpec extends SparkSuite {
         s"rewound offers re-emitted or lost rows: ${got.length} rows, " +
           s"dups=${got.groupBy(identity).count(_._2.length > 1)}")
     } finally q2.stop()
-    // floor file lost (torn write / cap enabled over an old checkpoint):
-    // the floor is UNKNOWN, and the only safe offer is one uncapped
-    // re-anchor at the head — still exactly-once, never a rewind
-    val floorF = new java.io.File(s"$ck/sources/0/offered-floor")
-    assert(floorF.exists, "fixture vacuity: no floor file was persisted")
-    assert(floorF.delete())
-    (10 until 12).foreach(b => TableLog.appendBatch(batch(b), dir, "r", b.toLong))
-    val q3 = start()
-    try {
-      q3.processAllAvailable()
-      val got = spark.read.parquet(out).select("ts").as[Long].collect().sorted.toSeq
-      assert(got == (0L until 1200L),
-        s"unknown-floor recovery re-emitted or lost rows: ${got.length} rows")
-    } finally q3.stop()
   }
 
   test("a capped→uncapped→capped option sequence never rewinds offers below the committed offset") {
@@ -289,11 +281,11 @@ class TableLogTailSpec extends SparkSuite {
     val q1 = start(Some(2))
     try q1.processAllAvailable() finally q1.stop()
     assert(spark.read.parquet(out).count() == 400L)
-    // a long UNCAPPED leg: if its advancing offers skip the floor file,
-    // the persisted floor stays at the capped leg's last offer (3) while
-    // the checkpoint commits through 11 — and the re-capped leg below
-    // would seed from it, offering 3+2=5, an offset BEHIND the committed
-    // one, re-emitting versions 4..11 after the engine logs the rewind
+    // a long UNCAPPED leg: the checkpoint commits through 11 — a
+    // re-capped leg below that counted its window from anything but
+    // the committed offset (the capped leg's last offer, 3) would offer
+    // 3+2=5, an offset BEHIND the committed one, re-emitting versions
+    // 4..11 after the engine logs the rewind
     (4 until 12).foreach(b => TableLog.appendBatch(batch(b), dir, "r", b.toLong))
     val q2 = start(None)
     try q2.processAllAvailable() finally q2.stop()
@@ -307,6 +299,95 @@ class TableLogTailSpec extends SparkSuite {
         s"re-enabled cap rewound below the committed offset: ${got.length} " +
           s"rows, dups=${got.groupBy(identity).count(_._2.length > 1)}")
     } finally q3.stop()
+  }
+
+  test("capped crash replay re-runs the logged window, then moves on") {
+    val dir = freshTable()
+    val ck = ckpt()
+    (0 until 6).foreach(b => TableLog.appendBatch(batch(b), dir, "r", b.toLong))
+    val seen = scala.collection.mutable.Map.empty[Long, Seq[Long]]
+    def start() = TableLog.readTailVersions(spark, dir, since = Some(-1L),
+        maxVersionsPerTrigger = Some(2))
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", ck)
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        val ts = df.select("ts").as[Long].collect().sorted.toSeq
+        seen.synchronized { seen(id) = ts }; ()
+      }.start()
+    val q1 = start()
+    try q1.processAllAvailable() finally q1.stop()
+    val firstRun = seen.synchronized(seen.toMap)
+    assert(firstRun == Map(0L -> (0L until 200L), 1L -> (200L until 400L),
+        2L -> (400L until 600L)),
+      s"fixture: the backlog was not windowed 2 versions at a time: " +
+        firstRun.view.mapValues(_.size).toMap)
+    // "crashed right after logging offsets/1": batch 1's window (1, 3]
+    // is in the offsets WAL, only batch 0 is committed
+    scrub(new java.io.File(s"$ck/commits"), _ == "0")
+    scrub(new java.io.File(s"$ck/offsets"), Set("0", "1"))
+    (6 until 8).foreach(b => TableLog.appendBatch(batch(b), dir, "r", b.toLong))
+    seen.synchronized(seen.clear())
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    val got = seen.synchronized(seen.toMap)
+    assert(got.get(1L) == firstRun.get(1L),
+      s"the replay did not re-deliver the logged window: ${got.get(1L).map(_.size)}")
+    assert(got.get(2L) == Some(400L until 600L),
+      s"the window after the replay did not start at the logged end: " +
+        got.view.mapValues(_.headOption).toMap)
+    assert(got.keySet == Set(1L, 2L, 3L) && got(3L) == (600L until 800L),
+      s"rows lost or re-emitted after the replay: ${got.view.mapValues(_.size).toMap}")
+    // the read position lives in the offsets WAL alone: the source's
+    // checkpoint metadata holds the resolved `since` and nothing else
+    val meta = new java.io.File(s"$ck/sources/0").list()
+      .filterNot(_.endsWith(".crc")).toSet
+    assert(meta == Set("since-resolved"), s"source checkpoint files: $meta")
+  }
+
+  test("progress reports the uncapped head as latestOffset") {
+    val dir = freshTable()
+    (0 until 6).foreach(b => TableLog.appendBatch(batch(b), dir, "r", b.toLong))
+    val q = TableLog.readTailVersions(spark, dir, since = Some(-1L),
+        maxVersionsPerTrigger = Some(2))
+      .writeStream.format("noop").outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      val first = q.recentProgress.head.sources.head
+      assert(first.latestOffset == "5" && first.endOffset == "1",
+        s"versions behind head not visible: latest=${first.latestOffset} " +
+          s"end=${first.endOffset}")
+    } finally q.stop()
+  }
+
+  test("a live tail survives vacuum reclaiming its consumed files") {
+    val dir = freshTable()
+    (0 until 2).foreach(b => TableLog.appendBatch(batch(b), dir, "r", b.toLong))
+    val q = TableLog.readTailVersions(spark, dir, since = Some(-1L))
+      .writeStream.format("memory").queryName("vtail_reclaim")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      // a full rewrite supersedes the a0-/a1- files; then enough
+      // one-row appends (the tail keeping up, its lease following it)
+      // push their manifests out of retention, and a zero-grace vacuum
+      // really deletes the consumed files under the live tail
+      TableLog.compact(spark, dir, targetBytes = 1L << 20)
+      val extra = TableLog.KeepManifests + 2
+      (0 until extra).foreach { i =>
+        TableLog.appendBatch(batch(10 + i).limit(1), dir, "r", 10L + i)
+        q.processAllAvailable()
+      }
+      TableLog.vacuum(spark, dir, graceMs = 0L)
+      val a01 = new java.io.File(dir).listFiles()
+        .filter(f => f.getName.startsWith("a0-") || f.getName.startsWith("a1-"))
+      assert(a01.isEmpty, s"early append files not reclaimed: ${a01.map(_.getName).toSeq}")
+      TableLog.appendBatch(batch(50), dir, "r", 50L)
+      q.processAllAvailable()
+      val got = spark.table("vtail_reclaim").select("ts").as[Long].collect().sorted.toSeq
+      val want = (0L until 200L) ++ (0 until extra).map(i => (10L + i) * 100L) ++
+        (5000L until 5100L)
+      assert(got == want, s"tail diverged across file reclamation: ${got.length} rows")
+    } finally q.stop()
   }
 
   test("a mid-stream evolve fails the tail loudly — restart re-pins and the added column flows") {
