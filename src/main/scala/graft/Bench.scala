@@ -28,7 +28,8 @@ object Bench {
     * the bench line now carries the evidence: a reader comparing rounds
     * checks `env` before reading `queries`. Warn loudly on stderr too.
     */
-  private[graft] def contentionEnv(): String = {
+  private[graft] def contentionEnv(
+      sessionConf: Option[String] = sys.env.get("SPARK_GRAFT_SESSION_CONF")): String = {
     val load1 =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
@@ -60,11 +61,19 @@ object Bench {
     // attribution (ADVICE r17): a session-conf overlay changes what is
     // being measured, so its value must ride the bench line; absent when
     // unset, so official (driver) runs print the identical shape
-    val overlay = sys.env.get("SPARK_GRAFT_SESSION_CONF")
-      .map(v => s""","session_conf":"${v.take(200).replaceAll("[\"\\\\]", "_")}"""")
-      .getOrElse("")
+    val overlay = sessionConf.map(v => s""","session_conf":${jstr(v.take(200))}""").getOrElse("")
     f"""{"load1":$load1%.2f,"other_jvms":$otherJvms,"cpu_probe_ms":${cpuProbeMs()}%.1f,"cpu_probe_par_ms":${cpuProbeParMs()}%.1f$overlay}"""
   }
+
+  /** A JSON string literal on one line: quotes and backslashes escaped,
+    * control characters as spaces. Truncates BEFORE escaping — truncating
+    * after could split an escape pair and leave a dangling backslash that
+    * corrupts the JSON line. */
+  private[graft] def jstr(s: String): String =
+    "\"" + s.take(300).flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => " "; case c => c.toString
+    } + "\""
 
   /** The probe's deterministic 60M-step integer-mix loop. */
   private def spin(): Unit = {
@@ -180,13 +189,6 @@ object Bench {
     }
     val qs = results.map { case (k, v, _) => "\"" + k + f"""\":$v%.3f""" }
       .mkString("{", ",", "}")
-    // truncate BEFORE escaping — truncating after could split an escape
-    // pair and leave a dangling backslash that corrupts the JSON line
-    def jstr(s: String): String =
-      "\"" + s.take(300).flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => " "; case c => c.toString
-      } + "\""
     val errs = results.collect { case (k, _, Some(msg)) =>
       s"""{"query":${jstr(k)},"error":${jstr(msg)}}"""
     }.mkString("[", ",", "]")

@@ -57,6 +57,10 @@ object Sessions {
       // spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS (a
       // runtime conf — settable right before the ingest writes).
       .config("spark.ui.enabled", "false")
+      // the `file:` scheme without a forked `chmod`/`readlink` per local
+      // create, mkdir and rename (graft.fs.LocalFs); set here, before the
+      // JVM's first `file:` FileSystem is cached
+      .config(graft.fs.LocalFs.confs)
       .getOrCreate()
     // Deployment/experiment hook: SPARK_GRAFT_SESSION_CONF="k=v;k=v"
     // applies runtime-settable confs on top of the defaults above — the

@@ -108,11 +108,15 @@ object Lsh {
     * the DuckDB oracles use, sqrt-then-square ulp and all), argmin with
     * the (score, cid) tiebreak via least() over the centroid structs.
     * No shuffle, no aggregation: the centroid set is a driver-side
-    * constant (a frozen quantizer is small by definition). */
+    * constant (a frozen quantizer is small by definition). A NULL
+    * embedding has no nearest centroid: NULL in, NULL out, here, in
+    * [[nearestCentroidGated]] and in [[nearestCentroids]] (the struct
+    * order alone would rank its NULL scores first and pick a cid). */
   def nearestCentroid(embedding: Column, centroids: Seq[(Long, Array[Float])]): Column = {
     require(centroids.nonEmpty, "nearestCentroid: need at least one centroid")
-    (if (centroids.size == 1) exactScoreStructs(embedding, centroids).head
-     else least(exactScoreStructs(embedding, centroids): _*)).getField("c")
+    when(embedding.isNotNull,
+      (if (centroids.size == 1) exactScoreStructs(embedding, centroids).head
+       else least(exactScoreStructs(embedding, centroids): _*)).getField("c"))
   }
 
   /** The exact-decimal (score, cid) structs [[nearestCentroid]] argmins
@@ -156,7 +160,8 @@ object Lsh {
   def nearestCentroidGated(embedding: Column,
       centroids: Seq[(Long, Array[Float])]): Column = {
     require(centroids.nonEmpty, "nearestCentroidGated: need at least one centroid")
-    if (centroids.size == 1) lit(centroids.head._1)
+    // the kernel is null-intolerant: a NULL embedding gives NULL
+    if (centroids.size == 1) when(embedding.isNotNull, lit(centroids.head._1))
     else native.nearest_centroid_gated(embedding, CentroidModel(centroids))
     // (a column spelling of the same gate — double-score struct sort +
     // CaseWhen over the exact argmin — was measured and replaced: its
@@ -173,9 +178,9 @@ object Lsh {
       centroids: Seq[(Long, Array[Float])], n: Int): Column = {
     require(centroids.nonEmpty, "nearestCentroids: need at least one centroid")
     require(n >= 1, s"nearestCentroids: n must be >= 1, got $n")
-    transform(
+    when(embedding.isNotNull, transform(
       slice(array_sort(array(exactScoreStructs(embedding, centroids): _*)), 1, n),
-      s => s.getField("c"))
+      s => s.getField("c")))
   }
 
   /** Loud guard for the unsigned-32-bit-half fingerprint contract

@@ -56,6 +56,23 @@ class NearestCentroidSpec extends SparkSuite {
     assert(rows.exists(_.getLong(3) == 3L))
   }
 
+  test("a NULL embedding gives NULL on every path, 1 centroid or many") {
+    val r = new scala.util.Random(31)
+    val cents = (0 until 4).map(i => (100L + i, randVec(r, 8))).toSeq
+    val df = Seq((1L, Some(randVec(r, 8))), (2L, None: Option[Array[Float]]))
+      .toDF("vec_id", "embedding")
+    for (cs <- Seq(cents, cents.take(1))) {
+      val rows = df.select($"vec_id",
+          Lsh.nearestCentroid($"embedding", cs).as("exact"),
+          Lsh.nearestCentroidGated($"embedding", cs).as("gated"),
+          Lsh.nearestCentroids($"embedding", cs, 2).as("probes"))
+        .collect().map(row => row.getLong(0) -> row).toMap
+      assert((1 to 3).forall(rows(2L).isNullAt), s"${cs.size} centroid(s): ${rows(2L)}")
+      assert((1 to 3).forall(!rows(1L).isNullAt(_)), s"${cs.size} centroid(s): ${rows(1L)}")
+      assert(rows(1L).getLong(1) == rows(1L).getLong(2))
+    }
+  }
+
   test("nearestCentroids returns the exact (score, cid)-ordered prefix") {
     val r = new scala.util.Random(23)
     val cents = (0 until 16).map(i => (100L + i, randVec(r, 32))).toSeq
