@@ -58,8 +58,8 @@ object Explain {
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()
     val total = (System.nanoTime() - t0) / 1e9
-    // listener events are asynchronous; give the bus a moment to drain
-    Thread.sleep(1000)
+    // listener events are asynchronous: drain the bus before reading
+    org.apache.spark.sql.graftbridge.drainListenerBus(spark)
     println(f"%nTIMED: $name = $total%.3f s (construction excluded)%n")
     println("stage  tasks  wall_ms   run_ms   cpu_ms    gc_ms  name")
     stages.sortBy(_._1).foreach { case (id, nm, tasks, ms, run, cpu, gc) =>

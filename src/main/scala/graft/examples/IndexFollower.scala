@@ -142,8 +142,9 @@ object IndexFollower {
     * With `maintainTargetBytes` set, the dedup index table is
     * periodically compacted to ~that many bytes per file — every
     * `maintainEveryNVersions` source versions (a stateless gate on the
-    * version number, so replays cannot double-run it) — re-laid-out by
-    * `(band, band_hash)`, the probe join's key, so footer stats prune
+    * version number, so replays cannot double-run it) through
+    * [[DedupIndex.maintain]] — a loud geometry check, then a re-layout
+    * by `(band, band_hash)`, the probe join's key, so footer stats prune
     * probe scans; then vacuumed past `vacuumGraceMs`. Maintenance runs
     * AFTER the span checkpoint (it rewrites, never changes, rows —
     * verdicts are identical before and after, spec-pinned) and shares
@@ -375,8 +376,7 @@ object IndexFollower {
             if ((to / maintainEveryNVersions) > (applied / maintainEveryNVersions)
                 && TableLog.latestVersion(spark, dedupIndexDir).isDefined)
               maintainTargetBytes.foreach { target =>
-                TableLog.compact(spark, dedupIndexDir, target,
-                  layoutBy = Seq("band", "band_hash"))
+                DedupIndex.maintain(spark, dedupIndexDir, target, geom)
                 TableLog.vacuum(spark, dedupIndexDir, vacuumGraceMs)
               }
             applied = to

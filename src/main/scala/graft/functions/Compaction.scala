@@ -1,60 +1,19 @@
 package graft.functions
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 
-/** Small-file compaction — the maintenance pass every streaming-sink
-  * table needs: micro-batch writers emit a file per (batch × partition),
-  * and a month of 30-second triggers turns a table into 10⁵ kilobyte
-  * files whose open/footer overhead dominates every later scan. Compact
-  * rewrites the table into files near a target size.
-  *
-  * Scale design: the file count is derived from the table's ACTUAL bytes
-  * (filesystem metadata, no data read), and the rewrite is one
-  * `repartition(n)` — a single round-robin shuffle, no driver-side row
-  * handling.
-  *
-  * Concurrency/failure contract (raw directories have no transaction
-  * log — on Delta/Iceberg this whole operation is `OPTIMIZE`):
-  *  - SINGLE WRITER: pause the sink while compacting. As a guard, the
-  *    input listing is re-checked after the rewrite and the swap ABORTS
-  *    (staging deleted, table untouched) if any file was added, removed,
-  *    or resized meanwhile; the remaining unguarded window is only the
-  *    two renames of the swap itself.
-  *  - CRASH: the swap is rename(dir → dir__precompact) then
-  *    rename(staging → dir) then delete(backup). A crash between steps
-  *    leaves a state [[recover]] repairs deterministically: table
-  *    missing + backup present → restore the backup (the rewrite is
-  *    discarded); table present + backup present → the swap had
-  *    completed, drop the backup. A new compaction REFUSES to start
-  *    while such debris exists (renaming onto an existing directory is
-  *    filesystem-dependent — HDFS would nest the table inside the stale
-  *    backup). Readers mid-swap can observe a missing directory for the
-  *    instant between the renames.
+/** Small-file compaction sizing — the maintenance arithmetic every
+  * streaming-sink table needs: micro-batch writers emit a file per
+  * (batch × partition), and a month of 30-second triggers turns a table
+  * into 10⁵ kilobyte files whose open/footer overhead dominates every
+  * later scan. The rewrite itself is [[TableLog.compact]] (or
+  * [[TableLog.compactZorder]]): a manifest-committed swap with snapshot
+  * isolation and no rename window. This object only derives its inputs
+  * — the table's ACTUAL bytes (filesystem metadata, no data read) and
+  * the file count they call for.
   */
 object Compaction {
-
-  private def fsFor(spark: SparkSession, dir: String): (FileSystem, Path) = {
-    val path = new Path(dir)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
-
-  /** (path, length, mtime) of every data file under `dir` — the identity
-    * of the table's current contents for the concurrent-write guard.
-    * mtime closes the equal-length-in-place-overwrite hole: a writer that
-    * replaces a file with same-sized contents during the rewrite still
-    * changes the modification time, so the swap aborts instead of
-    * silently dropping its data. */
-  private[functions] def dataFiles(fs: FileSystem, path: Path): Set[(String, Long, Long)] = {
-    val it = fs.listFiles(path, true)
-    val b = Set.newBuilder[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      if (!f.getPath.getName.startsWith("_"))
-        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
-    }
-    b.result()
-  }
 
   /** Bytes of all data files under `dir`. For a [[TableLog]] table the
     * answer comes from the newest manifest — one small-file read instead
@@ -69,8 +28,9 @@ object Compaction {
     * reclaims); mixed-mode writing is outside both modules' contracts. */
   def dataBytes(spark: SparkSession, dir: String): Long =
     TableLog.latest(spark, dir).map(_.bytes).getOrElse {
-      val (fs, path) = fsFor(spark, dir)
-      val it = fs.listFiles(path, true)
+      val path = new Path(dir)
+      val it = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(path, true)
       var total = 0L
       while (it.hasNext) {
         val f = it.next()
@@ -91,104 +51,4 @@ object Compaction {
         "(> Int.MaxValue) — raise targetBytes")
     n.toInt
   }
-
-  private def backupPath(dir: String) = new Path(dir.stripSuffix("/") + "__precompact")
-  private def stagingPath(dir: String) = new Path(dir.stripSuffix("/") + "__compacting")
-
-  /** Compact the parquet table at `dir` into ~`targetBytes` files via a
-    * staging rewrite + rename swap (see the concurrency/failure contract
-    * above). Returns the number of files written.
-    *
-    * `layoutBy` turns the rewrite into a RE-LAYOUT: instead of a
-    * round-robin `repartition(n)`, rows are range-partitioned and sorted
-    * within files by the named columns (e.g. a [[Zorder.interleave]] key
-    * materialized at write time) — the periodic OPTIMIZE ... ZORDER BY
-    * of a streaming sink, done in the same single-writer window as the
-    * compaction so the table pays one rewrite for both. Same byte-driven
-    * file count; footer min/max stats of the layout columns become
-    * tight, so later scans prune on them. */
-  def compactParquet(spark: SparkSession, dir: String, targetBytes: Long,
-      layoutBy: Seq[String] = Nil): Int = {
-    val (fs, path) = fsFor(spark, dir)
-    compactWithBaseline(spark, dir, targetBytes, dataFiles(fs, path), layoutBy)
-  }
-
-  /** [[compactParquet]] with the guard baseline injected — the listing
-    * the rewrite is planned from. Package-visible so the spec can
-    * exercise the concurrent-write abort deterministically. */
-  private[functions] def compactWithBaseline(spark: SparkSession, dir: String,
-      targetBytes: Long, before: Set[(String, Long, Long)],
-      layoutBy: Seq[String] = Nil): Int = {
-    val (fs, path) = fsFor(spark, dir)
-    // fail fast on debris from a prior crash: renaming onto an existing
-    // backup directory has filesystem-dependent semantics (HDFS nests
-    // the source INSIDE it), which a later crash would then "restore" as
-    // corrupt table contents — recover() first, always
-    Seq(backupPath(dir), stagingPath(dir)).filter(fs.exists).foreach { p =>
-      throw new java.io.IOException(
-        s"leftover $p from a prior compaction — run Compaction.recover(\"$dir\") first")
-    }
-    val n = targetFiles(before.iterator.map(_._2).sum, targetBytes)
-    val staging = stagingPath(dir)
-    val table = spark.read.parquet(dir)
-    val laidOut =
-      if (layoutBy.isEmpty) table.repartition(n)
-      else {
-        val cols = layoutBy.map(org.apache.spark.sql.functions.col)
-        table.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
-      }
-    laidOut.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    // concurrent-write guard: a sink that committed a file during the
-    // rewrite would lose it in the swap — abort, keep the table as-is
-    val after = dataFiles(fs, path)
-    if (after != before) {
-      fs.delete(staging, true)
-      throw new java.util.ConcurrentModificationException(
-        s"$dir changed during compaction (" +
-          s"${(after -- before).size} added, ${(before -- after).size} removed/resized); " +
-          "aborted — pause the writer and retry")
-    }
-    val backup = backupPath(dir)
-    if (!fs.rename(path, backup)) {
-      fs.delete(staging, true)
-      throw new java.io.IOException(s"could not stage out $dir")
-    }
-    if (!fs.rename(staging, path)) {
-      fs.rename(backup, path) // restore; staging left for inspection
-      throw new java.io.IOException(s"could not swap $staging into $dir")
-    }
-    fs.delete(backup, true)
-    n
-  }
-
-  /** Repair after a crash mid-[[compactParquet]]. Idempotent; returns a
-    * description of the action taken (or "clean"). Rules: a surviving
-    * backup with no table restores the backup and discards staging; a
-    * surviving backup WITH a table means the swap completed — drop the
-    * backup; leftover staging alone is a discarded rewrite. */
-  def recover(spark: SparkSession, dir: String): String = {
-    val (fs, path) = fsFor(spark, dir)
-    val backup = backupPath(dir)
-    val staging = stagingPath(dir)
-    if (fs.exists(backup) && !fs.exists(path)) {
-      fs.delete(staging, true)
-      if (!fs.rename(backup, path))
-        throw new java.io.IOException(s"could not restore $backup to $dir")
-      "restored-backup"
-    } else if (fs.exists(backup)) {
-      fs.delete(backup, true)
-      "dropped-completed-backup"
-    } else if (fs.exists(staging)) {
-      fs.delete(staging, true)
-      "dropped-stale-staging"
-    } else "clean"
-  }
-
-  /** Plan-only variant for sinks still being written: coalesce `df` to
-    * the file count its estimated bytes call for. `bytesPerRow` comes
-    * from a sampled or historical measurement; coalesce (not
-    * repartition) so the pre-write shuffle is avoided when shrinking. */
-  def coalesceForWrite(df: DataFrame, rows: Long, bytesPerRow: Long,
-                       targetBytes: Long): DataFrame =
-    df.coalesce(targetFiles(rows * bytesPerRow, targetBytes))
 }

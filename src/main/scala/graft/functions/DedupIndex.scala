@@ -62,9 +62,10 @@ object DedupIndex {
 
   /** The signature index rows of `docs` (doc_id, text): one row per
     * (doc, band) with the doc's full signature vector inlined —
-    * `(doc_id, sigs, band, band_hash)`. Persist this (e.g. parquet
-    * partitioned or bucketed by `band_hash`) as the dedup index; docs
-    * with no 3-shingle (under 3 tokens) index nothing and always keep. */
+    * `(doc_id, sigs, band, band_hash)`. Persist this as the dedup index
+    * (a [[TableLog]] table: one `appendBatch` per chunk, [[maintain]] to
+    * compact); docs with no 3-shingle (under 3 tokens) index nothing and
+    * always keep. */
   def indexRows(docs: DataFrame,
       geom: Lsh.Geometry = Lsh.Small): DataFrame =
     docs
@@ -113,34 +114,34 @@ object DedupIndex {
         col("match_id").isNull.as("is_keeper"))
   }
 
-  /** Maintenance pass for a parquet-persisted index directory: every
-    * ingested chunk appends its own delta files, so a year of daily
-    * batches is 365× the file count the probes deserve. Compacts the
-    * directory to ~`targetBytes` files RE-LAID-OUT by `(band,
-    * band_hash)` — the probe join's key — so each rewritten file covers
-    * a tight band-hash range and parquet footer stats prune probe scans
-    * to the buckets a batch actually hits.
+  /** Maintenance pass for a [[TableLog]] index table: every ingested
+    * chunk appends its own delta files, so a year of daily batches is
+    * 365× the file count the probes deserve. Compacts the index to
+    * ~`targetBytes` files RE-LAID-OUT by `(band, band_hash)` — the probe
+    * join's key — so each rewritten file covers a tight band-hash range
+    * and the recorded per-file stats prune probe scans to the buckets a
+    * batch actually hits.
     *
     * Runs the geometry guard first: compacting an index with the wrong
     * geometry is the silent-keeper trap ([[requireGeometry]]) one step
     * earlier, and the loud error here beats a clean-looking rewrite that
-    * later probes mismatch against. Same single-writer contract as
-    * [[Compaction.compactParquet]] (run it between ingests — the natural
-    * slot is right after appending a delta); crash debris from a prior
-    * attempt is repaired first, exactly like the streaming maintenance
-    * loop. Returns the number of files written; probe verdicts are
-    * IDENTICAL before and after (DedupIndexSpec pins it — compaction
-    * moves rows, never changes them). */
+    * later probes mismatch against. The rewrite is [[TableLog.compact]]'s
+    * manifest-committed swap: readers keep their snapshot, a crash
+    * leaves only staging scratch for [[TableLog.vacuum]], and appends
+    * racing it rebase. A raw-parquet index written before the log
+    * existed migrates once with [[TableLog.adopt]]. Returns the number
+    * of files written; probe verdicts are IDENTICAL before and after
+    * (DedupIndexSpec pins it — compaction moves rows, never changes
+    * them). */
   def maintain(spark: org.apache.spark.sql.SparkSession, indexDir: String,
       targetBytes: Long, geom: Lsh.Geometry = Lsh.Small): Int = {
-    // repair BEFORE the geometry read: the crash state recover exists
-    // for (table renamed to __precompact, path missing) would make the
-    // geometry check itself throw path-not-found forever
-    val repaired = Compaction.recover(spark, indexDir)
-    if (repaired != "clean")
-      System.err.println(s"[graft] dedup-index recover on $indexDir: $repaired")
-    requireGeometry(spark.read.parquet(indexDir), geom)
-    Compaction.compactParquet(spark, indexDir, targetBytes,
+    val m = TableLog.latest(spark, indexDir).getOrElse(
+      throw new IllegalStateException(s"$indexDir has no committed manifest " +
+        "— not a TableLog index (migrate a raw parquet index with " +
+        "TableLog.adopt)"))
+    if (m.files.nonEmpty)
+      requireGeometry(TableLog.readVersion(spark, indexDir, m), geom)
+    TableLog.compact(spark, indexDir, targetBytes,
       layoutBy = Seq("band", "band_hash"))
   }
 }

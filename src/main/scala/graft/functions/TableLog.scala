@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A minimal manifest commit log for streaming-ingest parquet tables —
@@ -377,14 +377,22 @@ object TableLog {
       }
   }
 
-  private def listedLatestVersion(fs: FileSystem, dir: String): Option[Long] = {
-    val versions = fs.listStatus(logDir(dir)).iterator.flatMap { f =>
+  private def listedLatestVersion(fs: FileSystem, dir: String): Option[Long] =
+    listManifests(fs, dir).lastOption.map(_._1)
+
+  /** Every retained manifest as `(version, status)`, oldest first, from
+    * ONE listing of the log dir and file NAMES only — no manifest is
+    * opened. Empty when the table has no log. */
+  private def listManifests(fs: FileSystem, dir: String): Vector[(Long, FileStatus)] = {
+    val listed =
+      try fs.listStatus(logDir(dir))
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    listed.iterator.flatMap { f =>
       f.getPath.getName match {
-        case ManifestRe(v) => Iterator.single(v.toLong)
+        case ManifestRe(v) => Iterator.single((v.toLong, f))
         case _             => Iterator.empty
       }
-    }.toSeq
-    if (versions.isEmpty) None else Some(versions.max)
+    }.toVector.sortBy(_._1)
   }
 
   /** The newest committed manifest, or None for a not-yet-created table.
@@ -605,17 +613,8 @@ object TableLog {
 
   /** Retained manifest versions, from file NAMES only — no manifest is
     * opened, so this is safe and cheap at any manifest size. */
-  def retainedVersions(spark: SparkSession, dir: String): Seq[Long] = {
-    val (fs, _) = fsFor(spark, dir)
-    val log = logDir(dir)
-    if (!fs.exists(log)) return Nil
-    fs.listStatus(log).iterator.flatMap { f =>
-      f.getPath.getName match {
-        case ManifestRe(v) => Iterator.single(v.toLong)
-        case _             => Iterator.empty
-      }
-    }.toSeq.sorted
-  }
+  def retainedVersions(spark: SparkSession, dir: String): Seq[Long] =
+    listManifests(fsFor(spark, dir)._1, dir).map(_._1)
 
   /** [[readFully]] tolerating a concurrent vacuum pruning the file
     * between listing and open — the benign read-side race every
@@ -639,15 +638,9 @@ object TableLog {
     * the max version, which pruning never touches). */
   def history(spark: SparkSession, dir: String): Seq[Manifest] = {
     val (fs, _) = fsFor(spark, dir)
-    val log = logDir(dir)
-    if (!fs.exists(log)) return Nil
-    fs.listStatus(log).iterator.flatMap { f =>
-      f.getPath.getName match {
-        case ManifestRe(_) =>
-          tryReadFully(fs, f.getPath).map(resolveManifest(fs, dir, _)).iterator
-        case _             => Iterator.empty
-      }
-    }.toSeq.sortBy(_.version)
+    listManifests(fs, dir).flatMap { case (_, f) =>
+      tryReadFully(fs, f.getPath).map(resolveManifest(fs, dir, _))
+    }
   }
 
   /** Retained `(version, commitTimeMillis)` pairs, oldest version
@@ -666,18 +659,9 @@ object TableLog {
     * well-defined step function. Cost: one log-dir listing, zero
     * manifest reads. */
   def retainedCommitTimes(spark: SparkSession, dir: String): Seq[(Long, Long)] = {
-    val (fs, _) = fsFor(spark, dir)
-    val log = logDir(dir)
-    if (!fs.exists(log)) return Nil
-    val raw = fs.listStatus(log).iterator.flatMap { f =>
-      f.getPath.getName match {
-        case ManifestRe(v) =>
-          Iterator.single((v.toLong, f.getModificationTime))
-        case _ => Iterator.empty
-      }
-    }.toSeq.sortBy(_._1)
     var prev = Long.MinValue
-    raw.map { case (v, t) =>
+    listManifests(fsFor(spark, dir)._1, dir).map { case (v, f) =>
+      val t = f.getModificationTime
       val adj = if (prev == Long.MinValue) t else math.max(t, prev + 1)
       prev = adj
       (v, adj)
@@ -899,18 +883,9 @@ object TableLog {
     * `retention(dir)` must fall back to a full snapshot read rather
     * than discover FileNotFound mid-query. None for a table with no
     * log. */
-  def retention(spark: SparkSession, dir: String): Option[(Long, Long)] = {
-    val (fs, _) = fsFor(spark, dir)
-    val log = logDir(dir)
-    if (!fs.exists(log)) return None
-    val manifests = fs.listStatus(log).flatMap { f =>
-      f.getPath.getName match {
-        case ManifestRe(v) => Some((v.toLong, f.getModificationTime))
-        case _             => None
-      }
-    }
-    if (manifests.isEmpty) None else Some(manifests.minBy(_._1))
-  }
+  def retention(spark: SparkSession, dir: String): Option[(Long, Long)] =
+    listManifests(fsFor(spark, dir)._1, dir).headOption
+      .map { case (v, f) => (v, f.getModificationTime) }
 
   /** The per-checkpoint writer identity for [[appendBatch]]'s dedup:
     * created once in `ckptDir` and read back on every restart, so the
@@ -1025,82 +1000,125 @@ object TableLog {
   def appendBatch(batch: DataFrame, dir: String, runKey: String,
                   batchId: Long): Boolean = {
     val spark = batch.sparkSession
-    val (fs, table) = fsFor(spark, dir)
-    val prev = latest(spark, dir)
-      .getOrElse(Manifest(-1L, Vector.empty, 0L, Map.empty, "init"))
-    if (prev.commits.get(runKey).exists(_ >= batchId)) return false
-    prev.schema.foreach { recorded =>
-      require(sameSchema(recorded, batch.schema),
-        s"schema drift rejected for $dir: the table's committed schema is\n  " +
-          s"${recorded.simpleString}\nbut this batch has\n  " +
-          s"${batch.schema.simpleString}\n(nullability differences are " +
-          "tolerated; column names and types must match)")
-    }
-    val staging = new Path(dir.stripSuffix("/"), s"_staging-${java.util.UUID.randomUUID()}")
-    batch.write.options(bloomWriteOptions(prev)).parquet(staging.toString)
-    val staged = fs.listStatus(staging).iterator
-      .filter { f => val n = f.getPath.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".") }
-      .toVector
-    val landed = commitStagedFiles(spark, dir, staged, batch.schema,
-      runKey, batchId, resolvedHint = Some(prev))
+    val (fs, _) = fsFor(spark, dir)
+    val prev = latest(spark, dir).getOrElse(Empty)
+    if (!admits(dir, prev.commits, prev.schema, runKey, batchId, batch.schema))
+      return false
+    val (staging, parts) = stage(fs, dir, batch, prev)
+    val landed = commitAdmitted(spark, fs, dir, prev, parts, batch.schema,
+      runKey, batchId)
     fs.delete(staging, true)
     landed
   }
 
-  /** The post-staging half of [[appendBatch]], shared with the DSv2
-    * writer ([[graft.sources.TableLogV2]]) whose task-side parquet
-    * writers stage files WITHOUT a DataFrame: fence, drift-check,
-    * footer-harvest, land under `a<v>-` names and group-commit. The
-    * caller owns the staging directory (delete it after this returns
-    * or throws); a fenced replay abandons the landed `a`-files to
-    * [[vacuum]] exactly like appendBatch's fence story. `resolvedHint`
-    * skips the head re-resolution for a caller that just resolved it
-    * (appendBatch's pre-staging fence) — safe because this fence and
-    * drift check are ADVISORY fast-fails; the authoritative ones run
-    * inside [[commitGroup]] against the manifest actually committed
-    * over. */
+  /** The post-staging half of [[appendBatch]], for the DSv2 writer
+    * ([[graft.sources.TableLogV2]]) whose task-side parquet writers
+    * stage files WITHOUT a DataFrame: admit, land under `a<v>-` names
+    * and group-commit. The caller owns the staging directory (delete it
+    * after this returns or throws); a fenced replay abandons the landed
+    * `a`-files to [[vacuum]] exactly like appendBatch's fence story. */
   private[graft] def commitStagedFiles(spark: SparkSession, dir: String,
-      staged: Seq[org.apache.hadoop.fs.FileStatus],
+      staged: Seq[FileStatus],
       schema: org.apache.spark.sql.types.StructType,
+      runKey: String, batchId: Long): Boolean = {
+    val (fs, _) = fsFor(spark, dir)
+    val prev = latest(spark, dir).getOrElse(Empty)
+    admits(dir, prev.commits, prev.schema, runKey, batchId, schema) &&
+      commitAdmitted(spark, fs, dir, prev, staged, schema, runKey, batchId)
+  }
+
+  /** Land an admitted append's staged parts and group-commit them.
+    * `prev` is the head the admission ran against; the fence and drift
+    * rules run again inside [[commitGroup]] against the manifest
+    * actually committed over, so this pre-check is only the fast-fail
+    * that saves the writes. */
+  private def commitAdmitted(spark: SparkSession, fs: FileSystem, dir: String,
+      prev: Manifest, parts: Seq[FileStatus],
+      schema: org.apache.spark.sql.types.StructType,
+      runKey: String, batchId: Long): Boolean = {
+    val (entries, added) = land(spark, fs, dir, parts, AppendTag,
+      prev.version + 1, statCols(prev), schema)
+    commitAppend(spark, fs, dir, runKey, batchId, entries, added, schema,
+      harvestedCols = statCols(prev))
+  }
+
+  /** The manifest a not-yet-created table starts from. */
+  private val Empty = Manifest(-1L, Vector.empty, 0L, Map.empty, "init")
+
+  /** The admission rules every write shares, checked before it stages
+    * anything and again against the manifest it commits over. False
+    * when `(runKey, batchId)` is already in `commits`: a replay, fenced
+    * (the caller lands nothing, or abandons what it landed to
+    * [[vacuum]]). A loud error when `schema` differs from the table's
+    * `recorded` schema in column names or types (nullability is
+    * tolerated): the batch must not land, and a later read deep inside
+    * parquet resolution is the wrong place to find out. */
+  private def admits(dir: String, commits: Map[String, Long],
+      recorded: Option[org.apache.spark.sql.types.StructType],
       runKey: String, batchId: Long,
-      resolvedHint: Option[Manifest] = None): Boolean = {
-    val (fs, table) = fsFor(spark, dir)
-    val prev = resolvedHint.orElse(latest(spark, dir))
-      .getOrElse(Manifest(-1L, Vector.empty, 0L, Map.empty, "init"))
-    if (prev.commits.get(runKey).exists(_ >= batchId)) return false
-    prev.schema.foreach { recorded =>
-      require(sameSchema(recorded, schema),
+      schema: org.apache.spark.sql.types.StructType): Boolean = {
+    if (commits.get(runKey).exists(_ >= batchId)) return false
+    recorded.foreach { r =>
+      require(sameSchema(r, schema),
         s"schema drift rejected for $dir: the table's committed schema is\n  " +
-          s"${recorded.simpleString}\nbut this batch has\n  " +
-          s"${schema.simpleString}\n(nullability differences are " +
-          "tolerated; column names and types must match)")
+          s"${r.simpleString}\nbut this write has\n  ${schema.simpleString}\n" +
+          "(nullability differences are tolerated; column names and types " +
+          "must match — a writer that raced an evolve() restarts with the " +
+          "new schema)")
     }
-    val v = prev.version + 1
-    // row counts + stat-column min/max from the staged files' footers:
-    // exact (parquet footers carry both), and a metadata read — NOT a
-    // per-trigger Spark scan job over the batch just written (read
-    // concurrently: a many-partition micro-batch stages many small
-    // files, and serial ~8 ms footer opens would dominate the commit)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val metas = ParquetFooters.readAll(conf, staged.map(_.getPath),
-      statCols(prev), schema)
-    val added = metas.iterator.map(_.rows).sum
-    fs.mkdirs(table)
-    // `a<v>-` marks APPENDED data, `c<v>-` compaction rewrites (on-disk
-    // format): [[appendedEntries]] keys an upsert's new rows on the `a`
-    // prefix so survivor rewrites never re-emit. (After a lost CAS the
-    // committed version may exceed the `v` baked into the name; the
-    // prefix is a tail-visibility tag, not a version.)
-    val entries = staged.toVector.zip(metas).map { case (f, meta) =>
-      val name = s"a$v-${f.getPath.getName}"
-      val dst = new Path(table, name)
-      if (!fs.rename(f.getPath, dst))
-        throw new java.io.IOException(s"could not land ${f.getPath} as $dst")
-      Entry(name, f.getLen, meta.stats)
-    }
-    commitAppend(spark, fs, dir, runKey, batchId, entries, added,
-      Some(schema.json), harvestedCols = statCols(prev))
+    true
+  }
+
+  /** The on-disk tags of landed data files. `a<v>-` marks APPENDED rows:
+    * [[appendedEntries]] keys an upsert's new rows on it, so survivor
+    * rewrites never re-emit. `c<v>-` marks a rewrite of rows the table
+    * already held (compaction, delete and upsert survivors; [[adopt]]'s
+    * `c0-`). After a lost CAS the committed version may exceed the `v`
+    * in the name: the prefix is a tail-visibility tag, not a version. */
+  private val AppendTag = "a"
+  private val RewriteTag = "c"
+
+  /** Write `df` under a fresh `_staging-<uuid>` scratch dir inside the
+    * table, with the table's bloom write options ([[bloomWriteOptions]]
+    * of `m`). Returns the staging dir and its data parts; the caller
+    * lands the parts ([[land]]) and deletes the dir. A crash leaves the
+    * dir to [[vacuum]]. */
+  private def stage(fs: FileSystem, dir: String, df: DataFrame,
+      m: Manifest): (Path, Vector[FileStatus]) = {
+    val staging = new Path(dir.stripSuffix("/"),
+      s"_staging-${java.util.UUID.randomUUID()}")
+    df.write.options(bloomWriteOptions(m)).parquet(staging.toString)
+    val parts = fs.listStatus(staging).iterator
+      .filter { f => val n = f.getPath.getName
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".") }
+      .toVector
+    (staging, parts)
+  }
+
+  /** Move staged parts into the table under `<tag><v>-<part>` names and
+    * build their entries. Row counts and the `statCols` min/max (typed
+    * by `statSchema`) come from the parts' parquet FOOTERS: exact, and a
+    * metadata read rather than a Spark job over the data just written
+    * (read concurrently: a many-partition write stages many small files,
+    * and serial ~8 ms footer opens would dominate the commit). Parts
+    * holding fewer than `minRows` rows are left in staging. Returns the
+    * entries and their total rows; the caller commits them. */
+  private def land(spark: SparkSession, fs: FileSystem, dir: String,
+      parts: Seq[FileStatus], tag: String, v: Long, statCols: Set[String],
+      statSchema: org.apache.spark.sql.types.StructType,
+      minRows: Long = 0L): (Vector[Entry], Long) = {
+    val table = new Path(dir.stripSuffix("/"))
+    val metas = ParquetFooters.readAll(spark.sparkContext.hadoopConfiguration,
+      parts.map(_.getPath), statCols, statSchema)
+    val landed = parts.toVector.zip(metas).filter(_._2.rows >= minRows)
+      .map { case (f, meta) =>
+        val name = s"$tag$v-${f.getPath.getName}"
+        val dst = new Path(table, name)
+        if (!fs.rename(f.getPath, dst))
+          throw new java.io.IOException(s"could not land ${f.getPath} as $dst")
+        (Entry(name, f.getLen, meta.stats), meta.rows)
+      }
+    (landed.map(_._1), landed.iterator.map(_._2).sum)
   }
 
   /** Explicit, operator-approved ADDITIVE schema evolution: commit a
@@ -1671,11 +1689,8 @@ object TableLog {
     * validation failure. */
   private final class AppendIntent(
       val runKey: String, val batchId: Long, val entries: Vector[Entry],
-      val added: Long, val schemaJson: Option[String],
+      val added: Long, val schema: org.apache.spark.sql.types.StructType,
       val harvestedCols: Set[String]) {
-    val schema: Option[org.apache.spark.sql.types.StructType] =
-      schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
     val result = new java.util.concurrent.CompletableFuture[java.lang.Boolean]()
   }
 
@@ -1717,7 +1732,7 @@ object TableLog {
     * drive the conflict deterministically. */
   private[functions] def commitAppend(spark: SparkSession, fs: FileSystem,
       dir: String, runKey: String, batchId: Long, entries: Vector[Entry],
-      added: Long, schemaJson: Option[String],
+      added: Long, schema: org.apache.spark.sql.types.StructType,
       harvestedCols: Set[String] = Set.empty): Boolean = {
     val key = fs.makeQualified(new Path(dir.stripSuffix("/"))).toString
     val q = appendQueues.computeIfAbsent(key,
@@ -1725,7 +1740,7 @@ object TableLog {
     val lock = appendLeaders.computeIfAbsent(key,
       _ => new java.util.concurrent.locks.ReentrantLock())
     val intent = new AppendIntent(runKey, batchId, entries, added,
-      schemaJson, harvestedCols)
+      schema, harvestedCols)
     q.add(intent)
     // drive or wait: the uncontended single-writer path takes the lock
     // immediately and drains just its own intent (one commitLoop, as
@@ -1819,8 +1834,7 @@ object TableLog {
     var inGroupFenced = Vector.empty[AppendIntent]
     commitLoop(spark, fs, dir, "append") { prevOpt =>
       inGroupFenced = Vector.empty
-      val prev = prevOpt.getOrElse(
-        Manifest(-1L, Vector.empty, 0L, Map.empty, "init"))
+      val prev = prevOpt.getOrElse(Empty)
       var files = prev.files
       var rows = prev.rows
       var commits = prev.commits
@@ -1838,36 +1852,32 @@ object TableLog {
           if (prev.commits.get(in.runKey).exists(_ >= in.batchId)) {
             // disk-committed fence — valid regardless of this group's fate
             in.result.complete(false)
-          } else if (commits.get(in.runKey).exists(_ >= in.batchId)) {
-            // fenced by an earlier intent IN THIS GROUP — defer until the
-            // group's commit lands (see scaladoc)
-            inGroupFenced :+= in
           } else {
-            // drift AND the stat re-harvest fail the INTENT alone
-            // (NonFatal — an unreadable footer of one writer's staged
-            // file must not poison the other writers' group), exactly
-            // the serial path's blast radius
+            // a fence here is by an earlier intent IN THIS GROUP — deferred
+            // until the group's commit lands (see scaladoc). Drift AND the
+            // stat re-harvest fail the INTENT alone (NonFatal — an
+            // unreadable footer of one writer's staged file must not
+            // poison the other writers' group), exactly the serial path's
+            // blast radius
             val folded =
               try {
-                for (recorded <- curSchema; batch <- in.schema)
-                  require(sameSchema(recorded, batch),
-                    s"schema drift rejected for $dir: the table's committed schema is\n  " +
-                      s"${recorded.simpleString}\nbut this batch has\n  " +
-                      s"${batch.simpleString}\n(a concurrent evolve() may have " +
-                      "upgraded the table — restart the writer with the new schema)")
-                val wanted = statCols(prev)
-                Some(
-                  if ((wanted -- in.harvestedCols).isEmpty || in.schema.isEmpty)
-                    in.entries
-                  else {
-                    val (_, table) = fsFor(spark, dir)
-                    val conf = spark.sparkContext.hadoopConfiguration
-                    in.entries.map { e =>
-                      e.copy(stats = ParquetFooters
-                        .read(conf, new Path(table, e.name), wanted, in.schema.get)
-                        .stats)
-                    }
-                  })
+                if (!admits(dir, commits, curSchema, in.runKey, in.batchId,
+                    in.schema)) {
+                  inGroupFenced :+= in; None
+                } else {
+                  val wanted = statCols(prev)
+                  Some(
+                    if ((wanted -- in.harvestedCols).isEmpty) in.entries
+                    else {
+                      val (_, table) = fsFor(spark, dir)
+                      val conf = spark.sparkContext.hadoopConfiguration
+                      in.entries.map { e =>
+                        e.copy(stats = ParquetFooters
+                          .read(conf, new Path(table, e.name), wanted, in.schema)
+                          .stats)
+                      }
+                    })
+                }
               } catch {
                 case scala.util.control.NonFatal(e) =>
                   in.result.completeExceptionally(e); None
@@ -1876,8 +1886,8 @@ object TableLog {
               files = files ++ entriesNow
               rows += in.added
               commits = commits + (in.runKey -> in.batchId)
-              if (schemaJson.isEmpty) { schemaJson = in.schemaJson
-                curSchema = in.schema }
+              if (schemaJson.isEmpty) { schemaJson = Some(in.schema.json)
+                curSchema = Some(in.schema) }
               any = true
             }
           }
@@ -1989,7 +1999,7 @@ object TableLog {
   private def compactLaidOut(spark: SparkSession, dir: String,
       targetBytes: Long, layoutBy: Seq[String])
       (lay: (DataFrame, Int) => DataFrame): Int = {
-    val (fs, table) = fsFor(spark, dir)
+    val (fs, _) = fsFor(spark, dir)
     val m = latest(spark, dir).getOrElse(throw new IllegalStateException(
       s"$dir has no committed manifest — nothing to compact"))
     if (m.files.isEmpty) return 0
@@ -2001,23 +2011,9 @@ object TableLog {
     // per-file footer min/max become the manifest's pruning stats
     val layout = if (layoutBy.nonEmpty) layoutBy else m.layout
     val schemaJson = m.schemaJson.orElse(Some(snapshot.schema.json))
-    val v = m.version + 1
-    val staging = new Path(dir.stripSuffix("/"), s"_staging-${java.util.UUID.randomUUID()}")
-    laidOut.write.options(bloomWriteOptions(m)).parquet(staging.toString)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val stagedC = fs.listStatus(staging).iterator
-      .filter { f => val nm = f.getPath.getName
-        nm.endsWith(".parquet") && !nm.startsWith("_") && !nm.startsWith(".") }
-      .toVector
-    val metasC = ParquetFooters.readAll(conf, stagedC.map(_.getPath),
+    val (staging, parts) = stage(fs, dir, laidOut, m)
+    val (entries, _) = land(spark, fs, dir, parts, RewriteTag, m.version + 1,
       (layout ++ m.statsFor).toSet, snapshot.schema)
-    val entries = stagedC.zip(metasC).map { case (f, meta) =>
-      val name = s"c$v-${f.getPath.getName}"
-      val dst = new Path(table, name)
-      if (!fs.rename(f.getPath, dst))
-        throw new java.io.IOException(s"could not land ${f.getPath} as $dst")
-      Entry(name, f.getLen, meta.stats)
-    }
     // commit with rebase-on-conflict: if the appender committed while
     // this rewrite ran, the rewrite still faithfully replaces exactly
     // the files of the snapshot it read — re-resolve, keep every file
@@ -2179,50 +2175,25 @@ object TableLog {
         "cannot identify rows (stats pruning and isin both pass it " +
         "through as no-match); delete null-keyed rows with " +
         "delete(col.isNull) directly")
-    val (fs, table) = fsFor(spark, dir)
+    val (fs, _) = fsFor(spark, dir)
     val prev = latest(spark, dir).getOrElse {
       require(deleteKeys.isEmpty,
         s"$dir has no committed manifest — applyDelta cannot delete from " +
           "a table that does not exist (bootstrap it first)")
       return appendBatch(adds, dir, runKey, batchId)
     }
-    if (prev.commits.get(runKey).exists(_ >= batchId)) return false
-    prev.schema.foreach { recorded =>
-      require(sameSchema(recorded, adds.schema),
-        s"schema drift rejected for $dir: the table's committed schema is\n  " +
-          s"${recorded.simpleString}\nbut this delta adds\n  " +
-          s"${adds.schema.simpleString}")
-    }
+    if (!admits(dir, prev.commits, prev.schema, runKey, batchId, adds.schema))
+      return false
     // stage the adds ONCE — a<v>- names are tail-visibility tags, not
-    // versions, so the staged files survive any number of re-plans; the
+    // versions, so the landed files survive any number of re-plans; the
     // survivor rewrites below are per-attempt (they depend on the
-    // snapshot) and are swept on every lost plan
-    val v = prev.version + 1
-    val staging = new Path(dir.stripSuffix("/"),
-      s"_staging-${java.util.UUID.randomUUID()}")
-    adds.write.options(bloomWriteOptions(prev)).parquet(staging.toString)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val staged = fs.listStatus(staging).iterator
-      .filter { f => val n = f.getPath.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".") }
-      .toVector
-    val metas = ParquetFooters.readAll(conf, staged.map(_.getPath),
-      statCols(prev), adds.schema)
-    fs.mkdirs(table)
-    // 0-row partitions are dropped rather than landed: an empty-adds
-    // delta (a pure-delete mirror window) must not salt the manifest
-    // with empty files
-    val addEntries = staged.zip(metas).iterator
-      .filter { case (_, meta) => meta.rows > 0L }
-      .map { case (f, meta) =>
-        val name = s"a$v-${f.getPath.getName}"
-        val dst = new Path(table, name)
-        if (!fs.rename(f.getPath, dst))
-          throw new java.io.IOException(s"could not land ${f.getPath} as $dst")
-        Entry(name, f.getLen, meta.stats)
-      }.toVector
+    // snapshot) and are swept on every lost plan. 0-row parts are not
+    // landed: an empty-adds delta (a pure-delete mirror window) must not
+    // salt the manifest with empty files
+    val (staging, parts) = stage(fs, dir, adds, prev)
+    val (addEntries, addedRows) = land(spark, fs, dir, parts, AppendTag,
+      prev.version + 1, statCols(prev), adds.schema, minRows = 1L)
     fs.delete(staging, true)
-    val addedRows = metas.iterator.map(_.rows).sum
     if (addEntries.isEmpty && deleteKeys.isEmpty) return false // empty delta
     var replans = 0
     // the first attempt reuses the manifest resolved above (staleness
@@ -2231,7 +2202,7 @@ object TableLog {
     var hint: Option[Manifest] = Some(prev)
     while (true) {
       try return applyDeltaAttempt(spark, fs, dir, keyColumn, deleteKeys,
-        runKey, batchId, addEntries, addedRows, Some(adds.schema.json), hint)
+        runKey, batchId, addEntries, addedRows, adds.schema, hint)
       catch {
         case e: StaleDeletePlan =>
           replans += 1
@@ -2264,19 +2235,13 @@ object TableLog {
   private def applyDeltaAttempt(spark: SparkSession, fs: FileSystem,
       dir: String, keyColumn: String, deleteKeys: Seq[Any], runKey: String,
       batchId: Long, addEntries: Vector[Entry], addedRows: Long,
-      addSchemaJson: Option[String],
+      addSchema: org.apache.spark.sql.types.StructType,
       resolvedHint: Option[Manifest]): Boolean = {
     import org.apache.spark.sql.functions.col
     val table = new Path(dir.stripSuffix("/"))
     val m = resolvedHint.orElse(latest(spark, dir)).getOrElse(
       throw new IllegalStateException(
         s"$dir lost its manifest mid-applyDelta"))
-    if (m.commits.get(runKey).exists(_ >= batchId)) {
-      // fenced between staging and commit (a replica landed the same
-      // delta): the landed a-files stay orphaned for vacuum, exactly
-      // appendBatch's fence story
-      return false
-    }
     val rewrite =
       if (deleteKeys.isEmpty) None
       else {
@@ -2292,17 +2257,12 @@ object TableLog {
     try {
       val landed = commitLoop(spark, fs, dir, "upsert") { curOpt =>
         val cur = curOpt.getOrElse(m)
-        if (cur.commits.get(runKey).exists(_ >= batchId)) Left(false)
+        // fenced between staging and commit (a replica landed the same
+        // delta): the landed a-files stay orphaned for vacuum, exactly
+        // appendBatch's fence story
+        if (!admits(dir, cur.commits, cur.schema, runKey, batchId, addSchema))
+          Left(false)
         else {
-          for (recordedJson <- cur.schemaJson; batchJson <- addSchemaJson)
-            require(sameSchema(
-                org.apache.spark.sql.types.DataType.fromJson(recordedJson)
-                  .asInstanceOf[org.apache.spark.sql.types.StructType],
-                org.apache.spark.sql.types.DataType.fromJson(batchJson)
-                  .asInstanceOf[org.apache.spark.sql.types.StructType]),
-              s"schema drift rejected for $dir: a concurrent evolve() " +
-                "upgraded the table under this delta — restart the writer " +
-                "with the new schema")
           val curNames = cur.files.map(_.name).toSet
           if (!affectedNames.subsetOf(curNames))
             throw new StaleDeletePlan(
@@ -2340,7 +2300,7 @@ object TableLog {
               swapEntries ++ addEntries,
             cur.rows - deleted + addedRows,
             cur.commits + (runKey -> batchId), op,
-            cur.schemaJson.orElse(addSchemaJson), cur.layout, cur.statsFor,
+            cur.schemaJson.orElse(Some(addSchema.json)), cur.layout, cur.statsFor,
             cur.dropped, bloomFor = cur.bloomFor))
         }
       }(_ => true)
@@ -2401,7 +2361,6 @@ object TableLog {
       dir: String, m: Manifest, cand: Vector[Entry],
       predicate: org.apache.spark.sql.Column)
       : Option[(Set[String], Vector[Entry], Long, Path)] = {
-    val table = new Path(dir.stripSuffix("/"))
     val base = dir.stripSuffix("/")
     def readFiles(entries: Seq[Entry]) =
       m.schema.fold(spark.read)(s => spark.read.schema(s))
@@ -2435,29 +2394,13 @@ object TableLog {
         val cols = m.layout.map(org.apache.spark.sql.functions.col)
         kept.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
       }
-    val v = m.version + 1
-    val staging = new Path(base, s"_staging-${java.util.UUID.randomUUID()}")
-    laidOut.write.options(bloomWriteOptions(m)).parquet(staging.toString)
     val statSchema = m.schema.getOrElse(
       org.apache.spark.sql.types.StructType(kept.schema.fields))
-    var newRows = 0L
-    val stagedD = fs.listStatus(staging).iterator
-      .filter { f => val nm = f.getPath.getName
-        nm.endsWith(".parquet") && !nm.startsWith("_") && !nm.startsWith(".") }
-      .toVector
-    val metasD = ParquetFooters.readAll(conf, stagedD.map(_.getPath),
-      statCols(m), statSchema)
-    val entries = stagedD.zip(metasD).iterator
-      .map { case (f, meta) =>
-        newRows += meta.rows
-        // `c` prefix: a rewrite of surviving rows, silent to the append
-        // tail ([[appendedEntries]]) exactly like a compaction rewrite
-        val name = s"c$v-${f.getPath.getName}"
-        val dst = new Path(table, name)
-        if (!fs.rename(f.getPath, dst))
-          throw new java.io.IOException(s"could not land ${f.getPath} as $dst")
-        Entry(name, f.getLen, meta.stats)
-      }.toVector
+    // `c` prefix: a rewrite of surviving rows, silent to the append tail
+    // ([[appendedEntries]]) exactly like a compaction rewrite
+    val (staging, parts) = stage(fs, dir, laidOut, m)
+    val (entries, newRows) = land(spark, fs, dir, parts, RewriteTag,
+      m.version + 1, statCols(m), statSchema)
     val deleted = oldRows - newRows
     Some((affected.map(_.name).toSet, entries, deleted, staging))
   }
@@ -2705,12 +2648,7 @@ object TableLog {
     // inclusive comparisons so graceMs=0 means "everything up to now"
     // even when the filesystem's mtime granularity rounds a just-written
     // file to the current instant
-    val manifests = fs.listStatus(log).flatMap { f =>
-      f.getPath.getName match {
-        case ManifestRe(v) => Some((v.toLong, f))
-        case _             => None
-      }
-    }.sortBy(_._1)
+    val manifests = listManifests(fs, dir)
     if (manifests.isEmpty) return 0
     var deleted = 0
     val floor = manifests.last._1 - KeepManifests + 1
@@ -3213,7 +3151,8 @@ object TableLog {
         // did not touch): appends-only consumers get the new rows and
         // must never be re-fed the survivors. The prefix is the
         // tail-visibility tag every appended file carries.
-        appendedIn(fs, dir, m, heads.get(v - 1)).filter(_.name.startsWith("a"))
+        appendedIn(fs, dir, m, heads.get(v - 1))
+          .filter(_.name.startsWith(AppendTag))
       else appendedIn(fs, dir, m, heads.get(v - 1))
     }.toVector
   }
@@ -3233,13 +3172,7 @@ object TableLog {
       sinceVersion: Long, untilVersion: Long): (Map[Long, Manifest], Long) = {
     val (fs, _) = fsFor(spark, dir)
     val log = logDir(dir)
-    require(fs.exists(log), s"$dir has no committed manifest")
-    val retained = fs.listStatus(log).iterator.flatMap { f =>
-      f.getPath.getName match {
-        case ManifestRe(v) => Iterator.single(v.toLong)
-        case _             => Iterator.empty
-      }
-    }.toVector.sorted
+    val retained = listManifests(fs, dir).map(_._1)
     require(retained.nonEmpty, s"$dir has no committed manifest")
     val latestV = math.min(retained.last, untilVersion)
     if (sinceVersion >= latestV) return (Map.empty, latestV)
@@ -3531,12 +3464,13 @@ object TableLog {
             !f.isDirectory && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".") }
           .map { f =>
             val n = f.getPath.getName
-            if (n.startsWith("c0-")) Entry(n, f.getLen)
+            val adopted = s"${RewriteTag}0-"
+            if (n.startsWith(adopted)) Entry(n, f.getLen)
             else {
-              val dst = new Path(table, s"c0-$n")
+              val dst = new Path(table, adopted + n)
               if (!fs.rename(f.getPath, dst))
                 throw new java.io.IOException(s"could not adopt ${f.getPath} as $dst")
-              Entry(s"c0-$n", f.getLen)
+              Entry(adopted + n, f.getLen)
             }
           }
           .toVector

@@ -3,17 +3,16 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession, graftbridge}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.connector.read.streaming.{Offset => V2Offset,
-  ReadLimit, SupportsAdmissionControl}
+  ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Source}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.sources.StreamSourceProvider
 import org.apache.spark.sql.types.StructType
 
-import graft.functions.{ManifestFileIndex, TableLog}
+import graft.functions.TableLog
 
 /** Streaming offset = TableLog version. Monotone by construction (the
   * commit log's rename-CAS hands out strictly increasing versions). */
@@ -41,6 +40,10 @@ final case class TableVersionOffset(v: Long) extends V1Offset {
   * Admission control is `SupportsAdmissionControl`, as in Spark's own
   * `FileStreamSource`: the engine's offsets WAL is the one record of the
   * read position, so the source keeps none of its own ([[latestOffset]]).
+  * `Trigger.AvailableNow` is `SupportsTriggerAvailableNow`, also as in
+  * `FileStreamSource`: the head at query start bounds every window
+  * ([[prepareForTriggerAvailableNow]]), so the query drains it in capped
+  * batches and stops.
   *
   * Delivery: exactly-once. The batch is derived purely from committed
   * manifests, so a writer crash can never leak an orphaned file into a
@@ -59,7 +62,7 @@ final class TableLogTailSource(spark: SparkSession, dir: String,
                                pinnedExplicitly: Boolean,
                                changeFeed: Boolean = false,
                                updateKey: Option[String] = None)
-    extends Source with SupportsAdmissionControl {
+    extends Source with SupportsTriggerAvailableNow {
 
   /** In change-feed mode the emitted rows carry the two tag columns on
     * top of the pinned table schema ([[graft.functions.TableLog
@@ -75,22 +78,33 @@ final class TableLogTailSource(spark: SparkSession, dir: String,
     * window (`endOffset`) trails the table (`latestOffset`). */
   @volatile private var seenHead: Option[Long] = None
 
+  /** The head [[prepareForTriggerAvailableNow]] recorded: under
+    * `Trigger.AvailableNow` every window ends at or below it, so the
+    * query drains what was committed when it started — in
+    * `maxVersionsPerTrigger`-sized batches — and then stops. */
+  @volatile private var availableNowHead: Option[Long] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowHead = Some(TableLog.latestVersion(spark, dir).getOrElse(since))
+
   /** `start` is the engine's recovered offset (null before a fresh
     * checkpoint's first batch — the window then opens at `since`), so a
     * capped offer `start + cap` never rewinds below a committed offset,
     * across restarts and cap changes alike. A head at or below `since`
     * is NO data (the contract is "versions AFTER since"). The cap applies
     * whatever `ReadLimit` the engine passes (Trigger.Once passes
-    * allAvailable). The v2 [[TableLogV2TailStream]] delegates here. */
+    * allAvailable), and under `Trigger.AvailableNow` so does the
+    * recorded head. The v2 [[TableLogV2TailStream]] delegates here. */
   override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset = {
     // version-number peek: no manifest or segment reads — the
     // availability probe must stay O(1) in table size
     seenHead = TableLog.latestVersion(spark, dir).filter(_ > since)
-    seenHead.map { head =>
-      val from = Option(start).fold(since)(_.json.toLong)
-      TableVersionOffset(maxVersionsPerTrigger.fold(head)(n =>
-        math.min(head, from + n)))
-    }.orNull
+    seenHead.map(h => availableNowHead.fold(h)(math.min(h, _)))
+      .filter(_ > since).map { head =>
+        val from = Option(start).fold(since)(_.json.toLong)
+        TableVersionOffset(maxVersionsPerTrigger.fold(head)(n =>
+          math.min(head, from + n)))
+      }.orNull
   }
 
   override def reportLatestOffset(): V2Offset =
@@ -121,15 +135,8 @@ final class TableLogTailSource(spark: SparkSession, dir: String,
     else {
       val m = TableLog.Manifest(version = toV, files = delta, rows = 0L,
         commits = Map.empty, op = "tail", schemaJson = Some(pinned.json))
-      val rel = HadoopFsRelation(
-        new ManifestFileIndex(spark, dir, m),
-        partitionSchema = StructType(Nil),
-        dataSchema = pinned,
-        bucketSpec = None,
-        fileFormat = new ParquetFileFormat(),
-        options = Map.empty)(spark)
-      graftbridge.streamingDataFrame(spark,
-        LogicalRelation(rel, isStreaming = true))
+      graftbridge.streamingDataFrame(spark, LogicalRelation(
+        TableLog.hadoopRelation(spark, dir, m, pinned), isStreaming = true))
     }
   }
 

@@ -19,7 +19,7 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition,
   PartitionReaderFactory, Scan, ScanBuilder, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream,
-  Offset => V2Offset, ReadLimit, SupportsAdmissionControl}
+  Offset => V2Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter,
   DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write,
   WriteBuilder, WriterCommitMessage}
@@ -289,7 +289,8 @@ private[sources] final class TableLogV2Scan(spark: SparkSession,
   * checkpoint-compatible across the two faces). Admission control goes
   * through the SAME `latestOffset(start, limit)`: the engine passes the
   * checkpointed start (or [[initialOffset]] = `since`) and the cap is
-  * counted from it. Only the DATA PLANE differs: each committed window
+  * counted from it; `Trigger.AvailableNow` records its head in the same
+  * source. Only the DATA PLANE differs: each committed window
   * `(start, end]` plans a native `ParquetScan` over exactly that
   * window's append-contributed files, re-applying the column pruning
   * and pushed filters the engine negotiated at stream build — so
@@ -298,7 +299,7 @@ private[sources] final class TableLogV2Scan(spark: SparkSession,
 private[sources] final class TableLogV2TailStream(spark: SparkSession,
     dir: String, tableSchema: StructType, options: CaseInsensitiveStringMap,
     dataFilters: Seq[Expression], required: StructType, metadataPath: String)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   require(!Option(options.get("readChangeFeed")).exists(_.trim.toBoolean),
     "the tablelogv2 stream is the append tail only — the change feed's " +
@@ -316,6 +317,8 @@ private[sources] final class TableLogV2TailStream(spark: SparkSession,
     TableVersionOffset(source.sinceVersion)
   override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset =
     source.latestOffset(start, limit)
+  override def prepareForTriggerAvailableNow(): Unit =
+    source.prepareForTriggerAvailableNow()
   override def reportLatestOffset(): V2Offset = source.reportLatestOffset()
   override def latestOffset(): V2Offset =
     throw new UnsupportedOperationException(

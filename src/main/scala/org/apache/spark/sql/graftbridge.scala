@@ -13,6 +13,13 @@ object graftbridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Block until every event posted so far has reached every listener:
+    * `SparkContext.listenerBus` is `private[spark]`, and listener-based
+    * stage accounting (graft.Explain's stage table, specs that count the
+    * scans of a finished job) must not read before the bus drains. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Wrap a logical plan as a DataFrame without losing its streaming
     * flag — what a DSv1 streaming `Source.getBatch` must return (the
     * engine asserts `isStreaming` on the substituted plan, and the

@@ -227,6 +227,37 @@ class IndexFollowerSpec extends SparkSuite {
       s"fixture vacuity: expected two dups and one keeper, got $got")
   }
 
+  test("a maintenance round over a wrong-geometry dedup index fails loudly") {
+    val corpus = corpusDf()
+    val ids = corpus.select($"doc_id").as[Long].collect().sorted
+    val srcDir = java.nio.file.Files.createTempDirectory("graft_flg_src").toString + "/t"
+    val dedupDir = java.nio.file.Files.createTempDirectory("graft_flg_ddx").toString + "/ix"
+    val stateDir = java.nio.file.Files.createTempDirectory("graft_flg_state").toString
+    import org.apache.spark.sql.types._
+    val emptyCorpus = spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType)))))
+    val ann = AnnIndex.build(emptyCorpus, "flg_geom_ann", planes = 8, buckets = 8)
+    // the index is built at the default (k = 8) geometry
+    TableLog.appendBatch(corpus.filter($"doc_id" < ids(ids.length / 3)),
+      srcDir, "src", 0L)
+    IndexFollower.catchUp(spark, srcDir, stateDir, ann, dedupDir)
+    val ixVersion = TableLog.latest(spark, dedupDir).get.version
+    // a delta-less source version (a compaction) still fires the
+    // maintenance gate; the follower is (mis)configured at k = 128, and
+    // with no band rows to append the index holds only k = 8 signatures
+    TableLog.compact(spark, srcDir, targetBytes = 1L << 20)
+    val e = intercept[IllegalArgumentException] {
+      IndexFollower.catchUp(spark, srcDir, stateDir, ann, dedupDir,
+        geom = graft.functions.Lsh.Production,
+        maintainTargetBytes = Some(1L << 16), maintainEveryNVersions = 1)
+    }
+    assert(e.getMessage.contains("geometry mismatch"), e.getMessage)
+    assert(TableLog.latest(spark, dedupDir).get.version == ixVersion,
+      "a wrong-geometry maintenance round rewrote the index")
+  }
+
   test("takedown: one call removes a doc set from the corpus, the dedup index and the ANN serving path") {
     val corpus = corpusDf().cache()
     val srcDir = java.nio.file.Files.createTempDirectory("graft_td_src").toString + "/t"

@@ -123,17 +123,6 @@ class AnnIndexSpec extends SparkSuite {
     case _ => ()
   }
 
-  private def flushListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val busM = sc.getClass.getMethods
-      .find(m => m.getName == "listenerBus" && m.getParameterCount == 0).get
-    val bus = busM.invoke(sc)
-    val waitM = bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0).get
-    waitM.invoke(bus)
-    ()
-  }
-
   test("keyed append is O(delta): the corpus tables are neither scanned nor shuffled") {
     val corpus = spark.read.parquet(sf() + "/embeddings.parquet")
       .select($"vec_id", $"embedding")
@@ -154,7 +143,7 @@ class AnnIndexSpec extends SparkSuite {
     spark.listenerManager.register(listener)
     try {
       AnnIndex.append(spark, h, corpus.filter($"vec_id" >= mid), "delta-1")
-      flushListenerBus()
+      org.apache.spark.sql.graftbridge.drainListenerBus(spark)
     } finally spark.listenerManager.unregister(listener)
     // vacuity guard: the capture mechanism saw the DELTA's source scan...
     assert(!scanned.isEmpty, "listener captured no scans at all — broken fixture")

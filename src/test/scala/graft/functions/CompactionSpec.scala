@@ -1,105 +1,13 @@
 package graft.functions
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
-/** Compaction: a fragmented table (file-per-micro-batch profile) is
-  * rewritten into few near-target files with identical contents, and
-  * the swap leaves no staging debris.
+/** Compaction sizing: the byte-derived file count every rewrite
+  * ([[TableLog.compact]]) plans from.
   */
 class CompactionSpec extends SparkSuite {
-  import spark.implicits._
 
-  private def listParquet(dir: String): Seq[java.io.File] =
-    new java.io.File(dir).listFiles().toSeq
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-
-  test("compactParquet merges a fragmented table, preserves rows, cleans up") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
-    // 40 micro-batch-sized appends → 40+ small files
-    (0 until 40).foreach { b =>
-      Seq.tabulate(250)(i => (b * 250L + i, s"row-$b-$i"))
-        .toDF("id", "payload")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
-    val before = listParquet(dir)
-    assert(before.size >= 40, s"fixture not fragmented: ${before.size} files")
-    val bytes = Compaction.dataBytes(spark, dir)
-    assert(bytes > 0)
-
-    val target = bytes / 3 // expect ceil(3.x) = 3-4 files
-    val written = Compaction.compactParquet(spark, dir, target)
-    val after = listParquet(dir)
-    assert(after.size == written, s"wrote $written but see ${after.size}")
-    assert(after.size <= 4 && after.size < before.size / 5,
-      s"not compacted: ${before.size} -> ${after.size}")
-
-    // contents identical
-    val got = spark.read.parquet(dir).as[(Long, String)].collect().toSet
-    assert(got.size == 10000 && got.contains((9999L, "row-39-249")))
-
-    // staging/backup directories are gone
-    val parent = new java.io.File(dir).getParentFile.listFiles().map(_.getName).toSet
-    assert(parent.forall(n => !n.contains("__compacting") && !n.contains("__precompact")),
-      s"staging debris left: $parent")
-  }
-
-  test("recover repairs every crash state; compaction aborts on concurrent writes") {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = java.nio.file.Files.createTempDirectory("graft_compact_rec").toString
-    val dir = base + "/t"
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(dir)
-
-    // crash between the two renames: table gone, backup present
-    fs.rename(new Path(dir), new Path(dir + "__precompact"))
-    assert(Compaction.recover(spark, dir) == "restored-backup")
-    assert(spark.read.parquet(dir).count() == 2)
-    // crash after the swap, before backup delete: both present
-    fs.mkdirs(new Path(dir + "__precompact"))
-    assert(Compaction.recover(spark, dir) == "dropped-completed-backup")
-    assert(!fs.exists(new Path(dir + "__precompact")))
-    // stale staging from an aborted rewrite
-    fs.mkdirs(new Path(dir + "__compacting"))
-    assert(Compaction.recover(spark, dir) == "dropped-stale-staging")
-    assert(Compaction.recover(spark, dir) == "clean")
-
-    // compaction refuses to start over un-recovered debris
-    fs.mkdirs(new Path(dir + "__precompact"))
-    val e = intercept[java.io.IOException](
-      Compaction.compactParquet(spark, dir, Long.MaxValue))
-    assert(e.getMessage.contains("recover"), e.getMessage)
-    assert(Compaction.recover(spark, dir) == "dropped-completed-backup")
-
-    // concurrent write during the rewrite: take the guard baseline,
-    // land a late micro-batch file, then run the swap against the stale
-    // baseline — the guard must abort, delete its staging, and leave
-    // the table (INCLUDING the late file) untouched
-    val stale = Compaction.dataFiles(fs, new Path(dir))
-    Seq((99L, "late")).toDF("id", "v").coalesce(1).write.mode("append").parquet(dir)
-    intercept[java.util.ConcurrentModificationException] {
-      Compaction.compactWithBaseline(spark, dir, Long.MaxValue, stale)
-    }
-    assert(!fs.exists(new Path(dir + "__compacting")), "aborted staging must be deleted")
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet ==
-      Set((1L, "a"), (2L, "b"), (99L, "late")), "aborted compaction must not lose rows")
-    // quiescent compaction afterwards succeeds
-    Compaction.compactParquet(spark, dir, Long.MaxValue)
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet ==
-      Set((1L, "a"), (2L, "b"), (99L, "late")))
-
-    // equal-length in-place overwrite: same path, same byte count, new
-    // mtime — the (path, len, mtime) identity must still trip the guard
-    val base2 = Compaction.dataFiles(fs, new Path(dir))
-    val touched = base2.head._1
-    fs.setTimes(new Path(touched), base2.head._3 + 60000L, -1)
-    intercept[java.util.ConcurrentModificationException] {
-      Compaction.compactWithBaseline(spark, dir, Long.MaxValue, base2)
-    }
-    assert(!fs.exists(new Path(dir + "__compacting")))
-  }
-
-  test("targetFiles derivation and coalesceForWrite plan") {
+  test("targetFiles derivation and overflow guard") {
     assert(Compaction.targetFiles(1, 128) == 1)
     assert(Compaction.targetFiles(129, 128) == 2)
     assert(Compaction.targetFiles(128L * 100, 128) == 100)
@@ -108,9 +16,5 @@ class CompactionSpec extends SparkSuite {
     // loudly rather than wrap to a negative repartition argument
     val ov = intercept[IllegalArgumentException](Compaction.targetFiles(Long.MaxValue, 1))
     assert(ov.getMessage.contains("overflow"), ov.getMessage)
-    // shrinking writes coalesce down to the derived file count
-    val df = spark.range(1000).toDF("id").repartition(32)
-    val planned = Compaction.coalesceForWrite(df, 1000, 100, 50000)
-    assert(planned.rdd.getNumPartitions == 2)
   }
 }

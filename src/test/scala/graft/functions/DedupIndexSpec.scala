@@ -185,51 +185,44 @@ class DedupIndexSpec extends SparkSuite {
       docs.filter($"doc_id" >= c1 && $"doc_id" < c2),
       docs.filter($"doc_id" >= c2))
     val idxDir = java.nio.file.Files.createTempDirectory("graft_idx_mnt").toString + "/idx"
-    // a deployment's delta tail: each ingested chunk appends fragmented
+    // a deployment's delta tail: each ingested chunk appends its own
     // files (repartition(8) exaggerates a micro-batch writer's spray)
-    DedupIndex.indexRows(a).repartition(8).write.mode("append").parquet(idxDir)
-    DedupIndex.indexRows(b).repartition(8).write.mode("append").parquet(idxDir)
-    def files() = new java.io.File(idxDir).listFiles()
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-    assert(files().length >= 16, s"fixture vacuity: tail not fragmented (${files().length})")
+    TableLog.appendBatch(DedupIndex.indexRows(a).repartition(8), idxDir, "ingest", 0L)
+    TableLog.appendBatch(DedupIndex.indexRows(b).repartition(8), idxDir, "ingest", 1L)
+    def head() = TableLog.latest(spark, idxDir).get
+    val tail = head()
+    assert(tail.files.length >= 16,
+      s"fixture vacuity: tail not fragmented (${tail.files.length})")
 
     val before = verdicts(DedupIndex.incrementalVerdicts(
-      probe, spark.read.parquet(idxDir)))
+      probe, TableLog.read(spark, idxDir)))
 
-    // wrong-geometry maintenance fails loudly BEFORE rewriting anything
+    // wrong-geometry maintenance fails loudly and commits no version
     val e = intercept[IllegalArgumentException] {
       DedupIndex.maintain(spark, idxDir, targetBytes = 1L << 20, geom = Lsh.Production)
     }
     assert(e.getMessage.contains("geometry mismatch"))
-    assert(files().length >= 16, "failed maintenance must not have touched the table")
+    assert(head().version == tail.version,
+      "failed maintenance must not have committed a version")
 
     val written = DedupIndex.maintain(spark, idxDir, targetBytes = 1L << 20)
-    assert(files().length == written && written < 16,
-      s"file count not bounded: ${files().length} files for $written written")
+    val m = head()
+    assert(m.op == "compact" && m.layout == Seq("band", "band_hash"),
+      s"maintenance did not re-layout the index: op=${m.op} layout=${m.layout}")
+    assert(m.files.length == written && written < tail.files.length,
+      s"file count not bounded: ${m.files.length} live files for $written written " +
+        s"(delta tail had ${tail.files.length})")
     val after = verdicts(DedupIndex.incrementalVerdicts(
-      probe, spark.read.parquet(idxDir)))
+      probe, TableLog.read(spark, idxDir)))
     assert(after == before, "maintenance changed probe verdicts")
     assert(before.exists(!_._3), "fixture vacuity: probe chunk found no duplicates")
-
-    // a crash mid-compaction (table renamed away, swap unfinished) must
-    // be repaired by the NEXT maintain call, not wedge it forever on the
-    // geometry read (the r10 review finding: recover ran after the read)
-    val fs = new org.apache.hadoop.fs.Path(idxDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(idxDir),
-      new org.apache.hadoop.fs.Path(idxDir + "__precompact")))
-    val rewritten = DedupIndex.maintain(spark, idxDir, targetBytes = 1L << 20)
-    assert(rewritten >= 1, "maintain did not recover the crashed swap")
-    assert(verdicts(DedupIndex.incrementalVerdicts(
-      probe, spark.read.parquet(idxDir))) == before,
-      "post-recovery verdicts drifted")
 
     // the re-layout clustered the probe key: each rewritten file spans
     // less than the global (band, band_hash) range when several exist,
     // and band min/max per file are tight enough to prune on
-    if (files().length >= 2) {
-      val spans = files().toSeq.map { f =>
-        val r = spark.read.parquet(f.toString)
+    if (m.files.length >= 2) {
+      val spans = m.files.map { f =>
+        val r = spark.read.parquet(s"$idxDir/${f.name}")
           .agg(min($"band"), max($"band")).head()
         (r.getInt(0), r.getInt(1))
       }
@@ -237,5 +230,19 @@ class DedupIndexSpec extends SparkSuite {
       assert(spans.exists(sp => (sp._2 - sp._1) < (global._2 - global._1)),
         s"layoutBy left every file spanning all bands: $spans")
     }
+
+    // a raw-parquet index (written before the log existed) is not a
+    // table maintain can commit to: it says so, and adopt migrates it
+    val rawDir = java.nio.file.Files.createTempDirectory("graft_idx_raw").toString + "/idx"
+    DedupIndex.indexRows(a).repartition(4).write.parquet(rawDir)
+    val raw = intercept[IllegalStateException] {
+      DedupIndex.maintain(spark, rawDir, targetBytes = 1L << 20)
+    }
+    assert(raw.getMessage.contains("TableLog.adopt"), raw.getMessage)
+    TableLog.adopt(spark, rawDir)
+    assert(DedupIndex.maintain(spark, rawDir, targetBytes = 1L << 20) >= 1)
+    assert(verdicts(DedupIndex.incrementalVerdicts(b, TableLog.read(spark, rawDir))) ==
+      verdicts(DedupIndex.incrementalVerdicts(b, DedupIndex.indexRows(a))),
+      "adopted + maintained index drifted from probing the raw rows")
   }
 }

@@ -359,6 +359,38 @@ class TableLogTailSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("Trigger.AvailableNow drains the backlog in capped batches, then stops") {
+    val dir = freshTable()
+    val ck = ckpt()
+    (0 until 6).foreach(b => TableLog.appendBatch(batch(b), dir, "r", b.toLong))
+    val seen = scala.collection.mutable.Map.empty[Long, Seq[Long]]
+    def run(): Unit = {
+      val q = TableLog.readTailVersions(spark, dir, since = Some(-1L),
+          maxVersionsPerTrigger = Some(2))
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ck)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+          val ts = df.select("ts").as[Long].collect().sorted.toSeq
+          seen.synchronized { seen(id) = ts }; ()
+        }.start()
+      try assert(q.awaitTermination(120000L), "the AvailableNow query did not stop")
+      finally q.stop()
+    }
+    run()
+    assert(seen.synchronized(seen.toMap) == Map(0L -> (0L until 200L),
+        1L -> (200L until 400L), 2L -> (400L until 600L)),
+      "the backlog was not drained 2 versions at a time: " +
+        seen.synchronized(seen.toMap).view.mapValues(_.size).toMap)
+    // a second run from the same checkpoint drains only what landed since
+    (6 until 8).foreach(b => TableLog.appendBatch(batch(b), dir, "r", b.toLong))
+    seen.synchronized(seen.clear())
+    run()
+    assert(seen.synchronized(seen.toMap) == Map(3L -> (600L until 800L)),
+      "the restarted AvailableNow run re-emitted or lost rows: " +
+        seen.synchronized(seen.toMap).view.mapValues(_.size).toMap)
+  }
+
   test("a live tail survives vacuum reclaiming its consumed files") {
     val dir = freshTable()
     (0 until 2).foreach(b => TableLog.appendBatch(batch(b), dir, "r", b.toLong))

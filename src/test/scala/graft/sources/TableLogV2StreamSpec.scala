@@ -232,6 +232,27 @@ class TableLogV2StreamSpec extends SparkSuite {
     assert(got.size == 5, s"backlog not windowed 2 versions at a time: ${got.map(_.size)}")
   }
 
+  test("Trigger.AvailableNow on the v2 tail drains the backlog in capped batches, then stops") {
+    val dir = fresh()
+    (0 until 6).foreach(b =>
+      TableLog.appendBatch(batch(b, 50).coalesce(1), dir, "r", b.toLong))
+    val windows = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    val q = spark.readStream.format("tablelogv2")
+      .option("since", "-1").option("maxVersionsPerTrigger", "2").load(dir)
+      .writeStream.option("checkpointLocation", ckpt())
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        windows.add(df.select("id").as[Long].collect().sorted.toSeq); ()
+      }.start()
+    try assert(q.awaitTermination(120000L), "the AvailableNow query did not stop")
+    finally q.stop()
+    import scala.jdk.CollectionConverters._
+    val got = windows.asScala.toVector
+    assert(got == (0 until 6).grouped(2).map(_.flatMap(b =>
+        b * 1000L until b * 1000L + 50)).toVector,
+      s"the backlog was not drained 2 versions at a time: ${got.map(_.size)}")
+  }
+
   test("SQL INSERT INTO a tablelogv2 table commits through the append path") {
     val dir = fresh()
     TableLog.appendBatch(batch(0).coalesce(1), dir, "boot", 0L)
