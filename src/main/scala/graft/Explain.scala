@@ -2,13 +2,15 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 
 /** Plan-audit tool: `runMain graft.Explain <query> [sfDir]` prints the
   * formatted physical plan of one SparkEntry query, executes it (noop
   * write), and lists per-stage task counts and times — the fastest way to
   * see whether an expensive kernel stage actually ran at full parallelism
-  * or collapsed onto one task.
+  * or collapsed onto one task. Conf A/B runs go through
+  * `SPARK_GRAFT_SESSION_CONF` ([[Sessions.local]]).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -16,32 +18,18 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val spark = Sessions.local(appName = s"graft-explain-$name")
-    // A/B hook for plan experiments: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    // applies runtime-settable confs to THIS tool's session only (the
-    // bench/verify surfaces never read it, so measurements stay honest)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      // same validation as Sessions' SPARK_GRAFT_SESSION_CONF (ADVICE r17):
-      // a malformed token must say which token, not die in a MatchError
-      if (kv.trim.nonEmpty) kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_EXTRA_CONF: malformed token '$kv' (expected key=value)")
-      }
-    })
     val stages = ArrayBuffer.empty[(Int, String, Int, Long, Long, Long, Long)]
     val details = ArrayBuffer.empty[(Int, String)]
     val jobs = ArrayBuffer.empty[(Int, Seq[Int], String)]
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(ev: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit = {
         val desc = Option(ev.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .orElse(Option(ev.properties)
             .flatMap(p => Option(p.getProperty("callSite.short"))))
           .getOrElse("?")
-        jobs += ((ev.jobId, ev.stageIds.map(_.toInt), desc.take(160)))
+        jobs += ((ev.jobId, ev.stageIds, desc.take(160)))
       }
-    })
-    spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
         val si = ev.stageInfo
         val ms = (for {s <- si.submissionTime; c <- si.completionTime} yield c - s).getOrElse(-1L)

@@ -92,7 +92,7 @@ object AnnIndex {
     * int8 sidecar, sign-LSH bucket; zero-norm rows excluded. ONE
     * definition so the spec-pinned "append == rebuild" invariant cannot
     * be broken by a drive-by change to only one path. */
-  private[graft] def enrich(vectors: DataFrame, planes: Int): DataFrame = {
+  private def enrich(vectors: DataFrame, planes: Int): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     vectors.select($"vec_id", $"embedding")

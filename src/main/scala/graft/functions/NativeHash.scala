@@ -530,10 +530,11 @@ object ExprKernels {
   def minHashSigs(shingles: ArrayData, k: Int): ArrayData = {
     // NOTE (r18 negative result): a hand-rolled allocation-free MD5
     // (scratch-buffer "h|shingle" layout, direct compression calls) was
-    // implemented, property-verified, and measured SLOWER — KernelBench
-    // 300 vs 221 µs/call, dedup_minhash_production 10.9 → 14.1 s at 20× —
-    // because HotSpot intrinsifies MessageDigest's MD5 compression
-    // (JDK 16+ implMD5). MessageDigest stays; don't re-try a JVM MD5.
+    // implemented, property-verified, and measured SLOWER — 300 vs 221
+    // µs/call on a 150-word document at k=8, dedup_minhash_production
+    // 10.9 → 14.1 s at 20× — because HotSpot intrinsifies MessageDigest's
+    // MD5 compression (JDK 16+ implMD5). MessageDigest stays; don't re-try
+    // a JVM MD5.
     val md = MessageDigest.getInstance("MD5")
     val mins = new Array[Array[Byte]](k)
     val n = shingles.numElements()

@@ -48,8 +48,8 @@ object AnnGeometryBench {
     import spark.implicits._
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the SAME stream-parallelism posture as StreamBench's ANN rows
-    // (state-store commit cost sizes shuffle partitions down to 4):
+    // the SAME stream-parallelism posture as BASELINE.md's streaming ANN
+    // rows (state-store commit cost sizes shuffle partitions down to 4):
     // that is the configuration whose 20× collapse this bench exists
     // to measure the geometry against — at local[32]-wide shuffle the
     // candidate cost hides under per-trigger fixed cost at these toy
@@ -66,7 +66,7 @@ object AnnGeometryBench {
     val rep = sys.env.getOrElse("SPARK_GRAFT_ANN_REPLICATE", "1").toInt
     val base = AnnBenchData.replicated(spark, sfDir, rep)
     val k = 10
-    val nQueries = 2000 // q/s denominator, the StreamBench envelope
+    val nQueries = 2000 // q/s denominator, as in BASELINE.md's streaming ANN rows
     val nPlanted = 500 // recall numerator: the first nPlanted queries
     val warm = 200
     val plantedCos = 0.9

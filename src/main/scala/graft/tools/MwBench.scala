@@ -5,9 +5,9 @@ import java.nio.file.Files
 import graft.Sessions
 import graft.functions.TableLog
 
-/** Multi-writer commit contention, standalone (the StreamBench row 13
-  * harness extracted so the group-commit fold can be measured without
-  * the 6-minute full streaming suite): N driver threads with DISTINCT
+/** Multi-writer commit contention, standalone (a harness of its own so
+  * the group-commit fold is measured without a 6-minute streaming
+  * suite around it): N driver threads with DISTINCT
   * runKeys interleave 1k-row batches into ONE table. The final
   * manifest must hold every batch — a mismatch prints a NEGATIVE rate
   * so a lost batch can never read as fast. Prints one JSON line with

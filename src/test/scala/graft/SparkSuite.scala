@@ -26,11 +26,16 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   /** Run `body` with the RocksDB state store provider (required by the
     * transformWithState operators), restoring the previous provider after.
     */
-  def withRocksDBState[A](body: => A): A = {
+  def withRocksDBState[A](body: => A): A = withStateStoreProvider(
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
+  /** Run `body` with the given state store provider class, restoring the
+    * previous provider after.
+    */
+  def withStateStoreProvider[A](providerClass: String)(body: => A): A = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set(key, providerClass)
     try body
     finally prev match {
       case Some(v) => spark.conf.set(key, v)

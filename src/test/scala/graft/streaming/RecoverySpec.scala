@@ -56,11 +56,7 @@ class RecoverySpec extends SparkSuite {
   }
 
   test("stateful ops run on the RocksDB state store provider") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDBState {
       val src = Files.createTempDirectory("graft_rocks_src").toString
       val ckpt = Files.createTempDirectory("graft_rocks_ckpt").toString
       val out = Files.createTempDirectory("graft_rocks_out").toString
@@ -68,11 +64,6 @@ class RecoverySpec extends SparkSuite {
       val q = startScan(src, ckpt, out)
       q.processAllAvailable(); q.stop()
       assert(readOut(out) == Seq((1, 1L, 1.0), (1, 2L, 3.0)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 }

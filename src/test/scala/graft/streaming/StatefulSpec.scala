@@ -164,6 +164,29 @@ class StatefulSpec extends SparkSuite {
     }
   }
 
+  test("a transformWithState operator on the HDFS-backed state store fails loudly") {
+    // the TWS operators (Dedup, Windows, Stateful, Flow) need RocksDB's
+    // column families; on the default provider the query must fail and
+    // name the provider, never run on without its state
+    val provider =
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    withStateStoreProvider(provider) {
+      val in = MemoryStream[(Int, Long, String)]
+      val q = Stateful.partitionNIncremental(in.toDS(), 3).toDF("key", "group")
+        .writeStream.format("memory").queryName("pni_hdfs_t")
+        .outputMode("append").start()
+      try {
+        in.addData((1, 1L, "a"), (1, 2L, "b"))
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+          q.processAllAvailable())
+        val msg = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("\n")
+        assert(msg.contains("STATE_STORE_MULTIPLE_COLUMN_FAMILIES"), msg)
+        assert(msg.contains("HDFSBackedStateStoreProvider"), msg)
+      } finally q.stop()
+    }
+  }
+
   test("ewmMean: matches the pandas adjust=true recurrence") {
     val xs = Seq(1.0, 2.0, 3.0, 4.0, 5.0)
     val alpha = 0.5
