@@ -17,6 +17,12 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *  - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark 4
   *    surfaces as `TIMESTAMP_NTZ` → cast to TimestampType, value-
   *    preserving under the UTC session, matching DuckDB's naive read.
+  * A `ts` already read as TimestampType passes through; any other type
+  * fails the open, naming the type.
+  *
+  * Opening a table starts no Spark job: the schema comes from one footer
+  * read on the driver ([[graft.functions.ParquetFooters.schema]]) and is
+  * passed to the reader, so Spark does not infer it in a job of its own.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -24,12 +30,15 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(graft.functions.ParquetFooters.schema(spark, path)).parquet(path)
     if (name != "events") df
     else df.schema("ts").dataType match {
       case LongType => df.withColumn("ts", expr("timestamp_micros(ts DIV 1000L)"))
       case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => df
+      case TimestampType => df
+      case t => throw new IllegalArgumentException(
+        s"$path: events.ts is ${t.sql}; expected BIGINT (nanoseconds), TIMESTAMP_NTZ or TIMESTAMP")
     }
   }
 }

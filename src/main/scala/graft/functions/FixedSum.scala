@@ -44,6 +44,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 object FixedPoint {
 
   private val Pow10 = Array.iterate(1L, 19)(_ * 10) // 10^0 .. 10^18
+  private val Pow10D = Pow10.map(_.toDouble) // exact: 10^s = 2^s·5^s, 5^18 < 2^53
 
   private def overflow(d: Double, scale: Int): Nothing =
     throw new ArithmeticException(
@@ -52,11 +53,32 @@ object FixedPoint {
 
   /** Integer count of 10^-scale units in `d` (finite), HALF_UP — equals
     * `BigDecimal.valueOf(d).setScale(scale, HALF_UP).unscaledValue()`,
-    * which is what `CAST(d AS DECIMAL(p,scale))` produces. Parses the
-    * shortest-decimal representation (`Double.toString` — the SAME string
-    * `BigDecimal.valueOf` reads) so no binary-expansion digits appear.
-    */
+    * which is what `CAST(d AS DECIMAL(p,scale))` produces.
+    *
+    * Fast path, no `String`: with p = 10^scale, if ulp(d)·p ≤ 1/4 and
+    * an integer k has `k.toDouble / p == d` (both operands exact, so the
+    * quotient is k·10^-scale correctly rounded), then every decimal that
+    * rounds to `d` — `Double.toString`'s digits among them, shortest or
+    * not — lies within ulp(d) of k·10^-scale, i.e. within 1/4 unit of k,
+    * so HALF_UP gives k. Such a k is `round(d * p)`: |d·p| < 2^53·ulp(d)·p
+    * ≤ 2^51, so the product is off by at most 1/8 and k lies within 1/8
+    * of the exact d·p. Anything else takes [[unitsParse]]. Scale-4
+    * prices take the fast path (sf0.1 `l_extendedprice`: ~6 vs ~140 ns
+    * per term); squares of prices at scale 8 mostly do not (their ulp is
+    * too coarse). */
   def units(d: Double, scale: Int): Long = {
+    val p = Pow10D(scale)
+    if (Math.ulp(d) * p <= 0.25) { // false for NaN and ±Infinity
+      val k = Math.round(d * p)
+      if (k.toDouble / p == d) return k
+    }
+    unitsParse(d, scale)
+  }
+
+  /** [[units]] by parsing the shortest-decimal representation
+    * (`Double.toString` — the SAME string `BigDecimal.valueOf` reads) so
+    * no binary-expansion digits appear. */
+  private[functions] def unitsParse(d: Double, scale: Int): Long = {
     if (d == 0.0) return 0L // covers -0.0
     val s = java.lang.Double.toString(d)
     val len = s.length

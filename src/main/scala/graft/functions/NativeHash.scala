@@ -286,26 +286,56 @@ object ExprKernels {
     * text's bytes. The HOF spelling (`transform(sequence(...), i ->
     * substring(text, i, k))`) is interpreted AND O(len) per element
     * (UTF8String.substring scans for code points), i.e. O(len²) per row;
-    * this is O(len · |pats|) with |pats| tiny.
+    * this is O(len · |pats|) with |pats| tiny. `first` is
+    * [[ngramFirstBytes]]`(pats)`: a position whose byte starts no pattern
+    * skips the pattern loop.
     */
-  def ngramHits(text: UTF8String, pats: Array[UTF8String]): Long = {
+  def ngramHits(text: UTF8String, pats: Array[UTF8String], first: Array[Boolean]): Long = {
     val bytes = text.getBytes
     var hits = 0L
     var i = 0
     while (i < bytes.length) {
-      var p = 0
-      while (p < pats.length) {
-        val pb = pats(p).getBytes
-        if (i + pb.length <= bytes.length) {
-          var j = 0
-          while (j < pb.length && bytes(i + j) == pb(j)) j += 1
-          if (j == pb.length) { hits += 1; p = pats.length - 1 } // count once per position
+      if (first(bytes(i) & 0xff)) {
+        var p = 0
+        while (p < pats.length) {
+          val pb = pats(p).getBytes
+          if (i + pb.length <= bytes.length) {
+            var j = 0
+            while (j < pb.length && bytes(i + j) == pb(j)) j += 1
+            if (j == pb.length) { hits += 1; p = pats.length - 1 } // count once per position
+          }
+          p += 1
         }
-        p += 1
       }
       i += 1
     }
     hits
+  }
+
+  /** Entry b is true iff some pattern starts with byte b — the
+    * [[ngramHits]] filter, built once per expression. */
+  def ngramFirstBytes(pats: Array[UTF8String]): Array[Boolean] = {
+    val first = new Array[Boolean](256)
+    pats.foreach(p => first(p.getBytes()(0) & 0xff) = true)
+    first
+  }
+
+  /** `lower(regexp_replace(text, '[^A-Za-z ]', ''))` in one byte pass:
+    * keep ASCII letters and spaces, lowercase the letters. Every byte ≥
+    * 0x80 goes, as the regex drops every non-ASCII character (and, on
+    * invalid UTF-8, the replacement character the decoder reads). */
+  def asciiLettersLower(text: UTF8String): UTF8String = {
+    val b = text.getBytes
+    val out = new Array[Byte](b.length)
+    var n = 0
+    var i = 0
+    while (i < b.length) {
+      val c = b(i)
+      if (c == ' ' || (c >= 'a' && c <= 'z')) { out(n) = c; n += 1 }
+      else if (c >= 'A' && c <= 'Z') { out(n) = (c + ('a' - 'A')).toByte; n += 1 }
+      i += 1
+    }
+    UTF8String.fromBytes(out, 0, n)
   }
 
   /** Whitespace tokens of a text column (split on ' ', empties dropped) —
@@ -880,20 +910,34 @@ case class Shingles3(child: Expression) extends UnaryExpression with ExpectsInpu
     copy(child = newChild)
 }
 
+/** ASCII letters and spaces, lowercased (see [[ExprKernels.asciiLettersLower]]). */
+case class AsciiLettersLower(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = StringType
+  override protected def nullSafeEval(text: Any): Any =
+    ExprKernels.asciiLettersLower(text.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.asciiLettersLower($c)")
+  override protected def withNewChildInternal(newChild: Expression): AsciiLettersLower =
+    copy(child = newChild)
+}
+
 /** N-gram pattern-hit count (see [[ExprKernels.ngramHits]]). */
 case class NgramHits(child: Expression, patterns: Seq[String])
     extends UnaryExpression with ExpectsInputTypes {
   require(patterns.nonEmpty && patterns.forall(_.nonEmpty), "need non-empty patterns")
   @transient private lazy val pats: Array[UTF8String] =
     patterns.map(UTF8String.fromString).toArray
+  @transient private lazy val first: Array[Boolean] = ExprKernels.ngramFirstBytes(pats)
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
   override protected def nullSafeEval(text: Any): Any =
-    ExprKernels.ngramHits(text.asInstanceOf[UTF8String], pats)
+    ExprKernels.ngramHits(text.asInstanceOf[UTF8String], pats, first)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("ngramPats", pats,
       "org.apache.spark.unsafe.types.UTF8String[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.ngramHits($c, $ref)")
+    val fst = ctx.addReferenceObj("ngramFirst", first, "boolean[]")
+    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.ngramHits($c, $ref, $fst)")
   }
   override protected def withNewChildInternal(newChild: Expression): NgramHits =
     copy(child = newChild)
@@ -995,6 +1039,10 @@ object native {
     * struct(n_tokens, dup_word_frac, dup_2gram_frac, top_2gram_frac);
     * null when the doc has < 2 tokens (no 2-grams). */
   def rep_metrics(tokens: Column): Column = col(RepMetrics(expr(tokens)))
+
+  /** ASCII letters and spaces of a text column, lowercased — the
+    * `lower(regexp_replace(text, '[^A-Za-z ]', ''))` projection. */
+  def ascii_letters_lower(text: Column): Column = col(AsciiLettersLower(expr(text)))
 
   /** Count of occurrences of any short ASCII pattern in a text column. */
   def ngram_hits(text: Column, patterns: Seq[String]): Column =

@@ -2739,15 +2739,16 @@ object TableLog {
   }
 
   /** `m`'s recorded schema, or (pre-schema v1 manifests) one inferred
-    * from a single live file's footer — the one inference rule every
-    * batch face (the `format("tablelog")` provider, the catalog, the v2
-    * table) shares, so they can never drift on it. */
+    * from a single live file's footer by [[ParquetFooters.schema]] — the
+    * one inference rule every batch face (the `format("tablelog")`
+    * provider, the catalog, the v2 table) and [[adopt]] share, so they
+    * can never drift on it. */
   private[graft] def schemaOf(spark: SparkSession, dir: String,
       m: Manifest): org.apache.spark.sql.types.StructType =
     m.schema.getOrElse {
       val first = m.files.headOption.getOrElse(throw new IllegalStateException(
         s"$dir has no data files to infer a schema from — pass it explicitly"))
-      spark.read.parquet(s"${dir.stripSuffix("/")}/${first.name}").schema
+      ParquetFooters.schema(spark, s"${dir.stripSuffix("/")}/${first.name}")
     }
 
   /** Manifest-transactional streaming tail: a Structured Streaming
@@ -3475,15 +3476,15 @@ object TableLog {
           }
           .toVector
       val base = dir.stripSuffix("/")
-      // rows from the adopted files' footers (metadata, no scan job);
-      // schema from ONE file's footer — the snapshot every subsequent
+      // rows and schema from the adopted files' footers (metadata, no
+      // job); the schema is ONE file's — the snapshot every subsequent
       // append is guarded against
       val conf = spark.sparkContext.hadoopConfiguration
       val rows =
         if (entries.isEmpty) 0L
         else ParquetFooters.rowCount(conf, entries.map(e => new Path(s"$base/${e.name}")))
       val schemaJson = entries.headOption.map(e =>
-        spark.read.parquet(s"$base/${e.name}").schema.json)
+        ParquetFooters.schema(spark, s"$base/${e.name}").json)
       val m = Manifest(0L, entries, rows, Map.empty, "adopt", schemaJson)
       commit(fs, dir, m)
       m

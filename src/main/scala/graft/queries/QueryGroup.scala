@@ -59,13 +59,10 @@ trait QueryGroup {
     * scan of a heavy kernel is still 8× short of the core count, and
     * the exchange cost the gate weighs scales with total bytes. Size
     * comes from the optimizer's scan stats (file bytes), no job runs. */
-  protected def spreadHeavy(df: DataFrame, minTotalBytes: Long): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
-    else if (df.queryExecution.optimizedPlan.stats.sizeInBytes >
-        BigInt(minTotalBytes)) df.repartition(target)
+  protected def spreadHeavy(df: DataFrame, minTotalBytes: Long): DataFrame =
+    if (narrowHeavyScan(df, minTotalBytes))
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
-  }
 
   /** [[spread]] + an eager [[graft.functions.Materialize.cut]] of the
     * repartitioned RAW rows, applied ONLY when the repartition actually
@@ -80,24 +77,24 @@ trait QueryGroup {
     * wide and NOTHING is materialized — the no-op branch. */
   protected def spreadCut(df: DataFrame, minTotalBytes: Long = 0L): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
-    else if (minTotalBytes == 0L ||
-        df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(minTotalBytes))
-      graft.functions.Materialize.cut(df.repartition(target))
-    else df // below the byte gate: the exchange+cut would outweigh the kernel
+    val widen =
+      if (minTotalBytes == 0L) df.rdd.getNumPartitions < target
+      else narrowHeavyScan(df, minTotalBytes) // below the gate the exchange+cut would outweigh the kernel
+    if (widen) graft.functions.Materialize.cut(df.repartition(target)) else df
   }
 
   /** Does `df` scan narrow (fewer splits than cores) AND heavy (more
-    * than `minBytesPerSplit` per split)? The [[spreadHeavy]] predicate,
+    * than `minTotalBytes` in total)? The [[spreadHeavy]] predicate,
     * exposed for queries that must pick a PLAN SHAPE from it (e.g. an
     * explicit-width co-partitioned join that is pure overhead at tiny
     * scale) — results are identical either way, only the physical width
-    * changes. False on any multi-split scan (real clusters). */
-  protected def narrowHeavyScan(df: DataFrame, minTotalBytes: Long): Boolean = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    df.rdd.getNumPartitions < target &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(minTotalBytes)
-  }
+    * changes. False on any multi-split scan (real clusters). The byte
+    * gate goes first: the optimizer's stats cost ~1 ms and no job, the
+    * split count a second physical plan and an RDD build (~35 ms), and
+    * below the gate (small inputs) the split count is never needed. */
+  protected def narrowHeavyScan(df: DataFrame, minTotalBytes: Long): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(minTotalBytes) &&
+      df.rdd.getNumPartitions < df.sparkSession.sparkContext.defaultParallelism
 
   /** [[spreadHeavy]] thresholds by kernel class — how many TOTAL scan
     * bytes before the downstream work dwarfs one exchange of them.

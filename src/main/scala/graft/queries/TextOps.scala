@@ -222,7 +222,7 @@ object TextOps extends QueryGroup {
     * O(len²) per row — 143 s at sf0.1; the kernel is codegen'd and
     * O(len), ~0.3 s). */
   def classifyLangNgram(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val clean = lower(regexp_replace(col("text"), "[^A-Za-z ]", ""))
+    val clean = graft.functions.native.ascii_letters_lower(col("text"))
     val scored = NgramProfiles.foldLeft(df.withColumn("__c", clean)) {
       case (d, (lang, tris)) =>
         d.withColumn(s"ng_$lang",
@@ -248,9 +248,9 @@ object TextOps extends QueryGroup {
     "de" -> Seq("der", "und", "sch", "ein", "ich", "en "),
     "fr" -> Seq("les", "ent", " le", "des", "ion", "la "))
   // ASCII-letter projection: strip-then-lower so case mapping is pure
-  // ASCII. Spark's regexp_replace is replace-all by default; DuckDB
-  // needs the explicit 'g' flag — hence two spellings of one projection.
-  private val CleanSql = "lower(regexp_replace(text, '[^A-Za-z ]', ''))"
+  // ASCII. The Spark side is the one-pass native.ascii_letters_lower
+  // kernel (KernelProps pins it to Spark's regexp_replace + lower);
+  // DuckDB needs the explicit 'g' flag for replace-all.
   private val CleanDuck = "lower(regexp_replace(text, '[^A-Za-z ]', '', 'g'))"
 
   // DuckDB oracle for text_bpe_merges: a recursive CTE applying ONE merge

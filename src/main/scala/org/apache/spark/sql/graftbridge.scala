@@ -13,6 +13,11 @@ object graftbridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `s` with every field (nested too) nullable — what a file relation
+    * does to its data schema (`StructType.asNullable` is `private[spark]`). */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Block until every event posted so far has reached every listener:
     * `SparkContext.listenerBus` is `private[spark]`, and listener-based
     * stage accounting (graft.Explain's stage table, specs that count the

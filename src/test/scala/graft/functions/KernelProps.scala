@@ -3,7 +3,11 @@ package graft.functions
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.security.MessageDigest
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, Literal, Lower, RegExpReplace}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
@@ -211,8 +215,8 @@ object KernelProps extends Properties("ExprKernels") {
       Gen.listOfN(3, Gen.oneOf('a', 'b', 'c', ' ')).map(_.mkString))) { (t, pats0) =>
       val pats = pats0.distinct
       val model = (0 to t.length - 3).count(i => pats.contains(t.substring(i, i + 3)))
-      val got = ExprKernels.ngramHits(
-        UTF8String.fromString(t), pats.map(UTF8String.fromString).toArray)
+      val u = pats.map(UTF8String.fromString).toArray
+      val got = ExprKernels.ngramHits(UTF8String.fromString(t), u, ExprKernels.ngramFirstBytes(u))
       got == model.toLong
     }
 
@@ -227,11 +231,74 @@ object KernelProps extends Properties("ExprKernels") {
     if !d.isNaN
   } yield d
 
+  // doubles that reach units' no-String fast path (prices k/10^2 and
+  // their squares) and its edges: within a few ulps of a half unit at
+  // some scale (the HALF_UP ties, which must fall through to the parse),
+  // ±0.0 and subnormals
+  private val unitsDouble: Gen[Double] = {
+    val price = Gen.choose(-10000000L, 10000000L).map(_ / 100.0)
+    val nearHalf = for {
+      s <- Gen.choose(0, 18)
+      k <- Gen.choose(-1000000L, 1000000L)
+      steps <- Gen.choose(-2, 2)
+    } yield (1 to steps.abs).foldLeft((k + 0.5) / math.pow(10, s)) { (d, _) =>
+      if (steps > 0) Math.nextUp(d) else Math.nextDown(d) }
+    val subnormal = for {
+      bits <- Gen.choose(1L, (1L << 52) - 1)
+      neg <- Gen.oneOf(false, true)
+    } yield { val d = java.lang.Double.longBitsToDouble(bits); if (neg) -d else d }
+    Gen.frequency(3 -> anyDouble, 3 -> price, 2 -> price.map(x => x * x), 2 -> nearHalf,
+      1 -> Gen.oneOf(0.0, -0.0, java.lang.Double.MIN_NORMAL), 1 -> subnormal)
+  }
+
   property("FixedPoint.units == BigDecimal.valueOf.setScale(HALF_UP).unscaled") =
-    forAll(anyDouble, Gen.oneOf(0, 2, 4, 6, 8)) { (d, s) =>
-      (math.abs(d) >= 9.2e18 / math.pow(10, s)) || // out of the 64-bit domain
-        FixedPoint.units(d, s) ==
-          JBigDecimal.valueOf(d).setScale(s, RoundingMode.HALF_UP)
-            .unscaledValue().longValueExact()
+    forAll(unitsDouble) { d =>
+      (0 to 18).forall { s =>
+        (math.abs(d) >= 9.2e18 / math.pow(10, s)) || { // out of the 64-bit domain
+          val u = FixedPoint.units(d, s)
+          u == FixedPoint.unitsParse(d, s) &&
+            u == JBigDecimal.valueOf(d).setScale(s, RoundingMode.HALF_UP)
+              .unscaledValue().longValueExact()
+        }
+      }
+    }
+
+  // native.ascii_letters_lower vs the spelling it replaces, each under
+  // codegen and interpreted evaluation (the projections
+  // spark.sql.codegen.factoryMode CODEGEN_ONLY and NO_CODEGEN pick)
+  private val asciiLettersLowerEvals: Seq[InternalRow => UTF8String] = {
+    val in = BoundReference(0, StringType, nullable = true)
+    val kernel = AsciiLettersLower(in)
+    val reference = Lower(new RegExpReplace(in, Literal("[^A-Za-z ]"), Literal("")))
+    for {
+      e <- Seq(kernel, reference)
+      proj <- Seq(GenerateUnsafeProjection.generate(Seq(e)),
+        InterpretedUnsafeProjection.createProjection(Seq(e)))
+    } yield { (row: InternalRow) =>
+      val out = proj(row)
+      if (out.isNullAt(0)) null else out.getUTF8String(0).clone()
+    }
+  }
+
+  private val rawText: Gen[Option[Array[Byte]]] = {
+    val chunk: Gen[Array[Byte]] = Gen.oneOf(
+      Gen.alphaNumStr.map(_.getBytes("UTF-8")),
+      Gen.oneOf(" ", "  ", ".,;!?-'\"()[]{}@#$%^&*_+=~`|<>/\\:", "0123456789", "\t\n")
+        .map(_.getBytes("UTF-8")),
+      Gen.oneOf("\u00e9", "\u00df", "\u00c9t\u00c9", "\u03bb", "\u8a9e", "\ud83d\ude00", "\u0130")
+        .map(_.getBytes("UTF-8")), // 2-, 3- and 4-byte UTF-8
+      Gen.nonEmptyListOf(Gen.choose(0x80, 0xff).map(_.toByte)).map(_.toArray), // invalid
+      Gen.oneOf(Array(0xc3.toByte), Array(0xe2.toByte, 0x82.toByte), Array(0xf0.toByte, 0x9f.toByte)))
+    Gen.frequency(
+      1 -> Gen.const(None),
+      1 -> Gen.const(Some(Array.emptyByteArray)),
+      8 -> Gen.listOf(chunk).map(cs => Some(cs.flatten.toArray)))
+  }
+
+  property("ascii_letters_lower == lower(regexp_replace(text, '[^A-Za-z ]', '')), codegen and interpreted") =
+    forAll(rawText) { bytes =>
+      val row = InternalRow(bytes.map(UTF8String.fromBytes).orNull)
+      val outs = asciiLettersLowerEvals.map(_(row))
+      outs.forall(_ == outs.head) && (bytes.isEmpty == (outs.head == null))
     }
 }
