@@ -75,21 +75,11 @@ object Lsh {
     * signature index, so bands of equal sig values in different positions
     * cannot collide). Evaluated by the codegen kernel
     * [[ExprKernels.bandHashes]] — the original nested-HOF spelling
-    * (kept below in [[bandHashesHof]] as the LshGeometrySpec parity
-    * reference) is interpreted per row and at production k = 128 cost
-    * more CPU than the MinHash signatures themselves. */
+    * (kept in LshGeometrySpec as the kernel's parity reference) is
+    * interpreted per row and at production k = 128 cost more CPU than
+    * the MinHash signatures themselves. */
   def bandHashes(sigs: Column, numBands: Int, bandSize: Int): Column =
     native.band_hashes(sigs, numBands, bandSize)
-
-  /** The pre-r18 HOF spelling of [[bandHashes]] — semantics of record
-    * for the kernel; LshGeometrySpec pins kernel ≡ HOF on random and
-    * null-bearing signatures. Not used by any query path. */
-  private[graft] def bandHashesHof(sigs: Column, numBands: Int, bandSize: Int): Column =
-    transform(sequence(lit(0), lit(numBands - 1)), b =>
-      md5(array_join(array_sort(
-        transform(sequence(lit(1), lit(bandSize)), j =>
-          concat((b * bandSize + j).cast("string"), lit(":"),
-            element_at(sigs, b * bandSize + j)))), ",")))
 
   /** Per-band bucket array over a sign-LSH signature long: element b =
     * band b's `bandBits`-bit bucket. Shared by batch dedup_semantic /

@@ -983,6 +983,15 @@ object TableLog {
     * and [[trackStats]] columns come from the staged files' parquet
     * FOOTERS — metadata reads, no extra Spark job per micro-batch.
     *
+    * A driver-local `batch` — only projections over a local collection
+    * (`Seq(...).toDF(...)`, `createDataFrame(rows, schema)`) that the
+    * optimizer folds into one local relation — runs NO Spark job: its
+    * rows are written on the driver in the files the write job would
+    * write (same slices, rows per file and footers, see
+    * [[StagedParquet.writeLocal]]). Any other batch, or a local one
+    * whose projection the optimizer leaves unfolded, runs the
+    * `df.write.parquet` job.
+    *
     * Concurrency — MULTI-WRITER appends: if the manifest CAS is lost
     * to any concurrent commit (another appender, a
     * [[compact]]/maintenance writer), the already-landed files are
@@ -1080,14 +1089,19 @@ object TableLog {
 
   /** Write `df` under a fresh `_staging-<uuid>` scratch dir inside the
     * table, with the table's bloom write options ([[bloomWriteOptions]]
-    * of `m`). Returns the staging dir and its data parts; the caller
-    * lands the parts ([[land]]) and deletes the dir. A crash leaves the
-    * dir to [[vacuum]]. */
+    * of `m`). A driver-local batch (rows already in driver memory:
+    * [[StagedParquet.writeLocal]]) is written on the driver with no
+    * Spark job, in the same files the job would write; any other `df`
+    * runs the `df.write.parquet` job. Returns the staging dir and its
+    * data parts; the caller lands the parts ([[land]]) and deletes the
+    * dir. A crash leaves the dir to [[vacuum]]. */
   private def stage(fs: FileSystem, dir: String, df: DataFrame,
       m: Manifest): (Path, Vector[FileStatus]) = {
     val staging = new Path(dir.stripSuffix("/"),
       s"_staging-${java.util.UUID.randomUUID()}")
-    df.write.options(bloomWriteOptions(m)).parquet(staging.toString)
+    val options = bloomWriteOptions(m)
+    if (!StagedParquet.writeLocal(df, staging.toString, options))
+      df.write.options(options).parquet(staging.toString)
     val parts = fs.listStatus(staging).iterator
       .filter { f => val n = f.getPath.getName
         n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".") }
@@ -1650,9 +1664,9 @@ object TableLog {
     * registration: an adaptive bloom filter on each registered column
     * of every file this write stages. The options land in the write
     * job's hadoop configuration — `DataFrameWriter.options` via
-    * `newHadoopConfWithOptions` on the v1 path, an explicit conf copy
-    * in [[graft.sources.TableLogV2Writes.outputFactory]] on the DSv2
-    * path — where parquet-mr's file writer reads them. Adaptive sizing
+    * `newHadoopConfWithOptions` on the v1 job path, the same call in
+    * [[StagedParquet]] for the driver-local and DSv2 writes — where
+    * parquet-mr's file writer reads them. Adaptive sizing
     * (parquet 1.14+) watches the column's ACTUAL distinct count as the
     * file is written and keeps the smallest candidate bloom that still
     * meets the target FPP — no NDV guess to mis-set, bounded by

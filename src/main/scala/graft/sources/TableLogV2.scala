@@ -6,8 +6,6 @@ import scala.collection.mutable.LinkedHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -26,16 +24,13 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter,
 import org.apache.spark.sql.connector.write.streaming.{
   StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.{OutputWriter,
-  OutputWriterFactory, PartitionDirectory, PartitioningAwareFileIndex,
-  PartitionSpec}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+  PartitionDirectory, PartitioningAwareFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
-import graft.functions.{ManifestFileIndex, TableLog}
+import graft.functions.{ManifestFileIndex, StagedParquet, TableLog}
 
 /** `format("tablelogv2")` — the DSv2 face of the TableLog lake (the
   * v1 deprecation de-risk: Spark's investment is in the
@@ -365,29 +360,20 @@ private[sources] final class TableLogV2TailStream(spark: SparkSession,
 private[sources] final case class TableLogV2CommitMessage(
     path: Option[String]) extends WriterCommitMessage
 
-/** Driver-side shared machinery of the two v2 writes: a serializable
-  * parquet writer factory (Spark's own [[ParquetFileFormat]] write
-  * path — codegen'd `ParquetWriteSupport`, session compression), and
-  * the staged-files commit through the appendBatch path. */
+/** Driver-side shared machinery of the two v2 writes: the table's
+  * parquet writer ([[graft.functions.StagedParquet]], the same one a
+  * driver-local append writes through), and the staged-files commit
+  * through the appendBatch path. */
 private[sources] object TableLogV2Writes {
 
-  def outputFactory(spark: SparkSession, schema: StructType,
-      dir: String): (OutputWriterFactory, SerializableConfiguration) = {
-    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
-    val f = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
-    // the table's trackBloom registration, copied onto the write job's
-    // conf explicitly (the DataFrameWriter path gets the same keys via
-    // newHadoopConfWithOptions; prepareWrite copies nothing arbitrary).
-    // Resolved at factory-creation time: a registration committed while
-    // a stream runs applies from the stream's next factory, not
-    // mid-epoch.
-    graft.functions.TableLog.latest(spark, dir).foreach { m =>
-      graft.functions.TableLog.bloomWriteOptions(m).foreach {
-        case (k, v) => job.getConfiguration.set(k, v)
-      }
-    }
-    (f, new SerializableConfiguration(job.getConfiguration))
-  }
+  /** The task writers' factory, with the table's trackBloom
+    * registration read from its head. Resolved at factory-creation
+    * time: a registration committed while a stream runs applies from
+    * the stream's next factory, not mid-epoch. */
+  def writer(spark: SparkSession, schema: StructType,
+      dir: String): StagedParquet =
+    StagedParquet(spark, schema, TableLog.latestHead(spark, dir)
+      .fold(Map.empty[String, String])(TableLog.bloomWriteOptions))
 
   /** `mergeSchema = true` on either v2 write surface, the v1 sink's
     * option honored here too ([[graft.functions.TableLog.alignMerging]]
@@ -442,8 +428,7 @@ private[sources] object TableLogV2Writes {
   * commit's sweep of the epoch dir leaves zero standing debris),
   * created lazily on the first row so empty partitions land nothing. */
 private[sources] final class TableLogV2WriterFactory(
-    factory: OutputWriterFactory, stagingRoot: String, schema: StructType,
-    conf: SerializableConfiguration)
+    writer: StagedParquet, stagingRoot: String)
     extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int,
@@ -452,40 +437,31 @@ private[sources] final class TableLogV2WriterFactory(
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new TableLogV2DataWriter(factory, s"$stagingRoot-$epochId", schema,
-      conf, partitionId, taskId)
+    new TableLogV2DataWriter(writer, s"$stagingRoot-$epochId",
+      partitionId, taskId)
 }
 
 private[sources] final class TableLogV2DataWriter(
-    factory: OutputWriterFactory, dir: String, schema: StructType,
-    conf: SerializableConfiguration, partitionId: Int, taskId: Long)
+    writer: StagedParquet, dir: String, partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
 
   private var out: OutputWriter = _
-  private var path: String = _
 
   override def write(row: InternalRow): Unit = {
-    if (out == null) {
-      val ctx = new TaskAttemptContextImpl(conf.value,
-        new TaskAttemptID(new TaskID(new JobID("graft-v2", 0),
-          TaskType.MAP, partitionId), (taskId % Int.MaxValue).toInt))
-      path = s"$dir/part-$partitionId-$taskId-" +
-        s"${java.util.UUID.randomUUID()}${factory.getFileExtension(ctx)}"
-      out = factory.newInstance(path, schema, ctx)
-    }
+    if (out == null) out = writer.open(dir, partitionId, taskId)
     out.write(row)
   }
 
   override def commit(): WriterCommitMessage = {
     if (out != null) out.close()
-    TableLogV2CommitMessage(Option(path))
+    TableLogV2CommitMessage(Option(out).map(_.path()))
   }
 
   override def abort(): Unit = {
     if (out != null) {
       out.close()
-      val p = new Path(path)
-      p.getFileSystem(conf.value).delete(p, false)
+      val p = new Path(out.path())
+      p.getFileSystem(writer.hadoopConf).delete(p, false)
     }
   }
 
@@ -505,8 +481,8 @@ private[sources] final class TableLogV2BatchWrite(dir: String,
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
-    val (f, conf) = TableLogV2Writes.outputFactory(spark, schema, dir)
-    new TableLogV2WriterFactory(f, stagingRoot, schema, conf)
+    new TableLogV2WriterFactory(TableLogV2Writes.writer(spark, schema, dir),
+      stagingRoot)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
@@ -550,8 +526,8 @@ private[sources] final class TableLogV2StreamingWrite(dir: String,
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val (f, conf) = TableLogV2Writes.outputFactory(spark, schema, dir)
-    new TableLogV2WriterFactory(f, stagingRoot, schema, conf)
+    new TableLogV2WriterFactory(TableLogV2Writes.writer(spark, schema, dir),
+      stagingRoot)
   }
 
   override def commit(epochId: Long,

@@ -18,6 +18,13 @@ object graftbridge {
   def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
     s.asNullable
 
+  /** The slice count cap of a `LocalTableScanExec`'s rows
+    * (`SparkSession.leafNodeDefaultParallelism` is `private[sql]`):
+    * graft.functions.StagedParquet writes a driver-local batch in the
+    * slices a write job over that scan would get. */
+  def leafNodeDefaultParallelism(spark: SparkSession): Int =
+    spark.asInstanceOf[classic.SparkSession].leafNodeDefaultParallelism
+
   /** Block until every event posted so far has reached every listener:
     * `SparkContext.listenerBus` is `private[spark]`, and listener-based
     * stage accounting (graft.Explain's stage table, specs that count the

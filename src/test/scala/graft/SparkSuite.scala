@@ -9,6 +9,25 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
+  /** `body`'s result and the number of Spark jobs it started (the
+    * listener bus is drained before and after, so no job is missed or
+    * counted from before). */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.sql.graftbridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.sql.graftbridge.drainListenerBus(spark)
+      (a, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   /** Stop a ProcessingTime-triggered query without interrupting a
     * mid-commit micro-batch: `stop()` interrupts the stream thread, and an
     * interrupt landing inside a state-store commit logs a

@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.types._
@@ -17,21 +15,6 @@ import graft.functions.ParquetFooters
 /** `Tables` opens a table from its footer: the schema it passes to the
   * reader equals the one Spark infers, and no Spark job runs. */
 class TablesSpec extends SparkSuite {
-
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    graftbridge.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      graftbridge.drainListenerBus(spark)
-      (a, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString

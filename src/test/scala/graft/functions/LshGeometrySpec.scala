@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** MinHash banding geometry: the chooser picks the S-curve-nearest
@@ -19,6 +20,16 @@ import org.apache.spark.sql.functions._
 class LshGeometrySpec extends SparkSuite {
   import spark.implicits._
 
+  /** The pre-r18 HOF spelling of [[Lsh.bandHashes]], the semantics of
+    * record for its kernel: band b = md5 of its ordered "h:sig"
+    * components, h the 1-based signature index. */
+  private def bandHashesHof(sigs: Column, numBands: Int, bandSize: Int): Column =
+    transform(sequence(lit(0), lit(numBands - 1)), b =>
+      md5(array_join(array_sort(
+        transform(sequence(lit(1), lit(bandSize)), j =>
+          concat((b * bandSize + j).cast("string"), lit(":"),
+            element_at(sigs, b * bandSize + j)))), ",")))
+
   test("band_hashes kernel ≡ the HOF spelling (random, null-bearing, production-width sigs)") {
     val rnd = new scala.util.Random(5)
     def sig(k: Int, withNulls: Boolean): Seq[String] =
@@ -32,7 +43,7 @@ class LshGeometrySpec extends SparkSuite {
         .toDF("id", "sigs")
       val bad = df.select(
           native.band_hashes(col("sigs"), bands, rows).as("kernel"),
-          Lsh.bandHashesHof(col("sigs"), bands, rows).as("hof"))
+          bandHashesHof(col("sigs"), bands, rows).as("hof"))
         .filter(col("kernel") =!= col("hof"))
       assert(bad.count() == 0L,
         s"kernel diverges from HOF at bands=$bands rows=$rows nulls=$withNulls")

@@ -1442,4 +1442,120 @@ class TableLogSpec extends SparkSuite {
     val (d, v) = TableLog.appendsSince(spark, dir, 4L)
     assert(v == 5L && d.get.count() == 20L)
   }
+
+  /** `df`'s rows behind an RDD scan in the same partitions: a plan that
+    * is not driver-local, so appendBatch runs the write job for it. */
+  private def viaJob(df: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(df.rdd, df.schema)
+
+  /** One file's footer facts that must not depend on who wrote it: row
+    * count, parquet schema, Spark row metadata, `created_by`, and each
+    * column's codec and bloom presence. */
+  private def fileFacts(p: org.apache.hadoop.fs.Path): String = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      p, spark.sparkContext.hadoopConfiguration)
+    val f = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+      in, org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+    val meta = f.getFileMetaData
+    val blocks = Seq.newBuilder[org.apache.parquet.hadoop.metadata.BlockMetaData]
+    f.getBlocks.forEach(b => blocks += b)
+    val chunks = blocks.result().flatMap { b =>
+      val cs = Seq.newBuilder[String]
+      b.getColumns.forEach(c => cs +=
+        s"${c.getPath.toDotString}:${c.getCodec}:bloom=${c.getBloomFilterOffset >= 0}")
+      cs.result()
+    }.distinct.sorted
+    Seq(blocks.result().map(_.getRowCount).sum, meta.getSchema,
+      meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"),
+      meta.getCreatedBy, chunks).mkString("\n")
+  }
+
+  /** The data files `version` appended to the table at `dir`. */
+  private def appendedAt(dir: String, version: Long): Seq[TableLog.Entry] =
+    TableLog.latest(spark, dir).get.files.filter(_.name.startsWith(s"a$version-"))
+
+  test("a driver-local append runs no job and stages the files the write job would: slices, rows per file, footers, stats, rows") {
+    def events(n: Int) = Seq.tabulate(n)(i => (i.toLong, s"s${i % 97}",
+        BigDecimal(i.toLong * 125, 3), new java.sql.Timestamp(1700000000000L + i * 1000L),
+        Seq.tabulate(i % 4)(j => (i + j).toLong)))
+      .toDF("id", "s", "d", "ts", "arr").withColumn("d", $"d".cast("decimal(12,3)"))
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val savedTs = spark.conf.get(tsKey)
+    spark.conf.set(tsKey, "TIMESTAMP_MICROS") // trackStats on `ts` needs it
+    try for ((label, n, maxPerFile) <- Seq(("empty", 0, 0), ("1 row", 1, 0),
+        ("3 rows", 3, 0), ("10k rows", 10000, 0), ("above maxRecordsPerFile", 23, 5))) {
+      val df = events(n)
+      val local = freshTable()
+      val job = freshTable()
+      for (d <- Seq(local, job)) {
+        TableLog.appendBatch(viaJob(df).limit(0), d, "init", 0L)
+        TableLog.trackStats(spark, d, Seq("id", "s", "ts"))
+        TableLog.trackBloom(spark, d, Seq("id", "s"))
+      }
+      val m = TableLog.latest(spark, local).get
+      val v = m.version + 1
+      val ref = java.nio.file.Files.createTempDirectory("graft_ref").toString + "/out"
+      val key = "spark.sql.files.maxRecordsPerFile"
+      val savedMax = spark.conf.get(key)
+      spark.conf.set(key, maxPerFile.toString)
+      try {
+        val (landed, jobs) = jobsDuring(TableLog.appendBatch(df, local, "w", 1L))
+        assert(landed && jobs == 0, s"$label: a local append ran $jobs job(s)")
+        assert(TableLog.appendBatch(viaJob(df), job, "w", 1L))
+        val (_, refJobs) = jobsDuring(
+          df.write.options(TableLog.bloomWriteOptions(m)).parquet(ref))
+        assert(refJobs >= 1, "vacuity: the reference write must run a job")
+      } finally spark.conf.set(key, savedMax)
+      val refFiles = new java.io.File(ref).listFiles().toSeq
+        .filter(_.getName.endsWith(".parquet")).map(f => new org.apache.hadoop.fs.Path(f.toString))
+      def facts(d: String) = appendedAt(d, v)
+        .map(e => fileFacts(new org.apache.hadoop.fs.Path(s"$d/${e.name}"))).sorted
+      val want = refFiles.map(fileFacts).sorted
+      // the session's 4 cores: 23 rows are slices of 5, 6, 6 and 6
+      // rows, so files of 5 | 5+1 | 5+1 | 5+1
+      assert(spark.sparkContext.defaultParallelism == 4)
+      val expectFiles = if (maxPerFile > 0) 7 else math.min(math.max(n, 1), 4)
+      assert(want.size == expectFiles, s"$label: the write job wrote ${want.size} files")
+      assert(facts(local) == want, s"$label: driver-staged files differ from the job's")
+      assert(facts(job) == want, s"$label: job-staged files differ from df.write's")
+      def stats(d: String) = appendedAt(d, v).map(_.stats.toSeq.sorted.toString).sorted
+      assert(stats(local) == stats(job), s"$label: manifest stats differ")
+      val rows = TableLog.read(spark, local).orderBy("id").collect().toSeq
+      assert(rows == TableLog.read(spark, job).orderBy("id").collect().toSeq)
+      assert(rows == df.orderBy("id").collect().toSeq && rows.size == n)
+    } finally spark.conf.set(tsKey, savedTs)
+  }
+
+  test("appendBatch of a local batch runs no Spark job; a range batch and an unfolded projection still run the write job") {
+    val dir = freshTable()
+    val (_, localJobs) = jobsDuring(TableLog.appendBatch(batchDf(0), dir, "w", 0L))
+    assert(localJobs == 0, s"a local append ran $localJobs job(s)")
+    val range = spark.range(100).select(($"id" + 1000L).as("id"),
+      concat(lit("v1-"), $"id".cast("string")).as("v"))
+    val (_, rangeJobs) = jobsDuring(TableLog.appendBatch(range, dir, "w", 1L))
+    assert(rangeJobs >= 1, "a range batch must run the write job")
+    // local rows under a projection the optimizer cannot fold into a
+    // local relation: an uncorrelated scalar subquery over a range
+    val unfolded = batchDf(2).withColumn("v",
+      concat($"v", expr("(select cast(max(id) - 9 as string) from range(10))")))
+    val (_, subqueryJobs) = jobsDuring(TableLog.appendBatch(unfolded, dir, "w", 2L))
+    assert(subqueryJobs >= 1, "an unfolded projection must run the write job")
+    // rand() over local rows is folded by the optimizer on either path
+    // (evaluated as partition 0), so it stays local and lands the rows
+    // the write job writes
+    val random = batchDf(3).withColumn("v",
+      concat($"v", lit("-"), (rand(7) * 1000).cast("int").cast("string")))
+    val (_, randJobs) = jobsDuring(TableLog.appendBatch(random, dir, "w", 3L))
+    assert(randJobs == 0, s"a folded rand() append ran $randJobs job(s)")
+    val ref = java.nio.file.Files.createTempDirectory("graft_ref").toString + "/out"
+    random.write.parquet(ref)
+    val jobRows = spark.read.parquet(ref).as[(Long, String)].collect().sorted.toSeq
+    val got = TableLog.read(spark, dir).as[(Long, String)].collect().sorted.toSeq
+    assert(got == (batchDf(0).as[(Long, String)].collect() ++
+      Seq.tabulate(100)(i => (1000L + i, s"v1-$i")) ++
+      batchDf(2).as[(Long, String)].collect().map { case (i, v) => (i, v + "0") } ++
+      jobRows).sorted.toSeq)
+    assert(jobRows.map(_._1) == batchDf(3).as[(Long, String)].collect().map(_._1).sorted.toSeq)
+    assert(TableLog.latest(spark, dir).get.rows == 400L)
+  }
 }
