@@ -181,11 +181,17 @@ object Curation {
     * (CurateStreamSpec) and valid on batch and streaming frames alike —
     * per-row memory is bounded by one document's token array, which the
     * frame already materializes as a row. Docs with < 2 tokens (no
-    * 2-grams) are dropped, as the explode path's inner join drops them. */
+    * 2-grams) are dropped, as the explode path's inner join drops them.
+    * The kernel runs once per row, inside a `Generate`, and the
+    * short-doc filter reads the generated column above it: predicate
+    * pushdown rewrites a filter on a PROJECTED kernel onto the kernel
+    * itself (running it twice) and pushes it through any repartition
+    * below, but never moves a filter on a generated column. */
   def qualityRepetition(df: DataFrame, idCol: String, textCol: String,
                         maxTop2GramFrac: Double, maxDup2GramFrac: Double,
                         maxDupWordFrac: Double): DataFrame =
-    df.withColumn("m", native.rep_metrics(native.tokens(col(textCol))))
+    df.select(col(idCol),
+        explode(array(native.rep_metrics(native.tokens(col(textCol))))).as("m"))
       .filter(col("m").isNotNull)
       .select(col(idCol), col("m.n_tokens").as("n_tokens"),
         col("m.dup_word_frac").as("dup_word_frac"),

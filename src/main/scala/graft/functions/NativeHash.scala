@@ -5,7 +5,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -281,43 +281,42 @@ object ExprKernels {
     res
   }
 
-  /** Count of (overlapping) occurrences of any of `pats` — each a short
-    * ASCII byte pattern, e.g. a character trigram — in one pass over the
-    * text's bytes. The HOF spelling (`transform(sequence(...), i ->
-    * substring(text, i, k))`) is interpreted AND O(len) per element
-    * (UTF8String.substring scans for code points), i.e. O(len²) per row;
-    * this is O(len · |pats|) with |pats| tiny. `first` is
-    * [[ngramFirstBytes]]`(pats)`: a position whose byte starts no pattern
-    * skips the pattern loop.
-    */
-  def ngramHits(text: UTF8String, pats: Array[UTF8String], first: Array[Boolean]): Long = {
-    val bytes = text.getBytes
-    var hits = 0L
+  /** Per-profile n-gram hit counts of `text`, in one pass over its
+    * bytes: entry p is the number of byte positions at which some
+    * pattern of profile p starts (overlapping; a position counts once
+    * per profile however many of its patterns match there). The HOF
+    * spelling (`transform(sequence(...), i -> substring(text, i, k))`)
+    * is interpreted AND O(len) per element (UTF8String.substring scans
+    * for code points), i.e. O(len²) per row; this is O(len · patterns
+    * starting with the byte at each position). A position whose byte
+    * starts no pattern costs one table lookup. */
+  def ngramHits(text: UTF8String, t: NgramTable): ArrayData = {
+    val counts = new Array[Long](t.profiles)
+    val b = text.getBytes
     var i = 0
-    while (i < bytes.length) {
-      if (first(bytes(i) & 0xff)) {
-        var p = 0
-        while (p < pats.length) {
-          val pb = pats(p).getBytes
-          if (i + pb.length <= bytes.length) {
-            var j = 0
-            while (j < pb.length && bytes(i + j) == pb(j)) j += 1
-            if (j == pb.length) { hits += 1; p = pats.length - 1 } // count once per position
+    while (i < b.length) {
+      val cand = t.byFirst(b(i) & 0xff)
+      if (cand != null) {
+        var mask = 0L
+        var c = 0
+        while (c < cand.length) {
+          val p = cand(c)
+          val pb = t.pats(p)
+          if (i + pb.length <= b.length) {
+            var j = 1
+            while (j < pb.length && b(i + j) == pb(j)) j += 1
+            if (j == pb.length) mask |= t.masks(p)
           }
-          p += 1
+          c += 1
+        }
+        while (mask != 0L) {
+          counts(java.lang.Long.numberOfTrailingZeros(mask)) += 1
+          mask &= mask - 1
         }
       }
       i += 1
     }
-    hits
-  }
-
-  /** Entry b is true iff some pattern starts with byte b — the
-    * [[ngramHits]] filter, built once per expression. */
-  def ngramFirstBytes(pats: Array[UTF8String]): Array[Boolean] = {
-    val first = new Array[Boolean](256)
-    pats.foreach(p => first(p.getBytes()(0) & 0xff) = true)
-    first
+    UnsafeArrayData.fromPrimitiveArray(counts)
   }
 
   /** `lower(regexp_replace(text, '[^A-Za-z ]', ''))` in one byte pass:
@@ -669,49 +668,104 @@ object ExprKernels {
     new GenericArrayData(out)
   }
 
-  private val GramSpace = UTF8String.fromString(" ")
-
   /** Per-document Gopher repetition metrics from a token array, in one
-    * O(n) pass: a token hash-set (distinct words) and a 2-gram hash-map
-    * (max / total / distinct occurrence counts) — both bounded by the
-    * DOCUMENT length, so per-row memory stays bounded however large the
-    * corpus. The final fractions use the same double operations as the
-    * distributed explode+agg path ([[Curation.repetitionMetrics]]), so
-    * the two are bit-identical (CurateStreamSpec pins this). Returns
-    * null for docs with < 2 tokens — no 2-grams, the rows the batch
-    * path's inner join drops. A null TOKEN (possible only on hand-built
-    * arrays; the tokens() kernel never emits one) groups as a null gram
-    * and counts as one distinct word, matching explode + array_distinct.
+    * O(n) pass: each token is interned to a small id by byte equality
+    * (an open-addressing table over the tokens' own bytes, no copy), and
+    * 2-grams are counted by id pair in a second table — no per-2-gram
+    * string. Both tables are bounded by the DOCUMENT length, so per-row
+    * memory stays bounded however large the corpus. The final fractions
+    * use the same double operations as the distributed explode+agg path
+    * ([[Curation.repetitionMetrics]]), so the two are bit-identical
+    * (CurateStreamSpec pins this). A 2-gram is its pair of tokens, which
+    * is the joined "a b" string of that path whenever no token holds a
+    * space — always true of [[tokens]]' output. Returns null for docs
+    * with < 2 tokens — no 2-grams, the rows the batch path's inner join
+    * drops. A null TOKEN (possible only on hand-built arrays; the
+    * tokens() kernel never emits one) counts as one distinct word, and
+    * every 2-gram holding it as one null gram, matching explode +
+    * array_distinct and the null `concat` of that path.
     */
   def repMetrics(toks: ArrayData): InternalRow = {
     val n = toks.numElements()
     if (n < 2) return null
-    val words = new java.util.HashSet[UTF8String](n * 2)
-    val grams = new java.util.HashMap[UTF8String, Array[Long]](n * 2)
-    var prev = toks.getUTF8String(0)
-    words.add(prev)
-    var maxc = 0L
-    var i = 1
+    val ids = new Array[Int](n)
+    var words = 0
+    var nullId = -1
+    val wcap = tableCapacity(n)
+    val wkeys = new Array[UTF8String](wcap)
+    val wids = new Array[Int](wcap)
+    var i = 0
     while (i < n) {
-      val cur = toks.getUTF8String(i)
-      words.add(cur)
-      // UTF8String.concat yields null when any input is null — the same
-      // null gram the batch expression's concat produces
-      val g = if (prev == null || cur == null) null
-              else UTF8String.concat(prev, GramSpace, cur)
-      val c = grams.get(g)
-      val nc = if (c == null) { grams.put(g, Array(1L)); 1L }
-               else { c(0) += 1; c(0) }
-      if (nc > maxc) maxc = nc
-      prev = cur
+      val tok = toks.getUTF8String(i)
+      if (tok == null) {
+        if (nullId < 0) { nullId = words; words += 1 }
+        ids(i) = nullId
+      } else {
+        val h = tok.hashCode()
+        var slot = (h ^ (h >>> 16)) & (wcap - 1)
+        while (wkeys(slot) != null && !wkeys(slot).equals(tok)) slot = (slot + 1) & (wcap - 1)
+        if (wkeys(slot) == null) { wkeys(slot) = tok; wids(slot) = words; words += 1 }
+        ids(i) = wids(slot)
+      }
+      i += 1
+    }
+    // 2-gram key: the id pair, or -1 for the one null gram; Long.MinValue
+    // marks a free slot
+    val gcap = tableCapacity(n - 1)
+    val gkeys = new Array[Long](gcap)
+    java.util.Arrays.fill(gkeys, Long.MinValue)
+    val gcounts = new Array[Int](gcap)
+    var grams = 0
+    var maxc = 0
+    i = 1
+    while (i < n) {
+      val key =
+        if (ids(i - 1) == nullId || ids(i) == nullId) -1L
+        else (ids(i - 1).toLong << 32) | ids(i).toLong
+      var slot = ((key * 0x9E3779B97F4A7C15L) >>> 32).toInt & (gcap - 1)
+      while (gkeys(slot) != Long.MinValue && gkeys(slot) != key) slot = (slot + 1) & (gcap - 1)
+      if (gkeys(slot) == Long.MinValue) { gkeys(slot) = key; grams += 1 }
+      gcounts(slot) += 1
+      if (gcounts(slot) > maxc) maxc = gcounts(slot)
       i += 1
     }
     val total = (n - 1).toDouble
     new GenericInternalRow(Array[Any](
       n.toLong,
-      1.0 - words.size().toDouble / n.toDouble,
-      1.0 - grams.size().toDouble / total,
+      1.0 - words.toDouble / n.toDouble,
+      1.0 - grams.toDouble / total,
       maxc.toDouble / total))
+  }
+
+  /** A power of two at least twice `n`: an open-addressing table of `n`
+    * keys stays at most half full. */
+  private def tableCapacity(n: Int): Int = Integer.highestOneBit(math.max(n, 1) * 4 - 1)
+}
+
+/** The [[ExprKernels.ngramHits]] lookup over a list of profiles (at most
+  * 64, each a non-empty list of non-empty patterns): the distinct
+  * patterns as bytes, for each one the bit set of profiles that hold it,
+  * and for each first byte the patterns that start with it (null when
+  * none does). Built once per expression. */
+final case class NgramTable(profiles: Int, pats: Array[Array[Byte]],
+    masks: Array[Long], byFirst: Array[Array[Int]])
+
+object NgramTable {
+  def apply(profiles: Seq[Seq[String]]): NgramTable = {
+    require(profiles.nonEmpty && profiles.size <= 64,
+      s"need 1 to 64 n-gram profiles, got ${profiles.size}")
+    require(profiles.forall(p => p.nonEmpty && p.forall(_.nonEmpty)),
+      "every n-gram profile needs non-empty patterns")
+    val distinct = profiles.flatten.distinct
+    val masks = distinct.map(p => profiles.zipWithIndex.collect {
+      case (prof, i) if prof.contains(p) => 1L << i
+    }.sum).toArray
+    val pats = distinct.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
+    val byFirst = Array.tabulate(256) { b =>
+      val ix = pats.indices.filter(p => (pats(p)(0) & 0xff) == b).toArray
+      if (ix.isEmpty) null else ix
+    }
+    NgramTable(profiles.size, pats, masks, byFirst)
   }
 }
 
@@ -922,22 +976,17 @@ case class AsciiLettersLower(child: Expression) extends UnaryExpression with Exp
     copy(child = newChild)
 }
 
-/** N-gram pattern-hit count (see [[ExprKernels.ngramHits]]). */
-case class NgramHits(child: Expression, patterns: Seq[String])
+/** Per-profile n-gram hit counts (see [[ExprKernels.ngramHits]]). */
+case class NgramHits(child: Expression, profiles: Seq[Seq[String]])
     extends UnaryExpression with ExpectsInputTypes {
-  require(patterns.nonEmpty && patterns.forall(_.nonEmpty), "need non-empty patterns")
-  @transient private lazy val pats: Array[UTF8String] =
-    patterns.map(UTF8String.fromString).toArray
-  @transient private lazy val first: Array[Boolean] = ExprKernels.ngramFirstBytes(pats)
+  @transient private lazy val table: NgramTable = NgramTable(profiles)
   override def inputTypes = Seq(StringType)
-  override def dataType: DataType = LongType
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(text: Any): Any =
-    ExprKernels.ngramHits(text.asInstanceOf[UTF8String], pats, first)
+    ExprKernels.ngramHits(text.asInstanceOf[UTF8String], table)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ngramPats", pats,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    val fst = ctx.addReferenceObj("ngramFirst", first, "boolean[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.ngramHits($c, $ref, $fst)")
+    val ref = ctx.addReferenceObj("ngramTable", table, classOf[NgramTable].getName)
+    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.ngramHits($c, $ref)")
   }
   override protected def withNewChildInternal(newChild: Expression): NgramHits =
     copy(child = newChild)
@@ -1044,9 +1093,16 @@ object native {
     * `lower(regexp_replace(text, '[^A-Za-z ]', ''))` projection. */
   def ascii_letters_lower(text: Column): Column = col(AsciiLettersLower(expr(text)))
 
-  /** Count of occurrences of any short ASCII pattern in a text column. */
+  /** Per-profile n-gram hit counts of a text column, as array<bigint>
+    * in profile order: entry p counts the positions where some pattern
+    * of `profiles(p)` starts (one pass for all profiles). */
+  def ngram_profile_hits(text: Column, profiles: Seq[Seq[String]]): Column =
+    col(NgramHits(expr(text), profiles))
+
+  /** Count of the positions where any of `patterns` starts in a text
+    * column: the one-profile case of [[ngram_profile_hits]]. */
   def ngram_hits(text: Column, patterns: Seq[String]): Column =
-    col(NgramHits(expr(text), patterns))
+    ngram_profile_hits(text, Seq(patterns)).getItem(0)
 
   /** Exact scale-`scale` decimal sum of a double column, as double —
     * bit-identical to `sum(cast(c as decimal(38,scale))).cast("double")`

@@ -1662,7 +1662,13 @@ object TableLog {
 
   /** Per-write parquet options for the table's [[trackBloom]]
     * registration: an adaptive bloom filter on each registered column
-    * of every file this write stages. The options land in the write
+    * of every file this write stages, in every column chunk that is not
+    * fully dictionary-encoded. parquet-mr writes no bloom for a chunk
+    * whose pages are all dictionary pages (a low-cardinality column):
+    * there the dictionary itself excludes an absent key, through
+    * parquet's dictionary filter. A chunk whose dictionary outgrows the
+    * dictionary page size falls back to plain pages and gets its bloom
+    * (TableLogSpec pins both cases). The options land in the write
     * job's hadoop configuration — `DataFrameWriter.options` via
     * `newHadoopConfWithOptions` on the v1 job path, the same call in
     * [[StagedParquet]] for the driver-local and DSv2 writes — where

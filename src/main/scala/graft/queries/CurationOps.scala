@@ -153,13 +153,12 @@ object CurationOps extends QueryGroup {
     // the canonical key.
     "url_canonicalize" -> ((s, dir) => {
       import s.implicits._
-      // byte-gated spreadCut: a bare spread() lost here at sf0.1 in r17
-      // (the regex kernel projection pushes below the repartition
-      // exchange and re-runs serially — and at that size the exchange
-      // cost more than the serial kernel: 0.43 → 0.72 s paired), so
-      // below the gate this is a NO-OP; at 20× the cut pins the raw rows
-      // wide (2.0 → 1.1 s paired). No-op on any multi-split scan.
-      val urls = spreadCut(t(s, dir, "documents"), SpreadDocKernel).select($"doc_id",
+      // spreadHeavy: at sf0.1 the exchange costs more than the serial
+      // regex kernel (r17: 0.43 → 0.72 s paired with a bare spread()),
+      // so below the byte gate this is a NO-OP; above it the canonicalize
+      // projection runs after the repartition — no filter reads it, so
+      // nothing pushes it into the 1-task scan ([[spread]])
+      val urls = spreadHeavy(t(s, dir, "documents"), SpreadDocKernel).select($"doc_id",
         concat(
           when($"doc_id" % 4 === 0, "HTTP://WWW.Site").otherwise("http://www.site"),
           expr("doc_id DIV 4").cast("string"),

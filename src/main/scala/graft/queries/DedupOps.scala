@@ -74,19 +74,14 @@ object DedupOps extends QueryGroup {
   // cluster population stays bounded (the paper's regime).
   private val SemClusters = 16
 
-  /** (doc_id, sharr): distinct 3-token shingles per document, in-row. */
-  private def shingleArrays(s: SparkSession, dir: String): DataFrame = {
+  /** (doc_id, shingle): one row per distinct 3-token shingle of each
+    * document, over the widened scan. The kernel sits in the explode
+    * (a document with no shingle emits no row), so no filter reads its
+    * output and nothing pushes it into the 1-task scan ([[spread]]). */
+  private def shingleRows(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // spreadCut, not spread: Catalyst pushes the shingles3 projection
-    // below a bare repartition's exchange, so every consumer subtree
-    // re-ran the kernel serially in the 1-task scan stage (r17 finding;
-    // the r18 20× stage tables measured two ~6 s single-task stages on
-    // dedup_ngram_jaccard and one ~2.9 s on the minhash family). The cut
-    // pins the RAW repartitioned rows — pre-kernel bytes only — and is a
-    // no-op whenever the scan is already wide (any real corpus).
-    spreadCut(t(s, dir, "documents"))
-      .select($"doc_id", TF.shingles3($"text").as("sharr"))
-      .filter(size($"sharr") >= 1)
+    spread(t(s, dir, "documents"))
+      .select($"doc_id", explode(TF.shingles3($"text")).as("shingle"))
   }
 
   private val SQL_SHINGLES =
@@ -115,8 +110,7 @@ object DedupOps extends QueryGroup {
     // scan + broadcast join + partial-agg count at any corpus size.
     "dedup_decontaminate" -> ((s, dir) => {
       import s.implicits._
-      val sh = shingleArrays(s, dir)
-        .select($"doc_id", explode($"sharr").as("shingle"))
+      val sh = shingleRows(s, dir)
       val bench = sh.filter($"doc_id" % 97 === 0)
         .select($"doc_id".as("bench_id"), $"shingle")
       sh.filter($"doc_id" % 97 =!= 0)
@@ -139,15 +133,15 @@ object DedupOps extends QueryGroup {
     // blowup. Docs under 20 tokens carry no window and are excluded.
     "dedup_substring" -> ((s, dir) => {
       import s.implicits._
-      // spreadCut (not spread): the tokens() projection pushes below the
-      // exchange and ran serially in the 1-task scan stage at 20× — the
-      // shingleArrays fix, same reasoning
-      val spans = spreadCut(t(s, dir, "documents"))
-        .withColumn("toks", TF.tokens($"text"))
-        .filter(size($"toks") >= SpanLen)
+      // docs under SpanLen tokens get a NULL window array, which explodes
+      // to no row: a filter on size(toks) would be pushed below spread's
+      // repartition and re-run tokens() in the 1-task scan ([[spread]])
+      val spans = spread(t(s, dir, "documents"))
+        .select($"doc_id", TF.tokens($"text").as("toks"))
         .select($"doc_id", explode(expr(
-          s"transform(sequence(1, size(toks)-${SpanLen - 1}), " +
-            s"i -> md5(concat_ws(' ', slice(toks, i, $SpanLen))))")).as("h"))
+          s"CASE WHEN size(toks) >= $SpanLen THEN " +
+            s"transform(sequence(1, size(toks)-${SpanLen - 1}), " +
+            s"i -> md5(concat_ws(' ', slice(toks, i, $SpanLen)))) END")).as("h"))
       // corpus-wide occurrence count as an unordered window over the span
       // hash: ONE exchange on h and ONE evaluation of the window-md5
       // explode, where the groupBy+join-back spelling re-tokenized and
@@ -176,12 +170,14 @@ object DedupOps extends QueryGroup {
     // the aligned-chunk trick keeps it 1× instead of SpanLen×.
     "dedup_span_removal" -> ((s, dir) => {
       import s.implicits._
-      val chunks = spreadCut(t(s, dir, "documents")) // see dedup_substring
-        .withColumn("toks", TF.tokens($"text"))
-        .filter(size($"toks") >= 1)
+      // a doc with no token explodes a NULL array (no row) — the
+      // dedup_substring barrier
+      val chunks = spread(t(s, dir, "documents"))
+        .select($"doc_id", TF.tokens($"text").as("toks"))
         .select($"doc_id", explode(expr(
-          s"transform(sequence(0, (size(toks)-1) DIV $ChunkLen), i -> " +
-            s"struct(i AS chunk_id, concat_ws(' ', slice(toks, i*$ChunkLen+1, $ChunkLen)) AS chunk))"))
+          s"CASE WHEN size(toks) >= 1 THEN " +
+            s"transform(sequence(0, (size(toks)-1) DIV $ChunkLen), i -> " +
+            s"struct(i AS chunk_id, concat_ws(' ', slice(toks, i*$ChunkLen+1, $ChunkLen)) AS chunk)) END"))
           .as("ch"))
         .select($"doc_id", $"ch.chunk_id", $"ch.chunk", md5($"ch.chunk").as("h"))
       // same window-count rewrite as dedup_substring: one exchange on h,
@@ -206,7 +202,7 @@ object DedupOps extends QueryGroup {
     // (blocking, intersection AND sizes — consistently, so jaccard stays
     // well-defined); the per-shingle pair count is then ≤ MaxShingleDf²/2.
     "dedup_ngram_jaccard" -> ((s, dir) =>
-      jaccardPairs(shingleArrays(s, dir), MaxShingleDf)
+      jaccardPairs(shingleRows(s, dir), MaxShingleDf)
         .filter(col("jaccard") >= 0.5)
         .select(col("doc_a"), col("doc_b"), col("jaccard"))),
 
@@ -486,7 +482,8 @@ object DedupOps extends QueryGroup {
       }.toDF("doc_id", "h_hi", "h_lo")
   }
 
-  /** Candidate pairs + exact jaccard over a (doc_id, sharr) relation —
+  /** Candidate pairs + exact jaccard over a (doc_id, shingle) relation
+    * with one row per distinct shingle of each document —
     * the body of dedup_ngram_jaccard WITHOUT the final ≥ 0.5 filter, so
     * BoilerplateFixtureSpec can count the blocked candidates directly
     * and prove the df cap binds on a template-heavy corpus. */
@@ -498,8 +495,8 @@ object DedupOps extends QueryGroup {
     // checkpointed `sh` plan below, so materializing ~700k exploded rows
     // here costs ~30 s of CPU (row copy + block serialization, measured
     // via graft.Explain) to save one ~0.3 s shingle+explode recompute
-    val sh0 = docs.select($"doc_id", explode($"sharr").as("shingle"))
-    // sharr is distinct-per-doc, so count(*) per shingle = document
+    val sh0 = docs.select($"doc_id", $"shingle")
+    // shingles are distinct per doc, so count(*) per shingle = document
     // frequency. hot's cardinality is only bounded by
     // total_shingle_rows / maxDf — small in practice but not
     // guaranteed tiny on a boilerplate-heavy corpus, so no forced
@@ -539,10 +536,16 @@ object DedupOps extends QueryGroup {
       // sigs feeds the banding and both sides of the estimate join —
       // Materialize.cut the k-string-per-doc signatures rather than
       // re-hashing shingles (eager, computed once, storage picked by the
-      // session's fault-tolerance policy)
-      val sigs = shingleArrays(s, dir)
-        .select($"doc_id", native.minhash_sigs($"sharr", geom.numHashes).as("sigs"))
+      // session's fault-tolerance policy). Both kernels run once per doc
+      // over the widened scan; the empty-set filter reads the cut, so it
+      // cannot be pushed into the 1-task scan ([[spread]]).
+      val sigs = spread(t(s, dir, "documents"))
+        .select($"doc_id", TF.shingles3($"text").as("sharr"))
+        .select($"doc_id", size($"sharr").as("n_sh"),
+          native.minhash_sigs($"sharr", geom.numHashes).as("sigs"))
         .transform(graft.functions.Materialize.cut)
+        .filter($"n_sh" >= 1)
+        .select($"doc_id", $"sigs")
       // band b (0-based) = md5 of its ordered "h:sig" components — the
       // banding expression is shared with streaming.Dedup (functions.Lsh)
       val banded = sigs.select($"doc_id", posexplode(

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
 /** One named group of SparkEntry queries plus their DuckDB oracle SQL.
@@ -32,11 +34,22 @@ trait QueryGroup {
     * products) has at least `defaultParallelism` partitions. The test
     * parquet files are single-row-group, so without this a narrow in-row
     * pipeline runs on ONE core; on a real cluster the scan already has
-    * more splits than cores and this is a no-op.
-    */
+    * more splits than cores and this is a no-op. The split count comes
+    * from the scan's file listing ([[scanSplits]]): the probe builds no
+    * physical plan and no RDD.
+    *
+    * A kernel over the widened rows runs at full width only if nothing
+    * that reads its output is pushed below the repartition: Catalyst's
+    * predicate pushdown moves a deterministic `Filter` through a
+    * `Repartition` (substituting the kernel for its alias), and the
+    * kernel then runs again inside the 1-task scan stage. Projections
+    * are not pushed down. So a filter on a kernel's output sits above a
+    * barrier the optimizer does not push through: a `Generate` whose
+    * generator holds the kernel (an empty array emits no row), or a
+    * [[graft.functions.Materialize.cut]] of the kernel's output. */
   protected def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (scanSplits(df) < target) df.repartition(target) else df
   }
 
   /** [[spread]] gated on bytes per split — for scans whose downstream
@@ -57,44 +70,57 @@ trait QueryGroup {
     * pass ~1 MB for regex/hash-heavy document kernels, more for cheap
     * columnar aggregates. TOTAL scan bytes, not per split: a 4-split
     * scan of a heavy kernel is still 8× short of the core count, and
-    * the exchange cost the gate weighs scales with total bytes. Size
-    * comes from the optimizer's scan stats (file bytes), no job runs. */
+    * the exchange cost the gate weighs scales with total bytes. */
   protected def spreadHeavy(df: DataFrame, minTotalBytes: Long): DataFrame =
     if (narrowHeavyScan(df, minTotalBytes))
       df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
-
-  /** [[spread]] + an eager [[graft.functions.Materialize.cut]] of the
-    * repartitioned RAW rows, applied ONLY when the repartition actually
-    * widened a narrow scan. Why the cut: Catalyst pushes deterministic
-    * projections below a repartition's exchange, so a heavy kernel
-    * projection (shingles3, minhash prep) otherwise evaluates inside the
-    * 1-task scan stage — once per consumer subtree (r17 measured two
-    * ~1.2 s single-task stages at sf0.1 growing to two ~6 s stages at
-    * 20×, RDD-lineage-verified). Cutting the raw rows pins them wide so
-    * every consumer's kernel runs at full width, and costs only the raw
-    * bytes (pre-kernel, no arrays). At real scale the scan is already
-    * wide and NOTHING is materialized — the no-op branch. */
-  protected def spreadCut(df: DataFrame, minTotalBytes: Long = 0L): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    val widen =
-      if (minTotalBytes == 0L) df.rdd.getNumPartitions < target
-      else narrowHeavyScan(df, minTotalBytes) // below the gate the exchange+cut would outweigh the kernel
-    if (widen) graft.functions.Materialize.cut(df.repartition(target)) else df
-  }
 
   /** Does `df` scan narrow (fewer splits than cores) AND heavy (more
     * than `minTotalBytes` in total)? The [[spreadHeavy]] predicate,
     * exposed for queries that must pick a PLAN SHAPE from it (e.g. an
     * explicit-width co-partitioned join that is pure overhead at tiny
     * scale) — results are identical either way, only the physical width
-    * changes. False on any multi-split scan (real clusters). The byte
-    * gate goes first: the optimizer's stats cost ~1 ms and no job, the
-    * split count a second physical plan and an RDD build (~35 ms), and
-    * below the gate (small inputs) the split count is never needed. */
+    * changes. False on any multi-split scan (real clusters). Both
+    * inputs come from the scan's file listing: no optimizer pass, no
+    * physical plan, no job. */
   protected def narrowHeavyScan(df: DataFrame, minTotalBytes: Long): Boolean =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(minTotalBytes) &&
-      df.rdd.getNumPartitions < df.sparkSession.sparkContext.defaultParallelism
+    fileRelation(df).sizeInBytes > minTotalBytes &&
+      scanSplits(df) < df.sparkSession.sparkContext.defaultParallelism
+
+  /** The one file relation `df` scans. The widening helpers take a
+    * table frame (`t(...)`, possibly with per-row projections), never a
+    * join or a union, whose width is not one scan's. */
+  private def fileRelation(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectLeaves() match {
+      case Seq(l: LogicalRelation) if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation]
+      case leaves => throw new IllegalArgumentException(
+        "the widening helpers take a frame over one file scan, got leaves: " +
+          leaves.map(_.nodeName).mkString(", "))
+    }
+
+  /** How many partitions (tasks) `df`'s file scan plans, counted with
+    * Spark's own split arithmetic over the relation's cached file
+    * listing: `FilePartition.maxSplitBytes`, each file cut by
+    * `PartitionedFileUtil.splitFiles`, the splits packed largest first
+    * by `FilePartition.getFilePartitions` — what `FileSourceScanExec`
+    * does, so the count equals `df.rdd.getNumPartitions` (QueryGroupSpec
+    * pins that on every test table) without a physical plan, an RDD or a
+    * Hadoop-conf broadcast. */
+  private[queries] def scanSplits(df: DataFrame): Int = {
+    val spark = df.sparkSession
+    val rel = fileRelation(df)
+    val dirs = rel.location.listFiles(Nil, Nil)
+    val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+    val splits = dirs.flatMap { d =>
+      d.files.flatMap { f =>
+        PartitionedFileUtil.splitFiles(f, f.getPath,
+          rel.fileFormat.isSplitable(spark, rel.options, f.getPath), maxSplit, d.values)
+      }
+    }.sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(spark, splits, maxSplit).size
+  }
 
   /** [[spreadHeavy]] thresholds by kernel class — how many TOTAL scan
     * bytes before the downstream work dwarfs one exchange of them.

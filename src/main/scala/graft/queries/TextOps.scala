@@ -194,10 +194,13 @@ object TextOps extends QueryGroup {
     // Computed entirely in-row: shingle array → min md5, no explode/groupBy.
     "text_fingerprint" -> ((s, dir) => {
       import s.implicits._
+      // a doc with no shingle explodes a NULL array (no row): a filter
+      // on size(sharr) would be pushed below spread's repartition and
+      // re-run shingles3 in the 1-task scan ([[spread]])
       spread(t(s, dir, "documents"))
-        .withColumn("sharr", TF.shingles3($"text"))
-        .filter(size($"sharr") >= 1)
-        .withColumn("fingerprint", TF.fingerprint($"sharr"))
+        .select($"doc_id", TF.shingles3($"text").as("sharr"))
+        .select($"doc_id", explode(
+          when(size($"sharr") >= 1, array(TF.fingerprint($"sharr")))).as("fingerprint"))
         .select($"doc_id", $"fingerprint",
           conv(substring($"fingerprint", 1, 8), 16, 10).cast("long").as("fp_int"))
     })
@@ -217,17 +220,19 @@ object TextOps extends QueryGroup {
   /** The text_langid_ngram classifier over any `(doc_id, text)` frame —
     * factored out of the query so fixture specs can drive it on REAL
     * multilingual sentences (TextLangFixtureSpec), since the synthetic
-    * corpus pins only the scoring mechanics. Per-language counts run on
-    * the one-pass native kernel (the HOF spelling is interpreted and
-    * O(len²) per row — 143 s at sf0.1; the kernel is codegen'd and
-    * O(len), ~0.3 s). */
+    * corpus pins only the scoring mechanics. All four language counts
+    * come from ONE pass of the native multi-profile kernel
+    * (native.ngram_profile_hits) over the ASCII-letter projection: the
+    * HOF spelling is interpreted and O(len²) per row (143 s at sf0.1).
+    * The counts array is projected once and read by index, so the
+    * kernel runs once per row. */
   def classifyLangNgram(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val clean = graft.functions.native.ascii_letters_lower(col("text"))
-    val scored = NgramProfiles.foldLeft(df.withColumn("__c", clean)) {
-      case (d, (lang, tris)) =>
-        d.withColumn(s"ng_$lang",
-          graft.functions.native.ngram_hits(col("__c"), tris))
-    }
+    val hits = graft.functions.native.ngram_profile_hits(
+      graft.functions.native.ascii_letters_lower(col("text")), NgramProfiles.map(_._2))
+    val scored = df.select(col("doc_id"), hits.as("__h"))
+      .select(col("doc_id") +: NgramProfiles.zipWithIndex.map { case ((lang, _), i) =>
+        col("__h").getItem(i).as(s"ng_$lang")
+      }: _*)
     val best = NgramProfiles.map { case (l, _) => col(s"ng_$l") }
       .reduce((a, b) => greatest(a, b))
     scored.select(

@@ -6,7 +6,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, Literal, Lower, RegExpReplace}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Properties}
@@ -205,19 +205,100 @@ object KernelProps extends Properties("ExprKernels") {
       ExprKernels.lshBucket(a, planes) == ExprKernels.lshBucketExact(a, planes)
     }
 
-  // the model the text_langid_ngram oracle executes: count positions i
-  // where the 3-char window equals any pattern (sliding, overlapping)
-  private val asciiText: Gen[String] =
-    Gen.listOf(Gen.oneOf('a', 'b', 'c', ' ')).map(_.mkString)
+  // the model the text_langid_ngram oracle executes, per profile: count
+  // the byte positions i where some pattern of the profile starts
+  // (sliding, overlapping); the kernel makes one pass for all profiles,
+  // under codegen and interpreted evaluation alike
+  private val ngramChar: Gen[String] = Gen.oneOf("a", "b", "c", " ", "\u00e9", "\u8a9e")
+  private val ngramText: Gen[Option[String]] = Gen.frequency(
+    1 -> Gen.const(None),
+    1 -> Gen.const(Some("")),
+    8 -> Gen.listOf(ngramChar).map(cs => Some(cs.mkString)))
+  private val ngramProfiles: Gen[Seq[Seq[String]]] = Gen.choose(1, 5).flatMap(n =>
+    Gen.listOfN(n, Gen.nonEmptyListOf(Gen.choose(1, 3).flatMap(k =>
+      Gen.listOfN(k, ngramChar).map(_.mkString))).map(_.distinct)))
+
+  /** `e` under codegen and interpreted evaluation (the projections
+    * spark.sql.codegen.factoryMode CODEGEN_ONLY and NO_CODEGEN pick),
+    * each returning its own copy of the output row. */
+  private def evals(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Seq[InternalRow => InternalRow] =
+    Seq(GenerateUnsafeProjection.generate(Seq(e)),
+      InterpretedUnsafeProjection.createProjection(Seq(e)))
+      .map(proj => (row: InternalRow) => proj(row).copy())
 
   property("ngramHits == sliding-window membership model") =
-    forAll(asciiText, Gen.nonEmptyListOf(
-      Gen.listOfN(3, Gen.oneOf('a', 'b', 'c', ' ')).map(_.mkString))) { (t, pats0) =>
-      val pats = pats0.distinct
-      val model = (0 to t.length - 3).count(i => pats.contains(t.substring(i, i + 3)))
-      val u = pats.map(UTF8String.fromString).toArray
-      val got = ExprKernels.ngramHits(UTF8String.fromString(t), u, ExprKernels.ngramFirstBytes(u))
-      got == model.toLong
+    forAll(ngramText, ngramProfiles) { (t, profiles) =>
+      val model = t.map { s =>
+        val b = s.getBytes("UTF-8")
+        profiles.map(pats => b.indices.count(i =>
+          pats.exists(p => b.drop(i).startsWith(p.getBytes("UTF-8")))).toLong)
+      }
+      val kernel = NgramHits(BoundReference(0, StringType, nullable = true), profiles)
+      val row = InternalRow(t.map(UTF8String.fromString).orNull)
+      evals(kernel).forall { eval =>
+        val out = eval(row)
+        if (out.isNullAt(0)) model.isEmpty
+        else model.contains(out.getArray(0).toLongArray().toSeq)
+      }
+    }
+
+  // ExprKernels.repMetrics (token ids, 2-grams by id pair) vs the
+  // HashSet/HashMap spelling it replaced (2-grams as joined strings),
+  // through Tokens under codegen and interpreted evaluation, and
+  // directly on hand-built arrays holding null tokens
+  private def repMetricsReference(toks: ArrayData): InternalRow = {
+    val n = toks.numElements()
+    if (n < 2) return null
+    val space = UTF8String.fromString(" ")
+    val words = new java.util.HashSet[UTF8String](n * 2)
+    val grams = new java.util.HashMap[UTF8String, Array[Long]](n * 2)
+    var prev = toks.getUTF8String(0)
+    words.add(prev)
+    var maxc = 0L
+    var i = 1
+    while (i < n) {
+      val cur = toks.getUTF8String(i)
+      words.add(cur)
+      val g = if (prev == null || cur == null) null else UTF8String.concat(prev, space, cur)
+      val c = grams.get(g)
+      val nc = if (c == null) { grams.put(g, Array(1L)); 1L } else { c(0) += 1; c(0) }
+      if (nc > maxc) maxc = nc
+      prev = cur
+      i += 1
+    }
+    val total = (n - 1).toDouble
+    InternalRow(n.toLong, 1.0 - words.size().toDouble / n.toDouble,
+      1.0 - grams.size().toDouble / total, maxc.toDouble / total)
+  }
+
+  private def repFields(r: InternalRow): Option[(Long, Double, Double, Double)] =
+    Option(r).map(m => (m.getLong(0), m.getDouble(1), m.getDouble(2), m.getDouble(3)))
+
+  // few distinct words, so 2-grams repeat; NULL, empty, all-space and
+  // repeated-space texts, 1 and 2 tokens, and multi-byte UTF-8
+  private val repWord: Gen[String] = Gen.oneOf("a", "b", "ab", "\u00e9", "\u8a9e", "\ud83d\ude00")
+  private val repText: Gen[Option[String]] = Gen.frequency(
+    1 -> Gen.const(None),
+    1 -> Gen.oneOf("", " ", "   ", "a", " a ", "a  b", "\u00e9 \u00e9").map(Some(_)),
+    8 -> Gen.listOf(Gen.oneOf(repWord, Gen.const(""), Gen.const(" "))).map(ws => Some(ws.mkString(" "))))
+
+  property("repMetrics == HashSet/HashMap reference, codegen and interpreted") =
+    forAll(repText) { t =>
+      val text = t.map(UTF8String.fromString)
+      val want = text.flatMap(u => repFields(repMetricsReference(ExprKernels.tokens(u))))
+      val kernel = RepMetrics(Tokens(BoundReference(0, StringType, nullable = true)))
+      evals(kernel).forall { eval =>
+        val out = eval(InternalRow(text.orNull))
+        val got = if (out.isNullAt(0)) None else repFields(out.getStruct(0, 4))
+        got == want
+      }
+    }
+
+  property("repMetrics == reference on hand-built arrays with null tokens") =
+    forAll(Gen.listOf(Gen.option(repWord))) { ws =>
+      val arr = new GenericArrayData(ws.map(_.map(UTF8String.fromString).orNull).toArray[Any])
+      repFields(ExprKernels.repMetrics(arr)) == repFields(repMetricsReference(arr))
     }
 
   // FixedSum's parse kernel vs the BigDecimal semantics it must replicate
@@ -264,19 +345,14 @@ object KernelProps extends Properties("ExprKernels") {
     }
 
   // native.ascii_letters_lower vs the spelling it replaces, each under
-  // codegen and interpreted evaluation (the projections
-  // spark.sql.codegen.factoryMode CODEGEN_ONLY and NO_CODEGEN pick)
+  // codegen and interpreted evaluation
   private val asciiLettersLowerEvals: Seq[InternalRow => UTF8String] = {
     val in = BoundReference(0, StringType, nullable = true)
     val kernel = AsciiLettersLower(in)
     val reference = Lower(new RegExpReplace(in, Literal("[^A-Za-z ]"), Literal("")))
-    for {
-      e <- Seq(kernel, reference)
-      proj <- Seq(GenerateUnsafeProjection.generate(Seq(e)),
-        InterpretedUnsafeProjection.createProjection(Seq(e)))
-    } yield { (row: InternalRow) =>
-      val out = proj(row)
-      if (out.isNullAt(0)) null else out.getUTF8String(0).clone()
+    for (e <- Seq(kernel, reference); eval <- evals(e)) yield { (row: InternalRow) =>
+      val out = eval(row)
+      if (out.isNullAt(0)) null else out.getUTF8String(0)
     }
   }
 

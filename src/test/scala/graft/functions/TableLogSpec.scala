@@ -1526,6 +1526,24 @@ class TableLogSpec extends SparkSuite {
     } finally spark.conf.set(tsKey, savedTs)
   }
 
+  test("trackBloom writes no bloom for a fully dictionary-encoded chunk, and one for a chunk past dictionary fallback") {
+    val dir = freshTable()
+    // `low`: 97 distinct values, one dictionary page; `high`: 20k distinct
+    // 64-byte values, past parquet-mr's 1 MiB dictionary page, so the
+    // writer falls back to plain encoding within the chunk
+    val df = spark.range(0, 20000, 1, 1)
+      .selectExpr("id", "concat('v', cast(id % 97 AS string)) AS low",
+        "sha2(cast(id AS string), 256) AS high")
+    TableLog.appendBatch(viaJob(df).limit(0), dir, "init", 0L)
+    TableLog.trackBloom(spark, dir, Seq("low", "high"))
+    assert(TableLog.appendBatch(viaJob(df), dir, "w", 1L))
+    val files = appendedAt(dir, TableLog.latest(spark, dir).get.version)
+    assert(files.size == 1)
+    val facts = fileFacts(new org.apache.hadoop.fs.Path(s"$dir/${files.head.name}"))
+    assert(facts.contains("low:SNAPPY:bloom=false"), facts)
+    assert(facts.contains("high:SNAPPY:bloom=true"), facts)
+  }
+
   test("appendBatch of a local batch runs no Spark job; a range batch and an unfolded projection still run the write job") {
     val dir = freshTable()
     val (_, localJobs) = jobsDuring(TableLog.appendBatch(batchDf(0), dir, "w", 0L))

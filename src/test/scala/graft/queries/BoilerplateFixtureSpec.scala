@@ -38,7 +38,8 @@ class BoilerplateFixtureSpec extends SparkSuite {
       (9000L, s"$Boilerplate $sharedTail alpha"),
       (9001L, s"$Boilerplate $sharedTail beta"))
     val df = docs.toDF("doc_id", "text")
-      .select($"doc_id", graft.functions.TextFunctions.shingles3($"text").as("sharr"))
+      .select($"doc_id",
+        explode(graft.functions.TextFunctions.shingles3($"text")).as("shingle"))
 
     val uncapped = DedupOps.jaccardPairs(df, Long.MaxValue)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect()

@@ -1,5 +1,11 @@
 package graft.queries
 
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, RepartitionOperation}
+import org.apache.spark.sql.execution.{ProjectExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.{SparkEntry, SparkSuite}
 
 /** Plan-shape assertions: the physical plans the 100 TB deployment needs —
@@ -9,7 +15,7 @@ import graft.{SparkEntry, SparkSuite}
   * becoming a sort-merge join, a filter no longer pushed) fails CI, not
   * the cluster.
   */
-class PlanSpec extends SparkSuite {
+class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf()).queryExecution.executedPlan.toString
@@ -274,5 +280,77 @@ class PlanSpec extends SparkSuite {
         assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
           s"$q degenerated into an all-pairs product:\n$p")
       }
+  }
+
+  /** The query executions `body` runs: the eager cuts a query makes
+    * while it is built, then its write. */
+  private def executions(body: => Unit): Seq[QueryExecution] = {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.sql.graftbridge.drainListenerBus(spark)
+    spark.listenerManager.register(l)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(l)
+    qes.toArray(Array.empty[QueryExecution]).toSeq
+  }
+
+  private def isKernel(e: Expression): Boolean =
+    e.getClass.getName.startsWith("graft.functions.")
+  private def kernels(e: Expression): Seq[String] =
+    e.collect { case k if isKernel(k) => k.getClass.getSimpleName }
+  private def kernels(p: LogicalPlan): Seq[String] =
+    p.collect { case n => n.expressions.flatMap(kernels) }.flatten
+
+  /** A filter reading a kernel's output, pushed below a repartition,
+    * runs the kernel in the scan stage (the 1-task stage at test scale). */
+  private def assertNoKernelFilterUnderRepartition(q: String, plans: Seq[LogicalPlan]): Unit =
+    for (p <- plans; r <- p.collect { case r: RepartitionOperation => r };
+         f <- r.collect { case f: Filter => f })
+      assert(kernels(f.condition).isEmpty, s"$q: a kernel in a filter under a repartition:\n$p")
+
+  private def executedPlans(q: String): Seq[LogicalPlan] =
+    executions(SparkEntry.queries(q)(spark, sf()).write.format("noop").mode("overwrite").save())
+      .map(_.optimizedPlan)
+
+  test("widened text kernels are never pushed below the repartition in a filter") {
+    Seq("dedup_decontaminate", "dedup_ngram_jaccard", "dedup_substring",
+        "dedup_span_removal", "text_fingerprint").foreach { q =>
+      val plans = executedPlans(q)
+      assert(plans.exists(_.exists(_.isInstanceOf[RepartitionOperation])),
+        s"vacuity: $q must widen its scan at test scale")
+      assertNoKernelFilterUnderRepartition(q, plans)
+    }
+  }
+
+  test("kernels run once per row: no pushed-down filter re-runs one, the signature stage is full width") {
+    val width = spark.sparkContext.defaultParallelism
+    val expect = Map(
+      "quality_repetition" -> Map("RepMetrics" -> 1, "Tokens" -> 1),
+      "dedup_minhash_lsh" -> Map("Shingles3" -> 1, "MinHashSigs" -> 1),
+      "dedup_minhash_production" -> Map("Shingles3" -> 1, "MinHashSigs" -> 1),
+      "dedup_clusters" -> Map("Shingles3" -> 1, "MinHashSigs" -> 1))
+    for ((q, want) <- expect) {
+      val qes = executions(SparkEntry.queries(q)(spark, sf())
+        .write.format("noop").mode("overwrite").save())
+      val plans = qes.map(_.optimizedPlan)
+      val counts = plans.flatMap(kernels).groupBy(identity).map { case (k, v) => k -> v.size }
+      for ((k, n) <- want)
+        assert(counts.getOrElse(k, 0) == n,
+          s"$q: $k appears ${counts.getOrElse(k, 0)} times, want $n:\n${plans.mkString("\n")}")
+      assertNoKernelFilterUnderRepartition(q, plans)
+      if (want.contains("MinHashSigs")) {
+        val stage = qes.flatMap(qe => collect(qe.executedPlan) {
+          case p: ProjectExec if p.projectList.exists(e => kernels(e).contains("MinHashSigs")) => p
+        })
+        assert(stage.size == 1, s"$q: want one signature projection, got ${stage.size}")
+        assert(stage.head.outputPartitioning.numPartitions == width,
+          s"$q: the signature stage runs ${stage.head.outputPartitioning.numPartitions} tasks, want $width")
+      }
+    }
   }
 }
