@@ -670,14 +670,6 @@ object IndexFollower {
     } finally docs.unpersist(blocking = false)
   }
 
-  /** Greedy dedup verdicts for `newDocs` against the follower-built
-    * index — the read side of the loop, one equi-join on the band key. */
-  def dedupVerdicts(spark: SparkSession, newDocs: org.apache.spark.sql.DataFrame,
-                    dedupIndexDir: String,
-                    geom: Lsh.Geometry = Lsh.Small): org.apache.spark.sql.DataFrame =
-    DedupIndex.incrementalVerdicts(newDocs,
-      TableLog.read(spark, dedupIndexDir), geom)
-
   // ---- span intent: ONE `span-<from>-<to>` marker under
   // `<stateDir>/intent`, created atomically BEFORE a span is applied and
   // removed after its checkpoint. Its presence across a crash is what

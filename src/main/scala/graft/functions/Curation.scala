@@ -181,17 +181,14 @@ object Curation {
     * (CurateStreamSpec) and valid on batch and streaming frames alike —
     * per-row memory is bounded by one document's token array, which the
     * frame already materializes as a row. Docs with < 2 tokens (no
-    * 2-grams) are dropped, as the explode path's inner join drops them.
-    * The kernel runs once per row, inside a `Generate`, and the
-    * short-doc filter reads the generated column above it: predicate
-    * pushdown rewrites a filter on a PROJECTED kernel onto the kernel
-    * itself (running it twice) and pushes it through any repartition
-    * below, but never moves a filter on a generated column. */
+    * 2-grams) are dropped, as the explode path's inner join drops them;
+    * the short-doc filter sits above a [[KernelBarrier]], so the kernel
+    * runs once per row. */
   def qualityRepetition(df: DataFrame, idCol: String, textCol: String,
                         maxTop2GramFrac: Double, maxDup2GramFrac: Double,
                         maxDupWordFrac: Double): DataFrame =
-    df.select(col(idCol),
-        explode(array(native.rep_metrics(native.tokens(col(textCol))))).as("m"))
+    KernelBarrier.over(df.select(col(idCol),
+        native.rep_metrics(native.tokens(col(textCol))).as("m")))
       .filter(col("m").isNotNull)
       .select(col(idCol), col("m.n_tokens").as("n_tokens"),
         col("m.dup_word_frac").as("dup_word_frac"),
@@ -215,7 +212,7 @@ object Curation {
     require(win >= 1, s"win must be >= 1: $win")
     require(stride >= 1 && stride <= win,
       s"need 1 <= stride <= win for full coverage: $stride, $win")
-    df.withColumn("__toks", TextFunctions.tokens(col(textCol)))
+    KernelBarrier.over(df.withColumn("__toks", TextFunctions.tokens(col(textCol))))
       .filter(size(col("__toks")) >= 1)
       .withColumn("__c", explode(expr(
         s"transform(sequence(0, (size(__toks)-1) DIV $stride), i -> " +

@@ -68,8 +68,8 @@ object DedupIndex {
     * always keep. */
   def indexRows(docs: DataFrame,
       geom: Lsh.Geometry = Lsh.Small): DataFrame =
-    docs
-      .select(col("doc_id"), TextFunctions.shingles3(col("text")).as("sharr"))
+    KernelBarrier.over(
+        docs.select(col("doc_id"), TextFunctions.shingles3(col("text")).as("sharr")))
       .filter(size(col("sharr")) >= 1)
       .select(col("doc_id"),
         native.minhash_sigs(col("sharr"), geom.numHashes).as("sigs"))

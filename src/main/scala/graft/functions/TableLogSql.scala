@@ -345,7 +345,7 @@ final case class GraftUpsertCommand(target: TableLogSql.GraftTarget,
             s"(SELECT/VALUES/TABLE); cannot parse '$querySql': " +
             e.getMessage, e)
       }
-    val batch = org.apache.spark.sql.graftbridge.streamingDataFrame(spark, plan)
+    val batch = org.apache.spark.sql.graftbridge.ofRows(spark, plan)
     require(batch.schema.fieldNames.exists(
         spark.sessionState.analyzer.resolver(_, keyColumn)),
       s"GRAFT UPSERT: key column '$keyColumn' is not in the query's " +

@@ -59,11 +59,11 @@ object CoreOps extends QueryGroup {
     // pluck on nested/dict payloads (core.py:1884-1887) — JSON field access.
     "pluck_json" -> ((s, dir) => {
       import s.implicits._
-      // spreadHeavy: the per-row JSON parse ran on the 1-task events scan
-      // at 20× (4.5 s serial); sf0.1 (2 MB) stays unspread
-      spreadHeavy(t(s, dir, "events"), SpreadRowKernel).select(
+      // widened past SpreadRowKernel: the per-row JSON parse ran on the
+      // 1-task events scan at 20× (4.5 s serial); sf0.1 (2 MB) stays narrow
+      widen(t(s, dir, "events"), SpreadRowKernel)(_.select(
         $"event_id",
-        get_json_object($"props", "$.k").cast("int").as("k"))
+        get_json_object($"props", "$.k").cast("int").as("k")))
     }),
 
     // flatten/concat (core.py:1732) — explode iterables into elements.
@@ -208,8 +208,9 @@ object CoreOps extends QueryGroup {
     // (verified against DuckDB at sf0.1, not just the sf0.01 gate).
     "global_aggs" -> ((s, dir) => {
       import s.implicits._
-      // spreadHeavy: 2-task scans on the 20× fixture; sf0.1 stays unspread
-      spreadHeavy(t(s, dir, "lineitem"), SpreadAggScan)
+      // widened past SpreadAggScan: 2-task scans on the 20× fixture;
+      // sf0.1 stays narrow
+      widen(t(s, dir, "lineitem"), SpreadAggScan)(identity)
         .agg(
           dsum($"l_extendedprice", 4).as("sum_price"),
           dsum($"l_extendedprice" * $"l_extendedprice", 8).as("sum_price2"),
@@ -232,7 +233,7 @@ object CoreOps extends QueryGroup {
     // groupby aggregations (dataframe/core.py:789-881) — flagship query.
     "q1_agg" -> ((s, dir) => {
       import s.implicits._
-      spreadHeavy(t(s, dir, "lineitem"), SpreadAggScan)
+      widen(t(s, dir, "lineitem"), SpreadAggScan)(identity)
         .groupBy($"l_returnflag", $"l_linestatus").agg(
         dsum($"l_quantity", 4).as("sum_qty"),
         dsum($"l_extendedprice", 4).as("sum_base_price"),

@@ -75,7 +75,7 @@ object CurationOps extends QueryGroup {
     // IP are never double-counted. Narrow plan: zero shuffles.
     "text_pii_redact" -> ((s, dir) => {
       import s.implicits._
-      spread(t(s, dir, "documents"))
+      widen(t(s, dir, "documents"))(_
         .withColumn("rawtext", concat(
           $"text", lit(" contact user"), $"doc_id".cast("string"),
           lit("@mail-"), $"source", lit(".com or 192.168."),
@@ -88,7 +88,7 @@ object CurationOps extends QueryGroup {
           regexp_replace($"r2", LongNumRe, "<NUM>").as("redacted"),
           regexp_count($"rawtext", lit(EmailRe)).cast("long").as("n_email"),
           regexp_count($"r1", lit(Ipv4Re)).cast("long").as("n_ip"),
-          regexp_count($"r2", lit(LongNumRe)).cast("long").as("n_longnum"))
+          regexp_count($"r2", lit(LongNumRe)).cast("long").as("n_longnum")))
     }),
 
     // Repetition-based quality filter (Gopher rules): duplicate-word
@@ -119,8 +119,8 @@ object CurationOps extends QueryGroup {
     // the output hash-compares exactly.
     "chunk_documents" -> ((s, dir) => {
       import s.implicits._
-      Curation.chunkDocuments(spread(t(s, dir, "documents")),
-          "text", ChunkWin, ChunkStride)
+      widen(t(s, dir, "documents"))(
+          Curation.chunkDocuments(_, "text", ChunkWin, ChunkStride))
         .select($"doc_id", $"chunk_idx", $"chunk_text", $"n_toks")
     }),
 
@@ -153,12 +153,12 @@ object CurationOps extends QueryGroup {
     // the canonical key.
     "url_canonicalize" -> ((s, dir) => {
       import s.implicits._
-      // spreadHeavy: at sf0.1 the exchange costs more than the serial
-      // regex kernel (r17: 0.43 → 0.72 s paired with a bare spread()),
-      // so below the byte gate this is a NO-OP; above it the canonicalize
-      // projection runs after the repartition — no filter reads it, so
-      // nothing pushes it into the 1-task scan ([[spread]])
-      val urls = spreadHeavy(t(s, dir, "documents"), SpreadDocKernel).select($"doc_id",
+      // widened past SpreadDocKernel: at sf0.1 the exchange costs more
+      // than the serial regex kernel (r17: 0.43 → 0.72 s paired with an
+      // ungated repartition), so below the byte gate the scan stays
+      // narrow; above it the canonicalize projection runs after the
+      // repartition
+      val canon = widen(t(s, dir, "documents"), SpreadDocKernel)(_.select($"doc_id",
         concat(
           when($"doc_id" % 4 === 0, "HTTP://WWW.Site").otherwise("http://www.site"),
           expr("doc_id DIV 4").cast("string"),
@@ -170,8 +170,8 @@ object CurationOps extends QueryGroup {
           when($"doc_id" % 4 === 3, "z=2&utm_source=feed&a=1")
             .otherwise("a=1&utm_campaign=x&z=2"),
           lit("#sec"), ($"doc_id" % 7).cast("string")).as("url"))
-      val canon = urls.select($"doc_id",
-        graft.functions.Curation.canonicalizeUrl($"url").as("canon_url"))
+        .select($"doc_id",
+          graft.functions.Curation.canonicalizeUrl($"url").as("canon_url")))
       // group count as an unordered window over the canonical key: ONE
       // shuffle and ONE evaluation of the canonicalize kernel, where the
       // groupBy+self-join spelling paid two of each (guide §2.4 — two
@@ -194,9 +194,8 @@ object CurationOps extends QueryGroup {
     // per-row kernel with the per-thread word cache.
     "pack_sequences_tokens" -> ((s, dir) => {
       import s.implicits._
-      val sized = spread(t(s, dir, "documents"))
-        .withColumn("n_bpe_tokens",
-          size(graft.functions.native.bpe_tokens($"text")).cast("long"))
+      val sized = widen(t(s, dir, "documents"))(_.withColumn("n_bpe_tokens",
+          size(graft.functions.native.bpe_tokens($"text")).cast("long")))
         .filter($"n_bpe_tokens" >= 1)
       Curation.packSequences(sized, "doc_id", "n_bpe_tokens",
           PackShards, TokenBudget)
@@ -245,9 +244,9 @@ object CurationOps extends QueryGroup {
     // shuffles.
     "text_html_extract" -> ((s, dir) => {
       import s.implicits._
-      // spreadHeavy: the regex-heavy extract ran on the 1-task scan at
-      // 20× (4.5 s serial); sf0.1 stays unspread (byte gate)
-      spreadHeavy(t(s, dir, "documents"), SpreadDocKernel)
+      // widened past SpreadDocKernel: the regex-heavy extract ran on the
+      // 1-task scan at 20× (4.5 s serial); sf0.1 stays narrow (byte gate)
+      widen(t(s, dir, "documents"), SpreadDocKernel)(_
         .withColumn("html", concat(
           lit("<html ><body class=\"c"), ($"doc_id" % 5).cast("string"),
           lit("\"><h1>T&amp;T "), $"source", lit("</h1>\n<p>"), $"text",
@@ -259,7 +258,7 @@ object CurationOps extends QueryGroup {
         .select($"doc_id",
           Curation.htmlExtract($"html").as("text_main"),
           regexp_count($"html", lit(Curation.TagRe)).cast("long").as("n_tags"))
-        .withColumn("n_chars_main", length($"text_main").cast("long"))
+        .withColumn("n_chars_main", length($"text_main").cast("long")))
     }),
 
     // Heuristic quality filter — the C4 + Gopher doc-level battery:

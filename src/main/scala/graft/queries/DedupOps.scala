@@ -75,14 +75,10 @@ object DedupOps extends QueryGroup {
   private val SemClusters = 16
 
   /** (doc_id, shingle): one row per distinct 3-token shingle of each
-    * document, over the widened scan. The kernel sits in the explode
-    * (a document with no shingle emits no row), so no filter reads its
-    * output and nothing pushes it into the 1-task scan ([[spread]]). */
-  private def shingleRows(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    spread(t(s, dir, "documents"))
-      .select($"doc_id", explode(TF.shingles3($"text")).as("shingle"))
-  }
+    * document of `docs` (the documents table, possibly filtered), over
+    * the widened scan. */
+  private[queries] def shingleRows(docs: DataFrame): DataFrame =
+    widen(docs)(_.select(col("doc_id"), explode(TF.shingles3(col("text"))).as("shingle")))
 
   private val SQL_SHINGLES =
     """SELECT DISTINCT doc_id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
@@ -110,10 +106,10 @@ object DedupOps extends QueryGroup {
     // scan + broadcast join + partial-agg count at any corpus size.
     "dedup_decontaminate" -> ((s, dir) => {
       import s.implicits._
-      val sh = shingleRows(s, dir)
-      val bench = sh.filter($"doc_id" % 97 === 0)
+      val docs = t(s, dir, "documents")
+      val bench = shingleRows(docs.filter($"doc_id" % 97 === 0))
         .select($"doc_id".as("bench_id"), $"shingle")
-      sh.filter($"doc_id" % 97 =!= 0)
+      shingleRows(docs.filter($"doc_id" % 97 =!= 0))
         .join(broadcast(bench), "shingle")
         .groupBy($"doc_id", $"bench_id")
         .agg(count(lit(1)).as("n_shared"))
@@ -133,15 +129,12 @@ object DedupOps extends QueryGroup {
     // blowup. Docs under 20 tokens carry no window and are excluded.
     "dedup_substring" -> ((s, dir) => {
       import s.implicits._
-      // docs under SpanLen tokens get a NULL window array, which explodes
-      // to no row: a filter on size(toks) would be pushed below spread's
-      // repartition and re-run tokens() in the 1-task scan ([[spread]])
-      val spans = spread(t(s, dir, "documents"))
-        .select($"doc_id", TF.tokens($"text").as("toks"))
+      val spans = widen(t(s, dir, "documents"))(
+          _.select($"doc_id", TF.tokens($"text").as("toks")))
+        .filter(size($"toks") >= SpanLen)
         .select($"doc_id", explode(expr(
-          s"CASE WHEN size(toks) >= $SpanLen THEN " +
-            s"transform(sequence(1, size(toks)-${SpanLen - 1}), " +
-            s"i -> md5(concat_ws(' ', slice(toks, i, $SpanLen)))) END")).as("h"))
+          s"transform(sequence(1, size(toks)-${SpanLen - 1}), " +
+            s"i -> md5(concat_ws(' ', slice(toks, i, $SpanLen))))")).as("h"))
       // corpus-wide occurrence count as an unordered window over the span
       // hash: ONE exchange on h and ONE evaluation of the window-md5
       // explode, where the groupBy+join-back spelling re-tokenized and
@@ -170,14 +163,12 @@ object DedupOps extends QueryGroup {
     // the aligned-chunk trick keeps it 1× instead of SpanLen×.
     "dedup_span_removal" -> ((s, dir) => {
       import s.implicits._
-      // a doc with no token explodes a NULL array (no row) — the
-      // dedup_substring barrier
-      val chunks = spread(t(s, dir, "documents"))
-        .select($"doc_id", TF.tokens($"text").as("toks"))
+      val chunks = widen(t(s, dir, "documents"))(
+          _.select($"doc_id", TF.tokens($"text").as("toks")))
+        .filter(size($"toks") >= 1)
         .select($"doc_id", explode(expr(
-          s"CASE WHEN size(toks) >= 1 THEN " +
-            s"transform(sequence(0, (size(toks)-1) DIV $ChunkLen), i -> " +
-            s"struct(i AS chunk_id, concat_ws(' ', slice(toks, i*$ChunkLen+1, $ChunkLen)) AS chunk)) END"))
+          s"transform(sequence(0, (size(toks)-1) DIV $ChunkLen), i -> " +
+            s"struct(i AS chunk_id, concat_ws(' ', slice(toks, i*$ChunkLen+1, $ChunkLen)) AS chunk))"))
           .as("ch"))
         .select($"doc_id", $"ch.chunk_id", $"ch.chunk", md5($"ch.chunk").as("h"))
       // same window-count rewrite as dedup_substring: one exchange on h,
@@ -202,7 +193,7 @@ object DedupOps extends QueryGroup {
     // (blocking, intersection AND sizes — consistently, so jaccard stays
     // well-defined); the per-shingle pair count is then ≤ MaxShingleDf²/2.
     "dedup_ngram_jaccard" -> ((s, dir) =>
-      jaccardPairs(shingleRows(s, dir), MaxShingleDf)
+      jaccardPairs(shingleRows(t(s, dir, "documents")), MaxShingleDf)
         .filter(col("jaccard") >= 0.5)
         .select(col("doc_a"), col("doc_b"), col("jaccard"))),
 
@@ -316,7 +307,7 @@ object DedupOps extends QueryGroup {
     // container — the Spark side is the one running the real codec.
     "dedup_audio_fingerprint" -> ((s, dir) => {
       import s.implicits._
-      val hashed = spread(t(s, dir, "documents")).select($"doc_id").as[Long]
+      val hashed = widen(t(s, dir, "documents"))(_.select($"doc_id")).as[Long]
         .mapPartitions { it =>
           val md = java.security.MessageDigest.getInstance("MD5")
           it.map { id =>
@@ -353,7 +344,7 @@ object DedupOps extends QueryGroup {
     // pattern so hashing the wrong frame cannot pass the oracle.
     "dedup_video_phash" -> ((s, dir) => {
       import s.implicits._
-      val hashed = spread(t(s, dir, "documents")).select($"doc_id").as[Long]
+      val hashed = widen(t(s, dir, "documents"))(_.select($"doc_id")).as[Long]
         .mapPartitions { it =>
           val md = java.security.MessageDigest.getInstance("MD5")
           it.map { id =>
@@ -462,7 +453,7 @@ object DedupOps extends QueryGroup {
     * v=1,2 brighten the top-left dHash cell only (≤ 1 bit apart). */
   private def imageHashes(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    spread(t(s, dir, "documents")).select($"doc_id").as[Long]
+    widen(t(s, dir, "documents"))(_.select($"doc_id")).as[Long]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { id =>
@@ -536,13 +527,11 @@ object DedupOps extends QueryGroup {
       // sigs feeds the banding and both sides of the estimate join —
       // Materialize.cut the k-string-per-doc signatures rather than
       // re-hashing shingles (eager, computed once, storage picked by the
-      // session's fault-tolerance policy). Both kernels run once per doc
-      // over the widened scan; the empty-set filter reads the cut, so it
-      // cannot be pushed into the 1-task scan ([[spread]]).
-      val sigs = spread(t(s, dir, "documents"))
-        .select($"doc_id", TF.shingles3($"text").as("sharr"))
-        .select($"doc_id", size($"sharr").as("n_sh"),
-          native.minhash_sigs($"sharr", geom.numHashes).as("sigs"))
+      // session's fault-tolerance policy).
+      val sigs = widen(t(s, dir, "documents"))(_
+          .select($"doc_id", TF.shingles3($"text").as("sharr"))
+          .select($"doc_id", size($"sharr").as("n_sh"),
+            native.minhash_sigs($"sharr", geom.numHashes).as("sigs")))
         .transform(graft.functions.Materialize.cut)
         .filter($"n_sh" >= 1)
         .select($"doc_id", $"sigs")
@@ -581,8 +570,7 @@ object DedupOps extends QueryGroup {
     // scan, no shuffle; the same expression serves 64-bit at scale.
     "dedup_simhash" -> ((s, dir) => {
       import s.implicits._
-      spread(t(s, dir, "documents"))
-        .select($"doc_id", TF.tokens($"text").as("toks"))
+      widen(t(s, dir, "documents"))(_.select($"doc_id", TF.tokens($"text").as("toks")))
         .filter(size($"toks") >= 1)
         .select($"doc_id", native.simhash($"toks", 16).as("simhash16"))
     }),
@@ -600,10 +588,7 @@ object DedupOps extends QueryGroup {
       import s.implicits._
       // emb feeds the banding and both sides of the join-back — checkpoint
       // so signatures/norms are computed once (see the minhash sigs note)
-      val emb = spread(t(s, dir, "embeddings"))
-        .select($"vec_id", $"embedding",
-          sqrt(native.decimal_dot($"embedding", $"embedding").cast("double")).as("nrm"),
-          native.lsh_bucket($"embedding", EmbedPlanes).as("sig"))
+      val emb = widen(t(s, dir, "embeddings"))(normSig)
         .transform(graft.functions.Materialize.cut)
       // band/bucket rows carry ONLY ids: the self-join and the
       // multi-band pair dedup shuffle 3 ints per row, not embedding
@@ -646,8 +631,7 @@ object DedupOps extends QueryGroup {
       // joins + exact cosines downstream, which inherit this partitioning)
       // onto one task — but each row costs a decimal dot, so hold the
       // compute at full parallelism. An explicit width is exempt from AQE
-      // re-coalescing; NOT spread(), whose getNumPartitions probe would
-      // execute the join stages once just to read a count.
+      // re-coalescing; NOT widen(), which takes one file scan.
       val cand = banded.as("x").join(banded.as("y"),
           col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
             col("x.vec_id") < col("y.vec_id"))
@@ -697,7 +681,7 @@ object DedupOps extends QueryGroup {
     // Output: one row per vector (vec_id, cid, dup_of, n_dups); keepers
     // have dup_of NULL / n_dups 0. Oracle replays every stage exactly.
     "dedup_semantic" -> ((s, dir) =>
-      semanticDedup(spread(t(s, dir, "embeddings")))),
+      widen(t(s, dir, "embeddings"))(semanticDedup)),
 
     // embedding-space eval decontamination — the third member of the
     // decontamination trio (text shingles: dedup_decontaminate; image
@@ -713,13 +697,14 @@ object DedupOps extends QueryGroup {
     // corpus-linear at any scale, zero shuffles.
     "dedup_decontaminate_embed" -> ((s, dir) => {
       import s.implicits._
-      val emb = spread(t(s, dir, "embeddings"))
-        .select($"vec_id", $"embedding",
-          sqrt(native.decimal_dot($"embedding", $"embedding").cast("double")).as("nrm"))
+      // the eval/corpus split goes below the barrier, into the scan
+      def emb(keep: org.apache.spark.sql.Column) =
+        widen(t(s, dir, "embeddings").filter(keep))(_.select($"vec_id", $"embedding",
+          sqrt(native.decimal_dot($"embedding", $"embedding").cast("double")).as("nrm")))
       val isEval = ($"vec_id" % 30 === 0) && ($"vec_id" < 3000)
-      val eval = emb.filter(isEval)
+      val eval = emb(isEval)
         .select($"vec_id".as("eval_vec"), $"embedding".as("ee"), $"nrm".as("en"))
-      emb.filter(!isEval)
+      emb(!isEval)
         .crossJoin(broadcast(eval))
         .filter(native.double_dot($"embedding", $"ee") / ($"nrm" * $"en")
           >= CosineThreshold - 1e-9)
@@ -730,6 +715,13 @@ object DedupOps extends QueryGroup {
         .select($"vec_id", $"eval_vec", $"cosine")
     })
   )
+
+  /** vec_id, embedding, nrm (L2 norm, exact decimal sum inside) and sig
+    * (the EmbedPlanes sign-LSH signature) of an embeddings frame. */
+  private def normSig(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("embedding"),
+      sqrt(native.decimal_dot(col("embedding"), col("embedding")).cast("double")).as("nrm"),
+      native.lsh_bucket(col("embedding"), EmbedPlanes).as("sig"))
 
   /** dedup_semantic over any `(vec_id, embedding: array<float>)` frame —
     * factored out of the query so fixture specs can drive it on PLANTED
@@ -747,21 +739,18 @@ object DedupOps extends QueryGroup {
     import s.implicits._
     {
       // emb feeds assignment, banding, and both verify sides
-      val emb = raw
-        .select($"vec_id", $"embedding",
-          sqrt(native.decimal_dot($"embedding", $"embedding").cast("double")).as("nrm"),
-          native.lsh_bucket($"embedding", EmbedPlanes).as("sig"))
-        .transform(graft.functions.Materialize.cut)
+      val emb = normSig(raw).transform(graft.functions.Materialize.cut)
       val centroids = emb
         .filter($"vec_id" >= 100 && $"vec_id" < 100 + SemClusters)
         .select($"vec_id", $"embedding")
         .as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
-      val assigned = emb
+      // the cid join's inferred not-null filter stays above the barrier
+      val assigned = graft.functions.KernelBarrier.over(emb
         // margin-gated quantizer (guide §3/§4): double-dot argmin with an
         // exact-decimal rescore only inside the provable error margin —
         // bit-identical cid per row, ~400× cheaper kernel on the corpus
         // scan (Lsh.nearestCentroidGated scaladoc has the proof)
-        .withColumn("cid", graft.functions.Lsh.nearestCentroidGated($"embedding", centroids))
+        .withColumn("cid", graft.functions.Lsh.nearestCentroidGated($"embedding", centroids)))
       val banded = assigned
         .select($"vec_id", $"cid",
           posexplode(graft.functions.Lsh.embedBandBuckets($"sig", EmbedBands, EmbedBandBits)))

@@ -114,13 +114,13 @@ object MiscOps extends QueryGroup {
     // payload with an explicit schema into typed columns.
     "json_struct_parse" -> ((s, dir) => {
       import s.implicits._
-      // spreadHeavy: per-row JSON parse on a 1-task scan at 20× (4.9 s
-      // serial); sf0.1 stays unspread (byte gate)
-      spreadHeavy(t(s, dir, "events"), SpreadRowKernel)
+      // widened past SpreadRowKernel: per-row JSON parse on a 1-task
+      // scan at 20× (4.9 s serial); sf0.1 stays narrow (byte gate)
+      widen(t(s, dir, "events"), SpreadRowKernel)(_
         .withColumn("parsed", from_json($"props", StructType(Seq(
           StructField("k", LongType)))))
         .select($"event_id", $"parsed.k".as("k"),
-          ($"parsed.k" * 2L).as("k_doubled"))
+          ($"parsed.k" * 2L).as("k_doubled")))
     })
   )
 

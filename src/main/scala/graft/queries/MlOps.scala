@@ -37,7 +37,7 @@ object MlOps extends QueryGroup {
     // y = l_extendedprice regressed on x = l_quantity
     "river_ols" -> ((s, dir) => {
       import s.implicits._
-      spreadHeavy(t(s, dir, "lineitem"), SpreadAggScan)
+      widen(t(s, dir, "lineitem"), SpreadAggScan)(identity)
         .agg(
           count(lit(1)).as("n"),
           dsum($"l_quantity").as("sx"),
@@ -59,12 +59,12 @@ object MlOps extends QueryGroup {
     // form is a pivot the caller applies if needed. Pure integers.
     "text_hash_features" -> ((s, dir) => {
       import s.implicits._
-      spread(t(s, dir, "documents"))
+      widen(t(s, dir, "documents"))(_
         .select($"doc_id",
           explode(graft.functions.native.tokens($"text")).as("tok"))
         .select($"doc_id",
           (conv(substring(md5($"tok"), 1, 8), 16, 10).cast("long") % HashDim)
-            .as("feature_idx"))
+            .as("feature_idx")))
         .groupBy($"doc_id", $"feature_idx")
         .agg(count(lit(1)).as("cnt"))
     }),
@@ -94,12 +94,12 @@ object MlOps extends QueryGroup {
     // throughout, identical output.
     "cluster_docs_hashed" -> ((s, dir) => {
       import s.implicits._
-      val feats = spread(t(s, dir, "documents"))
+      val feats = widen(t(s, dir, "documents"))(_
         .select($"doc_id",
           explode(graft.functions.native.tokens($"text")).as("tok"))
         .select($"doc_id",
           (conv(substring(md5($"tok"), 1, 8), 16, 10).cast("long") % HashDim)
-            .as("idx"))
+            .as("idx")))
         .groupBy($"doc_id", $"idx").agg(count(lit(1)).as("cnt"))
         // explicit width BEFORE the cut: the checkpoint freezes whatever
         // layout AQE's byte-based coalescing left (one partition for this

@@ -45,7 +45,7 @@ object MultimodalOps extends QueryGroup {
     // image bytes; everything the DECODE recovers is checked bit-for-bit.
     "multimodal_decode" -> ((s, dir) => {
       import s.implicits._
-      spread(t(s, dir, "documents")).select($"doc_id").as[Long]
+      widen(t(s, dir, "documents"))(_.select($"doc_id")).as[Long]
         .mapPartitions { it =>
           it.map { id =>
             val w = (8 + id % 57).toInt
@@ -70,7 +70,7 @@ object MultimodalOps extends QueryGroup {
     // header parsing breaks the hash.
     "multimodal_video" -> ((s, dir) => {
       import s.implicits._
-      spread(t(s, dir, "documents")).select($"doc_id").as[Long]
+      widen(t(s, dir, "documents"))(_.select($"doc_id")).as[Long]
         .mapPartitions { it =>
           it.map { id =>
             val w = (8L * (2 + id % 5)).toInt
@@ -94,7 +94,7 @@ object MultimodalOps extends QueryGroup {
     // sign, stride, or header error in the decode breaks the hash.
     "multimodal_audio" -> ((s, dir) => {
       import s.implicits._
-      spread(t(s, dir, "documents")).select($"doc_id").as[Long]
+      widen(t(s, dir, "documents"))(_.select($"doc_id")).as[Long]
         .mapPartitions { it =>
           it.map { id =>
             val n = (500 + id % 1500).toInt

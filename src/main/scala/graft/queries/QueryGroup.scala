@@ -30,55 +30,47 @@ trait QueryGroup {
   protected def t(s: SparkSession, dir: String, name: String): DataFrame =
     graft.Tables(s, dir, name)
 
-  /** Ensure a scan feeding compute-heavy per-row kernels (hashing, dot
-    * products) has at least `defaultParallelism` partitions. The test
-    * parquet files are single-row-group, so without this a narrow in-row
+  /** `kernels` over `scan`, widened to `defaultParallelism` partitions
+    * when the scan is narrow and heavy ([[narrowHeavyScan]]), under a
+    * [[graft.functions.KernelBarrier]]. The test parquet files are
+    * single-row-group, so without the repartition a narrow in-row
     * pipeline runs on ONE core; on a real cluster the scan already has
-    * more splits than cores and this is a no-op. The split count comes
-    * from the scan's file listing ([[scanSplits]]): the probe builds no
-    * physical plan and no RDD.
+    * more splits than cores and the repartition is skipped.
     *
-    * A kernel over the widened rows runs at full width only if nothing
-    * that reads its output is pushed below the repartition: Catalyst's
-    * predicate pushdown moves a deterministic `Filter` through a
-    * `Repartition` (substituting the kernel for its alias), and the
-    * kernel then runs again inside the 1-task scan stage. Projections
-    * are not pushed down. So a filter on a kernel's output sits above a
-    * barrier the optimizer does not push through: a `Generate` whose
-    * generator holds the kernel (an empty array emits no row), or a
-    * [[graft.functions.Materialize.cut]] of the kernel's output. */
-  protected def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (scanSplits(df) < target) df.repartition(target) else df
+    * The barrier keeps each kernel at one evaluation per row (its
+    * scaladoc states the pushdown rule it stops): a filter above `widen`
+    * stays there, widened or not, so a filter on a plain column that
+    * should reach the scan goes on `scan` instead.
+    *
+    * `minTotalBytes` is a property of the KERNEL CLASS (how much work one
+    * byte of input generates), not of any scale factor:
+    *  - 0 for compute-heavy kernels (hashing, dot products): widen any
+    *    narrow scan;
+    *  - [[SpreadDocKernel]], [[SpreadRowKernel]] or [[SpreadAggScan]] for
+    *    kernels whose work per byte amortizes one round-robin exchange
+    *    only once the split carries real data. On the sf0.1 files they
+    *    leave the scan as it is: r17 measured a blanket repartition
+    *    SLOWER on 9 of 10 text queries at that size, the exchange
+    *    outweighing sub-second kernels. The 20×+ scaling fixtures
+    *    (single-row-group files, multi-second kernels) are widened: the
+    *    r18 scaling runs measured every heavy text/agg query serialized
+    *    on a 1-task scan without it (e.g. text_lm_surprisal 17.7 s with
+    *    an 11.4 s single-task stage).
+    * The gate counts TOTAL scan bytes, not bytes per split: a 4-split
+    * scan of a heavy kernel is still 8× short of the core count, and the
+    * exchange cost it weighs scales with total bytes. */
+  protected def widen(scan: DataFrame, minTotalBytes: Long = 0L)(
+      kernels: DataFrame => DataFrame): DataFrame = {
+    val wide =
+      if (narrowHeavyScan(scan, minTotalBytes))
+        scan.repartition(scan.sparkSession.sparkContext.defaultParallelism)
+      else scan
+    graft.functions.KernelBarrier.over(kernels(wide))
   }
 
-  /** [[spread]] gated on bytes per split — for scans whose downstream
-    * work is heavy ENOUGH per byte to amortize one round-robin exchange,
-    * but only once the split carries real data. Three-way behavior, all
-    * from the same rule (guide §2: scale-adaptive, never a constant):
-    *  - real cluster / many splits: no-op (the partition-count gate);
-    *  - tiny local inputs (the driver's sf0.1 files): no-op — r17
-    *    measured a blanket spread() SLOWER on 9 of 10 text queries at
-    *    that size because the exchange outweighed sub-second kernels,
-    *    and this keeps the driver's bench rows byte-identical to r17;
-    *  - the 20×+ scaling fixtures (single-row-group files, multi-second
-    *    kernels): repartition — the r18 scaling runs measured every
-    *    heavy text/agg query serialized on a 1-task scan without it
-    *    (e.g. text_lm_surprisal 17.7 s with an 11.4 s single-task stage).
-    * `minTotalBytes` is a property of the KERNEL CLASS (how much work
-    * one byte of input generates), not of any scale factor — callers
-    * pass ~1 MB for regex/hash-heavy document kernels, more for cheap
-    * columnar aggregates. TOTAL scan bytes, not per split: a 4-split
-    * scan of a heavy kernel is still 8× short of the core count, and
-    * the exchange cost the gate weighs scales with total bytes. */
-  protected def spreadHeavy(df: DataFrame, minTotalBytes: Long): DataFrame =
-    if (narrowHeavyScan(df, minTotalBytes))
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    else df
-
   /** Does `df` scan narrow (fewer splits than cores) AND heavy (more
-    * than `minTotalBytes` in total)? The [[spreadHeavy]] predicate,
-    * exposed for queries that must pick a PLAN SHAPE from it (e.g. an
+    * than `minTotalBytes` in total)? The [[widen]] predicate, exposed
+    * for queries that must pick a PLAN SHAPE from it (e.g. an
     * explicit-width co-partitioned join that is pure overhead at tiny
     * scale) — results are identical either way, only the physical width
     * changes. False on any multi-split scan (real clusters). Both
@@ -88,15 +80,15 @@ trait QueryGroup {
     fileRelation(df).sizeInBytes > minTotalBytes &&
       scanSplits(df) < df.sparkSession.sparkContext.defaultParallelism
 
-  /** The one file relation `df` scans. The widening helpers take a
-    * table frame (`t(...)`, possibly with per-row projections), never a
+  /** The one file relation `df` scans. [[widen]] takes a table frame
+    * (`t(...)`, possibly with per-row projections or filters), never a
     * join or a union, whose width is not one scan's. */
   private def fileRelation(df: DataFrame): HadoopFsRelation =
     df.queryExecution.analyzed.collectLeaves() match {
       case Seq(l: LogicalRelation) if l.relation.isInstanceOf[HadoopFsRelation] =>
         l.relation.asInstanceOf[HadoopFsRelation]
       case leaves => throw new IllegalArgumentException(
-        "the widening helpers take a frame over one file scan, got leaves: " +
+        "widen takes a frame over one file scan, got leaves: " +
           leaves.map(_.nodeName).mkString(", "))
     }
 
@@ -122,7 +114,7 @@ trait QueryGroup {
     FilePartition.getFilePartitions(spark, splits, maxSplit).size
   }
 
-  /** [[spreadHeavy]] thresholds by kernel class — how many TOTAL scan
+  /** [[widen]] thresholds by kernel class — how many TOTAL scan
     * bytes before the downstream work dwarfs one exchange of them.
     * Chosen from the r18 20× stage tables (multi-second kernels at a few
     * MB per split) against r17's sf0.1 negative results (sub-second

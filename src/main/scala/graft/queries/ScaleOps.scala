@@ -121,8 +121,8 @@ object ScaleOps extends QueryGroup {
     // (unix_micros / epoch_us), so gaps hash-compare bit-for-bit.
     "join_range_band" -> ((s, dir) => {
       import s.implicits._
-      val e = spreadHeavy(t(s, dir, "events"), SpreadRowKernel)
-        .select($"event_id", $"event_type", unix_micros($"ts").as("us"))
+      val e = widen(t(s, dir, "events"), SpreadRowKernel)(
+        _.select($"event_id", $"event_type", unix_micros($"ts").as("us")))
       val a = e.select($"event_type", $"event_id".as("event_a"), $"us".as("us_a"))
         .withColumn("bin", expr(s"us_a DIV $BandUs"))
       val b = e.select($"event_type", $"event_id".as("event_b"), $"us".as("us_b"))

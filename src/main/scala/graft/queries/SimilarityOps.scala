@@ -52,17 +52,15 @@ object SimilarityOps extends QueryGroup {
   private val RpDims = 8
 
   /** vec_id, embedding, nrm (L2 norm as double, exact decimal sum
-    * inside). Zero-norm vectors are EXCLUDED: cosine against them is
-    * 0/0 = NaN, and NaN sorts above every real double — one zero vector
-    * in the corpus would otherwise poison every query's top-k (the same
-    * guard the streaming paths carry; the oracle CTEs mirror it). */
-  private def withNorm(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    spread(t(s, dir, "embeddings"))
-      .select($"vec_id", $"embedding",
-        sqrt(dotDec($"embedding", $"embedding").cast("double")).as("nrm"))
-      .filter($"nrm" > 0)
-  }
+    * inside), then the `extra` columns. Zero-norm vectors are EXCLUDED:
+    * cosine against them is 0/0 = NaN, and NaN sorts above every real
+    * double — one zero vector in the corpus would otherwise poison every
+    * query's top-k (the same guard the streaming paths carry; the oracle
+    * CTEs mirror it). */
+  private def withNorm(s: SparkSession, dir: String, extra: Column*): DataFrame =
+    widen(t(s, dir, "embeddings"))(_.select(Seq(col("vec_id"), col("embedding"),
+        sqrt(dotDec(col("embedding"), col("embedding")).cast("double")).as("nrm")) ++ extra: _*))
+      .filter(col("nrm") > 0)
 
   /** Filter-verify exact top-k. `scored` carries SLIM candidate rows
     * (qid, vec_id, dcos) — the double cosine projected in the same stage
@@ -137,10 +135,9 @@ object SimilarityOps extends QueryGroup {
       import s.implicits._
       // round to 9 dp: the scale-20 decimal sum exceeds double precision and
       // decimal→double conversion may differ by 1 ulp between engines.
-      spread(t(s, dir, "embeddings"))
-        .select($"vec_id",
+      widen(t(s, dir, "embeddings"))(_.select($"vec_id",
           round(sqrt(dotDec($"embedding", $"embedding").cast("double")), 9)
-            .as("l2_norm"))
+            .as("l2_norm")))
     }),
 
     // int8 scalar quantization — the compression step a 100 TB ANN
@@ -155,7 +152,7 @@ object SimilarityOps extends QueryGroup {
     // value without shipping arrays. Narrow, zero shuffle.
     "embed_quantize" -> ((s, dir) => {
       import s.implicits._
-      spread(t(s, dir, "embeddings"))
+      widen(t(s, dir, "embeddings"))(_
         .select($"vec_id", $"embedding")
         .withColumn("maxabs", expr(
           "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))"))
@@ -171,7 +168,7 @@ object SimilarityOps extends QueryGroup {
           expr("array_max(q)").as("qmax"),
           expr("array_max(transform(sequence(0, size(embedding)-1), " +
             "i -> abs(q[i] * scale - CAST(embedding[i] AS DOUBLE))))")
-            .as("max_abs_err"))
+            .as("max_abs_err")))
     }),
 
     // Johnson-Lindenstrauss random projection — the dimension-reduction
@@ -186,10 +183,10 @@ object SimilarityOps extends QueryGroup {
     // Narrow plan: one in-row kernel, zero shuffles.
     "embed_project" -> ((s, dir) => {
       import s.implicits._
-      spread(t(s, dir, "embeddings"))
+      widen(t(s, dir, "embeddings"))(_
         .withColumn("p", native.rp_project($"embedding", RpDims))
         .select($"vec_id" +:
-          (0 until RpDims).map(h => round($"p" (h), 9).as(s"p${h + 1}")): _*)
+          (0 until RpDims).map(h => round($"p" (h), 9).as(s"p${h + 1}")): _*))
     }),
 
     // brute-force cosine top-1 neighbor for the first 100 vectors.
@@ -239,8 +236,9 @@ object SimilarityOps extends QueryGroup {
       val centroids = emb.filter($"vec_id" >= 100 && $"vec_id" < 100 + NList)
         .select($"vec_id", $"embedding")
         .as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
-      val assign = emb.select($"vec_id",
-        graft.functions.Lsh.nearestCentroidGated($"embedding", centroids).as("cid"))
+      // the cid join's inferred not-null filter stays above the barrier
+      val assign = graft.functions.KernelBarrier.over(emb.select($"vec_id",
+        graft.functions.Lsh.nearestCentroidGated($"embedding", centroids).as("cid")))
       val q = emb.filter($"vec_id" < 100)
         .select($"vec_id".as("qid"), $"embedding".as("qemb"), $"nrm".as("qn"))
       val probes = q.select($"qid",
@@ -282,11 +280,7 @@ object SimilarityOps extends QueryGroup {
       import s.implicits._
       val planes = 8
       val nprobe = 4
-      val emb = spread(t(s, dir, "embeddings"))
-        .select($"vec_id", $"embedding",
-          sqrt(dotDec($"embedding", $"embedding").cast("double")).as("nrm"),
-          native.lsh_bucket($"embedding", planes).as("bucket"))
-        .filter($"nrm" > 0)
+      val emb = withNorm(s, dir, native.lsh_bucket($"embedding", planes).as("bucket"))
         .transform(graft.functions.Materialize.cut)
       val q = emb.filter($"vec_id" < 100)
         .select($"vec_id".as("qid"), $"embedding".as("qemb"),
@@ -320,11 +314,7 @@ object SimilarityOps extends QueryGroup {
 
     "similarity_ann_lsh" -> ((s, dir) => {
       import s.implicits._
-      val emb = spread(t(s, dir, "embeddings"))
-        .select($"vec_id", $"embedding",
-          sqrt(dotDec($"embedding", $"embedding").cast("double")).as("nrm"),
-          native.lsh_bucket($"embedding", 8).as("bucket"))
-        .filter($"nrm" > 0) // zero-norm exclusion, as withNorm
+      val emb = withNorm(s, dir, native.lsh_bucket($"embedding", 8).as("bucket"))
         .transform(graft.functions.Materialize.cut) // feeds scoring + join-back + q
       val q = emb.filter($"vec_id" < 100)
         .select($"vec_id".as("qid"), $"embedding".as("qemb"),

@@ -72,9 +72,10 @@ object SketchOps extends QueryGroup {
     // independent Scala model).
     "sketch_hll_distinct" -> ((s, dir) => {
       import s.implicits._
-      // spreadHeavy: the 20× lineitem fixture is 2 row groups → 2-task
-      // scans; the byte gate keeps sf0.1 (11 MB) unspread (guide §2)
-      val li = spreadHeavy(t(s, dir, "lineitem"), SpreadAggScan)
+      // widened past SpreadAggScan: the 20× lineitem fixture is 2 row
+      // groups → 2-task scans; the byte gate keeps sf0.1 (11 MB) narrow
+      // (guide §2)
+      val li = widen(t(s, dir, "lineitem"), SpreadAggScan)(identity)
       val sketch = li
         .agg(graft.functions.native.hll_sketch($"l_orderkey".cast("string")).as("sk"))
         .select(graft.functions.native.hll_nonzero($"sk").as("nonzero_registers"),
@@ -100,8 +101,8 @@ object SketchOps extends QueryGroup {
     // demo control, as in sketch_hll_distinct.
     "sketch_vocab_by_lang" -> ((s, dir) => {
       import s.implicits._
-      val toks = spread(t(s, dir, "documents"))
-        .select($"lang", explode(graft.functions.native.tokens($"text")).as("tok"))
+      val toks = widen(t(s, dir, "documents"))(
+        _.select($"lang", explode(graft.functions.native.tokens($"text")).as("tok")))
       // ONE tokenize+explode pass: reduce to the distinct (lang, tok)
       // relation first (partial-agg collapsible), then derive every
       // consumer from it — HLL registers are max-per-bucket so duplicate
@@ -126,8 +127,8 @@ object SketchOps extends QueryGroup {
 
     "sketch_countmin_topk" -> ((s, dir) => {
       import s.implicits._
-      val toks = spread(t(s, dir, "documents"))
-        .select(explode(graft.functions.native.tokens($"text")).as("tok"))
+      val toks = widen(t(s, dir, "documents"))(
+        _.select(explode(graft.functions.native.tokens($"text")).as("tok")))
       val grouped = toks.groupBy($"tok").agg(count(lit(1)).as("exact_cnt"))
         .transform(graft.functions.Materialize.cut) // feeds grid AND top-10
       // ONE tokenize pass: the grid builds from the grouped counts via the
@@ -161,8 +162,8 @@ object SketchOps extends QueryGroup {
     // query would have been paced by the control, not the sketch).
     "sketch_quantile_hist" -> ((s, dir) => {
       import s.implicits._
-      val li = spreadHeavy(t(s, dir, "lineitem"), SpreadAggScan)
-        .select(round($"l_extendedprice" * 100).cast("long").as("v"))
+      val li = widen(t(s, dir, "lineitem"), SpreadAggScan)(
+        _.select(round($"l_extendedprice" * 100).cast("long").as("v")))
       // bucket: v<32 exact; else 32 + 16·(bitlen-6) + (top-5-bits - 16)
       // — the shared functions.Sketches.logBucket binning (streaming
       // windowedHistogram uses the same helper, so they cannot drift)
@@ -190,16 +191,16 @@ object SketchOps extends QueryGroup {
     // n_exact_hits are the filter's one-sided error, made visible.
     "sketch_bloom_decontaminate" -> ((s, dir) => {
       import s.implicits._
-      val sh = spread(t(s, dir, "documents"))
-        .select($"doc_id",
-          explode(graft.functions.TextFunctions.shingles3($"text")).as("shingle"))
-      val evalSh = sh.filter($"doc_id" % 97 === 0).select($"shingle").distinct()
+      // the doc_id split goes below the barrier, into the scan
+      val docs = t(s, dir, "documents")
+      val evalSh = DedupOps.shingleRows(docs.filter($"doc_id" % 97 === 0))
+        .select($"shingle").distinct()
       // the fixed-size replacement for dedup_decontaminate's eval-set
       // broadcast: ONE 2 KiB bitset row, attached to the probe scan by
       // a broadcast nested-loop of a single row — the corpus side stays
       // a narrow scan + filter at any eval-suite size
       val bits = evalSh.agg(graft.functions.native.bloom_sketch($"shingle").as("bits"))
-      val bloomHits = sh.filter($"doc_id" % 97 =!= 0)
+      val bloomHits = DedupOps.shingleRows(docs.filter($"doc_id" % 97 =!= 0))
         .crossJoin(broadcast(bits))
         .filter(graft.functions.native.bloom_contains($"bits", $"shingle"))
         .select($"doc_id", $"shingle")

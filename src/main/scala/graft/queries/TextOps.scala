@@ -87,8 +87,9 @@ object TextOps extends QueryGroup {
     // bytes). A doc whose best score is < 3 has essentially no latin
     // trigrams and is classified zh (the CJK member of the corpus).
     "text_langid_ngram" -> ((s, dir) =>
-      // spreadHeavy: 7.6 s single-task ngram_hits stage at 20× without it
-      classifyLangNgram(spreadHeavy(t(s, dir, "documents"), SpreadDocKernel))),
+      // widened past SpreadDocKernel: 7.6 s single-task ngram_hits stage
+      // at 20× without it
+      widen(t(s, dir, "documents"), SpreadDocKernel)(classifyLangNgram)),
 
     // TRUE merge-table BPE (greedy lowest-rank merges over the learned
     // embedded vocab — graft.functions.Bpe): per doc, word count, BPE
@@ -98,7 +99,7 @@ object TextOps extends QueryGroup {
     // word cache makes Zipf text ~one encode per distinct word.
     "text_bpe_merges" -> ((s, dir) => {
       import s.implicits._
-      spread(t(s, dir, "documents"))
+      widen(t(s, dir, "documents"))(_
         .withColumn("bpe", graft.functions.native.bpe_tokens($"text"))
         .withColumn("words", expr(
           "transform(regexp_extract_all(text, '[A-Za-z]+', 0), w -> lower(w))"))
@@ -108,7 +109,7 @@ object TextOps extends QueryGroup {
           (aggregate($"words", lit(0L), (acc, w) => acc + length(w) + 1)
             - size($"bpe")).cast("long").as("n_merges"),
           when(size($"bpe") === 0, lit(null).cast("string"))
-            .otherwise(md5(concat_ws("|", $"bpe"))).as("tokens_md5"))
+            .otherwise(md5(concat_ws("|", $"bpe"))).as("tokens_md5")))
     }),
 
     // tf-idf keyword extraction: top-3 terms per doc by term frequency ×
@@ -120,8 +121,8 @@ object TextOps extends QueryGroup {
     // broadcast, one per-doc top-k window — every shuffle key-true.
     "text_tfidf_terms" -> ((s, dir) => {
       import s.implicits._
-      val terms = spreadHeavy(t(s, dir, "documents"), SpreadDocKernel)
-        .select($"doc_id", explode(TF.tokens($"text")).as("term"))
+      val terms = widen(t(s, dir, "documents"), SpreadDocKernel)(
+        _.select($"doc_id", explode(TF.tokens($"text")).as("term")))
       val tf = terms.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
         .transform(graft.functions.Materialize.cut) // feeds df AND the join below
       // df DERIVED from tf: tf has exactly one row per (doc, term), so
@@ -153,12 +154,12 @@ object TextOps extends QueryGroup {
     // corpus scale it is an ordinary key join), one fold per doc.
     "text_lm_surprisal" -> ((s, dir) => {
       import s.implicits._
-      // spreadHeavy: the r18 20× stage table showed this query fully
-      // serial on the 1-task scan (6.5 s model build + 11.4 s scoring,
-      // both single-task); the byte gate keeps sf0.1 plans identical
-      // (r17 measured plain spread() slower there)
-      val big = spreadHeavy(t(s, dir, "documents"), SpreadDocKernel)
-        .withColumn("toks", TF.tokens($"text"))
+      // widened past SpreadDocKernel: the r18 20× stage table showed this
+      // query fully serial on the 1-task scan (6.5 s model build + 11.4 s
+      // scoring, both single-task); the byte gate keeps sf0.1 narrow (r17
+      // measured an ungated repartition slower there)
+      val big = widen(t(s, dir, "documents"), SpreadDocKernel)(
+          _.select($"doc_id", TF.tokens($"text").as("toks")))
         .filter(size($"toks") >= 2)
         .select($"doc_id", explode(expr(
           "transform(sequence(0, size(toks)-2)," +
@@ -194,13 +195,10 @@ object TextOps extends QueryGroup {
     // Computed entirely in-row: shingle array → min md5, no explode/groupBy.
     "text_fingerprint" -> ((s, dir) => {
       import s.implicits._
-      // a doc with no shingle explodes a NULL array (no row): a filter
-      // on size(sharr) would be pushed below spread's repartition and
-      // re-run shingles3 in the 1-task scan ([[spread]])
-      spread(t(s, dir, "documents"))
-        .select($"doc_id", TF.shingles3($"text").as("sharr"))
-        .select($"doc_id", explode(
-          when(size($"sharr") >= 1, array(TF.fingerprint($"sharr")))).as("fingerprint"))
+      widen(t(s, dir, "documents"))(
+          _.select($"doc_id", TF.shingles3($"text").as("sharr")))
+        .filter(size($"sharr") >= 1)
+        .select($"doc_id", TF.fingerprint($"sharr").as("fingerprint"))
         .select($"doc_id", $"fingerprint",
           conv(substring($"fingerprint", 1, 8), 16, 10).cast("long").as("fp_int"))
     })

@@ -130,12 +130,12 @@ final class TableLogTailSource(spark: SparkSession, dir: String,
     if (delta.isEmpty)
       // streaming-tagged empty relation: the engine asserts isStreaming
       // on every substituted batch plan, empty deltas included
-      graftbridge.streamingDataFrame(spark,
+      graftbridge.ofRows(spark,
         LocalRelation(DataTypeUtils.toAttributes(pinned), Nil, isStreaming = true))
     else {
       val m = TableLog.Manifest(version = toV, files = delta, rows = 0L,
         commits = Map.empty, op = "tail", schemaJson = Some(pinned.json))
-      graftbridge.streamingDataFrame(spark, LogicalRelation(
+      graftbridge.ofRows(spark, LogicalRelation(
         TableLog.hadoopRelation(spark, dir, m, pinned), isStreaming = true))
     }
   }
@@ -216,7 +216,7 @@ final class TableLogTailSource(spark: SparkSession, dir: String,
     * runs, so the window head's recorded schema IS this stream's pinned
     * schema and the emitted shape is stable. */
   private def changeBatch(fromV: Long, toV: Long): DataFrame = {
-    def empty = graftbridge.streamingDataFrame(spark,
+    def empty = graftbridge.ofRows(spark,
       LocalRelation(DataTypeUtils.toAttributes(emitted), Nil,
         isStreaming = true))
     if (toV <= fromV) empty

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
-import graft.functions.{native, ExprKernels, Lsh}
+import graft.functions.{native, ExprKernels, KernelBarrier, Lsh}
 
 /** Streaming deduplication — the north-star dedup story for a stream of
   * documents (VERDICT r5 item #4; the reference's closest surface is
@@ -244,8 +244,8 @@ object Dedup {
                       bits: Int = 16): Dataset[(Long, Long, Long, Boolean)] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val df = ds.toDF("doc_id", "text", "seq")
-      .select($"doc_id", $"seq", native.tokens($"text").as("toks"))
+    val df = KernelBarrier.over(ds.toDF("doc_id", "text", "seq")
+      .select($"doc_id", $"seq", native.tokens($"text").as("toks")))
     val hashed = df.filter(size($"toks") >= 1)
       .select(native.simhash($"toks", bits).as("fp"), $"doc_id", $"seq")
       .as[(Long, Long, Long)]
@@ -288,11 +288,7 @@ object Dedup {
     val spark = ds.sparkSession
     import spark.implicits._
     val df = ds.toDF("doc_id", "text", "seq")
-    val sigs = df.select($"doc_id", $"seq",
-      native.minhash_sigs(native.shingles3($"text"), geom.numHashes).as("sigs"))
-    // docs with no shingles have all-null signatures → no bands → keeper
-    val banded = sigs
-      .filter(element_at($"sigs", 1).isNotNull)
+    val banded = signed(df, geom)
       .select(explode(Lsh.bandHashes($"sigs", geom.bands, geom.rows)).as("band_hash"),
         $"doc_id", $"seq", $"sigs")
       .as[(String, Long, Long, Seq[String])]
@@ -302,11 +298,25 @@ object Dedup {
         TimeMode.None(), OutputMode.Append())
       .groupByKey(_._1)
       .transformWithState(new DocVerdict, TimeMode.None(), OutputMode.Append())
-    val singletons = sigs
-      .filter(element_at($"sigs", 1).isNull)
+    verdicts.union(singletons(df))
+  }
+
+  /** `(doc_id, seq, sigs)` for the docs of `df` with a 3-shingle: their
+    * signatures, computed once per doc under a [[KernelBarrier]]. A doc
+    * with no shingle has an all-null signature and is dropped. */
+  private def signed(df: DataFrame, geom: Lsh.Geometry): DataFrame =
+    KernelBarrier.over(df.select(col("doc_id"), col("seq"),
+        native.minhash_sigs(native.shingles3(col("text")), geom.numHashes).as("sigs")))
+      .filter(element_at(col("sigs"), 1).isNotNull)
+
+  /** Keeper verdicts for the docs of `df` that [[signed]] drops: null
+    * text or under 3 tokens (exactly the docs with no 3-shingle), found
+    * without computing a signature. */
+  private def singletons(df: DataFrame): Dataset[(Long, Long, Long, Boolean)] = {
+    import df.sparkSession.implicits._
+    df.filter($"text".isNull || size(native.tokens($"text")) < 3)
       .select($"doc_id", $"seq", $"doc_id".as("root_doc"), lit(true).as("is_keeper"))
       .as[(Long, Long, Long, Boolean)]
-    verdicts.union(singletons)
   }
 
   /** Cross-snapshot streaming dedup: greedy verdicts for a stream of
@@ -333,10 +343,7 @@ object Dedup {
     val spark = ds.sparkSession
     import spark.implicits._
     val df = ds.toDF("doc_id", "text", "seq")
-    val sigs = df.select($"doc_id", $"seq",
-      native.minhash_sigs(native.shingles3($"text"), geom.numHashes).as("sigs"))
-    val banded = sigs
-      .filter(element_at($"sigs", 1).isNotNull)
+    val banded = signed(df, geom)
       .select($"doc_id", $"seq", $"sigs",
         posexplode(Lsh.bandHashes($"sigs", geom.bands, geom.rows)))
       .withColumnRenamed("pos", "band")
@@ -356,11 +363,7 @@ object Dedup {
     val verdicts = matched
       .groupByKey(_._1)
       .transformWithState(new DocVerdict, TimeMode.None(), OutputMode.Append())
-    val singletons = sigs
-      .filter(element_at($"sigs", 1).isNull)
-      .select($"doc_id", $"seq", $"doc_id".as("root_doc"), lit(true).as("is_keeper"))
-      .as[(Long, Long, Long, Boolean)]
-    verdicts.union(singletons)
+    verdicts.union(singletons(df))
   }
 
   /** Semantic-cluster bucket membership — the [[FpBucketMembers]] shape

@@ -410,13 +410,12 @@ object GraftFrame {
 }
 
 final class GroupedGraftFrame(parent: GraftFrame, keys: Seq[Column]) {
-  private def agg(exprs: Column*): GraftFrame =
-    new GraftFrame(parent.df.groupBy(keys: _*).agg(exprs.head, exprs.tail: _*), parent.indexCol)
+  private def agg(e: Column): GraftFrame =
+    new GraftFrame(parent.df.groupBy(keys: _*).agg(e), parent.indexCol)
 
   def sumOf(col: String): GraftFrame = agg(sum(col).as(s"sum_$col"))
   def meanOf(col: String): GraftFrame = agg(avg(col).as(s"mean_$col"))
   def countAll(): GraftFrame = agg(count(lit(1)).as("count"))
   def varOf(col: String): GraftFrame = agg(var_samp(col).as(s"var_$col"))
   def stdOf(col: String): GraftFrame = agg(stddev_samp(col).as(s"std_$col"))
-  def aggAll(exprs: Column*): GraftFrame = agg(exprs: _*)
 }

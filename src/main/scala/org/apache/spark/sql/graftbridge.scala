@@ -38,8 +38,10 @@ object graftbridge {
     * public `baseRelationToDataFrame` tags relations as batch). The
     * graft.sources.TableLogTailSource micro-batch path uses this to
     * plan each delta as a real file-source relation, keeping column
-    * pruning and filter pushdown inside the streaming plan. */
-  def streamingDataFrame(
+    * pruning and filter pushdown inside the streaming plan;
+    * graft.functions.KernelBarrier wraps its node with it, batch or
+    * streaming. */
+  def ofRows(
       spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

@@ -308,22 +308,50 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   /** A filter reading a kernel's output, pushed below a repartition,
     * runs the kernel in the scan stage (the 1-task stage at test scale). */
-  private def assertNoKernelFilterUnderRepartition(q: String, plans: Seq[LogicalPlan]): Unit =
-    for (p <- plans; r <- p.collect { case r: RepartitionOperation => r };
-         f <- r.collect { case f: Filter => f })
-      assert(kernels(f.condition).isEmpty, s"$q: a kernel in a filter under a repartition:\n$p")
+  private def kernelFiltersUnderRepartition(p: LogicalPlan): Seq[String] =
+    for (r <- p.collect { case r: RepartitionOperation => r };
+         f <- r.collect { case f: Filter => f }; k <- kernels(f.condition))
+    yield s"$k in a Filter under a repartition"
 
   private def executedPlans(q: String): Seq[LogicalPlan] =
     executions(SparkEntry.queries(q)(spark, sf()).write.format("noop").mode("overwrite").save())
       .map(_.optimizedPlan)
 
-  test("widened text kernels are never pushed below the repartition in a filter") {
+  /** Filters that evaluate a kernel some other node of their unary chain
+    * (the nodes above and below it up to the nearest join, union or leaf)
+    * also evaluates: the kernel then runs twice on every row. */
+  private def kernelsFilteredTwice(p: LogicalPlan): Seq[String] = {
+    def below(n: LogicalPlan): List[LogicalPlan] = n.children match {
+      case Seq(c) if c.children.size == 1 => c :: below(c)
+      case _ => Nil
+    }
+    def walk(n: LogicalPlan, above: List[LogicalPlan]): Seq[String] = {
+      val here = n match {
+        case f: Filter =>
+          for (k <- f.condition.collect { case k if isKernel(k) => k };
+               m <- above ++ below(f)
+               if m.expressions.exists(_.exists(_.semanticEquals(k))))
+          yield s"${k.getClass.getSimpleName} in a Filter and in its ${m.nodeName}"
+        case _ => Nil
+      }
+      val next = if (n.children.size == 1) n :: above else Nil
+      here ++ n.children.flatMap(walk(_, next))
+    }
+    walk(p, Nil)
+  }
+
+  test("every kernel runs once per row: no kernel filter under a repartition or beside its projection") {
+    val plans = SparkEntry.queries.keys.toSeq.sorted.map(q => q -> executedPlans(q))
+    val offenders = plans.flatMap { case (q, ps) =>
+      ps.flatMap(p => kernelFiltersUnderRepartition(p) ++ kernelsFilteredTwice(p))
+        .distinct.map(o => s"$q: $o")
+    }
+    assert(offenders.isEmpty, offenders.mkString("kernels evaluated twice per row:\n", "\n", ""))
+    // vacuity: these queries widen their scan at test scale
     Seq("dedup_decontaminate", "dedup_ngram_jaccard", "dedup_substring",
-        "dedup_span_removal", "text_fingerprint").foreach { q =>
-      val plans = executedPlans(q)
-      assert(plans.exists(_.exists(_.isInstanceOf[RepartitionOperation])),
+        "dedup_span_removal", "text_fingerprint", "dedup_simhash").foreach { q =>
+      assert(plans.toMap.apply(q).exists(_.exists(_.isInstanceOf[RepartitionOperation])),
         s"vacuity: $q must widen its scan at test scale")
-      assertNoKernelFilterUnderRepartition(q, plans)
     }
   }
 
@@ -342,7 +370,8 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       for ((k, n) <- want)
         assert(counts.getOrElse(k, 0) == n,
           s"$q: $k appears ${counts.getOrElse(k, 0)} times, want $n:\n${plans.mkString("\n")}")
-      assertNoKernelFilterUnderRepartition(q, plans)
+      assert(plans.flatMap(kernelFiltersUnderRepartition).isEmpty,
+        s"$q: a kernel in a filter under a repartition:\n${plans.mkString("\n")}")
       if (want.contains("MinHashSigs")) {
         val stage = qes.flatMap(qe => collect(qe.executedPlan) {
           case p: ProjectExec if p.projectList.exists(e => kernels(e).contains("MinHashSigs")) => p

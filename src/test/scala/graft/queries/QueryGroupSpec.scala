@@ -19,7 +19,7 @@ class QueryGroupSpec extends SparkSuite {
     def oracle: Map[String, String] = Map.empty
     def splits(df: DataFrame): Int = scanSplits(df)
     def narrowHeavy(df: DataFrame, bytes: Long): Boolean = narrowHeavyScan(df, bytes)
-    def widened(df: DataFrame): DataFrame = spread(df)
+    def widened(df: DataFrame): DataFrame = widen(df)(identity)
     val gates: Seq[Long] = Seq(0L, SpreadDocKernel, SpreadRowKernel, SpreadAggScan)
   }
 

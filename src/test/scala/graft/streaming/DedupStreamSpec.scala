@@ -153,4 +153,32 @@ class DedupStreamSpec extends SparkSuite {
         Seq((1L, 1L, true), (2L, 2L, true), (3L, 1L, false)))
     }
   }
+
+  test("minhashVerdicts and indexVerdicts compute each signature kernel once per document") {
+    import graft.functions.{DedupIndex, MinHashSigs, Shingles3}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    withRocksDBState {
+      val base = "the quick brown fox jumps over the lazy dog again and again"
+      // the index is materialized, so only the stream side's kernels show
+      val index = DedupIndex.indexRows(Seq((1L, base)).toDF("doc_id", "text")).localCheckpoint()
+      for ((name, build) <- Seq[(String, org.apache.spark.sql.Dataset[(Long, String, Long)] =>
+             org.apache.spark.sql.Dataset[(Long, Long, Long, Boolean)])](
+             "minhash" -> (Dedup.minhashVerdicts(_)),
+             "index" -> (Dedup.indexVerdicts(_, index)))) {
+        val in = MemoryStream[(Long, String, Long)]
+        val q = build(in.toDS()).toDF("doc_id", "seq", "root_doc", "is_keeper").writeStream
+          .format("memory").queryName(s"dedup_once_$name").outputMode("append").start()
+        in.addData((2L, base + " tail", 2L), (3L, "tiny", 3L))
+        q.processAllAvailable()
+        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+        q.stop()
+        val kernels = plan.collect { case n => n.expressions.flatMap(_.collect {
+          case _: MinHashSigs => "MinHashSigs"
+          case _: Shingles3 => "Shingles3"
+        }) }.flatten
+        assert(kernels.sorted == Seq("MinHashSigs", "Shingles3"), s"$name:\n$plan")
+        assert(spark.table(s"dedup_once_$name").count() == 2)
+      }
+    }
+  }
 }

@@ -165,15 +165,40 @@ class GraftFrameSpec extends SparkSuite {
     val vc = f.valueCounts("k").df.collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(vc == Map("a" -> 2L, "b" -> 1L))
     assert(f.nlargest(1, "v").df.head().getDouble(1) == 3.0)
+    // df.round(n): non-tie values as pandas; a .5 tie rounds half up
+    // (pandas rounds half to even: 2.5 -> 2.0)
+    val rounded = new GraftFrame(Seq(1.26, 2.04, 2.5).toDF("v")).roundTo("v", 1).df
+    assert(rounded.as[Double].collect().toSeq == Seq(1.3, 2.0, 2.5))
+    assert(new GraftFrame(Seq(2.5).toDF("v")).roundTo("v", 0).df.as[Double].head() == 3.0)
+    // set_index: the index column orders the rolling windows
+    val byV = f.setIndex("v").globalWindow().cumsum("v").df
+      .select("v", "expanding_v").as[(Double, Double)].collect().toMap
+    assert(f.setIndex("v").indexCol == "v" && byV == Map(1.0 -> 1.0, 2.0 -> 3.0, 3.0 -> 6.0))
+    // groupby var/std: sample moments (ddof = 1); one row gives null (pandas NaN)
+    def moments(g: GroupedGraftFrame => GraftFrame) =
+      g(f.groupby("k")).df.as[(String, Option[Double])].collect().toMap
+    assert(moments(_.varOf("v")) == Map("a" -> Some(2.0), "b" -> None))
+    assert(moments(_.stdOf("v")) == Map("a" -> Some(math.sqrt(2.0)), "b" -> None))
   }
 
   test("rolling/expanding/cumulative facade matches pandas-style semantics") {
     val df = Seq(("a", 1, 1.0), ("a", 2, 2.0), ("a", 3, 3.0), ("b", 4, 10.0), ("b", 5, 20.0))
       .toDF("k", "ts", "v")
     val f = new GraftFrame(df, indexCol = "ts")
-    val roll = f.rollingSum("v", 2, "k").df
-      .select("ts", "rolling_v").as[(Int, Double)].collect().toMap
-    assert(roll == Map(1 -> 1.0, 2 -> 3.0, 3 -> 5.0, 4 -> 10.0, 5 -> 30.0))
+    // rolling(2).<agg> per key over the trailing 2 rows (a partial
+    // window at each key's first row)
+    val rolling = Seq[(String, GraftFrame => GraftFrame, Map[Int, Double])](
+      ("sum", _.rollingSum("v", 2, "k"), Map(1 -> 1.0, 2 -> 3.0, 3 -> 5.0, 4 -> 10.0, 5 -> 30.0)),
+      ("mean", _.rollingMean("v", 2, "k"), Map(1 -> 1.0, 2 -> 1.5, 3 -> 2.5, 4 -> 10.0, 5 -> 15.0)),
+      ("min", _.rollingMin("v", 2, "k"), Map(1 -> 1.0, 2 -> 1.0, 3 -> 2.0, 4 -> 10.0, 5 -> 10.0)),
+      ("max", _.rollingMax("v", 2, "k"), Map(1 -> 1.0, 2 -> 2.0, 3 -> 3.0, 4 -> 10.0, 5 -> 20.0)),
+      ("aggregate(max - min)",
+        _.rollingApply(2, a => array_max(a) - array_min(a), "v", "k"),
+        Map(1 -> 0.0, 2 -> 1.0, 3 -> 1.0, 4 -> 0.0, 5 -> 10.0)))
+    for ((name, op, want) <- rolling) {
+      val got = op(f).df.select("ts", "rolling_v").as[(Int, Double)].collect().toMap
+      assert(got == want, s"rolling $name")
+    }
     val cum = f.cumsum("v", "k").df
       .select("ts", "expanding_v").as[(Int, Double)].collect().toMap
     assert(cum == Map(1 -> 1.0, 2 -> 3.0, 3 -> 6.0, 4 -> 10.0, 5 -> 30.0))
@@ -241,6 +266,22 @@ class GraftFrameSpec extends SparkSuite {
     val got = spark.table("sess_t").selectExpr("k", "count")
       .as[(String, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
     assert(got == Seq(("a", 3L), ("b", 1L), ("b", 1L)))
+  }
+
+  test("timedWindowUnique: the first arrival of a key in each window is kept") {
+    val in = MemoryStream[(java.sql.Timestamp, String, Double)]
+    val sdf = new GraftFrame(in.toDF().toDF("ts", "k", "v"), indexCol = "ts")
+    val q = sdf.timedWindowUnique("10 seconds", "0 seconds", "k").writeStream
+      .format("memory").queryName("twu_t").outputMode("append").start()
+    def t(s: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:00:$s%02d")
+    // window [0,10): a at t1 kept, a at t5 dropped (in the batch and a
+    // batch later); window [10,20): a is new again
+    in.addData((t(1), "a", 1.0), (t(3), "b", 2.0))
+    q.processAllAvailable()
+    in.addData((t(5), "a", 9.0), (t(12), "a", 7.0))
+    q.processAllAvailable(); q.stop()
+    val got = spark.table("twu_t").select("k", "v").as[(String, Double)].collect().sorted.toSeq
+    assert(got == Seq(("a", 1.0), ("a", 7.0), ("b", 2.0)))
   }
 
   test("timedWindowUniqueLast: duplicate key replaces the buffered element") {
