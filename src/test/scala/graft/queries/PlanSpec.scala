@@ -340,19 +340,27 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     walk(p, Nil)
   }
 
+  /** The optimized plans of every query's executions, run once and shared. */
+  private lazy val allPlans: Map[String, Seq[LogicalPlan]] =
+    SparkEntry.queries.keys.toSeq.sorted.map(q => q -> executedPlans(q)).toMap
+
+  test("widened text kernels are never pushed below the repartition in a filter") {
+    Seq("dedup_decontaminate", "dedup_ngram_jaccard", "dedup_substring",
+        "dedup_span_removal", "text_fingerprint", "dedup_simhash").foreach { q =>
+      val plans = allPlans(q)
+      assert(plans.exists(_.exists(_.isInstanceOf[RepartitionOperation])),
+        s"vacuity: $q must widen its scan at test scale")
+      assert(plans.flatMap(kernelFiltersUnderRepartition).isEmpty,
+        s"$q: a kernel in a filter under a repartition:\n${plans.mkString("\n")}")
+    }
+  }
+
   test("every kernel runs once per row: no kernel filter under a repartition or beside its projection") {
-    val plans = SparkEntry.queries.keys.toSeq.sorted.map(q => q -> executedPlans(q))
-    val offenders = plans.flatMap { case (q, ps) =>
+    val offenders = allPlans.toSeq.sortBy(_._1).flatMap { case (q, ps) =>
       ps.flatMap(p => kernelFiltersUnderRepartition(p) ++ kernelsFilteredTwice(p))
         .distinct.map(o => s"$q: $o")
     }
     assert(offenders.isEmpty, offenders.mkString("kernels evaluated twice per row:\n", "\n", ""))
-    // vacuity: these queries widen their scan at test scale
-    Seq("dedup_decontaminate", "dedup_ngram_jaccard", "dedup_substring",
-        "dedup_span_removal", "text_fingerprint", "dedup_simhash").foreach { q =>
-      assert(plans.toMap.apply(q).exists(_.exists(_.isInstanceOf[RepartitionOperation])),
-        s"vacuity: $q must widen its scan at test scale")
-    }
   }
 
   test("kernels run once per row: no pushed-down filter re-runs one, the signature stage is full width") {
