@@ -38,7 +38,7 @@ object AnnIndex {
   // The two tables' column lists and bucket keys — ONE definition shared
   // by build, keyed append, crash-repair, and compactTombstones, so a
   // schema change cannot desync any write path from the others (the
-  // enrich() one-definition rule, extended to the table shape).
+  // Knn.enrich one-definition rule, extended to the table shape).
   private val ProbeCols = Seq("vec_id", "bucket", "nrm", "q", "scale", "l1", "embedding")
   private val VecCols   = Seq("vec_id", "embedding", "nrm")
   private val ProbeKey  = "bucket"
@@ -67,7 +67,7 @@ object AnnIndex {
     // rebuild whose `corpus` reads this index's own tables must not
     // have them deleted under a lazy scan, and a plain persist() would
     // be uncached BY the drop — so the pin is a lineage cut
-    val enriched = Materialize.cut(enrich(corpus, planes))
+    val enriched = Materialize.cut(Knn.enrich(corpus, planes))
     val h = Handle(s"${name}_probe", s"${name}_vec", planes, buckets)
     // marker history first, WHILE the previous life is still cataloged
     // (its location — and thus its sidecar dir — resolves through the
@@ -86,27 +86,6 @@ object AnnIndex {
         project(enriched, VecCols), h.vecTable, VecKey, buckets)
     } finally Materialize.release(enriched)
     h
-  }
-
-  /** The shared derivation both [[build]] and [[append]] write: norms,
-    * int8 sidecar, sign-LSH bucket; zero-norm rows excluded. ONE
-    * definition so the spec-pinned "append == rebuild" invariant cannot
-    * be broken by a drive-by change to only one path. */
-  private def enrich(vectors: DataFrame, planes: Int): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    vectors.select($"vec_id", $"embedding")
-      .as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, v) =>
-        var n = 0.0
-        var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i); i += 1 }
-        val (q, s, l1) = Ivf.quantize(v)
-        (id, v, math.sqrt(n), q, s, l1)
-      })
-      .toDF("vec_id", "embedding", "nrm", "q", "scale", "l1")
-      .filter($"nrm" > 0)
-      .withColumn("bucket", native.lsh_bucket($"embedding", planes))
   }
 
   /** Incremental maintenance, keyless variant: enrich `newVectors`
@@ -177,7 +156,7 @@ object AnnIndex {
     if (fs.exists(marker(log, "probe", deltaKey))) return // fully committed
     if (!fs.exists(marker(log, "begin", deltaKey))) {
       mark(fs, log, "begin", deltaKey)
-      val enriched = enrich(newVectors, h.planes)
+      val enriched = Knn.enrich(newVectors, h.planes)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // vec STRICTLY BEFORE probe — deliberately sequential, not
@@ -211,7 +190,7 @@ object AnnIndex {
   private def appendDedup(spark: SparkSession, h: Handle,
                           newVectors: DataFrame, vecCommitted: Boolean): Unit = {
     import spark.implicits._
-    val enriched = enrich(newVectors, h.planes)
+    val enriched = Knn.enrich(newVectors, h.planes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (!vecCommitted)

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{col, udf}
 
 /** Trained IVF (inverted-file) index on [[Kmeans]] centroids — the
   * production path the oracle-checked `similarity_ivf` query models with
@@ -105,28 +104,19 @@ object Ivf {
   /** Tag every corpus vector with its trained cell. `corpus` needs
     * `vec_id` and `embedding`; returns (vec_id, embedding, nrm, cell)
     * plus the int8 sidecar (q, scale, l1) that [[searchQuantized]] ranks
-    * with — Catalyst prunes the unused columns for the float path, so
-    * [[search]] plans are unchanged. */
+    * with — a plan computes only the columns it reads, so the [[search]]
+    * plans never quantize. */
   def build(corpus: DataFrame, k: Int, iters: Int): Index = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val model = Kmeans.fit(corpus, "embedding", "vec_id", k, iters)
-    val m = model // task-closure copy
-    val tagged = corpus.select($"vec_id", $"embedding")
-      .as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, v) =>
-        var n = 0.0
-        var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i); i += 1 }
-        val (q, scale, l1) = quantize(v)
-        (id, v, math.sqrt(n), m.assign(v), q, scale, l1)
-      })
-      .toDF("vec_id", "embedding", "nrm", "cell", "q", "scale", "l1")
-    Index(model, tagged)
+    val assign = udf((v: Array[Float]) => model.assign(v))
+    Index(model, Knn.withInt8(corpus.select(col("vec_id"), col("embedding"),
+      Knn.norm(col("embedding")).as("nrm"), assign(col("embedding")).as("cell")),
+      "embedding", Seq("q", "scale", "l1")))
   }
 
   /** Top-`topK` same-probed-cell hits per query: `(query_id, vec_id,
-    * cos, rank)`. `queries` needs `query_id` and `qemb` columns.
+    * cos, rank)`. `queries` needs `query_id` and `qemb` columns; `topK`
+    * and `nprobe` must be at least 1.
     *
     * Zero-norm vectors have no direction, so cosine is undefined for
     * them: zero-norm queries and zero-norm corpus rows are EXCLUDED up
@@ -134,48 +124,18 @@ object Ivf {
     * sorts above every real double under `desc`, so a zero vector would
     * otherwise outrank every genuine hit.
     *
-    * Shuffle shape at scale: the corpus-side join is an equi-join on
-    * `cell` (shuffle-free when the tagged corpus is bucketed on it), the
-    * query norm is computed once per query — not once per candidate —
-    * and candidates are projected down to `(query_id, vec_id, cos)`
-    * BEFORE the rank window, so the rank exchange repartitions ids and
-    * one double, never embedding arrays (IvfSpec pins that with a plan
-    * assertion — the id-only shape `queries.DedupOps` uses). */
-  def search(index: Index, queries: DataFrame, topK: Int, nprobe: Int): DataFrame = {
-    require(topK >= 1 && nprobe >= 1, s"need topK, nprobe >= 1: $topK, $nprobe")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centroids = index.model.centroids.zipWithIndex
-      .map { case (c, i) => (i, c) }.toSeq
-      .toDF("cell", "cemb")
-    // probe selection: query × k centroids (broadcast — k rows), keep the
-    // nprobe nearest cells per query
-    val probeW = Window.partitionBy($"query_id")
-      .orderBy($"cdist".asc, $"cell".asc)
-    val probes = queries
-      .select($"query_id", $"qemb",
-        sqrt(native.double_dot($"qemb", $"qemb")).as("qnrm"))
-      .filter($"qnrm" > 0)
-      .join(broadcast(centroids))
-      .select($"query_id", $"qemb", $"qnrm", $"cell",
-        // qemb·qemb = qnrm² (computed once per query above) — a
-        // double_dot here would re-run a dim-length kernel per
-        // (query, centroid) pair for a value that is constant per query
-        ($"qnrm" * $"qnrm"
-          - lit(2.0) * native.double_dot($"qemb", $"cemb")
-          + native.double_dot($"cemb", $"cemb")).as("cdist"))
-      .withColumn("prank", row_number().over(probeW))
-      .filter($"prank" <= nprobe)
-      .select($"query_id", $"qemb", $"qnrm", $"cell")
-    // candidates: equi-join on the cell id, project to scalars, rank
-    val rankW = Window.partitionBy($"query_id")
-      .orderBy($"cos".desc, $"vec_id".asc)
-    probes.join(index.cells.filter($"nrm" > 0), "cell")
-      .select($"query_id", $"vec_id",
-        (native.double_dot($"qemb", $"embedding") / ($"qnrm" * $"nrm")).as("cos"))
-      .withColumn("rank", row_number().over(rankW))
-      .filter($"rank" <= topK)
-  }
+    * Shuffle shape at scale: probe selection is a broadcast join of the
+    * queries against the k-row centroid table plus a per-query rank; the
+    * corpus-side join is an equi-join on `cell` (shuffle-free when the
+    * tagged corpus is bucketed on it), the query norm is computed once
+    * per query — not once per candidate — and candidates are projected
+    * down to `(query_id, vec_id, cos)` BEFORE the rank window, so the
+    * rank exchange repartitions ids and one double, never embedding
+    * arrays (IvfSpec pins that with a plan assertion — the id-only shape
+    * `queries.DedupOps` uses). */
+  def search(index: Index, queries: DataFrame, topK: Int, nprobe: Int): DataFrame =
+    Knn(queries, Knn.Cells(index.model.centroids, nprobe), Knn.Trained(index.cells),
+      int8 = false, topK)
 
   /** [[search]] with int8 candidate ranking + exact rerank — the same
     * result set, with the probe exchange carrying ~4× fewer bytes.
@@ -183,89 +143,13 @@ object Ivf {
     * The cell equi-join (the wide step that ships the corpus at scale)
     * carries the int8 sidecar (q: d bytes, scale, l1) instead of the
     * float embedding (4d bytes); candidates are ranked by the integer
-    * dot kernel [[ExprKernels.int8Dot]]. Exactness is filter-verify with
-    * a PROVEN margin, not a heuristic: for x = s_x·q_x + e_x with
-    * |e_x,i| ≤ s_x/2 (the floor(+0.5) scheme's per-component bound),
-    *
-    *   |x·y − s_x s_y (q_x·q_y)| ≤ s_x s_y (‖q_x‖₁/2 + ‖q_y‖₁/2 + d/4)
-    *
-    * so every candidate's true cosine lies in [approx − err, approx +
-    * err]. A candidate is reranked iff its upper bound reaches the
-    * topK-th largest lower bound of its query — any candidate excluded
-    * is beaten by ≥ topK others with certainty, so the exact-rerank
-    * winners equal [[search]]'s (IvfSpec pins equality and the byte
-    * shrink). The rerank joins float embeddings back BY ID for the
-    * survivor set only (≈ topK + margin rows per query — the broadcast-
-    * friendly side of that join, same join-back shape as
-    * queries.DedupOps); survivors' scalars travel, never candidate
+    * dot kernel [[ExprKernels.int8Dot]] within the certified interval of
+    * [[Knn]], so the exact-rerank winners equal [[search]]'s (IvfSpec
+    * pins equality and the byte shrink). The rerank joins float
+    * embeddings back BY ID for the survivor set only (≈ topK + margin
+    * rows per query); survivors' scalars travel, never candidate
     * arrays. */
-  def searchQuantized(index: Index, queries: DataFrame, topK: Int, nprobe: Int): DataFrame = {
-    require(topK >= 1 && nprobe >= 1, s"need topK, nprobe >= 1: $topK, $nprobe")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centroids = index.model.centroids.zipWithIndex
-      .map { case (c, i) => (i, c) }.toSeq
-      .toDF("cell", "cemb")
-    // quantize queries once (same pass computes the norm); keep qemb ONLY
-    // for probe selection and the final rerank join — it never enters the
-    // candidate exchange
-    val qz = queries.select($"query_id", $"qemb")
-      .as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, v) =>
-        var n = 0.0
-        var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i); i += 1 }
-        val (qq, qs, ql1) = quantize(v)
-        (id, v, math.sqrt(n), qq, qs, ql1)
-      })
-      .toDF("query_id", "qemb", "qnrm", "qq", "qs", "ql1")
-      .filter($"qnrm" > 0)
-      .transform(graft.functions.Materialize.cut) // feeds probe selection and the rerank join
-    val probeW = Window.partitionBy($"query_id")
-      .orderBy($"cdist".asc, $"cell".asc)
-    val probes = qz
-      .join(broadcast(centroids))
-      .select($"query_id", $"qq", $"qs", $"ql1", $"qnrm", $"cell",
-        ($"qnrm" * $"qnrm"
-          - lit(2.0) * native.double_dot($"qemb", $"cemb")
-          + native.double_dot($"cemb", $"cemb")).as("cdist"))
-      .withColumn("prank", row_number().over(probeW))
-      .filter($"prank" <= nprobe)
-      .select($"query_id", $"qq", $"qs", $"ql1", $"qnrm", $"cell")
-    // int8 candidate scoring: approx cosine + certified error radius
-    val d = lit(0.25) * least(length($"qq"), length($"q")).cast("double")
-    val cand = probes
-      .join(index.cells.filter($"nrm" > 0)
-        .select($"vec_id", $"cell", $"q", $"scale", $"l1", $"nrm"), "cell")
-      .select($"query_id", $"vec_id",
-        (($"qs" * $"scale" * native.int8_dot($"qq", $"q")) / ($"qnrm" * $"nrm")).as("approx"),
-        (($"qs" * $"scale" * (($"ql1" + $"l1") / lit(2.0) + d)) / ($"qnrm" * $"nrm")).as("err"))
-    // rerank threshold: the topK-th largest certified LOWER bound per
-    // query, spread to every candidate by a second window over the SAME
-    // query_id partitioning — one exchange of (id, id, 2 doubles) rows
-    // serves both windows, no self-join, no second candidate pass.
-    // Queries with < topK candidates have no rank-topK row → null thresh
-    // → rerank everything.
-    val lbW = Window.partitionBy($"query_id")
-      .orderBy(($"approx" - $"err").desc, $"vec_id".asc)
-    val survivors = cand
-      .withColumn("lbrank", row_number().over(lbW))
-      .withColumn("thresh",
-        max(when($"lbrank" === topK, $"approx" - $"err"))
-          .over(Window.partitionBy($"query_id")))
-      .filter($"approx" + $"err" >= coalesce($"thresh", lit(Double.NegativeInfinity)))
-      .select($"query_id", $"vec_id")
-    // exact rerank of the certified superset: float arrays re-enter by id
-    // for survivors only (AQE broadcasts the survivor side at scale — the
-    // corpus side streams, unshuffled)
-    val rankW = Window.partitionBy($"query_id")
-      .orderBy($"cos".desc, $"vec_id".asc)
-    survivors
-      .join(index.cells.select($"vec_id", $"embedding", $"nrm"), "vec_id")
-      .join(qz.select($"query_id", $"qemb", $"qnrm"), "query_id")
-      .select($"query_id", $"vec_id",
-        (native.double_dot($"qemb", $"embedding") / ($"qnrm" * $"nrm")).as("cos"))
-      .withColumn("rank", row_number().over(rankW))
-      .filter($"rank" <= topK)
-  }
+  def searchQuantized(index: Index, queries: DataFrame, topK: Int, nprobe: Int): DataFrame =
+    Knn(queries, Knn.Cells(index.model.centroids, nprobe), Knn.Trained(index.cells),
+      int8 = true, topK)
 }

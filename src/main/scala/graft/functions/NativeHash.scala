@@ -785,7 +785,9 @@ case class DecimalDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Plain-double dot product (see [[ExprKernels.doubleDot]]). */
+/** Plain-double dot product (see [[ExprKernels.doubleDot]]). NULL when
+  * either array is NULL; arrays of unequal length dot over the shorter
+  * length (an empty array gives 0.0); a NaN component gives NaN. */
 case class DoubleDot(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
@@ -799,7 +801,9 @@ case class DoubleDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Int8 dot product over binary columns (see [[ExprKernels.int8Dot]]). */
+/** Int8 dot product over binary columns (see [[ExprKernels.int8Dot]]).
+  * NULL when either input is NULL; inputs of unequal length dot over the
+  * shorter length (an empty input gives 0). */
 case class Int8Dot(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes = Seq(BinaryType, BinaryType)
@@ -900,7 +904,10 @@ case class MinHashSigs(child: Expression, k: Int)
     copy(child = newChild)
 }
 
-/** Sign-random-projection LSH bucket (see [[ExprKernels.lshBucket]]). */
+/** Sign-random-projection LSH bucket (see [[ExprKernels.lshBucket]]).
+  * NULL for a NULL vector; an empty vector's plane sums are all exactly
+  * 0, so it lands in the all-ones bucket; a NaN component throws
+  * NumberFormatException (its sign is undefined). */
 case class LshBucket(child: Expression, numPlanes: Int)
     extends UnaryExpression with ExpectsInputTypes {
   require(numPlanes >= 1 && numPlanes <= 63, s"numPlanes must be in [1, 63], got $numPlanes")
@@ -926,7 +933,9 @@ case class Tokens(child: Expression) extends UnaryExpression with ExpectsInputTy
     copy(child = newChild)
 }
 
-/** Random projection onto k md5 hyperplanes (see [[ExprKernels.rpProject]]). */
+/** Random projection onto k md5 hyperplanes (see [[ExprKernels.rpProject]]).
+  * NULL for a NULL vector; an empty vector projects to k zeros; a NaN or
+  * infinite product throws NumberFormatException. */
 case class RpProject(child: Expression, k: Int)
     extends UnaryExpression with ExpectsInputTypes {
   require(k >= 1 && k <= 64, s"rp_project: k must be in [1, 64], got $k")

@@ -145,7 +145,6 @@ object WebSocket {
     private val server = new ServerSocket()
     server.bind(new InetSocketAddress(host, port))
     @volatile private var running = true
-    def localPort: Int = server.getLocalPort
 
     private val acceptor = new Thread(() => {
       while (running) {

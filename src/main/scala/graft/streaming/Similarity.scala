@@ -1,10 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-import graft.functions.{native, AnnIndex}
+import graft.functions.{AnnIndex, Knn}
 
 /** Streaming similarity search: a stream of query vectors against a
   * static corpus — the streaming face of `SimilarityOps.similarity_ann_lsh`
@@ -30,81 +28,22 @@ import graft.functions.{native, AnnIndex}
   * rerank joins the bucketed-by-`vec_id` table the same way. The
   * corpus-DataFrame overloads remain for ad-hoc use and recompute per
   * trigger — fine for small/cached corpora, wrong at 10⁹ rows.
+  *
+  * Every face forwards to [[graft.functions.Knn]], the one plan builder;
+  * `k` and `nprobe` must be at least 1, checked when the face is called.
   */
 object Similarity {
 
-  /** Top-k fold per query id: stateless (per-batch complete groups). */
-  private final class TopK(k: Int)
-      extends StatefulProcessor[Long, (Long, Long, Double), (Long, Long, Double)] {
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = ()
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Double)],
-        timerValues: TimerValues): Iterator[(Long, Long, Double)] = {
-      // ties broken on vec_id for determinism; under this ordering the
-      // WORST hit (lowest cos, then highest id) is the ordering maximum,
-      // which is exactly what PriorityQueue.dequeue removes
-      val ord: Ordering[(Long, Long, Double)] =
-        Ordering.by { case (_, id, cos) => (-cos, id) }
-      val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Long, Double)](ord)
-      rows.foreach { r =>
-        heap.enqueue(r)
-        if (heap.size > k) heap.dequeue() // drop the current worst
-      }
-      heap.dequeueAll.reverse.iterator // dequeue order is worst→best; emit best-first
-    }
-  }
+  private def knn(queries: Dataset[(Long, Array[Float])], planes: Int, nprobe: Int,
+                  side: Knn.Side, int8: Boolean, k: Int): DataFrame =
+    Knn(queries.toDF("query_id", "qemb"), Knn.Buckets(planes, nprobe), side, int8, k)
+      .select("query_id", "vec_id", "cos")
 
-  /** One row per (query, probed bucket): `(query_id, qemb, qnrm, bucket)`.
-    * Zero-norm queries are excluded (cosine undefined — an unguarded 0/0
-    * NaN would outrank every real hit under desc ordering). nprobe = 1 is
-    * the plain own-bucket probe and pays no projection cost; nprobe > 1
-    * ranks buckets by [[AnnIndex.multiProbe]]'s perturbation score over
-    * the SAME hyperplanes `lsh_bucket` signs. */
-  private def probedQueries(queries: Dataset[(Long, Array[Float])],
-                            planes: Int, nprobe: Int): DataFrame = {
-    requireProbeGeometry(planes, nprobe)
-    val spark = queries.sparkSession
+  /** The streaming faces' tuple columns keep their names `_1`, `_2`, `_3`. */
+  private def stream(df: DataFrame): Dataset[(Long, Long, Double)] = {
+    val spark = df.sparkSession
     import spark.implicits._
-    val projCol: Column =
-      if (nprobe > 1) native.rp_project($"qemb", planes)
-      else typedlit(Array.empty[Double])
-    val base = queries.toDF("query_id", "qemb")
-      .select($"query_id", $"qemb",
-        sqrt(native.double_dot($"qemb", $"qemb")).as("qnrm"),
-        native.lsh_bucket($"qemb", planes).as("bucket"),
-        projCol.as("projs"))
-      .filter($"qnrm" > 0)
-      .as[(Long, Array[Float], Double, Long, Array[Double])]
-    base.flatMap { case (id, v, qnrm, b, projs) =>
-      val probes = if (nprobe <= 1) Array(b) else AnnIndex.multiProbe(b, projs, nprobe)
-      probes.iterator.map(pb => (id, v, qnrm, pb))
-    }.toDF("query_id", "qemb", "qnrm", "bucket")
-  }
-
-  /** The bucket probe join + exact cosine — ONE definition consumed by
-    * both the streaming fold ([[knnCore]]) and the batch window
-    * ([[knnBatch]]), so the two faces' spec-pinned parity cannot be
-    * broken by a drive-by change to only one of them. `probed` needs
-    * (query_id, qemb, qnrm, bucket); `statics` (vec_id, embedding, nrm,
-    * bucket). */
-  private def scoredCandidates(probed: DataFrame,
-                               statics: DataFrame): DataFrame = {
-    val spark = probed.sparkSession
-    import spark.implicits._
-    probed.join(statics, "bucket") // stream-static: stateless, no watermark
-      .select($"query_id", $"vec_id",
-        (native.double_dot($"qemb", $"embedding") / ($"qnrm" * $"nrm")).as("cos"))
-  }
-
-  /** The probe join + exact cosine + top-k fold shared by every float
-    * path. `statics` needs (vec_id, embedding, nrm, bucket). */
-  private def knnCore(probed: DataFrame, statics: DataFrame,
-                      k: Int): Dataset[(Long, Long, Double)] = {
-    val spark = probed.sparkSession
-    import spark.implicits._
-    scoredCandidates(probed, statics)
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .transformWithState(new TopK(k), TimeMode.None(), OutputMode.Append())
+    df.toDF("_1", "_2", "_3").as[(Long, Long, Double)]
   }
 
   /** One row per (query, hit): `(query_id, vec_id, cosine)`, the top `k`
@@ -115,180 +54,18 @@ object Similarity {
     * Zero-norm corpus rows are excluded like zero-norm queries. */
   def streamKnn(queries: Dataset[(Long, Array[Float])], corpus: DataFrame,
                 k: Int, planes: Int = 8,
-                nprobe: Int = 1): Dataset[(Long, Long, Double)] = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val statics = corpus
-      .select($"vec_id", $"embedding",
-        sqrt(native.double_dot($"embedding", $"embedding")).as("nrm"),
-        native.lsh_bucket($"embedding", planes).as("bucket"))
-      .filter($"nrm" > 0)
-    knnCore(probedQueries(queries, planes, nprobe), statics, k)
-  }
+                nprobe: Int = 1): Dataset[(Long, Long, Double)] =
+    stream(knn(queries, planes, nprobe, Knn.Corpus(corpus), int8 = false, k))
 
   /** [[streamKnn]] against a persisted [[AnnIndex]]: the static side is
     * the bucketed probe table — pre-computed columns, no per-trigger
-    * recompute, no Exchange on the corpus side of the join. */
+    * recompute, no Exchange on the corpus side of the join. Tombstoned
+    * ids are filtered out of candidate generation by a broadcast
+    * anti-join, re-resolved per trigger, so a live stream honors new
+    * deletions at its next micro-batch. */
   def streamKnn(queries: Dataset[(Long, Array[Float])], index: AnnIndex.Handle,
-                k: Int, nprobe: Int): Dataset[(Long, Long, Double)] = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    // tombstoned (deleted) ids are filtered OUT of candidate generation
-    // — a broadcast anti-join, so the corpus side stays Exchange-free;
-    // re-resolved per trigger like the rest of the static side, so a
-    // live stream honors new deletions at its next micro-batch
-    val statics = AnnIndex.withoutTombstoned(spark, index,
-      AnnIndex.probeSide(spark, index)
-        .select($"vec_id", $"embedding", $"nrm", $"bucket"))
-    knnCore(probedQueries(queries, index.planes, nprobe), statics, k)
-  }
-
-  /** Certified-survivor filter per query id (stateless per-batch groups,
-    * like [[TopK]]): rows are a tagged union — ONE query-vector row
-    * (isQuery = true, carrying qemb/qnrm) plus the int8-scored candidate
-    * rows (approx ± err certified cosine intervals; the explicit boolean
-    * tag rather than a sentinel id, because any Long is a legal corpus
-    * vec_id). Emits the survivor superset `(query_id, vec_id, qemb,
-    * qnrm)`: every candidate whose upper bound reaches the k-th largest
-    * lower bound — the same provable filter-verify margin as
-    * [[graft.functions.Ivf.searchQuantized]], so the exact rerank
-    * downstream cannot lose a true winner.
-    *
-    * Memory is OUTPUT-bounded, not occupancy-bounded (the r9 verdict's
-    * remaining heap risk): the threshold needs only the k largest
-    * certified lower bounds — a size-k min-heap — and the candidate
-    * buffer holds only rows still viable against the RUNNING threshold,
-    * compacted geometrically as it rises. A candidate whose upper bound
-    * is already below the running threshold can never reach the final
-    * one (the threshold only rises), so dropping it immediately is
-    * exact: the emitted set is bit-identical to the buffer-everything
-    * version. Worst case (all intervals overlapping) the buffer is the
-    * size of the emitted survivor set itself — memory proportional to
-    * what must be output, independent of how many corpus rows share the
-    * probed buckets. */
-  private final class Survivors(k: Int)
-      extends StatefulProcessor[Long, (Long, Boolean, Long, Double, Double, Array[Float], Double),
-        (Long, Long, Array[Float], Double)] {
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = ()
-    override def handleInputRows(key: Long,
-        rows: Iterator[(Long, Boolean, Long, Double, Double, Array[Float], Double)],
-        timerValues: TimerValues): Iterator[(Long, Long, Array[Float], Double)] = {
-      var qemb: Array[Float] = null
-      var qnrm = 0.0
-      // k largest lower bounds seen so far; head = running threshold
-      val lbHeap = scala.collection.mutable.PriorityQueue.empty[Double](Ordering[Double].reverse)
-      def thresh: Double =
-        if (lbHeap.size < k) Double.NegativeInfinity else lbHeap.head
-      val viable = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Double)]
-      var compactAt = math.max(2 * k, 64)
-      rows.foreach {
-        case (_, true, _, _, _, emb, nrm) => qemb = emb; qnrm = nrm
-        case (_, false, vid, a, e, _, _) =>
-          if (a + e >= thresh) { // below the running threshold = provably out
-            viable += ((vid, a, e))
-            if (lbHeap.size < k) lbHeap.enqueue(a - e)
-            else if (a - e > lbHeap.head) { lbHeap.dequeue(); lbHeap.enqueue(a - e) }
-            if (viable.size >= compactAt) {
-              val t = thresh
-              val kept = viable.filter { case (_, a2, e2) => a2 + e2 >= t }
-              viable.clear()
-              viable ++= kept
-              compactAt = math.max(2 * viable.size, math.max(2 * k, 64))
-            }
-          }
-      }
-      if (qemb == null || viable.isEmpty) Iterator.empty
-      else {
-        val t = thresh
-        val q = qemb
-        val n = qnrm
-        viable.iterator.collect {
-          case (vid, a, e) if a + e >= t => (key, vid, q, n)
-        }
-      }
-    }
-  }
-
-  /** The int8 filter-verify pipeline shared by the quantized paths:
-    * probe join on the int8 sidecar, certified survivor filter, exact
-    * rerank by id, top-k fold. `taggedStatic` needs (vec_id, bucket,
-    * nrm, q, scale, l1); `floatStatic` needs (vec_id, embedding, nrm). */
-  /** Driver-side geometry check so an unsupported (planes, nprobe)
-    * combination fails at plan construction with a clear message, not
-    * per-task inside [[AnnIndex.multiProbe]] on the first micro-batch.
-    * Since round 17 multi-probe is query-directed (O(nprobe·planes) per
-    * query, no 2^planes enumeration), so the old planes ≤ 12 cap is
-    * gone — any geometry up to [[AnnIndex.MaxProbePlanes]] takes
-    * nprobe as a recall dial. */
-  private def requireProbeGeometry(planes: Int, nprobe: Int): Unit =
-    require(planes >= 1 && planes <= AnnIndex.MaxProbePlanes,
-      s"probe geometry supports planes in [1, ${AnnIndex.MaxProbePlanes}]; " +
-        s"got planes=$planes with nprobe=$nprobe")
-
-  /** The certified int8 cosine interval of `Ivf.searchQuantized`, as
-    * (approx, err) Columns over a row joining probe-side
-    * (qq, qs, ql1, qnrm) with a candidate (q, scale, l1, nrm) — ONE
-    * definition for the streaming filter-verify pipeline and the batch
-    * serving face, so a bound fix can never leave one of them with a
-    * stale (under-estimating) radius. */
-  private def certifiedInterval: (Column, Column) = {
-    val d = lit(0.25) * least(length(col("qq")), length(col("q"))).cast("double")
-    val approx = (col("qs") * col("scale") * native.int8_dot(col("qq"), col("q"))) /
-      (col("qnrm") * col("nrm"))
-    val err = (col("qs") * col("scale") * ((col("ql1") + col("l1")) / lit(2.0) + d)) /
-      (col("qnrm") * col("nrm"))
-    (approx, err)
-  }
-
-  private def knnQuantizedCore(queries: Dataset[(Long, Array[Float])],
-      taggedStatic: DataFrame, floatStatic: DataFrame, k: Int, planes: Int,
-      nprobe: Int): Dataset[(Long, Long, Double)] = {
-    requireProbeGeometry(planes, nprobe)
-    val spark = queries.sparkSession
-    import spark.implicits._
-    // stream side: quantize once per query, then explode probe buckets
-    val projCol: Column =
-      if (nprobe > 1) native.rp_project($"qemb", planes)
-      else typedlit(Array.empty[Double])
-    val qbase = queries.toDF("query_id", "qemb")
-      .select($"query_id", $"qemb",
-        sqrt(native.double_dot($"qemb", $"qemb")).as("qnrm"),
-        native.lsh_bucket($"qemb", planes).as("bucket"),
-        projCol.as("projs"))
-      .filter($"qnrm" > 0)
-    val qz = qbase
-      .as[(Long, Array[Float], Double, Long, Array[Double])]
-      .mapPartitions(_.flatMap { case (id, v, qnrm, b, projs) =>
-        val (qq, qs, ql1) = graft.functions.Ivf.quantize(v)
-        val probes = if (nprobe <= 1) Array(b) else AnnIndex.multiProbe(b, projs, nprobe)
-        probes.iterator.map(pb => (id, qnrm, pb, qq, qs, ql1))
-      })
-      .toDF("query_id", "qnrm", "bucket", "qq", "qs", "ql1")
-    // int8-scored candidates: approx cosine ± certified radius (the
-    // searchQuantized bound), all scalars — no arrays in these rows
-    val (approxC, errC) = certifiedInterval
-    val cands = qz.join(taggedStatic, "bucket")
-      .select($"query_id", lit(false).as("is_query"), $"vec_id",
-        approxC.as("approx"), errC.as("err"),
-        typedlit[Array[Float]](null).as("qemb"), lit(0.0).as("qnrm"))
-    // tagged union: one is_query row per query carries the float qemb
-    val qrows = qbase.select($"query_id", lit(true).as("is_query"), lit(0L).as("vec_id"),
-      lit(0.0).as("approx"), lit(0.0).as("err"), $"qemb", $"qnrm")
-    val survivors = qrows.unionByName(cands)
-      .as[(Long, Boolean, Long, Double, Double, Array[Float], Double)]
-      .groupByKey(_._1)
-      .transformWithState(new Survivors(k), TimeMode.None(), OutputMode.Append())
-      .toDF("query_id", "vec_id", "qemb", "qnrm")
-    // exact rerank of the certified superset: float arrays re-enter by id
-    survivors.join(floatStatic, "vec_id")
-      .select($"query_id", $"vec_id",
-        (native.double_dot($"qemb", $"embedding") / ($"qnrm" * $"nrm")).as("cos"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .transformWithState(new TopK(k), TimeMode.None(), OutputMode.Append())
-  }
+                k: Int, nprobe: Int): Dataset[(Long, Long, Double)] =
+    stream(knn(queries, index.planes, nprobe, Knn.Persisted(index), int8 = false, k))
 
   /** [[streamKnn]] with the int8 candidate ranking of
     * `Ivf.searchQuantized` wired into the stream-static probe join: the
@@ -300,36 +77,21 @@ object Similarity {
     * certified error interval; a per-query survivor filter keeps the
     * provable superset of the top k; float embeddings re-enter BY ID
     * for survivors only (≈ k + margin rows per query) for the exact
-    * rerank, then the [[TopK]] fold picks winners exactly as the float
-    * path does. Zero-norm corpus vectors and queries are excluded as in
-    * the batch path (cosine undefined).
+    * rerank, then the top-k fold picks winners exactly as the float
+    * path does.
     */
   def streamKnnQuantized(queries: Dataset[(Long, Array[Float])], corpus: DataFrame,
                          k: Int, planes: Int = 8,
-                         nprobe: Int = 1): Dataset[(Long, Long, Double)] = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    // static side, quantized per trigger: (vec_id, bucket, nrm, q, scale,
-    // l1) — the float embedding column is NOT in the probe join's
-    // projection. The AnnIndex overload reads all of this precomputed.
-    val taggedStatic = corpus
-      .select($"vec_id", $"embedding",
-        sqrt(native.double_dot($"embedding", $"embedding")).as("nrm"),
-        native.lsh_bucket($"embedding", planes).as("bucket"))
-      .filter($"nrm" > 0)
-      .as[(Long, Array[Float], Double, Long)]
-      .mapPartitions(_.map { case (id, v, nrm, bucket) =>
-        val (q, s, l1) = graft.functions.Ivf.quantize(v)
-        (id, bucket, nrm, q, s, l1)
-      })
-      .toDF("vec_id", "bucket", "nrm", "q", "scale", "l1")
-    val floatStatic = corpus
-      .select($"vec_id", $"embedding",
-        sqrt(native.double_dot($"embedding", $"embedding")).as("nrm"))
-      .filter($"nrm" > 0)
-    knnQuantizedCore(queries, taggedStatic, floatStatic, k, planes, nprobe)
-  }
+                         nprobe: Int = 1): Dataset[(Long, Long, Double)] =
+    stream(knn(queries, planes, nprobe, Knn.Corpus(corpus), int8 = true, k))
+
+  /** [[streamKnnQuantized]] against a persisted [[AnnIndex]]: the probe
+    * join reads the bucketed int8 sidecar (no recompute, no re-quantize,
+    * no Exchange on the corpus side) and the exact rerank reads the
+    * bucketed-by-id float table. */
+  def streamKnnQuantized(queries: Dataset[(Long, Array[Float])],
+      index: AnnIndex.Handle, k: Int, nprobe: Int): Dataset[(Long, Long, Double)] =
+    stream(knn(queries, index.planes, nprobe, Knn.Persisted(index), int8 = true, k))
 
   /** BATCH top-k against a persisted index with PROBE-SET PRUNING — the
     * serving face of [[streamKnn]]. The streaming probe join's static
@@ -344,7 +106,8 @@ object Similarity {
     * build the index with more physical buckets than probes per batch
     * to profit) and parquet's row-group stats prune within each file
     * (the probe table is sorted by bucket). Scan cost then scales with
-    * the QUERY BATCH, not the corpus. Winners are exactly
+    * the QUERY BATCH, not the corpus. A probe set covering more than half
+    * the bucket space skips the literal. Winners are exactly
     * [[streamKnn]]'s — same probes, same cosine, same (cos desc,
     * vec_id) tie order (spec-pinned).
     *
@@ -354,59 +117,14 @@ object Similarity {
     * bulk analytics belongs on [[streamKnn]]/the batch similarity ops),
     * so a re-evaluation-nondeterministic source cannot probe buckets
     * its collected bucket set never contained, and each serving trigger
-    * pays one query-side job, not two. Zero-norm queries are excluded
-    * as everywhere. */
+    * pays one query-side job, not two. */
   def knnBatch(queries: Dataset[(Long, Array[Float])],
                index: AnnIndex.Handle, k: Int,
-               nprobe: Int = 1): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    // take(bound + 1), not collect(): the bound must hold BEFORE driver
-    // memory is committed — an oversized batch must raise the loud
-    // error below, not an OutOfMemoryError mid-collect. take evaluates
-    // each partition at most once, so the exactly-once contract holds.
-    val probedRows = probedQueries(queries, index.planes, nprobe)
-      .as[(Long, Array[Float], Double, Long)].take(MaxServeProbeRows + 1)
-    require(probedRows.length <= MaxServeProbeRows,
-      s"knnBatch is the SERVING face: its query batch is collected " +
-        s"driver-side and this one explodes past $MaxServeProbeRows probe " +
-        "rows — shrink the batch or nprobe, " +
-        "or run bulk top-k through streamKnn / the batch similarity ops")
-    val probed = probedRows.toSeq.toDF("query_id", "qemb", "qnrm", "bucket")
-    val buckets = probedRows.iterator.map(_._4).toSet
-    val statics = AnnIndex.withoutTombstoned(spark, index,
-      pruneToBuckets(AnnIndex.probeSide(spark, index), index, buckets)
-        .select($"vec_id", $"embedding", $"nrm", $"bucket"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"cos".desc, $"vec_id".asc)
-    scoredCandidates(probed, statics)
-      .withColumn("rk", row_number().over(w)).filter($"rk" <= k)
-      .select($"query_id", $"vec_id", $"cos")
-  }
+               nprobe: Int = 1): DataFrame =
+    knn(queries, index.planes, nprobe, Knn.Persisted(index), int8 = false, k)
 
-  /** The serving faces' bucket pruning, GUARDED: push the probe set as
-    * a literal `bucket IN (…)` only while it can actually prune. A
-    * probe set covering more than half the logical bucket space (a big
-    * batch, or nprobe approaching 2^planes) prunes little but still
-    * costs the planner a thousands-long IN list — the full scan is the
-    * better plan there, and the join itself still drops non-probed
-    * buckets. */
-  private def pruneToBuckets(static: DataFrame, index: AnnIndex.Handle,
-                             buckets: Set[Long]): DataFrame = {
-    val total = 1L << math.min(index.planes, 62)
-    if (buckets.size * 2L > total) static
-    else {
-      val spark = static.sparkSession
-      import spark.implicits._
-      static.filter($"bucket".isin(buckets.toSeq: _*))
-    }
-  }
-
-  /** Probe-row bound for [[knnBatch]]'s driver-side collect: 256k rows
-    * ≈ ≤80 MB of float payload at dim 64 — far above any real serving
-    * trigger, far below anything that belongs on the cluster. */
-  val MaxServeProbeRows: Int = 1 << 18
+  /** Probe-row bound for the serving faces' driver-side collect. */
+  val MaxServeProbeRows: Int = Knn.MaxServeProbeRows
 
   /** [[knnBatch]] over the int8 SIDECAR — the two measured serving wins
     * composed: probe-set pruning (scan cost follows the query batch,
@@ -414,74 +132,17 @@ object Similarity {
     * is itself ~4× narrower (the int8 probe row carries d bytes + a few
     * scalars instead of the 4d-byte float embedding — the 2.4× winner
     * of BENCH_ANN_GEOM_r16's scan-bound regime). Candidates get the
-    * certified approx ± err cosine interval of `Ivf.searchQuantized`;
-    * the per-query survivor threshold is the k-th largest certified
-    * LOWER bound (fewer than k candidates → no threshold, all survive),
-    * so the float rerank — by id, through the bucketed-by-`vec_id` vec
-    * table — provably cannot lose a true winner. Winners are therefore
-    * exactly [[knnBatch]]'s == [[streamKnn]]'s, same (cos desc, vec_id)
-    * tie order (spec-pinned). Same driver-side collect contract and
+    * certified approx ± err cosine interval; the per-query survivor
+    * threshold is the k-th largest certified LOWER bound, so the float
+    * rerank — by id, through the bucketed-by-`vec_id` vec table —
+    * provably cannot lose a true winner. Winners are therefore exactly
+    * [[knnBatch]]'s == [[streamKnn]]'s, same (cos desc, vec_id) tie order
+    * (spec-pinned). Same driver-side collect contract and
     * [[MaxServeProbeRows]] bound as [[knnBatch]]. */
   def knnBatchQuantized(queries: Dataset[(Long, Array[Float])],
                         index: AnnIndex.Handle, k: Int,
-                        nprobe: Int = 1): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val probedRows = probedQueries(queries, index.planes, nprobe)
-      .as[(Long, Array[Float], Double, Long)].take(MaxServeProbeRows + 1)
-    require(probedRows.length <= MaxServeProbeRows,
-      s"knnBatchQuantized is the SERVING face: its query batch is " +
-        s"collected driver-side and this one explodes past " +
-        s"$MaxServeProbeRows probe rows — shrink the batch or nprobe, " +
-        "or run bulk top-k through streamKnnQuantized")
-    val buckets = probedRows.iterator.map(_._4).toSet
-    // quantize each DISTINCT query once on the driver (the batch is
-    // bounded); probe rows carry only (query_id, bucket) — the int8
-    // payload joins back per query, not per probe row
-    val qmap = probedRows.iterator
-      .map { case (id, v, qn, _) => id -> ((v, qn)) }.toMap
-    val qz = qmap.iterator.map { case (id, (v, qn)) =>
-      val (qq, qs, ql1) = graft.functions.Ivf.quantize(v)
-      (id, qn, qq, qs, ql1)
-    }.toSeq.toDF("query_id", "qnrm", "qq", "qs", "ql1")
-    val probePairs = probedRows.iterator
-      .map { case (id, _, _, b) => (id, b) }.toSeq
-      .toDF("query_id", "bucket")
-    // one float row per DISTINCT query for the exact rerank
-    val queriesDf = qmap.iterator
-      .map { case (id, (v, qn)) => (id, v, qn) }.toSeq
-      .toDF("query_id", "qemb", "qnrm")
-    val taggedStatic = AnnIndex.withoutTombstoned(spark, index,
-      pruneToBuckets(AnnIndex.probeSide(spark, index), index, buckets)
-        .select($"vec_id", $"bucket", $"nrm", $"q", $"scale", $"l1"))
-    // int8-scored candidates with the searchQuantized certified bound —
-    // the SAME shared interval definition the streaming pipeline uses
-    val (approxC, errC) = certifiedInterval
-    val cands = probePairs.join(taggedStatic, "bucket")
-      .join(broadcast(qz), "query_id")
-      .select($"query_id", $"vec_id",
-        approxC.as("approx"), errC.as("err"))
-    // batch certified filter: threshold = k-th largest lower bound
-    val wLb = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy(($"approx" - $"err").desc)
-    val thresholds = cands
-      .withColumn("lbrk", row_number().over(wLb))
-      .filter($"lbrk" === k)
-      .select($"query_id", ($"approx" - $"err").as("thresh"))
-    val survivors = cands.join(thresholds, Seq("query_id"), "left")
-      .filter($"thresh".isNull || ($"approx" + $"err") >= $"thresh")
-      .select($"query_id", $"vec_id")
-    // exact rerank of the certified superset: floats re-enter BY ID
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"cos".desc, $"vec_id".asc)
-    survivors.join(AnnIndex.vecSide(spark, index), "vec_id")
-      .join(broadcast(queriesDf), "query_id")
-      .select($"query_id", $"vec_id",
-        (native.double_dot($"qemb", $"embedding") / ($"qnrm" * $"nrm")).as("cos"))
-      .withColumn("rk", row_number().over(w)).filter($"rk" <= k)
-      .select($"query_id", $"vec_id", $"cos")
-  }
+                        nprobe: Int = 1): DataFrame =
+    knn(queries, index.planes, nprobe, Knn.Persisted(index), int8 = true, k)
 
   /** The SERVING LOOP: a query stream answered per micro-batch through
     * [[knnBatch]], so every trigger's corpus scan is pruned to that
@@ -490,41 +151,20 @@ object Similarity {
     * receives each epoch's top-k (query_id, vec_id, cos) and the epoch
     * id; start the returned writer with a checkpointLocation as usual.
     * Tombstones and keyed appends are honored per trigger exactly as on
-    * the streaming path (the catalog tables re-resolve per batch). */
+    * the streaming path (the catalog tables re-resolve per batch). A bad
+    * `k` or `nprobe` fails this call, not the running query at its first
+    * micro-batch. */
   def streamKnnServe(queries: Dataset[(Long, Array[Float])],
       index: AnnIndex.Handle, k: Int, nprobe: Int,
       quantized: Boolean = false)(
       consume: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[(Long, Array[Float])] = {
-    // validate DRIVER-SIDE before the stream starts — the entry-point
-    // contract every streaming face keeps: a bad k or an
-    // unsupported (planes, nprobe) must fail the call, not kill the
-    // running query asynchronously at its first micro-batch
-    require(k >= 1, s"k must be >= 1, got $k")
-    requireProbeGeometry(index.planes, nprobe)
+    Knn.check(k, Knn.Buckets(index.planes, nprobe))
     queries.writeStream.foreachBatch {
       (b: Dataset[(Long, Array[Float])], epoch: Long) =>
         consume(
           if (quantized) knnBatchQuantized(b, index, k, nprobe)
           else knnBatch(b, index, k, nprobe), epoch)
     }
-  }
-
-  /** [[streamKnnQuantized]] against a persisted [[AnnIndex]]: the probe
-    * join reads the bucketed int8 sidecar (no recompute, no re-quantize,
-    * no Exchange on the corpus side) and the exact rerank reads the
-    * bucketed-by-id float table. */
-  def streamKnnQuantized(queries: Dataset[(Long, Array[Float])],
-      index: AnnIndex.Handle, k: Int, nprobe: Int): Dataset[(Long, Long, Double)] = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    // tombstone filter on the CANDIDATE side only: the rerank joins
-    // back probe-side survivors, so a deleted id can never reach it
-    val taggedStatic = AnnIndex.withoutTombstoned(spark, index,
-      AnnIndex.probeSide(spark, index)
-        .select($"vec_id", $"bucket", $"nrm", $"q", $"scale", $"l1"))
-    val floatStatic = AnnIndex.vecSide(spark, index)
-    knnQuantizedCore(queries, taggedStatic, floatStatic, k, index.planes, nprobe)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
 
 /** Source surface (SURVEY §2.2). The reference's Kafka machinery —
   * per-partition offset ranges, commit-after-write, partition discovery
@@ -59,11 +58,6 @@ object Sources {
     */
   def textDir(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 100): DataFrame =
     spark.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger).text(dir)
-
-  /** Typed file-stream over any format with an explicit schema. */
-  def fileStream(spark: SparkSession, dir: String, format: String,
-                 schema: StructType): DataFrame =
-    spark.readStream.schema(schema).format(format).load(dir)
 
   /** from_tcp (sources.py:212): line-delimited socket. */
   def socket(spark: SparkSession, host: String, port: Int): DataFrame =

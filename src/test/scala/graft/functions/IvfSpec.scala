@@ -233,4 +233,41 @@ class IvfSpec extends SparkSuite {
     assert(results(rebucketed) == results(index),
       "re-persist under the same name corrupted the index")
   }
+
+  test("quantize == embed_quantize's transform spelling: zeros, ±0.0, subnormals, ±MaxValue, half units") {
+    val r = new scala.util.Random(11)
+    val edges = Array(0f, -0f, Float.MinPositiveValue, -Float.MinPositiveValue, 1e-40f,
+      -3e-39f, Float.MaxValue, -Float.MaxValue, 1f, -1f)
+    // scale = 2^e is exact, so x = (j + 0.5)·2^e sits exactly half a unit
+    // between two quantization steps
+    def halves(): Array[Float] = {
+      val e = r.nextInt(40) - 20
+      val unit = math.pow(2, e)
+      (127.0 * unit +: Seq.fill(1 + r.nextInt(12))((r.nextInt(254) - 127 + 0.5) * unit))
+        .map(_.toFloat).toArray
+    }
+    val vecs: Seq[Array[Float]] = Seq(Array.fill(8)(0f), Array(0f, -0f, -0f),
+      Array(127f, 0.5f, -0.5f, 1.5f, -1.5f, 126.5f, -126.5f), edges) ++
+      Seq.fill(100)(halves()) ++
+      Seq.fill(100)(Array.fill(1 + r.nextInt(16))(
+        if (r.nextInt(3) == 0) edges(r.nextInt(edges.length)) else (r.nextGaussian() * 10).toFloat))
+    // SimilarityOps embed_quantize's (scale, q) spelling
+    val spelled = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding")
+      .withColumn("maxabs", expr(
+        "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))"))
+      .withColumn("scale", $"maxabs" / 127.0)
+      .withColumn("q", expr(
+        "CASE WHEN maxabs = 0 THEN transform(embedding, x -> 0L) " +
+          "ELSE transform(embedding, x -> " +
+          "CAST(floor(CAST(x AS DOUBLE) / scale + 0.5d) AS BIGINT)) END"))
+      .select($"vec_id", $"scale", $"q").as[(Long, Double, Seq[Long])].collect()
+    assert(spelled.length == vecs.length)
+    spelled.foreach { case (i, scale, q) =>
+      val (qq, s, l1) = Ivf.quantize(vecs(i.toInt))
+      assert(java.lang.Double.doubleToLongBits(s) == java.lang.Double.doubleToLongBits(scale),
+        s"vector $i: scale $s vs $scale")
+      assert(qq.map(_.toLong).toSeq == q, s"vector $i: ${qq.toSeq} vs $q")
+      assert(l1 == q.map(math.abs).sum, s"vector $i: l1 $l1")
+    }
+  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, Literal, Lower, RegExpReplace}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
@@ -161,26 +161,30 @@ object KernelProps extends Properties("ExprKernels") {
         math.abs(dd - ExprKernels.decimalDot(a, b)) <= math.max(sumAbs * 1.4e-14, 1e-15)
     }
 
+  // plane values re-derived HERE from the documented formula
+  // (r(h,i) = ((md5("h|i")[0:6hex] % 1000) - 500)/1000.0) — an
+  // independent spelling, not a call into the kernel's own cache
+  private def rpProjectModel(v: Array[Float], k: Int): Seq[Double] = {
+    def plane(h: Int, dim: Int): Array[Double] =
+      Array.tabulate(dim) { i0 =>
+        val hex6 = java.lang.Long.parseLong(md5hex(s"$h|${i0 + 1}").take(6), 16)
+        ((hex6 % 1000) - 500) / 1000.0
+      }
+    (1 to k).map { h =>
+      val r = plane(h, v.length)
+      v.zip(r).foldLeft(JBigDecimal.ZERO) { case (acc, (x, rv)) =>
+        val p = x.toDouble * rv
+        if (p == 0.0) acc
+        else acc.add(JBigDecimal.valueOf(p).setScale(20, RoundingMode.HALF_UP))
+      }.doubleValue()
+    }
+  }
+
   property("rpProject == independently derived md5-plane BigDecimal model") =
     forAll(vec, Gen.choose(1, 16)) { (v, k) =>
-      // plane values re-derived HERE from the documented formula
-      // (r(h,i) = ((md5("h|i")[0:6hex] % 1000) - 500)/1000.0) — an
-      // independent spelling, not a call into the kernel's own cache
-      def plane(h: Int, dim: Int): Array[Double] =
-        Array.tabulate(dim) { i0 =>
-          val hex6 = java.lang.Long.parseLong(md5hex(s"$h|${i0 + 1}").take(6), 16)
-          ((hex6 % 1000) - 500) / 1000.0
-        }
       val got = ExprKernels.rpProject(new GenericArrayData(v), k)
         .toDoubleArray().toSeq
-      val model = (1 to k).map { h =>
-        val r = plane(h, v.length)
-        v.zip(r).foldLeft(JBigDecimal.ZERO) { case (acc, (x, rv)) =>
-          val p = x.toDouble * rv
-          if (p == 0.0) acc
-          else acc.add(JBigDecimal.valueOf(p).setScale(20, RoundingMode.HALF_UP))
-        }.doubleValue()
-      }
+      val model = rpProjectModel(v, k)
       got == model
     }
 
@@ -226,6 +230,63 @@ object KernelProps extends Properties("ExprKernels") {
     Seq(GenerateUnsafeProjection.generate(Seq(e)),
       InterpretedUnsafeProjection.createProjection(Seq(e)))
       .map(proj => (row: InternalRow) => proj(row).copy())
+
+  // the kNN kernels, each under codegen and interpreted evaluation
+  // against its model: NULL and empty arrays, arrays of unequal length
+  // (both dots read the shorter length), NaN and ±0.0. An outcome is the
+  // value (doubles by bit pattern, so NaN equals NaN and -0.0 is not
+  // 0.0), NULL, or the class of the exception thrown
+  private type Outcome = Either[Class[_], Option[Any]]
+  private def outcome(f: => Option[Any]): Outcome =
+    scala.util.Try(f).toEither.left.map(_.getClass)
+
+  private def agrees(e: org.apache.spark.sql.catalyst.expressions.Expression,
+      row: InternalRow, read: InternalRow => Any, model: => Option[Any]): Boolean = {
+    val want = outcome(model)
+    evals(e).forall(eval => outcome {
+      val out = eval(row)
+      if (out.isNullAt(0)) None else Some(read(out))
+    } == want)
+  }
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+  private def floatArg(i: Int) = BoundReference(i, ArrayType(FloatType), nullable = true)
+  private def floats(v: Option[Array[Float]]): ArrayData = v.map(new GenericArrayData(_)).orNull
+
+  private def knnArray[T: scala.reflect.ClassTag](elem: Gen[T]): Gen[Option[Array[T]]] =
+    Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some(Array.empty[T])),
+      8 -> Gen.listOf(elem).map(xs => Some(xs.toArray)))
+  private val knnVec: Gen[Option[Array[Float]]] = knnArray(Gen.frequency(
+    8 -> Gen.chooseNum(-100f, 100f), 1 -> Gen.oneOf(0f, -0f, Float.NaN)))
+
+  property("double_dot == shorter-length IEEE fold, codegen and interpreted") =
+    forAll(knnVec, knnVec) { (a, b) =>
+      val model = for (x <- a; y <- b) yield bits(x.zip(y).foldLeft(0.0) {
+        case (s, (p, q)) => s + p.toDouble * q.toDouble })
+      agrees(DoubleDot(floatArg(0), floatArg(1)), InternalRow(floats(a), floats(b)),
+        r => bits(r.getDouble(0)), model)
+    }
+
+  property("int8_dot == shorter-length Long fold, codegen and interpreted") =
+    forAll(knnArray(Gen.chooseNum(Byte.MinValue, Byte.MaxValue)),
+      knnArray(Gen.chooseNum(Byte.MinValue, Byte.MaxValue))) { (a, b) =>
+      val model = for (x <- a; y <- b) yield x.zip(y).foldLeft(0L) {
+        case (s, (p, q)) => s + p.toLong * q.toLong }
+      val arg = (i: Int) => BoundReference(i, BinaryType, nullable = true)
+      agrees(Int8Dot(arg(0), arg(1)), InternalRow(a.orNull, b.orNull), _.getLong(0), model)
+    }
+
+  property("lsh_bucket == always-exact path, codegen and interpreted") =
+    forAll(knnVec, Gen.choose(1, 16)) { (v, planes) =>
+      agrees(LshBucket(floatArg(0), planes), InternalRow(floats(v)), _.getLong(0),
+        v.map(x => ExprKernels.lshBucketExact(new GenericArrayData(x), planes)))
+    }
+
+  property("rp_project == md5-plane BigDecimal model, codegen and interpreted") =
+    forAll(knnVec, Gen.choose(1, 8)) { (v, k) =>
+      agrees(RpProject(floatArg(0), k), InternalRow(floats(v)),
+        _.getArray(0).toDoubleArray().toSeq.map(bits), v.map(rpProjectModel(_, k).map(bits)))
+    }
 
   property("ngramHits == sliding-window membership model") =
     forAll(ngramText, ngramProfiles) { (t, profiles) =>

@@ -565,4 +565,31 @@ class SimilarityStreamSpec extends SparkSuite {
       corpus.unpersist()
     }
   }
+
+  test("k = 0 or nprobe = 0 fails the call: no job runs, no stream starts") {
+    import graft.functions.AnnIndex
+    val corpus = Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f))).toDF("vec_id", "embedding")
+    val h = AnnIndex.build(corpus, "simspec_args", planes = 2, buckets = 2)
+    val batch = Seq((10L, Array(1f, 0.5f))).toDS()
+    val in = MemoryStream[(Long, Array[Float])]
+    Seq((0, 1), (5, 0)).foreach { case (k, nprobe) =>
+      val calls: Seq[(String, () => Any)] = Seq(
+        "streamKnn(corpus)" -> (() => Similarity.streamKnn(in.toDS(), corpus, k = k, nprobe = nprobe)),
+        "streamKnn(index)" -> (() => Similarity.streamKnn(in.toDS(), h, k = k, nprobe = nprobe)),
+        "streamKnnQuantized(corpus)" ->
+          (() => Similarity.streamKnnQuantized(in.toDS(), corpus, k = k, nprobe = nprobe)),
+        "streamKnnQuantized(index)" ->
+          (() => Similarity.streamKnnQuantized(in.toDS(), h, k = k, nprobe = nprobe)),
+        "knnBatch" -> (() => Similarity.knnBatch(batch, h, k = k, nprobe = nprobe)),
+        "knnBatchQuantized" -> (() => Similarity.knnBatchQuantized(batch, h, k = k, nprobe = nprobe)),
+        "streamKnnServe" ->
+          (() => Similarity.streamKnnServe(in.toDS(), h, k = k, nprobe = nprobe)((_, _) => ())))
+      calls.foreach { case (name, call) =>
+        val (e, jobs) = jobsDuring(intercept[IllegalArgumentException](call()))
+        assert(e.getMessage.contains(s"k=$k, nprobe=$nprobe"), s"$name: ${e.getMessage}")
+        assert(jobs == 0, s"$name ran $jobs jobs before failing")
+      }
+    }
+    assert(spark.streams.active.isEmpty, "a failed call started a stream")
+  }
 }
