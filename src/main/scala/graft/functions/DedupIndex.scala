@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental (snapshot-to-snapshot) near-dup dedup — the daily-ingest
@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * verdicts, and appends its own band rows as the index delta.
   *
   * Shares the batch pipeline's exact LSH geometry and edge rule
-  * (queries.DedupOps / streaming.Dedup: k=8 MinHashes, 4 bands of 2,
-  * verified at signature agreement ≥ 0.5), so incremental verdicts agree
+  * ([[Lsh.signature]], [[Lsh.bandRows]], [[Lsh.agrees]]; k=8 MinHashes,
+  * 4 bands of 2 by default), so incremental verdicts agree
   * with the one-shot batch computation: DedupIndexSpec pins that
   * chunked ingestion (index → probe → delta → probe …) produces verdicts
   * IDENTICAL to running the whole corpus as one batch, and identical to
@@ -39,7 +39,6 @@ object DedupIndex {
   // keeper. [[requireGeometry]] therefore checks the stored signature
   // width against the requested geometry up front and throws a
   // descriptive error (one tiny limit-1 job per probe call).
-  private val EstThreshold = 0.5
 
   /** Loud build/probe geometry-compatibility check (see object note);
     * graft-visible so streaming.Dedup.indexVerdicts runs the same guard. */
@@ -55,10 +54,32 @@ object DedupIndex {
     }
   }
 
-  /** Fraction of the k signatures agreeing — the shared edge rule. */
-  private def est(a: Column, b: Column, numHashes: Int): Column =
-    size(filter(zip_with(a, b, (x, y) => x === y), m => m))
-      .cast("double") / lit(numHashes.toDouble)
+  /** The band rows of `docs` (`doc_id`, `text` and any carried columns):
+    * the carried columns, the doc's signature `sigs`, and its `band` and
+    * `band_hash` ([[Lsh.bandRows]]: one NULL band row for a doc with no
+    * 3-shingle). The signature runs once per doc, under a
+    * [[KernelBarrier]]. */
+  private[graft] def bandRows(docs: DataFrame, geom: Lsh.Geometry): DataFrame = {
+    val carried = docs.columns.toSeq.filterNot(_ == "text").map(col)
+    KernelBarrier.over(docs.select(carried :+ Lsh.signature(col("text"), geom).as("sigs"): _*))
+      .select(carried ++ Seq(col("sigs"), Lsh.bandRows(col("sigs"), geom)): _*)
+  }
+
+  /** The index probe: every row of `banded` ([[bandRows]] shape) with
+    * `match_id`, the id of an index doc in the same band bucket whose
+    * signature [[Lsh.agrees]] with it, or NULL (a left join: a band row
+    * that matches nothing, the NULL band of a doc with no shingle
+    * included, stays once). */
+  private[graft] def probe(banded: DataFrame, index: DataFrame,
+      geom: Lsh.Geometry): DataFrame =
+    banded.as("n")
+      .join(index.as("o"),
+        col("n.band") === col("o.band") &&
+          col("n.band_hash") === col("o.band_hash") &&
+          col("n.doc_id") =!= col("o.doc_id") &&
+          Lsh.agrees(col("n.sigs"), col("o.sigs"), geom.numHashes),
+        "left")
+      .select(banded.columns.toSeq.map(c => col(s"n.$c")) :+ col("o.doc_id").as("match_id"): _*)
 
   /** The signature index rows of `docs` (doc_id, text): one row per
     * (doc, band) with the doc's full signature vector inlined —
@@ -68,14 +89,7 @@ object DedupIndex {
     * always keep. */
   def indexRows(docs: DataFrame,
       geom: Lsh.Geometry = Lsh.Small): DataFrame =
-    KernelBarrier.over(
-        docs.select(col("doc_id"), TextFunctions.shingles3(col("text")).as("sharr")))
-      .filter(size(col("sharr")) >= 1)
-      .select(col("doc_id"),
-        native.minhash_sigs(col("sharr"), geom.numHashes).as("sigs"))
-      .select(col("doc_id"), col("sigs"),
-        posexplode(Lsh.bandHashes(col("sigs"), geom.bands, geom.rows)))
-      .toDF("doc_id", "sigs", "band", "band_hash")
+    bandRows(docs.select("doc_id", "text"), geom).filter(col("band").isNotNull)
 
   /** Greedy verdicts for `newDocs` against the stored `index` (rows in
     * [[indexRows]] shape; may be empty) AND against earlier docs of the
@@ -90,25 +104,18 @@ object DedupIndex {
   def incrementalVerdicts(newDocs: DataFrame, index: DataFrame,
       geom: Lsh.Geometry = Lsh.Small): DataFrame = {
     requireGeometry(index, geom)
-    val nb = indexRows(newDocs, geom)
-    val vsOld = nb.as("n")
-      .join(index.as("o"),
-        col("n.band") === col("o.band") &&
-          col("n.band_hash") === col("o.band_hash") &&
-          col("n.doc_id") =!= col("o.doc_id") &&
-          est(col("n.sigs"), col("o.sigs"), geom.numHashes) >= EstThreshold)
-      .select(col("n.doc_id").as("doc_id"), col("o.doc_id").as("match_id"))
+    val nb = bandRows(newDocs.select("doc_id", "text"), geom)
+    // every new doc has a probe row, so the min over its rows is its verdict
+    val vsOld = probe(nb, index, geom).select("doc_id", "match_id")
     val vsNew = nb.as("a")
       .join(nb.as("b"),
         col("a.band") === col("b.band") &&
           col("a.band_hash") === col("b.band_hash") &&
           col("a.doc_id") > col("b.doc_id") &&
-          est(col("a.sigs"), col("b.sigs"), geom.numHashes) >= EstThreshold)
+          Lsh.agrees(col("a.sigs"), col("b.sigs"), geom.numHashes))
       .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("match_id"))
-    val roots = vsOld.unionByName(vsNew)
+    vsOld.unionByName(vsNew)
       .groupBy(col("doc_id")).agg(min(col("match_id")).as("match_id"))
-    newDocs.select(col("doc_id"))
-      .join(roots, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("match_id"), col("doc_id")).as("root_doc"),
         col("match_id").isNull.as("is_keeper"))

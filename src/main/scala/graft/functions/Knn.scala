@@ -111,14 +111,12 @@ private[graft] object Knn {
     val spark = queries.sparkSession
     val streaming = queries.isStreaming
     val serve = !streaming && side.isInstanceOf[Persisted]
+    // the query side is read twice below (probe rows and rerank rows,
+    // which need no quantizing); it is the small side, so it is not cut:
+    // nothing could release a cut that the returned plan still reads
     val q = {
       val base = nonZero(queries.select("query_id", "qemb"), "qemb", "qnrm")
-      if (!int8) base
-      else {
-        val z = withInt8(base, "qemb", Seq("qq", "qs", "ql1"))
-        // read twice below (probe rows and rerank rows): evaluate once
-        if (streaming || serve) z else Materialize.cut(z)
-      }
+      if (int8) withInt8(base, "qemb", Seq("qq", "qs", "ql1")) else base
     }
     // the int8 probe rows leave the float query vector behind
     val expanded = probeRows(q, probe,

@@ -1,13 +1,20 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** MinHash LSH banding, shared by the batch dedup pipeline
-  * (`queries.DedupOps`) and the streaming variant (`streaming.Dedup`) —
-  * one definition so bucket ids can never skew between the two: a doc
-  * deduplicated against a batch-built corpus and one arriving on a stream
-  * land in identical buckets.
+/** The MinHash near-duplicate rule, shared by the batch queries
+  * (`queries.DedupOps`), the dedup index ([[DedupIndex]]) and the
+  * streaming faces (`streaming.Dedup`): a doc's [[signature]], its
+  * [[bandRows]], and the edge rule [[agrees]] (signatures agreeing on at
+  * least [[EdgeThreshold]] of their k components). One definition each,
+  * so a doc deduplicated against a batch-built corpus, an index or a
+  * stream lands in identical buckets and pairs by the identical test.
   */
 object Lsh {
 
@@ -69,6 +76,55 @@ object Lsh {
   val EmbedBands = 4
   val EmbedBandBits: Int = EmbedPlanes / EmbedBands
   val EmbedCosineThreshold = 0.35
+
+  /** The est-Jaccard threshold of the edge rule: two docs are
+    * near-duplicates when their signatures agree on at least half of
+    * their components. */
+  val EdgeThreshold = 0.5
+
+  /** A doc's k MinHash signatures over the distinct 3-token shingles of
+    * `text`: all k NULL when it has no shingle (under 3 tokens), NULL for
+    * a NULL text. */
+  def signature(text: Column, geom: Geometry): Column =
+    native.minhash_sigs(native.shingles3(text), geom.numHashes)
+
+  /** Does a [[signature]] column hold signatures (the doc has a shingle)? */
+  def signed(sigs: Column): Column = element_at(sigs, 1).isNotNull
+
+  /** A doc's band rows: `posexplode_outer` into (`band`, `band_hash`),
+    * one row per band of a signed doc, and one row of NULLs for a doc
+    * without signatures, which no equi-join on the band key matches. */
+  def bandRows(sigs: Column, geom: Geometry): Column =
+    posexplode_outer(when(signed(sigs), bandHashes(sigs, geom.bands, geom.rows)))
+      .as(Seq("band", "band_hash"))
+
+  /** The fraction of the k signature components on which `a` and `b`
+    * agree: the est-Jaccard of the two docs. */
+  def agreement(a: Column, b: Column, numHashes: Int): Column =
+    size(filter(zip_with(a, b, (x, y) => x === y), m => m))
+      .cast("double") / lit(numHashes.toDouble)
+
+  /** The edge rule: [[agreement]] of at least [[EdgeThreshold]]. */
+  def agrees(a: Column, b: Column, numHashes: Int): Column =
+    agreement(a, b, numHashes) >= EdgeThreshold
+
+  /** [[agrees]] over two signatures held outside a plan (a streaming
+    * bucket's registered members): the same expression, resolved once
+    * here on the driver and evaluated interpreted per call. */
+  def agreesOn(spark: SparkSession, geom: Geometry): (Seq[String], Seq[String]) => Boolean = {
+    val t = ArrayType(StringType)
+    val plan = spark.createDataFrame(java.util.List.of[Row](),
+        StructType(Seq(StructField("a", t), StructField("b", t))))
+      .select(agrees(col("a"), col("b"), geom.numHashes)).queryExecution.analyzed
+    new Agrees(BindReferences.bindReference(plan.expressions.head, plan.children.head.output))
+  }
+
+  private final class Agrees(rule: Expression)
+      extends ((Seq[String], Seq[String]) => Boolean) with Serializable {
+    private def arr(s: Seq[String]) = new GenericArrayData(s.map(UTF8String.fromString).toArray[Any])
+    def apply(a: Seq[String], b: Seq[String]): Boolean =
+      rule.eval(InternalRow(arr(a), arr(b))) == true
+  }
 
   /** Array of `numBands` band-hash strings over a MinHash signature
     * array: band b = md5 of its ordered "h:sig" components (h the 1-based

@@ -860,7 +860,10 @@ case class NearestCentroidGated(child: Expression, model: CentroidModel)
 }
 
 /** LSH band hashes over a MinHash signature array (see
-  * [[ExprKernels.bandHashes]]). */
+  * [[ExprKernels.bandHashes]]). NULL for a NULL array; a NULL signature
+  * element drops out of its band's md5 input (a band of NULLs hashes the
+  * empty string); an array shorter than numBands × bandSize throws
+  * IllegalArgumentException. */
 case class BandHashes(child: Expression, numBands: Int, bandSize: Int)
     extends UnaryExpression with ExpectsInputTypes {
   require(numBands >= 1 && bandSize >= 1,
@@ -876,7 +879,9 @@ case class BandHashes(child: Expression, numBands: Int, bandSize: Int)
     copy(child = newChild)
 }
 
-/** SimHash over a token array (see [[ExprKernels.simHash]]). */
+/** SimHash over a token array (see [[ExprKernels.simHash]]). NULL for a
+  * NULL array; NULL tokens are skipped, so an empty array hashes to
+  * `bits` one bits. */
 case class SimHash(child: Expression, bits: Int)
     extends UnaryExpression with ExpectsInputTypes {
   require(bits >= 1 && bits <= 64, s"bits must be in [1, 64], got $bits")
@@ -890,7 +895,9 @@ case class SimHash(child: Expression, bits: Int)
     copy(child = newChild)
 }
 
-/** MinHash signatures over a shingle array (see [[ExprKernels.minHashSigs]]). */
+/** MinHash signatures over a shingle array (see [[ExprKernels.minHashSigs]]).
+  * NULL for a NULL array; an empty array gives k NULL signatures; NULL
+  * shingles are skipped. */
 case class MinHashSigs(child: Expression, k: Int)
     extends UnaryExpression with ExpectsInputTypes {
   require(k >= 1, s"k must be positive, got $k")
@@ -921,7 +928,9 @@ case class LshBucket(child: Expression, numPlanes: Int)
     copy(child = newChild)
 }
 
-/** Whitespace tokenization (see [[ExprKernels.tokens]]). */
+/** Whitespace tokenization (see [[ExprKernels.tokens]]). NULL for a NULL
+  * text; empty and all-space text give an empty array. It splits on the
+  * space byte only, so invalid UTF-8 passes through byte for byte. */
 case class Tokens(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -961,7 +970,8 @@ case class NfcNormalize(child: Expression) extends UnaryExpression with ExpectsI
     copy(child = newChild)
 }
 
-/** Distinct 3-token shingles (see [[ExprKernels.shingles3]]). */
+/** Distinct 3-token shingles (see [[ExprKernels.shingles3]]). NULL for
+  * a NULL text; under 3 [[Tokens]] give an empty array. */
 case class Shingles3(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions => TF, native}
+import graft.functions.{Lsh, TextFunctions => TF, native}
 
 /** Deduplication operators for training-data pipelines (north star):
   * exact hash-dedup, n-gram Jaccard, MinHash+LSH, SimHash.
@@ -192,9 +192,10 @@ object DedupOps extends QueryGroup {
     // discriminative signal and are dropped from the representation
     // (blocking, intersection AND sizes — consistently, so jaccard stays
     // well-defined); the per-shingle pair count is then ≤ MaxShingleDf²/2.
+    // The threshold is the MinHash edge rule's, which estimates this one.
     "dedup_ngram_jaccard" -> ((s, dir) =>
       jaccardPairs(shingleRows(t(s, dir, "documents")), MaxShingleDf)
-        .filter(col("jaccard") >= 0.5)
+        .filter(col("jaccard") >= Lsh.EdgeThreshold)
         .select(col("doc_a"), col("doc_b"), col("jaccard"))),
 
     // MinHash signatures + LSH banding → candidate pairs + estimated
@@ -233,7 +234,7 @@ object DedupOps extends QueryGroup {
     "dedup_clusters" -> ((s, dir) => {
       import s.implicits._
       val edges = minhashEstPairs(s, dir, graft.functions.Lsh.Small)
-        .filter($"est_jaccard" >= 0.5)
+        .filter($"est_jaccard" >= Lsh.EdgeThreshold)
         .select($"doc_a", $"doc_b")
       val labels = graft.functions.ConnectedComponents.labels(edges)
         .withColumnRenamed("id", "doc_id")
@@ -521,47 +522,39 @@ object DedupOps extends QueryGroup {
     * (band, band_hash) equi-join.
     */
   private def minhashEstPairs(s: SparkSession, dir: String,
-      geom: graft.functions.Lsh.Geometry): DataFrame = {
-    {
-      import s.implicits._
-      // sigs feeds the banding and both sides of the estimate join —
-      // Materialize.cut the k-string-per-doc signatures rather than
-      // re-hashing shingles (eager, computed once, storage picked by the
-      // session's fault-tolerance policy).
-      val sigs = widen(t(s, dir, "documents"))(_
-          .select($"doc_id", TF.shingles3($"text").as("sharr"))
-          .select($"doc_id", size($"sharr").as("n_sh"),
-            native.minhash_sigs($"sharr", geom.numHashes).as("sigs")))
-        .transform(graft.functions.Materialize.cut)
-        .filter($"n_sh" >= 1)
-        .select($"doc_id", $"sigs")
-      // band b (0-based) = md5 of its ordered "h:sig" components — the
-      // banding expression is shared with streaming.Dedup (functions.Lsh)
-      val banded = sigs.select($"doc_id", posexplode(
-          graft.functions.Lsh.bandHashes($"sigs", geom.bands, geom.rows)))
-        .toDF("doc_id", "band", "band_hash")
-      val cand = banded.as("x").join(banded.as("y"),
-          col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash"))
-        .filter(col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct()
-        // explicit width after the dedup: candidate rows are 2 longs, so
-        // AQE's byte-based coalescing collapses the downstream join-backs
-        // + k-element signature zips onto a few tasks (8 of 32 in the r18
-        // 20× stage table) — but each row costs a k-wide zip compare, so
-        // hold the compute at full parallelism (the dedup_embed_cosine
-        // candidate-repartition precedent; REPARTITION_BY_NUM is exempt
-        // from AQE re-coalescing)
-        .repartition(s.sparkContext.defaultParallelism)
-      // sigs is corpus-sized — equi-join, don't force a broadcast (see
-      // the sizes join above); the bucket-blocked cand side is the small one
-      cand
-        .join(sigs.select($"doc_id".as("doc_a"), $"sigs".as("sa")), "doc_a")
-        .join(sigs.select($"doc_id".as("doc_b"), $"sigs".as("sb")), "doc_b")
-        .select($"doc_a", $"doc_b",
-          (size(filter(zip_with($"sa", $"sb", (x, y) => x === y), m => m))
-            .cast("double") / lit(geom.numHashes.toDouble)).as("est_jaccard"))
-    }
+      geom: Lsh.Geometry): DataFrame = {
+    import s.implicits._
+    // sigs feeds the banding and both sides of the estimate join —
+    // Materialize.cut the k-string-per-doc signatures rather than
+    // re-hashing shingles (eager, computed once, storage picked by the
+    // session's fault-tolerance policy).
+    val sigs = widen(t(s, dir, "documents"))(_
+        .select($"doc_id", Lsh.signature($"text", geom).as("sigs")))
+      .transform(graft.functions.Materialize.cut)
+      .filter(Lsh.signed($"sigs"))
+    // signature, banding and edge rule are functions.Lsh's, shared
+    // with streaming.Dedup and DedupIndex
+    val banded = sigs.select($"doc_id", Lsh.bandRows($"sigs", geom))
+    val cand = banded.as("x").join(banded.as("y"),
+        col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash"))
+      .filter(col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .distinct()
+      // explicit width after the dedup: candidate rows are 2 longs, so
+      // AQE's byte-based coalescing collapses the downstream join-backs
+      // + k-element signature zips onto a few tasks (8 of 32 in the r18
+      // 20× stage table) — but each row costs a k-wide zip compare, so
+      // hold the compute at full parallelism (the dedup_embed_cosine
+      // candidate-repartition precedent; REPARTITION_BY_NUM is exempt
+      // from AQE re-coalescing)
+      .repartition(s.sparkContext.defaultParallelism)
+    // sigs is corpus-sized — equi-join, don't force a broadcast (see
+    // the sizes join above); the bucket-blocked cand side is the small one
+    cand
+      .join(sigs.select($"doc_id".as("doc_a"), $"sigs".as("sa")), "doc_a")
+      .join(sigs.select($"doc_id".as("doc_b"), $"sigs".as("sb")), "doc_b")
+      .select($"doc_a", $"doc_b",
+        Lsh.agreement($"sa", $"sb", geom.numHashes).as("est_jaccard"))
   }
 
   private def embedQueries: Map[String, Q] = Map(

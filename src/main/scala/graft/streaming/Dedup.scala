@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import scala.reflect.runtime.universe.TypeTag
 
-import graft.functions.{native, ExprKernels, KernelBarrier, Lsh}
+import graft.functions.{native, DedupIndex, ExprKernels, KernelBarrier, Lsh}
 
 /** Streaming deduplication — the north-star dedup story for a stream of
   * documents (VERDICT r5 item #4; the reference's closest surface is
@@ -17,27 +18,36 @@ import graft.functions.{native, ExprKernels, KernelBarrier, Lsh}
   * watermarked variant bounds state for infinite streams and is the one
   * a 100 TB/day pipeline runs.
   *
-  * Near-dup: [[minhashVerdicts]] — the streaming MinHash+LSH variant of
-  * `queries.DedupOps.dedup_clusters`, sharing the batch pipeline's exact
-  * signature/banding code ([[graft.functions.Lsh]], k=8 MinHashes, 4
-  * bands of 2) AND its edge rule (band collision verified by signature
-  * agreement ≥ threshold), so streaming matches are exactly the batch
-  * pipeline's pairs. Two chained `transformWithState` stages:
+  * Near-dup: [[minhashVerdicts]] (MinHash text), [[fingerprintVerdicts]]
+  * (perceptual image/audio hashes) and [[semanticVerdicts]] (embeddings)
+  * are one operator with three match predicates. Each turns a doc into
+  * bucket rows and runs the same two chained `transformWithState` stages
+  * ([[bucketVerdicts]]):
   *
-  *  1. keyed by band bucket: a ListState holds the bucket's member docs
-  *     (id + signature, capped at [[MaxBucketMembers]]) — an incoming doc
-  *     appends itself (one state write) and verifies against the ≤ cap
-  *     existing members, exactly the per-bucket pairing the batch
-  *     band-join produces;
-  *  2. keyed by doc: folds that doc's band verdicts (all emitted in the
-  *     same micro-batch) into one row — stateless fold, no state entries.
+  *  1. keyed by bucket: [[BucketMembers]], the one membership processor —
+  *     a ListState `members` holds the bucket's first docs (capped at
+  *     [[MaxBucketMembers]]); an incoming doc is verified against the
+  *     ≤ cap registered members, exactly the per-bucket pairing the batch
+  *     band-join produces, then appends itself (one state write);
+  *  2. keyed by doc: [[DocVerdict]] folds that doc's bucket verdicts (all
+  *     emitted in the same micro-batch) into one row — no state entries.
   *
-  * Per batch that is two keyed shuffles (band, then doc) — the same wide
-  * shape as the batch LSH join, with bucket cardinality the partition
-  * key, so it scales exactly as the batch pipeline does. The member cap
-  * bounds hot buckets the same way MaxShingleDf bounds hot shingles in
-  * the exact-Jaccard path: a bucket holding many mutually-dissimilar docs
-  * carries no discriminative signal past its first few representatives.
+  * The MinHash faces share the batch pipeline's signature, banding and
+  * edge rule ([[graft.functions.Lsh]]: `signature`, `bandRows`,
+  * `agrees`), so streaming matches are exactly the batch pipeline's
+  * pairs; [[indexVerdicts]] probes a static index through
+  * [[graft.functions.DedupIndex]]'s own probe join. Every face reads each
+  * micro-batch once: a doc with no shingle or no token takes the same
+  * keyed path as the rest, under a key that matches nothing and
+  * registers no state, and comes out a singleton keeper.
+  *
+  * Per batch that is two keyed shuffles (bucket, then doc) — the same
+  * wide shape as the batch LSH join, with bucket cardinality the
+  * partition key, so it scales exactly as the batch pipeline does. The
+  * member cap bounds hot buckets the same way MaxShingleDf bounds hot
+  * shingles in the exact-Jaccard path: a bucket holding many
+  * mutually-dissimilar docs carries no discriminative signal past its
+  * first few representatives.
   *
   * Greedy-vs-batch semantics: a doc is a KEEPER iff no verified match
   * (est_jaccard ≥ threshold) against any earlier doc exists in any of its
@@ -68,52 +78,43 @@ object Dedup {
       .withWatermark(eventTimeCol, delay)
       .dropDuplicatesWithinWatermark("content_hash")
 
-  // LSH geometry defaults to the shared Lsh.Small constant (k=8, 4 bands
-  // of 2, est_jaccard ≥ 0.5 = ≥ 4 of 8 agreements) — ONE constant for
-  // batch, streaming, and the index, so a retune cannot fork them; every
-  // minhash entry point also takes an explicit Lsh.Geometry for the
-  // production configuration (Lsh.Production, k=128 in 16 bands of 8).
-  // The banding expression itself is shared via functions.Lsh.
-  private val EstThreshold = 0.5
-
   /** Default per-bucket member cap — see the missed-pair trade-off on
     * [[minhashVerdicts]]. */
   private[streaming] val MaxBucketMembers = 8
 
-  /** Per-band-bucket membership + verification stage: key = band hash;
-    * emits (docId, seq, matchedOwnerOrMinus1) per band row, where a match
-    * is an existing member with signature agreement ≥ EstThreshold (the
-    * batch pipeline's pair rule). Every doc also registers as a member
-    * (append-only, capped at `cap`). */
-  private final class BucketMembers(cap: Int, numHashes: Int)
-      extends StatefulProcessor[String, (String, Long, Long, Seq[String]), (Long, Long, Long)] {
-    @transient private var members: ListState[(Long, Seq[String])] = _
+  /** The bucket key of a doc with no band (no 3-shingle): no md5 band
+    * hash is empty. */
+  private val NoBand = ""
+
+  /** The one bucket-membership stage: key = a bucket; input rows (key,
+    * seq, member), a member being a tuple whose first field is its doc
+    * id. Emits (docId, seq, matched) per row in seq order, `matched`
+    * being the smallest id of a registered member that `matches` the
+    * row's member, or -1. Each member then registers (append-only, one
+    * write, never a rewrite) while the bucket holds under `cap`. The
+    * rows of `noKey` match nothing and touch no state. */
+  private final class BucketMembers[K, M <: Product](cap: Int, noKey: K,
+      memberEncoder: Encoder[M], matches: (M, M) => Boolean)
+      extends StatefulProcessor[K, (K, Long, M), (Long, Long, Long)] {
+    @transient private var members: ListState[M] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[(Long, Seq[String])](
-        "members", Encoders.product[(Long, Seq[String])], TTLConfig.NONE)
-    private def est(a: Seq[String], b: Seq[String]): Double = {
-      var agree = 0
-      var i = 0
-      while (i < numHashes) { if (a(i) == b(i)) agree += 1; i += 1 }
-      agree.toDouble / numHashes
-    }
-    override def handleInputRows(key: String, rows: Iterator[(String, Long, Long, Seq[String])],
-        timerValues: TimerValues): Iterator[(Long, Long, Long)] = {
-      val sorted = rows.toVector.sortBy(_._3) // seq order within the batch
-      var mem = members.get().toVector // ≤ cap by construction
-      val out = Vector.newBuilder[(Long, Long, Long)]
-      sorted.foreach { case (_, docId, seq, sigs) =>
-        val matched = mem.iterator
-          .filter { case (id, ms) => id != docId && est(ms, sigs) >= EstThreshold }
-          .map(_._1)
-        out += ((docId, seq, if (matched.isEmpty) -1L else matched.min))
-        if (mem.size < cap && !mem.exists(_._1 == docId)) {
-          members.appendValue((docId, sigs)) // one write, never a rewrite
-          mem :+= ((docId, sigs))
-        }
+      members = getHandle.getListState[M]("members", memberEncoder, TTLConfig.NONE)
+    private def id(m: M): Long = m.productElement(0).asInstanceOf[Long]
+    override def handleInputRows(key: K, rows: Iterator[(K, Long, M)],
+        timerValues: TimerValues): Iterator[(Long, Long, Long)] =
+      if (key == noKey) rows.map { case (_, seq, m) => (id(m), seq, -1L) }
+      else {
+        var mem = members.get().toVector // ≤ cap by construction
+        rows.toVector.sortBy(_._2).map { case (_, seq, m) =>
+          val docId = id(m)
+          val matched = mem.filter(o => id(o) != docId && matches(o, m)).map(id)
+          if (mem.size < cap && !mem.exists(id(_) == docId)) {
+            members.appendValue(m)
+            mem :+= m
+          }
+          (docId, seq, matched.minOption.getOrElse(-1L))
+        }.iterator
       }
-      out.result().iterator
-    }
   }
 
   /** Per-doc verdict fold: key = doc id; all of a doc's band rows are
@@ -136,59 +137,41 @@ object Dedup {
     }
   }
 
+  /** Bucket rows → [[BucketMembers]] → [[DocVerdict]]: the two keyed
+    * stages of every bucketed face. The cap is checked here, on the
+    * driver: under 1 nothing would ever register and every doc would
+    * silently keep. */
+  private def bucketVerdicts[K: Encoder, M <: Product : TypeTag](rows: Dataset[(K, Long, M)],
+      noKey: K, maxBucketMembers: Int)(
+      matches: (M, M) => Boolean): Dataset[(Long, Long, Long, Boolean)] = {
+    require(maxBucketMembers >= 1, s"maxBucketMembers must be >= 1, got $maxBucketMembers")
+    import rows.sparkSession.implicits._
+    rows.groupByKey(_._1)
+      .transformWithState(
+        new BucketMembers(maxBucketMembers, noKey, Encoders.product[M], matches),
+        TimeMode.None(), OutputMode.Append())
+      .groupByKey(_._1)
+      .transformWithState(new DocVerdict, TimeMode.None(), OutputMode.Append())
+  }
+
   /** First-owner processor keyed by a fingerprint: the first doc to
     * present a fingerprint owns it; every later doc with the same
     * fingerprint is a duplicate of the owner. One ValueState read/write
-    * per row. */
+    * per row. A row without a fingerprint (its last field false) is a
+    * singleton keeper and touches no state. */
   private final class FingerprintOwner
-      extends StatefulProcessor[Long, (Long, Long, Long), (Long, Long, Long, Boolean)] {
+      extends StatefulProcessor[Long, (Long, Long, Long, Boolean), (Long, Long, Long, Boolean)] {
     @transient private var owner: org.apache.spark.sql.streaming.ValueState[Long] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       owner = getHandle.getValueState[Long]("owner", Encoders.scalaLong, TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Long)],
+    override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Long, Boolean)],
         timerValues: TimerValues): Iterator[(Long, Long, Long, Boolean)] = {
-      val sorted = rows.toVector.sortBy(_._3)
-      var own = if (owner.exists()) owner.get() else -1L
-      val out = Vector.newBuilder[(Long, Long, Long, Boolean)]
-      sorted.foreach { case (_, docId, seq) =>
+      val (hashed, unhashed) = rows.toVector.sortBy(_._3).partition(_._4)
+      var own = if (hashed.nonEmpty && owner.exists()) owner.get() else -1L
+      hashed.map { case (_, docId, seq, _) =>
         if (own < 0) { own = docId; owner.update(docId) }
-        out += ((docId, seq, own, own == docId))
-      }
-      out.result().iterator
-    }
-  }
-
-  /** Band-bucket membership stage for 64-bit (hi, lo) perceptual
-    * fingerprints — the [[BucketMembers]] shape with Hamming
-    * verification: key = band·2^16 + bucket (the four 16-bit words of
-    * the hash, exactly `DedupOps.phashPairs` banding), members hold
-    * (docId, hi, lo) append-capped, a match is a registered member at
-    * Hamming ≤ maxHamming. Input rows: (key, docId, seq, hi, lo). */
-  private final class FpBucketMembers(cap: Int, maxHamming: Int)
-      extends StatefulProcessor[Long, (Long, Long, Long, Long, Long), (Long, Long, Long)] {
-    @transient private var members: ListState[(Long, Long, Long)] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[(Long, Long, Long)](
-        "members", Encoders.product[(Long, Long, Long)], TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Long, Long, Long)],
-        timerValues: TimerValues): Iterator[(Long, Long, Long)] = {
-      val sorted = rows.toVector.sortBy(_._3) // seq order within the batch
-      var mem = members.get().toVector // ≤ cap by construction
-      val out = Vector.newBuilder[(Long, Long, Long)]
-      sorted.foreach { case (_, docId, seq, hi, lo) =>
-        val matched = mem.iterator
-          .filter { case (id, mhi, mlo) =>
-            id != docId && java.lang.Long.bitCount(mhi ^ hi) +
-              java.lang.Long.bitCount(mlo ^ lo) <= maxHamming
-          }
-          .map(_._1)
-        out += ((docId, seq, if (matched.isEmpty) -1L else matched.min))
-        if (mem.size < cap && !mem.exists(_._1 == docId)) {
-          members.appendValue((docId, hi, lo)) // one write, never a rewrite
-          mem :+= ((docId, hi, lo))
-        }
-      }
-      out.result().iterator
+        (docId, seq, own, own == docId)
+      }.iterator ++ unhashed.iterator.map { case (_, docId, seq, _) => (docId, seq, docId, true) }
     }
   }
 
@@ -197,14 +180,14 @@ object Dedup {
     * `dedup_image_phash` AND `dedup_audio_fingerprint` (both produce the
     * [[graft.multimodal.Phash]] (hi, lo) contract, so ONE streaming
     * operator serves both modalities, exactly as one batch pair join
-    * does). Same two-stage shape as [[minhashVerdicts]]: band on the
-    * four 16-bit words, verify exact Hamming ≤ `maxHamming` against
-    * registered bucket members, fold band verdicts per doc. For
-    * maxHamming ≤ 3 the banding is complete by pigeonhole among
-    * REGISTERED members; the member cap carries the same missed-pair
-    * trade-off documented on [[minhashVerdicts]] (saturated buckets stop
-    * registering, so two future near-dups can both emerge keepers).
-    * Output: (doc_id, seq, root_doc, is_keeper). */
+    * does). Buckets are the four 16-bit words of the hash (key =
+    * band·2^16 + word, exactly `DedupOps.phashPairs` banding), members
+    * are (doc_id, h_hi, h_lo), and a match is exact Hamming ≤
+    * `maxHamming`. For maxHamming ≤ 3 the banding is complete by
+    * pigeonhole among REGISTERED members; the member cap carries the same
+    * missed-pair trade-off documented on [[minhashVerdicts]] (saturated
+    * buckets stop registering, so two future near-dups can both emerge
+    * keepers). Output: (doc_id, seq, root_doc, is_keeper). */
   def fingerprintVerdicts(ds: Dataset[(Long, Long, Long, Long)],
       maxHamming: Int = 3,
       maxBucketMembers: Int = MaxBucketMembers): Dataset[(Long, Long, Long, Boolean)] = {
@@ -216,18 +199,13 @@ object Dedup {
     // silently mis-bucketing them (same guard as the batch phashPairs)
     val lo = Lsh.unsignedHalf(col("h_lo"), "h_lo")
     val hi = Lsh.unsignedHalf(col("h_hi"), "h_hi")
-    ds.toDF("doc_id", "h_hi", "h_lo", "seq")
-      .select($"doc_id", $"seq", $"h_hi", $"h_lo", posexplode(array(
-        lo % 65536L, shiftright(lo, 16),
-        hi % 65536L, shiftright(hi, 16))))
-      .select(($"pos" * 65536L + $"col").as("key"),
-        $"doc_id", $"seq", $"h_hi", $"h_lo")
-      .as[(Long, Long, Long, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new FpBucketMembers(maxBucketMembers, maxHamming),
-        TimeMode.None(), OutputMode.Append())
-      .groupByKey(_._1)
-      .transformWithState(new DocVerdict, TimeMode.None(), OutputMode.Append())
+    val rows = ds.toDF("doc_id", "h_hi", "h_lo", "seq")
+      .select($"seq", struct($"doc_id".as("_1"), $"h_hi".as("_2"), $"h_lo".as("_3")).as("m"),
+        posexplode(array(lo % 65536L, shiftright(lo, 16), hi % 65536L, shiftright(hi, 16))))
+      .select($"pos" * 65536L + $"col", $"seq", $"m")
+      .as[(Long, Long, (Long, Long, Long))]
+    bucketVerdicts(rows, -1L, maxBucketMembers)((a, b) =>
+      java.lang.Long.bitCount(a._2 ^ b._2) + java.lang.Long.bitCount(a._3 ^ b._3) <= maxHamming)
   }
 
   /** Streaming SimHash dedup for `(doc_id, text, seq)` rows — the
@@ -237,30 +215,31 @@ object Dedup {
     * near-duplicates; the first to arrive is the keeper. One keyed
     * shuffle on the fingerprint, O(1) state per distinct fingerprint —
     * the cheapest of the three streaming dedup flavors, the right tool
-    * when boilerplate-level similarity is enough. Token-less docs are
-    * singleton keepers (the batch query filters them out; a streaming
-    * verdict must still say something about every doc). */
+    * when boilerplate-level similarity is enough. Token-less docs (empty,
+    * all-space or NULL text) take the same keyed path without a
+    * fingerprint: singleton keepers that register no state (the batch
+    * query filters them out; a streaming verdict must still say
+    * something about every doc). */
   def simhashVerdicts(ds: Dataset[(Long, String, Long)],
                       bits: Int = 16): Dataset[(Long, Long, Long, Boolean)] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val df = KernelBarrier.over(ds.toDF("doc_id", "text", "seq")
-      .select($"doc_id", $"seq", native.tokens($"text").as("toks")))
-    val hashed = df.filter(size($"toks") >= 1)
-      .select(native.simhash($"toks", bits).as("fp"), $"doc_id", $"seq")
-      .as[(Long, Long, Long)]
+    val hashed = coalesce(size($"toks") >= 1, lit(false))
+    KernelBarrier.over(ds.toDF("doc_id", "text", "seq")
+        .select($"doc_id", $"seq", native.tokens($"text").as("toks")))
+      .select(when(hashed, native.simhash($"toks", bits)).otherwise(-1L),
+        $"doc_id", $"seq", hashed)
+      .as[(Long, Long, Long, Boolean)]
       .groupByKey(_._1)
       .transformWithState(new FingerprintOwner, TimeMode.None(), OutputMode.Append())
-    val tokenless = df.filter(size($"toks") === 0)
-      .select($"doc_id", $"seq", $"doc_id".as("root_doc"), lit(true).as("is_keeper"))
-      .as[(Long, Long, Long, Boolean)]
-    hashed.union(tokenless)
   }
 
   /** Streaming near-dup verdicts for `(doc_id, text, seq)` rows:
     * one row per incoming doc — `(doc_id, seq, root_doc, is_keeper)`.
     * Requires the RocksDB state store provider (transformWithState).
-    * Docs whose text yields no shingles (< 3 tokens) are always keepers
+    * Buckets are band hashes, members are (doc_id, signature), and a
+    * match is [[Lsh.agrees]], the batch pipeline's pair rule. Docs whose
+    * text yields no shingles (< 3 tokens) are always keepers
     * with themselves as root, exactly like the batch pipeline's
     * singleton left-join. Assumes doc_ids are unique (run [[exact]] or
     * id-dedup upstream for replays): a replayed id never matches its own
@@ -287,46 +266,24 @@ object Dedup {
       geom: Lsh.Geometry = Lsh.Small): Dataset[(Long, Long, Long, Boolean)] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val df = ds.toDF("doc_id", "text", "seq")
-    val banded = signed(df, geom)
-      .select(explode(Lsh.bandHashes($"sigs", geom.bands, geom.rows)).as("band_hash"),
-        $"doc_id", $"seq", $"sigs")
-      .as[(String, Long, Long, Seq[String])]
-    val verdicts = banded
-      .groupByKey(_._1)
-      .transformWithState(new BucketMembers(maxBucketMembers, geom.numHashes),
-        TimeMode.None(), OutputMode.Append())
-      .groupByKey(_._1)
-      .transformWithState(new DocVerdict, TimeMode.None(), OutputMode.Append())
-    verdicts.union(singletons(df))
-  }
-
-  /** `(doc_id, seq, sigs)` for the docs of `df` with a 3-shingle: their
-    * signatures, computed once per doc under a [[KernelBarrier]]. A doc
-    * with no shingle has an all-null signature and is dropped. */
-  private def signed(df: DataFrame, geom: Lsh.Geometry): DataFrame =
-    KernelBarrier.over(df.select(col("doc_id"), col("seq"),
-        native.minhash_sigs(native.shingles3(col("text")), geom.numHashes).as("sigs")))
-      .filter(element_at(col("sigs"), 1).isNotNull)
-
-  /** Keeper verdicts for the docs of `df` that [[signed]] drops: null
-    * text or under 3 tokens (exactly the docs with no 3-shingle), found
-    * without computing a signature. */
-  private def singletons(df: DataFrame): Dataset[(Long, Long, Long, Boolean)] = {
-    import df.sparkSession.implicits._
-    df.filter($"text".isNull || size(native.tokens($"text")) < 3)
-      .select($"doc_id", $"seq", $"doc_id".as("root_doc"), lit(true).as("is_keeper"))
-      .as[(Long, Long, Long, Boolean)]
+    val agrees = Lsh.agreesOn(spark, geom)
+    val rows = DedupIndex.bandRows(ds.toDF("doc_id", "text", "seq"), geom)
+      .select(coalesce($"band_hash", lit(NoBand)), $"seq",
+        struct($"doc_id".as("_1"), $"sigs".as("_2")))
+      .as[(String, Long, (Long, Seq[String]))]
+    bucketVerdicts(rows, NoBand, maxBucketMembers)((a, b) => agrees(a._2, b._2))
   }
 
   /** Cross-snapshot streaming dedup: greedy verdicts for a stream of
     * (doc_id, text, seq) against a STATIC signature index
     * ([[graft.functions.DedupIndex.indexRows]] shape) — the streaming
-    * face of incremental snapshot dedup. Each doc's bands equi-join the
-    * index (stream-static, verification inside the join condition since
-    * index rows carry their signatures); the per-doc fold reuses the
-    * stateless [[DocVerdict]] stage. Output rows: (doc_id, seq,
-    * root_doc, is_keeper) with root = smallest matched indexed doc.
+    * face of incremental snapshot dedup. Each doc's band rows go through
+    * the index's own probe (a stream-static left join, verification
+    * inside the join condition since index rows carry their signatures);
+    * a doc with no shingle keeps its one NULL band row, which matches
+    * nothing. The per-doc fold reuses the stateless [[DocVerdict]] stage.
+    * Output rows: (doc_id, seq, root_doc, is_keeper) with root =
+    * smallest matched indexed doc.
     *
     * Scope: INDEX matches only — within-stream near-dups are
     * [[minhashVerdicts]]'s job; a full ingest composes the two (index
@@ -339,71 +296,22 @@ object Dedup {
     // a geometry mismatch would silently never match (bands never join);
     // fail loudly before the query starts — the index is static, so the
     // check runs once at build time, not per micro-batch
-    graft.functions.DedupIndex.requireGeometry(index, geom)
+    DedupIndex.requireGeometry(index, geom)
     val spark = ds.sparkSession
     import spark.implicits._
-    val df = ds.toDF("doc_id", "text", "seq")
-    val banded = signed(df, geom)
-      .select($"doc_id", $"seq", $"sigs",
-        posexplode(Lsh.bandHashes($"sigs", geom.bands, geom.rows)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_hash")
-    val agree = size(filter(zip_with(col("n.sigs"), col("o.sigs"),
-      (x, y) => x === y), m => m)).cast("double") / lit(geom.numHashes.toDouble)
-    val matched = banded.as("n")
-      .join(index.as("o"),
-        col("n.band") === col("o.band") &&
-          col("n.band_hash") === col("o.band_hash") &&
-          col("n.doc_id") =!= col("o.doc_id") &&
-          agree >= EstThreshold,
-        "left")
-      .select(col("n.doc_id"), col("n.seq"),
-        coalesce(col("o.doc_id"), lit(-1L)).as("own"))
+    DedupIndex.probe(DedupIndex.bandRows(ds.toDF("doc_id", "text", "seq"), geom), index, geom)
+      .select($"doc_id", $"seq", coalesce($"match_id", lit(-1L)))
       .as[(Long, Long, Long)]
-    val verdicts = matched
       .groupByKey(_._1)
       .transformWithState(new DocVerdict, TimeMode.None(), OutputMode.Append())
-    verdicts.union(singletons(df))
   }
 
-  /** Semantic-cluster bucket membership — the [[FpBucketMembers]] shape
-    * with exact-cosine verification: key = packed (cid, band, bucket),
-    * members hold (vecId, embedding, nrm) append-capped, a match is a
-    * registered member whose ROUND(exact decimal cosine, 9) clears the
-    * threshold — the batch dedup_semantic predicate verbatim, so a
-    * caught pair is exactly a batch-caught pair. The exact kernel runs
-    * only against same-bucket members (≤ cap), never corpus-wide.
-    * Input rows: (key, vecId, seq, embedding, nrm). */
-  private final class SemBucketMembers(cap: Int, threshold: Double)
-      extends StatefulProcessor[Long, (Long, Long, Long, Array[Float], Double), (Long, Long, Long)] {
-    @transient private var members: ListState[(Long, Array[Float], Double)] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[(Long, Array[Float], Double)](
-        "members", Encoders.product[(Long, Array[Float], Double)], TTLConfig.NONE)
-    private def cosine9(a: Array[Float], na: Double, b: Array[Float], nb: Double): Double = {
-      val dot = ExprKernels.decimalDot(ArrayData.toArrayData(a), ArrayData.toArrayData(b))
-      java.math.BigDecimal.valueOf(dot / (na * nb))
-        .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-    }
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Long, Array[Float], Double)],
-        timerValues: TimerValues): Iterator[(Long, Long, Long)] = {
-      val sorted = rows.toVector.sortBy(_._3) // seq order within the batch
-      var mem = members.get().toVector // ≤ cap by construction
-      val out = Vector.newBuilder[(Long, Long, Long)]
-      sorted.foreach { case (_, vecId, seq, emb, nrm) =>
-        val matched = mem.iterator
-          .filter { case (id, memb, mnrm) =>
-            id != vecId && cosine9(emb, nrm, memb, mnrm) >= threshold
-          }
-          .map(_._1)
-        out += ((vecId, seq, if (matched.isEmpty) -1L else matched.min))
-        if (mem.size < cap && !mem.exists(_._1 == vecId)) {
-          members.appendValue((vecId, emb, nrm)) // one write, never a rewrite
-          mem :+= ((vecId, emb, nrm))
-        }
-      }
-      out.result().iterator
-    }
+  /** ROUND(exact decimal cosine, 9) of two embeddings given their norms,
+    * the batch dedup_semantic predicate's left-hand side. */
+  private def cosine9(a: Array[Float], na: Double, b: Array[Float], nb: Double): Double = {
+    val dot = ExprKernels.decimalDot(ArrayData.toArrayData(a), ArrayData.toArrayData(b))
+    java.math.BigDecimal.valueOf(dot / (na * nb))
+      .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
   }
 
   /** Streaming semantic near-dup verdicts for embedding rows
@@ -416,9 +324,12 @@ object Dedup {
     * all in stateless narrow expressions before any shuffle — the
     * nearest centroid is chosen by the SAME exact-decimal L2 score and
     * (score, cid) tiebreak the batch plan uses, the 32-plane sign-LSH
-    * signature is banded 4×8, and candidates meet only in
-    * (cid, band, bucket) buckets; [[SemBucketMembers]] then verifies
-    * with the exact decimal cosine at ROUND(·,9) ≥ `threshold`.
+    * signature is banded 4×8, and candidates meet only in packed
+    * (cid, band, bucket) buckets whose members are (vec_id, embedding,
+    * nrm). A match is a member whose ROUND(exact decimal cosine, 9)
+    * clears `threshold` — the batch predicate verbatim, so a caught pair
+    * is exactly a batch-caught pair; the exact kernel runs only against
+    * same-bucket members (≤ cap), never corpus-wide.
     * Verdicts agree row-for-row with batch `dedup_semantic` when
     * arrival order is id order and the cap does not bind
     * (SemanticStreamSpec); the member cap carries the documented
@@ -441,23 +352,19 @@ object Dedup {
     // cannot fork between batch and stream)
     val bands = Lsh.EmbedBands
     val bandBits = Lsh.EmbedBandBits
-    val keyed = ds.toDF("vec_id", "embedding", "seq")
+    val rows = ds.toDF("vec_id", "embedding", "seq")
       .withColumn("nrm",
         sqrt(native.decimal_dot($"embedding", $"embedding").cast("double")))
       .withColumn("cid", Lsh.nearestCentroidGated($"embedding", centroids))
       .withColumn("sig", native.lsh_bucket($"embedding", Lsh.EmbedPlanes))
-      .select($"vec_id", $"seq", $"embedding", $"nrm", $"cid",
+      .select($"seq", $"cid",
+        struct($"vec_id".as("_1"), $"embedding".as("_2"), $"nrm".as("_3")).as("m"),
         posexplode(Lsh.embedBandBuckets($"sig", bands, bandBits)))
       .select(
-        ($"cid" * lit((bands.toLong << bandBits)) + $"pos" * lit(1L << bandBits) + $"col")
-          .as("key"),
-        $"vec_id", $"seq", $"embedding", $"nrm")
-      .as[(Long, Long, Long, Array[Float], Double)]
-    keyed
-      .groupByKey(_._1)
-      .transformWithState(new SemBucketMembers(maxBucketMembers, threshold),
-        TimeMode.None(), OutputMode.Append())
-      .groupByKey(_._1)
-      .transformWithState(new DocVerdict, TimeMode.None(), OutputMode.Append())
+        $"cid" * lit((bands.toLong << bandBits)) + $"pos" * lit(1L << bandBits) + $"col",
+        $"seq", $"m")
+      .as[(Long, Long, (Long, Array[Float], Double))]
+    bucketVerdicts(rows, -1L, maxBucketMembers)((a, b) =>
+      cosine9(b._2, b._3, a._2, a._3) >= threshold)
   }
 }

@@ -42,6 +42,26 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     q.stop()
   }
 
+  /** `build` over a parquet file stream, run once per element of
+    * `batches`: each batch is appended to the source, then the query
+    * starts from the same checkpoint and runs until it has processed it,
+    * so every batch after the first arrives after a restart. Returns the
+    * file sink's rows and the checkpoint dir. */
+  def runRestarting(batches: org.apache.spark.sql.DataFrame*)(
+      build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, String) = {
+    val Seq(src, ckpt, out) = Seq("src", "ckpt", "out")
+      .map(n => java.nio.file.Files.createTempDirectory(s"graft_restart_$n").toString)
+    batches.foreach { b =>
+      b.coalesce(1).write.mode("append").parquet(src)
+      val q = build(spark.readStream.schema(b.schema).parquet(src))
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    (spark.read.parquet(out), ckpt)
+  }
+
   /** Run `body` with the RocksDB state store provider (required by the
     * transformWithState operators), restoring the previous provider after.
     */

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Trained IVF: probing all cells IS brute force (exact equality), cell
   * tags match the model's assignment, and shrinking nprobe trades recall
@@ -72,6 +73,37 @@ class IvfSpec extends SparkSuite {
       quant.keySet.foreach(q => assert(quant(q) == brute(q), s"query $q"))
       queries.unpersist()
     } finally index.cells.unpersist()
+  }
+
+  test("quantized search under reliable checkpointing leaves no checkpoint directory behind") {
+    val index = Ivf.build(corpus, k = 8, iters = 4)
+    index.cells.cache()
+    val queries = corpus.limit(15)
+      .select($"vec_id".as("query_id"), $"embedding".as("qemb")).cache()
+    def search() = Ivf.searchQuantized(index, queries, topK = 5, nprobe = 4)
+      .select($"query_id", $"vec_id", $"rank").as[(Long, Long, Int)].collect().sorted.toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_ckpt")
+    def rddDirs(): Seq[String] = {
+      val s = java.nio.file.Files.walk(dir)
+      try s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("rdd-")).toSeq
+      finally s.close()
+    }
+    try {
+      val local = search()
+      spark.sparkContext.setCheckpointDir(dir.toString)
+      assert(Materialize.mode(spark) == "reliable")
+      val before = rddDirs()
+      val runs = Seq.fill(3)(search())
+      assert(runs.forall(_ == local), "results changed under reliable checkpointing")
+      assert(rddDirs() == before, s"checkpoint directories left behind: ${rddDirs()}")
+    } finally {
+      // SparkContext has no public unset: clear it as MaterializeSpec does
+      classOf[org.apache.spark.SparkContext]
+        .getMethod("checkpointDir_$eq", classOf[Option[_]])
+        .invoke(spark.sparkContext, None)
+      queries.unpersist()
+      index.cells.unpersist()
+    }
   }
 
   test("quantized candidate exchange ships int8 sidecars — measurably smaller, no float arrays") {

@@ -432,6 +432,108 @@ object KernelProps extends Properties("ExprKernels") {
       8 -> Gen.listOf(chunk).map(cs => Some(cs.flatten.toArray)))
   }
 
+  // the text-dedup kernels under codegen and interpreted evaluation, on
+  // raw bytes: NULL, empty and all-space text, multi-byte and invalid
+  // UTF-8. The models split and join bytes, so an invalid sequence is
+  // never decoded on either side
+  private def md5hexBytes(b: Array[Byte]): String =
+    MessageDigest.getInstance("MD5").digest(b).map(x => f"$x%02x").mkString
+  private def tokensModel(b: Array[Byte]): Seq[Seq[Byte]] = {
+    val out = Seq.newBuilder[Seq[Byte]]
+    var cur = Seq.newBuilder[Byte]
+    var n = 0
+    b.foreach { x =>
+      if (x == ' '.toByte) { if (n > 0) out += cur.result(); cur = Seq.newBuilder[Byte]; n = 0 }
+      else { cur += x; n += 1 }
+    }
+    if (n > 0) out += cur.result()
+    out.result()
+  }
+  private def shingles3Model(b: Array[Byte]): Seq[Seq[Byte]] = {
+    val toks = tokensModel(b)
+    if (toks.size < 3) Seq.empty
+    else toks.sliding(3).map(w => w.reduce(_ ++ Seq(' '.toByte) ++ _)).toSeq.distinct
+  }
+  private def minHashModel(shingles: Seq[Seq[Byte]], k: Int): Seq[Option[String]] =
+    (1 to k).map { h =>
+      if (shingles.isEmpty) None
+      else Some(shingles.map(sh => md5hexBytes(s"$h|".getBytes("UTF-8") ++ sh)).min)
+    }
+  private def bytesOf(a: ArrayData): Seq[Option[Seq[Byte]]] =
+    (0 until a.numElements()).map(i =>
+      if (a.isNullAt(i)) None else Some(a.getUTF8String(i).getBytes.toSeq))
+  private def utf8Bytes(xs: Seq[Option[Seq[Byte]]]): ArrayData =
+    new GenericArrayData(xs.map(_.map(b => UTF8String.fromBytes(b.toArray)).orNull).toArray[Any])
+  private val textArg = BoundReference(0, StringType, nullable = true)
+  private val stringsArg = BoundReference(0, ArrayType(StringType), nullable = true)
+  private def textRow(t: Option[Array[Byte]]) = InternalRow(t.map(UTF8String.fromBytes).orNull)
+  private val dedupText: Gen[Option[Array[Byte]]] = Gen.frequency(
+    1 -> Gen.oneOf("", " ", "   ").map(w => Some(w.getBytes("UTF-8"))),
+    9 -> rawText)
+
+  property("tokens == byte-split model, codegen and interpreted; NULL in, NULL out") =
+    forAll(dedupText) { t =>
+      agrees(Tokens(textArg), textRow(t), r => bytesOf(r.getArray(0)),
+        t.map(b => tokensModel(b).map(Some(_))))
+    }
+
+  property("shingles3 == byte sliding-3 model, codegen and interpreted; NULL in, NULL out") =
+    forAll(dedupText) { t =>
+      agrees(Shingles3(textArg), textRow(t), r => bytesOf(r.getArray(0)),
+        t.map(b => shingles3Model(b).map(Some(_))))
+    }
+
+  property("minhash_sigs == min-of-keyed-md5 model over shingles3, codegen and interpreted") =
+    forAll(dedupText, Gen.choose(1, 8)) { (t, k) =>
+      agrees(MinHashSigs(Shingles3(textArg), k), textRow(t),
+        r => bytesOf(r.getArray(0)).map(_.map(b => new String(b.toArray, "UTF-8"))),
+        t.map(b => minHashModel(shingles3Model(b), k)))
+    }
+
+  // signature arrays as the kernel meets them (hex strings, NULL
+  // elements of a shingle-less doc) and as it must refuse them (shorter
+  // than bands × rows: IllegalArgumentException under both evaluations)
+  private val sigArray: Gen[Option[Seq[Option[String]]]] = Gen.frequency(
+    1 -> Gen.const(None),
+    9 -> Gen.choose(0, 9).flatMap(n => Gen.listOfN(n, Gen.frequency(
+      1 -> Gen.const(None),
+      6 -> Gen.listOfN(4, Gen.hexChar).map(cs => Some(cs.mkString.toLowerCase)),
+      1 -> word.map(Some(_))))).map(Some(_)))
+
+  private def bandHashesModel(sigs: Seq[Option[String]], bands: Int, rows: Int): Seq[String] = {
+    require(sigs.size >= bands * rows)
+    (0 until bands).map { b =>
+      val comps = (1 to rows).map(j => sigs(b * rows + j - 1).map(v => s"${b * rows + j}:$v"))
+      md5hexBytes(comps.flatten.map(_.getBytes("UTF-8"))
+        .sortWith((x, y) => java.util.Arrays.compareUnsigned(x, y) < 0)
+        .reduceOption(_ ++ Array(','.toByte) ++ _).getOrElse(Array.emptyByteArray))
+    }
+  }
+
+  property("band_hashes == sorted-components md5 model, codegen and interpreted") =
+    forAll(sigArray, Gen.choose(1, 4), Gen.choose(1, 2)) { (sigs, bands, rows) =>
+      agrees(BandHashes(stringsArg, bands, rows),
+        InternalRow(sigs.map(xs => utf8Bytes(xs.map(_.map(_.getBytes("UTF-8").toSeq)))).orNull),
+        r => bytesOf(r.getArray(0)).map(_.map(b => new String(b.toArray, "UTF-8"))),
+        sigs.map(xs => bandHashesModel(xs, bands, rows).map(Some(_))))
+    }
+
+  property("simhash == md5-bit-voting model over tokens, codegen and interpreted") =
+    forAll(dedupText, Gen.choose(1, 64)) { (t, bits) =>
+      val model = t.map { b =>
+        val bal = new Array[Int](bits)
+        tokensModel(b).foreach { tok =>
+          val hex = md5hexBytes(tok.toArray)
+          for (j <- 1 to bits) {
+            val nib = Integer.parseInt(hex((j + 3) / 4 - 1).toString, 16)
+            bal(j - 1) += ((nib >> (3 - (j - 1) % 4)) & 1) * 2 - 1
+          }
+        }
+        (1 to bits).map(j => if (bal(j - 1) >= 0) 1L << (j - 1) else 0L).sum
+      }
+      agrees(SimHash(Tokens(textArg), bits), textRow(t), _.getLong(0), model)
+    }
+
   property("ascii_letters_lower == lower(regexp_replace(text, '[^A-Za-z ]', '')), codegen and interpreted") =
     forAll(rawText) { bytes =>
       val row = InternalRow(bytes.map(UTF8String.fromBytes).orNull)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSuite
+import graft.functions.Lsh
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.min
 
@@ -180,5 +181,110 @@ class DedupStreamSpec extends SparkSuite {
         assert(spark.table(s"dedup_once_$name").count() == 2)
       }
     }
+  }
+
+  private def verdictsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Boolean)] =
+    df.toDF("doc_id", "seq", "root_doc", "is_keeper").select("doc_id", "root_doc", "is_keeper")
+      .as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
+
+  test("simhashVerdicts: fingerprint owners survive a restart from the checkpoint") {
+    withRocksDBState {
+      val base = "one two three four five six seven eight nine ten"
+      // the copy arrives AFTER the restart: owning it needs the checkpointed owner
+      val (out, _) = runRestarting(Seq((1L, base, 1L)).toDF("doc_id", "text", "seq"),
+          Seq((2L, base, 2L), (3L, "", 3L)).toDF("doc_id", "text", "seq")) { df =>
+        Dedup.simhashVerdicts(df.as[(Long, String, Long)]).toDF()
+      }
+      assert(verdictsOf(out) == Seq((1L, 1L, true), (2L, 1L, false), (3L, 3L, true)))
+    }
+  }
+
+  test("minhashVerdicts, simhashVerdicts and indexVerdicts scan each micro-batch once") {
+    import graft.functions.DedupIndex
+    import org.apache.spark.sql.execution.datasources.v2.StreamingDataSourceV2ScanRelation
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    withRocksDBState {
+      val base = "the quick brown fox jumps over the lazy dog again and again"
+      val index = DedupIndex.indexRows(Seq((1L, base)).toDF("doc_id", "text")).localCheckpoint()
+      for ((name, build) <- Seq[(String, org.apache.spark.sql.Dataset[(Long, String, Long)] =>
+             org.apache.spark.sql.Dataset[(Long, Long, Long, Boolean)])](
+             "minhash" -> (Dedup.minhashVerdicts(_)),
+             "simhash" -> (Dedup.simhashVerdicts(_)),
+             "index" -> (Dedup.indexVerdicts(_, index)))) {
+        val in = MemoryStream[(Long, String, Long)]
+        val q = build(in.toDS()).toDF("doc_id", "seq", "root_doc", "is_keeper").writeStream
+          .format("memory").queryName(s"dedup_scan_$name").outputMode("append").start()
+        in.addData((2L, base + " tail", 2L), (3L, "tiny", 3L), (4L, "", 4L))
+        q.processAllAvailable()
+        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+        q.stop()
+        val scans = plan.collect { case s: StreamingDataSourceV2ScanRelation => s }
+        assert(scans.size == 1, s"$name:\n$plan")
+        val got = spark.table(s"dedup_scan_$name").as[(Long, Long, Long, Boolean)].collect()
+        assert(got.map(_._1).sorted.toSeq == Seq(2L, 3L, 4L), name)
+        assert(got.filter(_._1 >= 3L).forall(r => r._3 == r._1 && r._4), s"$name: ${got.toSeq}")
+      }
+    }
+  }
+
+  /** The rows of the state variable `stateVar` of the query checkpointed
+    * at `ckpt`: `owner` of simhash's one operator, or `members` of a
+    * bucketed face's membership stage (operator 1; its per-doc fold,
+    * operator 0, holds no state). */
+  private def stateRows(ckpt: String, stateVar: String): org.apache.spark.sql.DataFrame =
+    spark.read.format("statestore").option("operatorId", if (stateVar == "members") 1 else 0)
+      .option("stateVarName", stateVar).load(ckpt)
+
+  test("singleton docs take the keyed path and leave no state rows") {
+    withRocksDBState {
+      val docs = Seq((1L, "one two three four five six", 1L), (2L, "tiny", 2L),
+        (3L, "", 3L), (4L, "   ", 4L), (5L, null, 5L)).toDF("doc_id", "text", "seq")
+      val singletons = Seq((2L, 2L, true), (3L, 3L, true), (4L, 4L, true), (5L, 5L, true))
+      val (mh, mhCkpt) = runRestarting(docs)(df => Dedup.minhashVerdicts(df.as[(Long, String, Long)]).toDF())
+      assert(verdictsOf(mh) == (1L, 1L, true) +: singletons)
+      // doc 1's four bands, nothing else
+      val members = stateRows(mhCkpt, "members").select($"key.value", $"list_element._1")
+        .as[(String, Long)].collect()
+      assert(members.length == Lsh.Small.bands && members.forall { case (k, id) =>
+        k.length == 32 && id == 1L }, members.toSeq)
+      val (sh, shCkpt) = runRestarting(docs)(df => Dedup.simhashVerdicts(df.as[(Long, String, Long)]).toDF())
+      assert(verdictsOf(sh) == (1L, 1L, true) +: singletons)
+      // "tiny" has a token, so a fingerprint; the token-less docs own none
+      assert(stateRows(shCkpt, "owner").select($"value.value").as[Long].collect().sorted.toSeq ==
+        Seq(1L, 2L))
+    }
+  }
+
+  test("each near-dup processor keeps its state variable names and schemas") {
+    withRocksDBState {
+      val text = Seq((1L, "one two three four five six", 1L)).toDF("doc_id", "text", "seq")
+      val faces = Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame =>
+          org.apache.spark.sql.DataFrame, String, String, String)](
+        ("minhash", text, df => Dedup.minhashVerdicts(df.as[(Long, String, Long)]).toDF(),
+          "members", "struct<value:string>", "struct<_1:bigint,_2:array<string>>"),
+        ("simhash", text, df => Dedup.simhashVerdicts(df.as[(Long, String, Long)]).toDF(),
+          "owner", "struct<value:bigint>", "struct<value:bigint>"),
+        ("fingerprint", Seq((1L, 7L, 9L, 1L)).toDF("doc_id", "h_hi", "h_lo", "seq"),
+          df => Dedup.fingerprintVerdicts(df.as[(Long, Long, Long, Long)]).toDF(),
+          "members", "struct<value:bigint>", "struct<_1:bigint,_2:bigint,_3:bigint>"),
+        ("semantic", Seq((1L, Array(1.0f, 0.0f), 1L)).toDF("vec_id", "embedding", "seq"),
+          df => Dedup.semanticVerdicts(df.as[(Long, Array[Float], Long)],
+            Seq(0L -> Array(1.0f, 0.0f))).toDF(),
+          "members", "struct<value:bigint>", "struct<_1:bigint,_2:array<float>,_3:double>"))
+      for ((face, input, build, stateVar, key, value) <- faces) {
+        val (_, ckpt) = runRestarting(input)(build)
+        val state = stateRows(ckpt, stateVar)
+        val valueCol = if (stateVar == "members") "list_element" else "value"
+        assert(state.schema("key").dataType.simpleString == key, s"$face: ${state.schema}")
+        assert(state.schema(valueCol).dataType.simpleString == value, s"$face: ${state.schema}")
+        assert(state.count() >= 1, face)
+      }
+    }
+  }
+
+  test("minhashVerdicts rejects maxBucketMembers < 1 before it starts") {
+    val text = MemoryStream[(Long, String, Long)].toDS()
+    val e = intercept[IllegalArgumentException](Dedup.minhashVerdicts(text, maxBucketMembers = 0))
+    assert(e.getMessage.contains("maxBucketMembers"), e.getMessage)
   }
 }

@@ -97,4 +97,24 @@ class FingerprintStreamSpec extends SparkSuite {
       assert(got(3L) == ((3L, true)))
     }
   }
+  test("fingerprintVerdicts: bucket members survive a restart from the checkpoint") {
+    withRocksDBState {
+      // doc 2 is 2 bits from doc 1 and arrives AFTER the restart: matching
+      // it needs doc 1's registration from the checkpointed state
+      val (out, _) = runRestarting(Seq((1L, 0xDEADL, 0xBEEFL, 1L)).toDF("doc_id", "h_hi", "h_lo", "seq"),
+          Seq((2L, 0xDEADL ^ 3L, 0xBEEFL, 2L), (3L, 0x1234L, 0x5678L, 3L))
+            .toDF("doc_id", "h_hi", "h_lo", "seq")) { df =>
+        Dedup.fingerprintVerdicts(df.as[(Long, Long, Long, Long)]).toDF()
+      }
+      val got = out.toDF("doc_id", "seq", "root_doc", "is_keeper")
+        .select("doc_id", "root_doc", "is_keeper").as[(Long, Long, Boolean)].collect().sortBy(_._1)
+      assert(got.toSeq == Seq((1L, 1L, true), (2L, 1L, false), (3L, 3L, true)))
+    }
+  }
+
+  test("fingerprintVerdicts rejects maxBucketMembers < 1 before it starts") {
+    val e = intercept[IllegalArgumentException](Dedup.fingerprintVerdicts(
+      MemoryStream[(Long, Long, Long, Long)].toDS(), maxBucketMembers = 0))
+    assert(e.getMessage.contains("maxBucketMembers"), e.getMessage)
+  }
 }

@@ -119,4 +119,9 @@ class SemanticStreamSpec extends SparkSuite {
       assert(got(30L) == ((30L, true)))
     }
   }
+  test("semanticVerdicts rejects maxBucketMembers < 1 before it starts") {
+    val e = intercept[IllegalArgumentException](Dedup.semanticVerdicts(
+      MemoryStream[(Long, Array[Float], Long)].toDS(), Seq(0L -> Array(1.0f)), maxBucketMembers = 0))
+    assert(e.getMessage.contains("maxBucketMembers"), e.getMessage)
+  }
 }
